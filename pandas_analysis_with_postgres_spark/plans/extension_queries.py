@@ -13,9 +13,25 @@ prepended 0.0) so the doubles are bit-identical.
 Only genuinely non-SQL surfaces (mapInPandas media featurize,
 Structured Streaming) are declared without oracles → the driver records
 its weaker rows-only check for those, by design.
+
+Build/run contract: every input estate, index or model a query consumes
+is made by a private builder decorated with ``@_fixture`` — built once
+per (Spark application, fixture dir), registered in ``FIXTURES``, and
+owning its own temp root. Queries never mutate a fixture: a query whose
+subject IS a mutation (DML, maintenance, branch/WAP publish, streamed
+ingest, clone, training) repeats that mutation on every call, against a
+``_clone`` of a fixture-built template, so every query is re-runnable
+and a second call times the same work as the first.
 """
 
 from __future__ import annotations
+
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +48,65 @@ from ..operators.multimodal import (
 )
 from ..operators.packing import SEQ_BUDGET, pack_sequences
 from ..sources.parquet import load_table, register_views
+
+# ---------------------------------------------------------------------
+# Fixtures: declared, memoized artifact builders
+# ---------------------------------------------------------------------
+
+#: Every declared artifact builder by name (leading underscore dropped):
+#: ``FIXTURES[name](spark, sf_dir)`` builds once, then returns the memo.
+FIXTURES: dict[str, Callable] = {}
+
+#: One temp dir per built fixture, holding its ``build`` root and the
+#: per-call clones made from it; all removed at process exit. Artifacts
+#: must outlive their first query (returned DataFrames scan lazily).
+_FIXTURE_HOMES: list[str] = []
+
+
+def _remove_fixture_homes() -> None:
+    for d in _FIXTURE_HOMES:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _fixture(build: Callable) -> Callable:
+    """Declare ``build(spark, sf_dir, root) -> artifact`` as a fixture.
+
+    The wrapper ``(spark, sf_dir) -> artifact`` builds once per
+    ``(applicationId, abspath(sf_dir))`` into a fresh, empty ``root``
+    and memoizes the artifact; ``roots()`` lists the build roots made
+    so far. Registered in ``FIXTURES``."""
+    built: dict[tuple[str, str], tuple[str, object]] = {}
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str):
+        key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+        if key not in built:
+            if not _FIXTURE_HOMES:
+                atexit.register(_remove_fixture_homes)
+            home = tempfile.mkdtemp(prefix=f"spark_graft{build.__name__}_")
+            _FIXTURE_HOMES.append(home)
+            root = os.path.join(home, "build")
+            os.mkdir(root)
+            built[key] = (root, build(spark, sf_dir, root))
+        return built[key][1]
+
+    get.roots = lambda: [root for root, _ in built.values()]
+    FIXTURES[build.__name__.lstrip("_")] = get
+    return get
+
+
+def _clone(template: str) -> str:
+    """A fresh ``copytree`` of a fixture-built directory for ONE call of
+    a mutating query, placed in a new run dir under the same fixture's
+    home (never inside its build root), so the template stays pristine
+    and clones are removed with the fixture at exit. Safe for snapshot
+    tables because manifests store relative paths. Per-call side
+    directories (checkpoints, a second table) go beside the clone, in
+    ``os.path.dirname`` of the returned path."""
+    home = next(h for h in _FIXTURE_HOMES if template.startswith(h + os.sep))
+    run = tempfile.mkdtemp(prefix="run_", dir=home)
+    return shutil.copytree(template, os.path.join(run, os.path.basename(template)))
+
 
 # ---------------------------------------------------------------------
 # SQL fragment generators (shared arithmetic with operators.dedup /
@@ -1133,25 +1208,13 @@ FROM raw
 # ---------------------------------------------------------------------
 
 
-#: Trained-codebook cache, keyed like _BPE_MERGES_CACHE: the k-means
-#: codebook is a MODEL ARTIFACT (similarity.kmeans_codebook's own
-#: docstring) — train once, search many. Re-running the 2 Lloyd rounds
-#: inside every q65 invocation was the round-4 judge's "wrong shape at
-#: any scale"; at 100 TB this is a persisted table (build_ivf_index),
-#: here a localCheckpoint'ed IVF_CELLS-row frame.
-_KMEANS_CODEBOOK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _KMEANS_CODEBOOK_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cached = SIM.kmeans_codebook(emb).localCheckpoint()
-        _KMEANS_CODEBOOK_CACHE[key] = cached
-    return cached
+@_fixture
+def _trained_codebook(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The k-means codebook is a MODEL ARTIFACT (kmeans_codebook's own
+    docstring) — train once, search many: at 100 TB a persisted table
+    (build_ivf_index), here a localCheckpoint'ed IVF_CELLS-row frame."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return SIM.kmeans_codebook(emb).localCheckpoint()
 
 
 def q65_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1768,31 +1831,22 @@ def q71_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (leftmost-non-overlapping via the double-space-padding trick in
     operators.bpe), repeat. Iterative with per-round localCheckpoint,
     like connected_components; the oracle unrolls the same 6 rounds as
-    CTEs and replays every merge byte-for-byte."""
-    return _trained_bpe_merges(spark, sf_dir)
-
-
-#: Trained-merges cache, keyed by (spark app, fixture dir): the merges
-#: frame is a MODEL ARTIFACT — train once, encode many. q85 consuming
-#: this (instead of re-training inside the encode query) is exactly the
-#: persisted-merges flow a production pipeline runs; at 100 TB the
-#: artifact would be a written table, here it is a localCheckpoint'ed
-#: ≤6-row frame.
-_BPE_MERGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _trained_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
+    CTEs and replays every merge byte-for-byte. Training IS the query,
+    so every call trains; q85 encodes with the memoized fixture."""
     from ..operators.bpe import train_bpe_merges
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _BPE_MERGES_CACHE.get(key)
-    if cached is None:
-        docs = load_table(spark, sf_dir, "documents")
-        cached = train_bpe_merges(docs).localCheckpoint()
-        _BPE_MERGES_CACHE[key] = cached
-    return cached
+    return train_bpe_merges(load_table(spark, sf_dir, "documents"))
+
+
+@_fixture
+def _trained_bpe_merges(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """The q71 merges as a MODEL ARTIFACT — train once, encode many
+    (q85): at 100 TB a written table, here a localCheckpoint'ed
+    ≤6-row frame."""
+    from ..operators.bpe import train_bpe_merges
+
+    docs = load_table(spark, sf_dir, "documents")
+    return train_bpe_merges(docs).localCheckpoint()
 
 
 def _bpe_oracle() -> str:
@@ -1968,59 +2022,27 @@ WHERE length(text) >= 1 AND octet_length(encode(text)) = length(text)
 """
 
 
-#: Memoized snapshot-table temp dirs (q98/z04/z06) are removed at
-#: process exit: they must outlive their query (the returned DataFrame
-#: scans lazily) and their memoization key (applicationId), but
-#: leaking them across bench/test runs accretes /tmp garbage.
-_TEMP_SNAPSHOT_DIRS: list[str] = []
-
-
-def _tracked_mkdtemp(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _TEMP_SNAPSHOT_DIRS:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(p, ignore_errors=True)
-                for p in _TEMP_SNAPSHOT_DIRS
-            ]
-        )
-    _TEMP_SNAPSHOT_DIRS.append(d)
-    return d
-
-
-#: q98's snapshot tables, one per (applicationId, sf_dir) — see its
-#: docstring for why they are memoized rather than deleted.
-_TIMETRAVEL_TABLES: dict = {}
-
-
-def _timetravel_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _timetravel_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the a98 two-version snapshot fixture once per (app,
     fixture): v1 = every 10th order, v2 = a MERGE doubling every 20th
     key's price — input estate for the time-travel read, timed in
     bench's ``builds`` block."""
     from ..sources.snapshot import merge_snapshot, write_snapshot
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _TIMETRAVEL_TABLES.get(key)
-    if path is None:
-        orders = load_table(spark, sf_dir, "orders")
-        seed = orders.filter(F.col("o_orderkey") % 10 == 0).select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.col("o_totalprice").alias("price"),
-        )
-        path = _tracked_mkdtemp("snap_timetravel_") + "/tbl"
-        write_snapshot(seed, path, "o_orderstatus")
-        upd = seed.filter(F.col("o_orderkey") % 20 == 0).withColumn(
-            "price", F.col("price") * 2
-        )
-        merge_snapshot(path, upd, "o_orderkey", "o_orderstatus")
-        _TIMETRAVEL_TABLES[key] = path
+    orders = load_table(spark, sf_dir, "orders")
+    seed = orders.filter(F.col("o_orderkey") % 10 == 0).select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        F.col("o_totalprice").alias("price"),
+    )
+    path = root + "/tbl"
+    write_snapshot(seed, path, "o_orderstatus")
+    upd = seed.filter(F.col("o_orderkey") % 20 == 0).withColumn(
+        "price", F.col("price") * 2
+    )
+    merge_snapshot(path, upd, "o_orderkey", "o_orderstatus")
     return path
 
 
@@ -2042,7 +2064,6 @@ def q98_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     registration), not the setup writes. The dir cannot be deleted at
     return because the returned DataFrame scans it lazily.
     """
-
     from ..sources.snapshot import register_snapshot_view
 
     path = _timetravel_table(spark, sf_dir)
@@ -2266,57 +2287,48 @@ FROM r
 Z05_SQL = _z05_oracle()
 
 
-#: z04/z06's stats+bloom snapshot tables, one per (applicationId,
-#: sf_dir) — memoized for the same reason as q98's.
-_STATS_TABLES: dict = {}
-
-
-def _stats_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _stats_snapshot_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Build (once per app × fixture) the snapshot table z04 and z06
     read: orders partitioned into ~64 ingest-style key buckets, with
     manifest min/max stats on o_orderkey (correlated with the layout →
     range skipping, z04) AND per-partition Bloom bitmaps on o_custkey
     (scattered across every bucket → point-lookup skipping, z06)."""
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _STATS_TABLES.get(key)
-    if path is None:
-        base = load_table(spark, sf_dir, "orders")
-        # Partition COUNT must not scale with the data: fix ~64
-        # ingest-style buckets at any SF (manifests and the footer
-        # harvest are O(partitions); a width constant in the keyspace
-        # would mint thousands of tiny partitions at 10x).
-        max_key, n_rows = base.agg(
-            F.max("o_orderkey"), F.count(F.lit(1))
-        ).collect()[0]
-        width = max(max_key // 64, 1)
-        orders = base.select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            F.expr(f"o_orderkey DIV {width}").alias("bucket"),
-        )
-        path = _tracked_mkdtemp("snap_stats_") + "/tbl"
-        # Bloom sizing follows the data (m ≈ 10× the keys one
-        # partition holds, next power of two, floor 4096): the
-        # default 4096 bits saturates past ~500 keys/partition and
-        # would prune nothing at larger SFs.
-        per_part = max(n_rows // 64, 1)
-        bits = 4096
-        while bits < 10 * per_part:
-            bits <<= 1
-        write_snapshot(
-            orders,
-            path,
-            "bucket",
-            stats_cols=["o_orderkey"],
-            bloom_cols=["o_custkey"],
-            bloom_bits=bits,
-        )
-        _STATS_TABLES[key] = path
+    base = load_table(spark, sf_dir, "orders")
+    # Partition COUNT must not scale with the data: fix ~64
+    # ingest-style buckets at any SF (manifests and the footer
+    # harvest are O(partitions); a width constant in the keyspace
+    # would mint thousands of tiny partitions at 10x).
+    max_key, n_rows = base.agg(
+        F.max("o_orderkey"), F.count(F.lit(1))
+    ).collect()[0]
+    width = max(max_key // 64, 1)
+    orders = base.select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.expr(f"o_orderkey DIV {width}").alias("bucket"),
+    )
+    path = root + "/tbl"
+    # Bloom sizing follows the data (m ≈ 10× the keys one
+    # partition holds, next power of two, floor 4096): the
+    # default 4096 bits saturates past ~500 keys/partition and
+    # would prune nothing at larger SFs.
+    per_part = max(n_rows // 64, 1)
+    bits = 4096
+    while bits < 10 * per_part:
+        bits <<= 1
+    write_snapshot(
+        orders,
+        path,
+        "bucket",
+        stats_cols=["o_orderkey"],
+        bloom_cols=["o_custkey"],
+        bloom_bits=bits,
+    )
     return path
 
 
@@ -2362,10 +2374,7 @@ def z07_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     price and an update_post at double — from the base table."""
     from ..sources.snapshot import diff_snapshots
 
-    # ensure the memoized two-version table exists (the snapshot
-    # writes inside q98 are eager; its returned frame can be dropped)
-    q98_snapshot_time_travel(spark, sf_dir)
-    path = _TIMETRAVEL_TABLES[(spark.sparkContext.applicationId, sf_dir)]
+    path = _timetravel_table(spark, sf_dir)
     d = diff_snapshots(spark, path, 1, 2, "o_orderkey")
     return d.select(
         "change_type",
@@ -2485,64 +2494,39 @@ FROM idx
 Z09_SQL = _chunk_udtf_oracle()
 
 
-#: z10's two-round SCD2 snapshot tables, memoized like q98's.
-_SCD2_TABLES: dict = {}
-
 SCD2_BUCKETS = 16
 
 
-def _scd2_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per app × fixture) the z10 lakehouse SCD2 table:
-    bootstrap round opens every customer at 1995-01-01; round 2 changes
-    every 5th customer's balance at 1996-01-01, closing the superseded
-    version. Injected clocks throughout — fully replayable."""
-    import os
+def _scd2_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """z10's bootstrap batch: every customer opened at 1995-01-01."""
+    cust = load_table(spark, sf_dir, "customer")
+    cents = (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
+    return cust.select(
+        "c_custkey", "c_mktsegment", cents.alias("acctbal_cents")
+    ).withColumns(
+        {
+            "change_ts": F.lit("1995-01-01").cast("timestamp"),
+            "create_ts": F.lit("1994-01-01").cast("timestamp"),
+        }
+    )
 
+
+@_fixture
+def _scd2_snapshot_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """The z10 lakehouse SCD2 table after its bootstrap round. Injected
+    clocks throughout — fully replayable."""
     from ..operators.scd2 import scd2_merge_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _SCD2_TABLES.get(key)
-    if path is None:
-        cust = load_table(spark, sf_dir, "customer")
-        cents = (F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
-        base = cust.select(
-            "c_custkey", "c_mktsegment", cents.alias("acctbal_cents")
-        )
-        staged1 = base.withColumns(
-            {
-                "change_ts": F.lit("1995-01-01").cast("timestamp"),
-                "create_ts": F.lit("1994-01-01").cast("timestamp"),
-            }
-        )
-        path = _tracked_mkdtemp("snap_scd2_") + "/tbl"
-        scd2_merge_snapshot(
-            path,
-            staged1,
-            "c_custkey",
-            change_ts_col="change_ts",
-            create_ts_col="create_ts",
-            now=F.lit("2024-01-01").cast("timestamp"),
-            n_buckets=SCD2_BUCKETS,
-        )
-        staged2 = staged1.withColumns(
-            {
-                "acctbal_cents": F.when(
-                    F.col("c_custkey") % 5 == 0,
-                    F.col("acctbal_cents") + 1000,
-                ).otherwise(F.col("acctbal_cents")),
-                "change_ts": F.lit("1996-01-01").cast("timestamp"),
-            }
-        )
-        scd2_merge_snapshot(
-            path,
-            staged2,
-            "c_custkey",
-            change_ts_col="change_ts",
-            create_ts_col="create_ts",
-            now=F.lit("2024-02-01").cast("timestamp"),
-            n_buckets=SCD2_BUCKETS,
-        )
-        _SCD2_TABLES[key] = path
+    path = root + "/tbl"
+    scd2_merge_snapshot(
+        path,
+        _scd2_staged(spark, sf_dir),
+        "c_custkey",
+        change_ts_col="change_ts",
+        create_ts_col="create_ts",
+        now=F.lit("2024-01-01").cast("timestamp"),
+        n_buckets=SCD2_BUCKETS,
+    )
     return path
 
 
@@ -2553,11 +2537,32 @@ def z10_scd2_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-partitioned lakehouse table — one maintenance round reads
     and rewrites ONLY the buckets containing changed keys (cold
     buckets carried by reference; partial-touch pruning pinned in
-    tests/test_scd2_snapshot.py). The oracle replays both rounds'
-    final history arithmetically from the base table."""
+    tests/test_scd2_snapshot.py). Every call runs round 2 on a clone
+    of the bootstrapped table: every 5th customer's balance changes at
+    1996-01-01, closing the superseded version. The oracle replays
+    both rounds' final history arithmetically from the base table."""
+    from ..operators.scd2 import scd2_merge_snapshot
     from ..sources.snapshot import read_snapshot
 
-    path = _scd2_snapshot_table(spark, sf_dir)
+    path = _clone(_scd2_snapshot_table(spark, sf_dir))
+    staged2 = _scd2_staged(spark, sf_dir).withColumns(
+        {
+            "acctbal_cents": F.when(
+                F.col("c_custkey") % 5 == 0,
+                F.col("acctbal_cents") + 1000,
+            ).otherwise(F.col("acctbal_cents")),
+            "change_ts": F.lit("1996-01-01").cast("timestamp"),
+        }
+    )
+    scd2_merge_snapshot(
+        path,
+        staged2,
+        "c_custkey",
+        change_ts_col="change_ts",
+        create_ts_col="create_ts",
+        now=F.lit("2024-02-01").cast("timestamp"),
+        n_buckets=SCD2_BUCKETS,
+    )
     return read_snapshot(spark, path).select(
         "c_custkey",
         "bucket",
@@ -2600,8 +2605,6 @@ FROM documents
 """
 
 
-_JSONL_DROPS: dict = {}
-
 #: Malformed landing-drop lines for z26 — fixed literals so the
 #: quarantine rows are oracle-replayable. One truncated object, one
 #: bare string, one type-violating doc_id.
@@ -2612,24 +2615,19 @@ JSONL_BAD_LINES = (
 )
 
 
-def _jsonl_drop(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _jsonl_drop(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Write the z26 landing drop once per (app, fixture): documents
     as JSONL plus one extra part-file of malformed lines."""
-    import os
+    from ..sources.text_formats import write_jsonl
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _JSONL_DROPS.get(key)
-    if path is None:
-        from ..sources.text_formats import write_jsonl
-
-        path = _tracked_mkdtemp("jsonl_drop_") + "/docs"
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        write_jsonl(docs, path)
-        with open(f"{path}/part-99999-malformed.json", "w") as fh:
-            fh.write("\n".join(JSONL_BAD_LINES) + "\n")
-        _JSONL_DROPS[key] = path
+    path = root + "/docs"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    write_jsonl(docs, path)
+    with open(f"{path}/part-99999-malformed.json", "w") as fh:
+        fh.write("\n".join(JSONL_BAD_LINES) + "\n")
     return path
 
 
@@ -2687,8 +2685,6 @@ def _sql_str(s: str) -> str:
 Z26_SQL = _jsonl_oracle()
 
 
-_CSV_DROPS: dict = {}
-
 #: Fixed extra lines for the z27 CSV drop (after the per-file dummy
 #: header line that header=true consumes). Measured Spark PERMISSIVE
 #: semantics, which the oracle encodes row-for-row: a type-violating
@@ -2704,23 +2700,18 @@ CSV_EXTRA_LINES = (
 )
 
 
-def _csv_drop(spark: SparkSession, sf_dir: str) -> str:
-    import os
+@_fixture
+def _csv_drop(spark: SparkSession, sf_dir: str, root: str) -> str:
+    from ..sources.text_formats import write_csv
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _CSV_DROPS.get(key)
-    if path is None:
-        from ..sources.text_formats import write_csv
-
-        path = _tracked_mkdtemp("csv_drop_") + "/orders"
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        write_csv(base, path)
-        with open(f"{path}/part-99999-extra.csv", "w") as fh:
-            fh.write("o_orderkey,o_orderstatus,o_totalprice\n")
-            fh.write("\n".join(CSV_EXTRA_LINES) + "\n")
-        _CSV_DROPS[key] = path
+    path = root + "/orders"
+    base = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    write_csv(base, path)
+    with open(f"{path}/part-99999-extra.csv", "w") as fh:
+        fh.write("o_orderkey,o_orderstatus,o_totalprice\n")
+        fh.write("\n".join(CSV_EXTRA_LINES) + "\n")
     return path
 
 
@@ -2774,21 +2765,12 @@ SELECT * FROM (VALUES {extras})
 Z27_SQL = _csv_oracle()
 
 
-_SQ8_INDEX_CACHE: dict = {}
-
-
-def _sq8_index(spark: SparkSession, sf_dir: str):
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _SQ8_INDEX_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        params = SIM.sq8_params(emb).localCheckpoint()
-        codes = SIM.sq8_encode(emb, params).localCheckpoint()
-        cached = (params, codes)
-        _SQ8_INDEX_CACHE[key] = cached
-    return cached
+@_fixture
+def _sq8_index(spark: SparkSession, sf_dir: str, root: str):
+    emb = load_table(spark, sf_dir, "embeddings")
+    params = SIM.sq8_params(emb).localCheckpoint()
+    codes = SIM.sq8_encode(emb, params).localCheckpoint()
+    return (params, codes)
 
 
 def z28_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2857,29 +2839,21 @@ FROM scored QUALIFY rank <= 5
 Z28_SQL = _sq8_oracle()
 
 
-_BLOB_DROPS: dict = {}
-
-
-def _blob_drop(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _blob_drop(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z31 blob directory once per (app, fixture):
     one ``doc_{id}.bin`` file per document, bytes = UTF-8 text —
     written executor-side (foreachPartition), no driver collect."""
-    import os
+    path = root + "/media"
+    os.makedirs(path, exist_ok=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _BLOB_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("blob_drop_") + "/media"
-        os.makedirs(path, exist_ok=True)
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    def _write(rows) -> None:
+        for r in rows:
+            with open(f"{path}/doc_{r.doc_id}.bin", "wb") as fh:
+                fh.write(r.text.encode("utf-8"))
 
-        def _write(rows) -> None:
-            for r in rows:
-                with open(f"{path}/doc_{r.doc_id}.bin", "wb") as fh:
-                    fh.write(r.text.encode("utf-8"))
-
-        docs.foreachPartition(_write)
-        _BLOB_DROPS[key] = path
+    docs.foreachPartition(_write)
     return path
 
 
@@ -2943,29 +2917,21 @@ GROUP BY tok.doc_id
 """
 
 
-_SNAPAGG_DROPS: dict = {}
-
-
-def _snapagg_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _snapagg_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z33 snapshot fixture once per (app, fixture):
     orders committed as a snapshot table partitioned by o_orderstatus
     with o_totalprice column statistics."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _SNAPAGG_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("snapagg_") + "/orders_tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        write_snapshot(
-            orders,
-            path,
-            "o_orderstatus",
-            stats_cols=["o_totalprice", "o_orderdate"],
-        )
-        _SNAPAGG_DROPS[key] = path
+    path = root + "/orders_tbl"
+    orders = load_table(spark, sf_dir, "orders")
+    write_snapshot(
+        orders,
+        path,
+        "o_orderstatus",
+        stats_cols=["o_totalprice", "o_orderdate"],
+    )
     return path
 
 
@@ -3075,35 +3041,39 @@ def z35_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.sorted_neighborhood_pairs(docs, window=8, threshold=0.5)
 
 
-_WARC_DROPS: dict = {}
-
-
-def _warc_file_drop(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _warc_file_drop(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z36 WARC estate once per (app, fixture): one
     ``doc_<id>.warc`` file per (representable) document, bytes = the
     same Catalyst-built two-record archive z17 parses in-plan —
     written executor-side, no driver collect."""
-    import os
-
     from ..sources.warc import attach_warc_payload
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _WARC_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("warc_drop_") + "/crawl"
-        os.makedirs(path, exist_ok=True)
-        blobs = attach_warc_payload(
-            load_table(spark, sf_dir, "documents")
-        ).select("doc_id", "payload")
+    path = root + "/crawl"
+    os.makedirs(path, exist_ok=True)
+    blobs = attach_warc_payload(
+        load_table(spark, sf_dir, "documents")
+    ).select("doc_id", "payload")
 
-        def _write(rows) -> None:
-            for r in rows:
-                with open(f"{path}/doc_{r.doc_id}.warc", "wb") as fh:
-                    fh.write(bytes(r.payload))
+    def _write(rows) -> None:
+        for r in rows:
+            with open(f"{path}/doc_{r.doc_id}.warc", "wb") as fh:
+                fh.write(bytes(r.payload))
 
-        blobs.foreachPartition(_write)
-        _WARC_DROPS[key] = path
+    blobs.foreachPartition(_write)
     return path
+
+
+@_fixture
+def _warc_warm_estate(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """The first 64 files of the z36 WARC estate — two tasks per core
+    at 32 cores, so one read makes EVERY pooled Python worker pay its
+    one-time DataSource unpickle+import (bench's Python-path warm)
+    without pre-executing the timed z36 scan."""
+    estate = _warc_file_drop(spark, sf_dir)
+    for name in sorted(os.listdir(estate))[:64]:
+        shutil.copy(os.path.join(estate, name), root)
+    return root
 
 
 def z36_warc_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3339,43 +3309,35 @@ GROUP BY o_orderstatus
 """
 
 
-_RANGECOUNT_DROPS: dict = {}
-
-
-def _rangecount_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _rangecount_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z41 snapshot fixture once per (app, fixture):
     orders partitioned by ``okey_bucket = floor(o_orderkey / 20000)``
     with o_orderkey column statistics — partition key ranges are
     DISJOINT by construction, so bucket-aligned range predicates prove
     full containment from per-partition [min, max, nulls] stats while
     misaligned ones are refused (partial overlap)."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _RANGECOUNT_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("rangecount_") + "/orders_tbl"
-        orders = load_table(spark, sf_dir, "orders").withColumn(
-            "okey_bucket", F.floor(F.col("o_orderkey") / 20000)
-        ).withColumn(
-            "cents",
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("long"),
-        )
-        # one file per partition dir: without this, 32 tasks × many
-        # buckets writes O(buckets·tasks) tiny files and the commit's
-        # durability fsync pass + footer harvest pays per FILE (the
-        # small-files problem, measured: the sf1 leg of the scale
-        # smoke blew past 590 s; repartitioned it is seconds)
-        write_snapshot(
-            orders.repartition("okey_bucket"),
-            path,
-            "okey_bucket",
-            stats_cols=["o_orderkey", "cents::sum"],
-        )
-        _RANGECOUNT_DROPS[key] = path
+    path = root + "/orders_tbl"
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        "okey_bucket", F.floor(F.col("o_orderkey") / 20000)
+    ).withColumn(
+        "cents",
+        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long"),
+    )
+    # one file per partition dir: without this, 32 tasks × many
+    # buckets writes O(buckets·tasks) tiny files and the commit's
+    # durability fsync pass + footer harvest pays per FILE (the
+    # small-files problem, measured: the sf1 leg of the scale
+    # smoke blew past 590 s; repartitioned it is seconds)
+    write_snapshot(
+        orders.repartition("okey_bucket"),
+        path,
+        "okey_bucket",
+        stats_cols=["o_orderkey", "cents::sum"],
+    )
     return path
 
 
@@ -3427,7 +3389,16 @@ SELECT (SELECT count(*) FROM orders
 """
 
 
-_MOR_DROPS: dict = {}
+@_fixture
+def _orders_snapshot(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """The plain orders snapshot (partition o_orderstatus): the
+    template the statement/maintenance queries (z42, z43, z44, z50,
+    z52) each clone and mutate per call."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/orders_tbl"
+    write_snapshot(load_table(spark, sf_dir, "orders"), path, "o_orderstatus")
+    return path
 
 
 def z42_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3445,25 +3416,17 @@ def z42_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite-drops-tombstones carry rule are unit-pinned
     (tests/test_mor_delete.py). Oracle recomputes both from the rows
     the delete leaves behind."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import delete_where, read_snapshot, write_snapshot
+    from ..sources.snapshot import delete_where, read_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _MOR_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("mor_delete_") + "/orders_tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        write_snapshot(orders, path, "o_orderstatus")
-        delete_where(
-            spark,
-            path,
-            "o_totalprice < 50000",
-            mode="merge-on-read",
-            key="o_orderkey",
-        )
-        _MOR_DROPS[key] = path
+    path = _clone(_orders_snapshot(spark, sf_dir))
+    delete_where(
+        spark,
+        path,
+        "o_totalprice < 50000",
+        mode="merge-on-read",
+        key="o_orderkey",
+    )
     live = read_snapshot(spark, path)
     meta_count = answer_from_manifest(
         spark, "SELECT COUNT(*) AS n_total FROM orders", {"orders": path}
@@ -3491,28 +3454,6 @@ GROUP BY o_orderstatus
 """
 
 
-_DML_DROPS: dict = {}
-
-
-def _dml_table(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """A fresh orders snapshot (partition o_orderstatus) per (app,
-    fixture, tag) — z43/z44 mutate their tables, so each statement
-    query owns its copy."""
-    import os
-
-    from ..sources.snapshot import write_snapshot
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), tag)
-    path = _DML_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp(f"dml_{tag}_") + "/orders_tbl"
-        write_snapshot(
-            load_table(spark, sf_dir, "orders"), path, "o_orderstatus"
-        )
-        _DML_DROPS[key] = path
-    return path
-
-
 def z43_sql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL ``UPDATE`` statement front-end (sources.sql_merge.
     execute_update, routed by execute_dml): completes the warehouse DML
@@ -3527,7 +3468,7 @@ def z43_sql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE expression over the raw rows."""
     from ..sources.sql_merge import execute_dml
 
-    path = _dml_table(spark, sf_dir, "upd")
+    path = _clone(_orders_snapshot(spark, sf_dir))
     execute_dml(
         spark,
         "UPDATE orders SET o_totalprice = o_totalprice + 10.0,"
@@ -3574,7 +3515,7 @@ def z44_sql_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sql_merge.py). The oracle keeps the complement rows."""
     from ..sources.sql_merge import execute_dml
 
-    path = _dml_table(spark, sf_dir, "del")
+    path = _clone(_orders_snapshot(spark, sf_dir))
     execute_dml(
         spark,
         "DELETE FROM orders WHERE o_orderdate < '1994-01-01'",
@@ -3672,34 +3613,47 @@ def z46_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v1.crossJoin(now)
 
 
-_TT_DROPS: dict = {}
-
-
-def _tt_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _tt_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z46 versioned-history fixture once per (app,
     fixture): the orders snapshot table plus the copy-on-write delete
     that creates version 2 — input estate for the metadata time-travel
     answer, timed in bench's ``builds`` block."""
-    import os
-
     from ..sources.snapshot import delete_where, write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _TT_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("sql_tt_") + "/orders_tbl"
-        write_snapshot(
-            load_table(spark, sf_dir, "orders"),
-            path,
-            "o_orderstatus",
-            stats_cols=["o_totalprice"],
-        )
-        delete_where(spark, path, "o_totalprice < 50000")
-        _TT_DROPS[key] = path
+    path = root + "/orders_tbl"
+    write_snapshot(
+        load_table(spark, sf_dir, "orders"),
+        path,
+        "o_orderstatus",
+        stats_cols=["o_totalprice"],
+    )
+    delete_where(spark, path, "o_totalprice < 50000")
     return path
 
 
-_OPTOUT_DROPS: dict = {}
+@_fixture
+def _docs_snapshot(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """The plain documents snapshot (partition lang): the template z47
+    and z49 each clone and mutate per call."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/docs_tbl"
+    write_snapshot(load_table(spark, sf_dir, "documents"), path, "lang")
+    return path
+
+
+@_fixture
+def _optout_ids(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z47's opt-out list, landed as two parquet drops — one per
+    micro-batch under maxFilesPerTrigger=1."""
+    docs = load_table(spark, sf_dir, "documents")
+    ids = docs.filter("doc_id % 13 = 0").select("doc_id")
+    for part, cond in (("a", "doc_id % 2 = 0"), ("b", "doc_id % 2 = 1")):
+        ids.filter(cond).coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/{part}"
+        )
+    return root
 
 
 def z47_live_optout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3714,39 +3668,22 @@ def z47_live_optout(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers stop seeing the rows at the batch's commit. The result
     profiles the LIVE table per language; the oracle keeps the
     complement of the opt-out list."""
-    import os
-
-    from ..sources.snapshot import read_snapshot, write_snapshot
+    from ..sources.snapshot import read_snapshot
     from ..streaming import stream_optout_sink
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _OPTOUT_DROPS.get(key)
-    if path is None:
-        base = _tracked_mkdtemp("optout_")
-        path = base + "/docs_tbl"
-        docs = load_table(spark, sf_dir, "documents")
-        write_snapshot(docs, path, "lang")
-        # the opt-out list lands as files over time: two parquet drops,
-        # one per micro-batch (maxFilesPerTrigger=1)
-        ids = docs.filter("doc_id % 13 = 0").select("doc_id")
-        ids_dir = base + "/optout_ids"
-        for part, cond in (("a", "doc_id % 2 = 0"), ("b", "doc_id % 2 = 1")):
-            ids.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                f"{ids_dir}/{part}"
-            )
-        stream = (
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{ids_dir}/*")
-        )
-        stream_optout_sink(
-            stream,
-            path,
-            "doc_id",
-            app_id="z47-optout",
-            checkpoint_dir=base + "/ckpt",
-        )
-        _OPTOUT_DROPS[key] = path
+    path = _clone(_docs_snapshot(spark, sf_dir))
+    stream = (
+        spark.readStream.schema("doc_id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{_optout_ids(spark, sf_dir)}/*")
+    )
+    stream_optout_sink(
+        stream,
+        path,
+        "doc_id",
+        app_id="z47-optout",
+        checkpoint_dir=os.path.dirname(path) + "/ckpt",
+    )
     return (
         read_snapshot(spark, path)
         .groupBy("lang")
@@ -3767,7 +3704,16 @@ GROUP BY lang
 """
 
 
-_COMPACTP_DROPS: dict = {}
+@_fixture
+def _fragmented_docs(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z48's fragmented ingest: a 32-task write scatters every
+    language's rows across O(tasks) tiny files per directory."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/docs_tbl"
+    docs = load_table(spark, sf_dir, "documents").repartition(32)
+    write_snapshot(docs, path, "lang")
+    return path
 
 
 def z48_compact_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3785,24 +3731,12 @@ def z48_compact_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     after compaction against the raw rows — the rewrite is invisible
     to readers; the file-count collapse itself is asserted in-query
     (not SQL-expressible)."""
-    import os
+    from ..sources.snapshot import compact_partitions, read_snapshot
 
-    from ..sources.snapshot import (
-        compact_partitions,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _COMPACTP_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("compactp_") + "/docs_tbl"
-        docs = load_table(spark, sf_dir, "documents").repartition(32)
-        write_snapshot(docs, path, "lang")
-        out = compact_partitions(spark, path, max_files=4)
-        assert out["compacted"], "fixture must actually be fragmented"
-        assert out["files_after"] == len(out["compacted"])  # 1 file/dir
-        _COMPACTP_DROPS[key] = path
+    path = _clone(_fragmented_docs(spark, sf_dir))
+    out = compact_partitions(spark, path, max_files=4)
+    assert out["compacted"], "fixture must actually be fragmented"
+    assert out["files_after"] == len(out["compacted"])  # 1 file/dir
     return (
         read_snapshot(spark, path)
         .groupBy("lang", "source")
@@ -3824,9 +3758,6 @@ GROUP BY lang, source
 """
 
 
-_WAP_DROPS: dict = {}
-
-
 def z49_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-audit-publish (sources.snapshot.stage_commit /
     publish_staged — Iceberg's WAP pattern): a curation ETL writes the
@@ -3842,34 +3773,25 @@ def z49_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage time, and staged-data GC safety are unit-pinned
     (tests/test_wap.py). The result profiles the PUBLISHED table; the
     oracle recomputes the curation from raw rows."""
-    import os
-
     from ..sources.snapshot import (
         manifest_aggregate,
         publish_staged,
         read_snapshot,
         stage_commit,
-        write_snapshot,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _WAP_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("wap_") + "/docs_tbl"
-        docs = load_table(spark, sf_dir, "documents")
-        write_snapshot(docs, path, "lang")
-        cleaned = docs.filter(
-            (F.col("n_chars") >= 50) & F.col("lang").isNotNull()
-        )
-        handle = stage_commit(cleaned, path, "lang", name="curation")
-        # the AUDIT: a metadata-only row-count sanity gate against the
-        # staged manifest — the curation must keep a nonzero corpus
-        # and must not grow it
-        staged_n = manifest_aggregate(path, version=handle)["n_rows"]
-        live_n = manifest_aggregate(path)["n_rows"]
-        assert 0 < staged_n <= live_n, "audit failed — would drop_staged"
-        publish_staged(path, "curation")
-        _WAP_DROPS[key] = path
+    path = _clone(_docs_snapshot(spark, sf_dir))
+    cleaned = load_table(spark, sf_dir, "documents").filter(
+        (F.col("n_chars") >= 50) & F.col("lang").isNotNull()
+    )
+    handle = stage_commit(cleaned, path, "lang", name="curation")
+    # the AUDIT: a metadata-only row-count sanity gate against the
+    # staged manifest — the curation must keep a nonzero corpus and
+    # must not grow it
+    staged_n = manifest_aggregate(path, version=handle)["n_rows"]
+    live_n = manifest_aggregate(path)["n_rows"]
+    assert 0 < staged_n <= live_n, "audit failed — would drop_staged"
+    publish_staged(path, "curation")
     return (
         read_snapshot(spark, path)
         .groupBy("lang")
@@ -3890,7 +3812,22 @@ GROUP BY lang
 """
 
 
-_RESTORE_DROPS: dict = {}
+@_fixture
+def _corrupted_orders(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z50's incident: the orders snapshot (v1) after a wrong UPDATE
+    landed and committed (v2)."""
+    from ..sources.snapshot import write_snapshot
+    from ..sources.sql_merge import execute_dml
+
+    path = root + "/orders_tbl"
+    write_snapshot(load_table(spark, sf_dir, "orders"), path, "o_orderstatus")
+    execute_dml(
+        spark,
+        "UPDATE orders SET o_totalprice = 0.0"
+        " WHERE o_orderpriority = '1-URGENT'",
+        tables={"orders": path},
+    )
+    return path
 
 
 def z50_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3905,28 +3842,11 @@ def z50_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the manifest-answered COUNT, so the hash proves metadata
     and data agree post-restore; the oracle is simply the ORIGINAL
     table — restore must be byte-faithful to v1."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import read_snapshot, restore_snapshot, write_snapshot
-    from ..sources.sql_merge import execute_dml
+    from ..sources.snapshot import read_snapshot, restore_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _RESTORE_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("restore_") + "/orders_tbl"
-        write_snapshot(
-            load_table(spark, sf_dir, "orders"), path, "o_orderstatus"
-        )
-        # the incident: a wrong UPDATE lands (and is committed)
-        execute_dml(
-            spark,
-            "UPDATE orders SET o_totalprice = 0.0"
-            " WHERE o_orderpriority = '1-URGENT'",
-            tables={"orders": path},
-        )
-        restore_snapshot(path, 1)
-        _RESTORE_DROPS[key] = path
+    path = _clone(_corrupted_orders(spark, sf_dir))
+    restore_snapshot(path, 1)
     meta_n = answer_from_manifest(
         spark, "SELECT COUNT(*) AS n_total FROM orders", {"orders": path}
     )
@@ -3952,7 +3872,18 @@ GROUP BY o_orderstatus
 """
 
 
-_NDV_DROPS: dict = {}
+@_fixture
+def _ndv_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z51's events snapshot (partition event_type) with a per-partition
+    HLL sketch on user_id."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/events_tbl"
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    write_snapshot(ev, path, "event_type", stats_cols=["user_id::hll"])
+    return path
 
 
 def z51_manifest_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3972,22 +3903,9 @@ def z51_manifest_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays hash → registers → estimate in SQL — per group AND
     re-merged globally — so the manifest merge arithmetic itself is
     hash-verified."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _NDV_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("ndv_") + "/events_tbl"
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        write_snapshot(
-            ev, path, "event_type", stats_cols=["user_id::hll"]
-        )
-        _NDV_DROPS[key] = path
+    path = _ndv_table(spark, sf_dir)
     grp = answer_from_manifest(
         spark,
         "SELECT event_type, COUNT(*) AS n,"
@@ -4053,9 +3971,6 @@ CROSS JOIN total t
 Z51_SQL = _z51_oracle()
 
 
-_BRANCH_DROPS: dict = {}
-
-
 def z52_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot BRANCHES (sources.snapshot.create_branch /
     fast_forward_branch — Iceberg branch refs with git fast-forward
@@ -4075,48 +3990,38 @@ def z52_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpublished branch data, and post-publish branch reuse are
     unit-pinned (tests/test_branches.py). The oracle replays both
     branch commits arithmetically over the raw table."""
-    import os
-
     from ..sources.snapshot import (
         create_branch,
         fast_forward_branch,
         manifest_aggregate,
         merge_snapshot,
         read_snapshot,
-        write_snapshot,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    memo = _BRANCH_DROPS.get(key)
-    if memo is None:
-        path = _tracked_mkdtemp("branch_") + "/orders_tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        write_snapshot(orders, path, "o_orderstatus")
-        create_branch(path, "backfill")
-        # branch commit 1: price correction for urgent orders (keys
-        # keep their partition — merge's stable-partition contract)
-        fix = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
-            "o_totalprice", F.col("o_totalprice") + F.lit(100.0)
-        )
-        merge_snapshot(path, fix, "o_orderkey", "o_orderstatus", branch="backfill")
-        # branch commit 2: synthetic backfill rows land in a NEW
-        # partition that exists only on the branch until publish
-        ins = (
-            orders.where(F.col("o_orderpriority") == "2-HIGH")
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(100000000))
-            .withColumn("o_orderstatus", F.lit("B"))
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
-        )
-        merge_snapshot(path, ins, "o_orderkey", "o_orderstatus", branch="backfill")
-        # the AUDIT, while the branch is two commits ahead: main's
-        # metadata COUNT must still be the original table's
-        n_main_before = manifest_aggregate(path)["n_rows"]
-        n_branch = manifest_aggregate(path, version="branch:backfill")["n_rows"]
-        assert n_branch > n_main_before, "backfill lost rows — drop_branch"
-        ff_version = fast_forward_branch(path, "backfill")
-        memo = (path, n_main_before, ff_version)
-        _BRANCH_DROPS[key] = memo
-    path, n_main_before, ff_version = memo
+    path = _clone(_orders_snapshot(spark, sf_dir))
+    orders = load_table(spark, sf_dir, "orders")
+    create_branch(path, "backfill")
+    # branch commit 1: price correction for urgent orders (keys keep
+    # their partition — merge's stable-partition contract)
+    fix = orders.where(F.col("o_orderpriority") == "1-URGENT").withColumn(
+        "o_totalprice", F.col("o_totalprice") + F.lit(100.0)
+    )
+    merge_snapshot(path, fix, "o_orderkey", "o_orderstatus", branch="backfill")
+    # branch commit 2: synthetic backfill rows land in a NEW partition
+    # that exists only on the branch until publish
+    ins = (
+        orders.where(F.col("o_orderpriority") == "2-HIGH")
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(100000000))
+        .withColumn("o_orderstatus", F.lit("B"))
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1.0))
+    )
+    merge_snapshot(path, ins, "o_orderkey", "o_orderstatus", branch="backfill")
+    # the AUDIT, while the branch is two commits ahead: main's metadata
+    # COUNT must still be the original table's
+    n_main_before = manifest_aggregate(path)["n_rows"]
+    n_branch = manifest_aggregate(path, version="branch:backfill")["n_rows"]
+    assert n_branch > n_main_before, "backfill lost rows — drop_branch"
+    ff_version = fast_forward_branch(path, "backfill")
     return (
         read_snapshot(spark, path)
         .groupBy("o_orderstatus")
@@ -4155,7 +4060,18 @@ GROUP BY o_orderstatus
 """
 
 
-_EVOSPEC_DROPS: dict = {}
+@_fixture
+def _sharded_orders(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z53's starting table: orders (plus a customer ``shard`` column)
+    partitioned by the skewed low-cardinality o_orderstatus."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/orders_tbl"
+    base = load_table(spark, sf_dir, "orders").withColumn(
+        "shard", F.pmod(F.col("o_custkey"), F.lit(8))
+    )
+    write_snapshot(base, path, "o_orderstatus", stats_cols=["o_totalprice"])
+    return path
 
 
 def z53_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4179,8 +4095,6 @@ def z53_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan against the manifest's per-partition counts, so the hash
     proves data and metadata agree post-migration. The oracle replays
     the shard derivation and the appended batch arithmetically."""
-    import os
-
     from ..sources.snapshot import (
         append_snapshot,
         compact_snapshot,
@@ -4188,34 +4102,24 @@ def z53_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_aggregate,
         manifest_partition_counts,
         read_snapshot,
-        write_snapshot,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    memo = _EVOSPEC_DROPS.get(key)
-    if memo is None:
-        path = _tracked_mkdtemp("evospec_") + "/orders_tbl"
-        base = load_table(spark, sf_dir, "orders").withColumn(
-            "shard", F.pmod(F.col("o_custkey"), F.lit(8))
-        )
-        write_snapshot(base, path, "o_orderstatus",
-                       stats_cols=["o_totalprice"])
-        evolve_partition_spec(path, "shard")
-        batch = (
-            base.where(F.col("o_orderpriority") == "1-URGENT")
-            .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(100000000))
-            .withColumn("o_orderstatus", F.lit("N"))
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(0.5))
-        )
-        append_snapshot(path, batch, "shard")
-        # mixed-state global metadata: zero data pages, still provable
-        agg = manifest_aggregate(path, columns=["o_totalprice"])
-        n_mixed, price_max_mixed = agg["n_rows"], agg["columns"]["o_totalprice"]["max"]
-        compact_snapshot(spark, path)  # the migration
-        meta_counts = manifest_partition_counts(path)  # legal again
-        memo = (path, n_mixed, price_max_mixed, meta_counts)
-        _EVOSPEC_DROPS[key] = memo
-    path, n_mixed, price_max_mixed, meta_counts = memo
+    path = _clone(_sharded_orders(spark, sf_dir))
+    evolve_partition_spec(path, "shard")
+    batch = (
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .withColumn("shard", F.pmod(F.col("o_custkey"), F.lit(8)))
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(100000000))
+        .withColumn("o_orderstatus", F.lit("N"))
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(0.5))
+    )
+    append_snapshot(path, batch, "shard")
+    # mixed-state global metadata: zero data pages, still provable
+    agg = manifest_aggregate(path, columns=["o_totalprice"])
+    n_mixed, price_max_mixed = agg["n_rows"], agg["columns"]["o_totalprice"]["max"]
+    compact_snapshot(spark, path)  # the migration
+    meta_counts = manifest_partition_counts(path)  # legal again
     scan = (
         read_snapshot(spark, path)
         .groupBy("shard")
@@ -4266,23 +4170,15 @@ GROUP BY shard
 """
 
 
-_TOKIDX_DROPS: dict = {}
-
-
-def _tokidx_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _tokidx_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z54 persisted token index once per (app,
     fixture) — an index-build artifact (train once, serve forever),
     timed in bench's ``builds`` block like the PQ/IVF stores."""
-    import os
-
     from ..operators.text_index import build_token_index
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _TOKIDX_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("tokidx_") + "/idx"
-        build_token_index(load_table(spark, sf_dir, "documents"), path)
-        _TOKIDX_DROPS[key] = path
+    path = root + "/idx"
+    build_token_index(load_table(spark, sf_dir, "documents"), path)
     return path
 
 
@@ -4348,11 +4244,27 @@ GROUP BY d.lang, o.n_or
 """
 
 
-_QHIST_DROPS: dict = {}
-
 #: z55 histogram bucket width in cents — the q90 constant, so the two
 #: recipes stay one recipe.
 _Z55_WIDTH = 5_000_00
+
+
+@_fixture
+def _qhist_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z55's orders snapshot (partition o_orderstatus) with an
+    equi-width cents histogram."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/orders_tbl"
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", cents.alias("cents")
+    )
+    write_snapshot(
+        orders, path, "o_orderstatus",
+        stats_cols=[f"cents::hist:{_Z55_WIDTH}"],
+    )
+    return path
 
 
 def z55_manifest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4378,26 +4290,9 @@ def z55_manifest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays bucket → cumulative-rank → lower-edge in SQL
     per group AND re-merged globally, so the manifest merge arithmetic
     itself is hash-verified."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _QHIST_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("qhist_") + "/orders_tbl"
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", cents.alias("cents")
-        )
-        write_snapshot(
-            orders, path, "o_orderstatus",
-            stats_cols=[f"cents::hist:{_Z55_WIDTH}"],
-        )
-        _QHIST_DROPS[key] = path
+    path = _qhist_table(spark, sf_dir)
     grp = answer_from_manifest(
         spark,
         "SELECT o_orderstatus, COUNT(*) AS n,"
@@ -4467,39 +4362,31 @@ FROM per CROSS JOIN g
 """
 
 
-_GBIN_DROPS: dict = {}
-
-
-def _gbin_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _gbin_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Shared z61/z63 fixture: orders snapshotted by o_orderstatus
     with an NDV sketch on o_custkey and a price histogram."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _GBIN_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("gbin_") + "/orders_tbl"
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_custkey", cents.alias("cents")
-        )
-        write_snapshot(
-            orders, path, "o_orderstatus",
-            # cents range stats + exact sum added in round 9 for z86's
-            # IN+range conjunction — additive entries; z61/z63's
-            # statements and oracles are unaffected
-            stats_cols=[
-                "o_custkey::hll",
-                f"cents::hist:{_Z55_WIDTH}",
-                "cents",
-                "cents::sum",
-            ],
-        )
-        _GBIN_DROPS[key] = path
+    path = root + "/orders_tbl"
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("long")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_custkey", cents.alias("cents")
+    )
+    write_snapshot(
+        orders, path, "o_orderstatus",
+        # cents range stats + exact sum added in round 9 for z86's
+        # IN+range conjunction — additive entries; z61/z63's
+        # statements and oracles are unaffected
+        stats_cols=[
+            "o_custkey::hll",
+            f"cents::hist:{_Z55_WIDTH}",
+            "cents",
+            "cents::sum",
+        ],
+    )
     return path
 
 
@@ -4520,10 +4407,7 @@ def z61_metadata_groupby_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers → estimate per group AND over the member union, and the
     bucket → cumulative-rank → lower-edge quantile recipe likewise, so
     the manifest merge arithmetic itself is hash-verified."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import write_snapshot
 
     path = _gbin_table(spark, sf_dir)
     grp = answer_from_manifest(
@@ -4622,7 +4506,20 @@ CROSS JOIN g
 Z61_SQL = _z61_oracle()
 
 
-_CCOUNT_DROPS: dict = {}
+@_fixture
+def _ccount_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z62's events snapshot (partition event_type) with deterministic
+    NULLs (event_id % 3) in a statted value column."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/events_tbl"
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        F.when(F.col("event_id") % 3 != 0, F.col("value")).alias("value2"),
+    )
+    write_snapshot(ev, path, "event_type", stats_cols=["value2"])
+    return path
 
 
 def z62_metadata_count_col(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4639,23 +4536,9 @@ def z62_metadata_count_col(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuse. The fixture manufactures NULLs deterministically
     (event_id % 3) so the null arithmetic is real; the oracle replays
     the same NULLIF and plain SQL COUNTs."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _CCOUNT_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("ccount_") + "/events_tbl"
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "event_type",
-            F.when(F.col("event_id") % 3 != 0, F.col("value"))
-            .alias("value2"),
-        )
-        write_snapshot(ev, path, "event_type", stats_cols=["value2"])
-        _CCOUNT_DROPS[key] = path
+    path = _ccount_table(spark, sf_dir)
     grp = answer_from_manifest(
         spark,
         "SELECT event_type, COUNT(value2) AS cv, COUNT(*) AS n"
@@ -5040,7 +4923,22 @@ WHERE 5 * qty * qty_cnt < qty_sum
 """
 
 
-_METATBL_DROPS: dict = {}
+@_fixture
+def _metatbl_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z70's two-commit orders snapshot: the initial write plus a MERGE
+    into one status, so history has real shape."""
+    from ..sources.snapshot import merge_snapshot, write_snapshot
+
+    path = root + "/orders_tbl"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    write_snapshot(orders, path, "o_orderstatus")
+    fix = orders.filter(F.col("o_orderkey") % 1000 == 0).withColumn(
+        "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
+    )
+    merge_snapshot(path, fix, "o_orderkey", "o_orderstatus")
+    return path
 
 
 def z70_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5057,27 +4955,9 @@ def z70_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic — and the oracle replays them arithmetically from
     the raw table. Wall-clock ``committed_at`` is excluded (machine
     state; resolve_as_of owns it, z46-pinned)."""
-    import os
+    from ..sources.snapshot import read_metadata_table
 
-    from ..sources.snapshot import (
-        merge_snapshot,
-        read_metadata_table,
-        write_snapshot,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _METATBL_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("metatbl_") + "/orders_tbl"
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        write_snapshot(orders, path, "o_orderstatus")
-        fix = orders.filter(F.col("o_orderkey") % 1000 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") + F.lit(1.0)
-        )
-        merge_snapshot(path, fix, "o_orderkey", "o_orderstatus")
-        _METATBL_DROPS[key] = path
+    path = _metatbl_table(spark, sf_dir)
     parts = read_metadata_table(spark, path, "partitions").select(
         "value", "n_rows"
     )
@@ -5542,10 +5422,8 @@ FROM meta LEFT JOIN g ON TRUE
 """
 
 
-_FILESKIP_DROPS: dict = {}
-
-
-def _fileskip_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
+@_fixture
+def _fileskip_table(spark: SparkSession, sf_dir: str, root: str) -> "tuple[str, int]":
     """Materialize the z76 snapshot fixture once per (app, sf_dir): a
     table whose FILE layout is exact by construction — ``spark.range``
     with an explicit partition count slices ``[0, m)`` into 16 equal
@@ -5557,17 +5435,11 @@ def _fileskip_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
     (Catalyst collapses unions of coalesced children; range
     partitioning samples). ``m`` is sized from the orders table so the
     fixture scales with sf."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _FILESKIP_DROPS.get(key)
-    if hit is not None:
-        return hit
     n = load_table(spark, sf_dir, "orders").count()
     m = max((n // 16) * 16, 16)
-    path = _tracked_mkdtemp("fileskip_") + "/tbl"
+    path = root + "/tbl"
     df = spark.range(0, m, 1, 16).select(
         F.col("id").alias("k"),
         F.floor(F.col("id") / (m // 4)).cast("long").alias("bu"),
@@ -5575,7 +5447,6 @@ def _fileskip_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
     # k::sum rides for z100's disjunctive SUM; min/max entries and the
     # per-file grain (z76/z98) are unchanged by the extra sum entry
     write_snapshot(df, path, "bu", stats_cols=["k", "k::sum"])
-    _FILESKIP_DROPS[key] = (path, m)
     return path, m
 
 
@@ -5795,34 +5666,26 @@ SELECT hi.*, lo.* FROM hi, lo
 """
 
 
-_SUMAVG_DROPS: dict = {}
-
-
-def _sumavg_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _sumavg_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Shared z64/z85 fixture: orders snapshotted by o_orderstatus with
     exact ``cents::sum`` entries and manufactured NULLs
     (o_orderkey % 7) so null-skipping arithmetic is real."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _SUMAVG_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("sumavg_") + "/orders_tbl"
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 7 != 0, cents).alias("cents"),
-        )
-        write_snapshot(
-            orders, path, "o_orderstatus",
-            stats_cols=["cents", "cents::sum"],
-        )
-        _SUMAVG_DROPS[key] = path
+    path = root + "/orders_tbl"
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("long")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.when(F.col("o_orderkey") % 7 != 0, cents).alias("cents"),
+    )
+    write_snapshot(
+        orders, path, "o_orderstatus",
+        stats_cols=["cents", "cents::sum"],
+    )
     return path
 
 
@@ -5949,7 +5812,17 @@ FROM top CROSS JOIN spread
 """
 
 
-_SBRANCH_DROPS: dict = {}
+@_fixture
+def _even_events(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z56's seed table: the even-keyed events (partition event_type)."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/events_tbl"
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    write_snapshot(ev.where("event_id % 2 = 0"), path, "event_type")
+    return path
 
 
 def z56_stream_branch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5967,43 +5840,29 @@ def z56_stream_branch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and multi-commit ff are unit-pinned (tests/test_snapshot.py
     stream-append tests, tests/test_branches.py). The oracle replays
     the seed/stream split and the final profile over raw events."""
-    import os
-
     from ..sources.snapshot import (
         create_branch,
         fast_forward_branch,
         manifest_aggregate,
         read_snapshot,
-        write_snapshot,
     )
     from ..streaming import events_stream_multibatch, stream_append_sink
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    memo = _SBRANCH_DROPS.get(key)
-    if memo is None:
-        root = _tracked_mkdtemp("sbranch_")
-        path = root + "/events_tbl"
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        write_snapshot(ev.where("event_id % 2 = 0"), path, "event_type")
-        create_branch(path, "ingest")
-        stream = events_stream_multibatch(spark, sf_dir).select(
-            "event_id", "user_id", "event_type", "value"
-        ).where("event_id % 2 = 1")
-        stream_append_sink(
-            stream, path, "event_type", app_id="z56",
-            checkpoint_dir=root + "/ckpt", branch="ingest",
-        )
-        # the AUDIT, from manifests alone: main never advanced, the
-        # branch carries the full corpus
-        n_main_before = manifest_aggregate(path)["n_rows"]
-        n_branch = manifest_aggregate(path, version="branch:ingest")["n_rows"]
-        assert n_branch > n_main_before, "ingest lost rows — drop_branch"
-        fast_forward_branch(path, "ingest")
-        memo = (path, n_main_before)
-        _SBRANCH_DROPS[key] = memo
-    path, n_main_before = memo
+    path = _clone(_even_events(spark, sf_dir))
+    create_branch(path, "ingest")
+    stream = events_stream_multibatch(spark, sf_dir).select(
+        "event_id", "user_id", "event_type", "value"
+    ).where("event_id % 2 = 1")
+    stream_append_sink(
+        stream, path, "event_type", app_id="z56",
+        checkpoint_dir=os.path.dirname(path) + "/ckpt", branch="ingest",
+    )
+    # the AUDIT, from manifests alone: main never advanced, the branch
+    # carries the full corpus
+    n_main_before = manifest_aggregate(path)["n_rows"]
+    n_branch = manifest_aggregate(path, version="branch:ingest")["n_rows"]
+    assert n_branch > n_main_before, "ingest lost rows — drop_branch"
+    fast_forward_branch(path, "ingest")
     return (
         read_snapshot(spark, path)
         .groupBy("event_type")
@@ -6030,7 +5889,20 @@ GROUP BY event_type
 """
 
 
-_STRBLOOM_DROPS: dict = {}
+@_fixture
+def _strbloom_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z57's customer table in 16 key buckets with string Bloom bitmaps
+    on c_name."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/customer_tbl"
+    cust = load_table(spark, sf_dir, "customer").withColumn(
+        "cbucket", F.pmod(F.col("c_custkey"), F.lit(16))
+    )
+    write_snapshot(
+        cust.repartition("cbucket"), path, "cbucket", bloom_cols=["c_name"]
+    )
+    return path
 
 
 def z57_string_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6049,22 +5921,9 @@ def z57_string_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning as behavior-free). Present-key, absent-key (zero
     directories), and FP-scan semantics are unit-pinned
     (tests/test_string_bloom.py)."""
-    import os
+    from ..sources.snapshot import read_snapshot
 
-    from ..sources.snapshot import read_snapshot, write_snapshot
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _STRBLOOM_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("strbloom_") + "/customer_tbl"
-        cust = load_table(spark, sf_dir, "customer").withColumn(
-            "cbucket", F.pmod(F.col("c_custkey"), F.lit(16))
-        )
-        write_snapshot(
-            cust.repartition("cbucket"), path, "cbucket",
-            bloom_cols=["c_name"],
-        )
-        _STRBLOOM_DROPS[key] = path
+    path = _strbloom_table(spark, sf_dir)
     name = "Customer#000000421"
     scan = read_snapshot(spark, path, point_lookups={"c_name": name})
     hit = scan.filter(F.col("c_name") == name).select(
@@ -6098,7 +5957,18 @@ WHERE c_name = 'Customer#000000421'
 """
 
 
-_ALTER_DROPS: dict = {}
+@_fixture
+def _bare_events(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z58's events snapshot (partition event_type), created with no
+    table properties at all."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/events_tbl"
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
+    )
+    write_snapshot(ev, path, "event_type")
+    return path
 
 
 def z58_alter_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6118,30 +5988,16 @@ def z58_alter_upgrade(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN/MAX, APPROX_COUNT_DISTINCT from manifests alone — and the
     oracle recomputes count/extremes exactly and replays the HLL
     hash→registers→estimate pipeline for the NDV."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import (
-        alter_table_properties,
-        compact_snapshot,
-        write_snapshot,
-    )
+    from ..sources.snapshot import alter_table_properties, compact_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _ALTER_DROPS.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("alter_") + "/events_tbl"
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        write_snapshot(ev, path, "event_type")  # no properties at birth
-        alter_table_properties(
-            spark, path,
-            stats_cols=["value", "user_id::hll"],
-            constraints=["event_id >= 0"],
-        )
-        compact_snapshot(spark, path)  # the one-OPTIMIZE upgrade
-        _ALTER_DROPS[key] = path
+    path = _clone(_bare_events(spark, sf_dir))
+    alter_table_properties(
+        spark, path,
+        stats_cols=["value", "user_id::hll"],
+        constraints=["event_id >= 0"],
+    )
+    compact_snapshot(spark, path)  # the one-OPTIMIZE upgrade
     out = answer_from_manifest(
         spark,
         "SELECT COUNT(*) AS n, MIN(value) AS vmin, MAX(value) AS vmax,"
@@ -6174,7 +6030,21 @@ FROM est e
 Z58_SQL = _z58_oracle()
 
 
-_CLONE_DROPS: dict = {}
+@_fixture
+def _shallow_clone_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z60's dev sandbox: a shallow clone of the z33 orders table that
+    then diverged by a price-correction MERGE."""
+    from ..sources.snapshot import clone_snapshot, merge_snapshot, read_snapshot
+
+    dst = root + "/orders_dev"
+    clone_snapshot(_snapagg_table(spark, sf_dir), dst)
+    fix = (
+        read_snapshot(spark, dst)
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(50.0))
+    )
+    merge_snapshot(dst, fix, "o_orderkey", "o_orderstatus")
+    return dst
 
 
 def z60_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6194,29 +6064,10 @@ def z60_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-expiry shared-fate caveat is Delta's own, documented). The
     oracle replays the clone's divergence arithmetically over raw
     orders."""
-    import os
+    from ..sources.snapshot import manifest_aggregate, read_snapshot
 
-    from ..sources.snapshot import (
-        clone_snapshot,
-        manifest_aggregate,
-        merge_snapshot,
-        read_snapshot,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    dst = _CLONE_DROPS.get(key)
-    if dst is None:
-        src = _snapagg_table(spark, sf_dir)
-        dst = _tracked_mkdtemp("clone_") + "/orders_dev"
-        clone_snapshot(src, dst)
-        fix = (
-            read_snapshot(spark, dst)
-            .where(F.col("o_orderpriority") == "1-URGENT")
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(50.0))
-        )
-        merge_snapshot(dst, fix, "o_orderkey", "o_orderstatus")
-        _CLONE_DROPS[key] = dst
     src = _snapagg_table(spark, sf_dir)
+    dst = _shallow_clone_table(spark, sf_dir)
     n_src = manifest_aggregate(src)["n_rows"]
     n_dst = manifest_aggregate(dst)["n_rows"]
     return (
@@ -6280,23 +6131,15 @@ WHERE len(list_intersect(sa.sv, sb.sv))
 """
 
 
-_XML_DROPS: dict = {}
+@_fixture
+def _xml_drop(spark: SparkSession, sf_dir: str, root: str) -> str:
+    from ..sources.text_formats import write_xml
 
-
-def _xml_drop(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _XML_DROPS.get(key)
-    if path is None:
-        from ..sources.text_formats import write_xml
-
-        path = _tracked_mkdtemp("xml_drop_") + "/docs"
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-        write_xml(docs, path)
-        _XML_DROPS[key] = path
+    path = root + "/docs"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    write_xml(docs, path)
     return path
 
 
@@ -6319,30 +6162,22 @@ def z30_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 Z30_SQL = "SELECT doc_id, source, text FROM documents"
 
 
-_ORC_DROPS: dict = {}
-
-
-def _orc_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _orc_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Write the z29 ORC estate once per (app, fixture): a lineitem
     projection hive-partitioned by l_returnflag."""
-    import os
+    from ..sources.orc_format import write_orc
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _ORC_DROPS.get(key)
-    if path is None:
-        from ..sources.orc_format import write_orc
-
-        path = _tracked_mkdtemp("orc_estate_") + "/lineitem"
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            "l_linestatus",
-            "l_quantity",
-            "l_extendedprice",
-            "l_shipdate",
-            "l_returnflag",
-        )
-        write_orc(li, path, "l_returnflag")
-        _ORC_DROPS[key] = path
+    path = root + "/lineitem"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_linestatus",
+        "l_quantity",
+        "l_extendedprice",
+        "l_shipdate",
+        "l_returnflag",
+    )
+    write_orc(li, path, "l_returnflag")
     return path
 
 
@@ -6387,8 +6222,6 @@ GROUP BY l_linestatus
 """
 
 
-_SQL_MERGE_TABLES: dict = {}
-
 #: The z20 MERGE statement — executed verbatim by the front-end
 #: (sources.sql_merge.execute_merge), parsed and routed to the
 #: snapshot layer's partition-scoped merge. Exercises both WHEN
@@ -6413,34 +6246,23 @@ WHEN NOT MATCHED THEN INSERT
 """
 
 
-def _sql_merge_table(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
+@_fixture
+def _cust_balance(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z20's MERGE target: customers with c_custkey % 3 <> 0, balances
+    in cents, in 8 key buckets."""
     from ..sources.snapshot import write_snapshot
-    from ..sources.sql_merge import execute_merge
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _SQL_MERGE_TABLES.get(key)
-    if path is None:
-        base = load_table(spark, sf_dir, "customer").select(
-            "c_custkey",
-            "c_name",
-            "c_mktsegment",
-            (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("balance_cents"),
-            F.pmod(F.col("c_custkey"), F.lit(8)).alias("pbucket"),
-        )
-        path = _tracked_mkdtemp("snap_sqlmerge_") + "/tbl"
-        write_snapshot(base.filter(F.col("c_custkey") % 3 != 0), path, "pbucket")
-        register_views(spark, sf_dir, "orders")
-        execute_merge(
-            spark,
-            Z20_MERGE_STMT,
-            tables={"cust_balance": path},
-            txn=("z20", 1),
-        )
-        _SQL_MERGE_TABLES[key] = path
+    base = load_table(spark, sf_dir, "customer").select(
+        "c_custkey",
+        "c_name",
+        "c_mktsegment",
+        (F.col("c_acctbal").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("balance_cents"),
+        F.pmod(F.col("c_custkey"), F.lit(8)).alias("pbucket"),
+    )
+    path = root + "/tbl"
+    write_snapshot(base.filter(F.col("c_custkey") % 3 != 0), path, "pbucket")
     return path
 
 
@@ -6458,8 +6280,13 @@ def z20_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the identical final state as a
     LEFT JOIN + NOT EXISTS union."""
     from ..sources.snapshot import read_snapshot
+    from ..sources.sql_merge import execute_merge
 
-    path = _sql_merge_table(spark, sf_dir)
+    path = _clone(_cust_balance(spark, sf_dir))
+    register_views(spark, sf_dir, "orders")
+    execute_merge(
+        spark, Z20_MERGE_STMT, tables={"cust_balance": path}, txn=("z20", 1)
+    )
     return read_snapshot(spark, path).select(
         "c_custkey", "c_name", "c_mktsegment", "balance_cents"
     )
@@ -6480,33 +6307,22 @@ WHEN NOT MATCHED BY SOURCE AND t.o_orderkey % 3 = 0 THEN DELETE
 """
 
 
-def _sql_merge_sync_table(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
+@_fixture
+def _ord_sync(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z21's MERGE target: every order's price in cents, in 8 key
+    buckets."""
     from ..sources.snapshot import write_snapshot
-    from ..sources.sql_merge import execute_merge
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _SQL_MERGE_TABLES.get((key, "sync"))
-    if path is None:
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("price_cents"),
-            F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
-        )
-        path = _tracked_mkdtemp("snap_sqlsync_") + "/tbl"
-        write_snapshot(base, path, "pbucket")
-        register_views(spark, sf_dir, "orders")
-        execute_merge(
-            spark,
-            Z21_MERGE_STMT,
-            tables={"ord_sync": path},
-            txn=("z21", 1),
-        )
-        _SQL_MERGE_TABLES[(key, "sync")] = path
+    base = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("price_cents"),
+        F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
+    )
+    path = root + "/tbl"
+    write_snapshot(base, path, "pbucket")
     return path
 
 
@@ -6521,8 +6337,13 @@ def z21_sql_merge_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same commit (pinned in tests/test_sql_merge.py). The oracle
     replays the final table state arithmetically from the base table."""
     from ..sources.snapshot import read_snapshot
+    from ..sources.sql_merge import execute_merge
 
-    path = _sql_merge_sync_table(spark, sf_dir)
+    path = _clone(_ord_sync(spark, sf_dir))
+    register_views(spark, sf_dir, "orders")
+    execute_merge(
+        spark, Z21_MERGE_STMT, tables={"ord_sync": path}, txn=("z21", 1)
+    )
     return read_snapshot(spark, path).select(
         "o_orderkey", "o_orderstatus", "price_cents"
     )
@@ -6688,8 +6509,34 @@ WHERE length(text) >= 1 AND octet_length(encode(text)) = length(text)
 Z16_SQL = _audio_resample_oracle()
 
 
-#: z15's schema-evolution snapshot tables, memoized like q98's.
-_EVOLVE_TABLES: dict = {}
+def _priced_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders as (key, status, price_cents, 8 key buckets) — the
+    z11/z14/z15 table shape."""
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        cents.alias("price_cents"),
+        F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
+    )
+
+
+@_fixture
+def _legacy_orders(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z15's pre-evolution table: 2/3 of orders under the OLD physical
+    names ``price_cents``/``legacy_flag``."""
+    from ..sources.snapshot import write_snapshot
+
+    base = _priced_orders(spark, sf_dir).select(
+        "o_orderkey",
+        "o_orderstatus",
+        "price_cents",
+        F.lit(1).alias("legacy_flag"),
+        "pbucket",
+    )
+    path = root + "/tbl"
+    write_snapshot(base.filter(F.col("o_orderkey") % 3 != 0), path, "pbucket")
+    return path
 
 
 def z15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6703,44 +6550,24 @@ def z15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read spans commits from BOTH sides of the evolution, with the
     rename chain applied at scan time and time travel preserving the
     old schema (pinned in tests/test_schema_evolution.py). The oracle
-    replays the final logical table from the base table."""
-    import os
-
+    replays the final logical table from the base table. Every call
+    evolves and merges on a clone of the pre-evolution table."""
     from ..sources.snapshot import (
         evolve_snapshot_schema,
         merge_snapshot,
         read_snapshot,
-        write_snapshot,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _EVOLVE_TABLES.get(key)
-    if path is None:
-        cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            cents.alias("price_cents"),
-            F.lit(1).alias("legacy_flag"),
-            F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
-        )
-        path = _tracked_mkdtemp("snap_evolve_") + "/tbl"
-        write_snapshot(base.filter(F.col("o_orderkey") % 3 != 0), path, "pbucket")
-        evolve_snapshot_schema(
-            path, renames={"price_cents": "amount_cents"}, drops=["legacy_flag"]
-        )
-        late = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") % 3 == 0)
-            .select(
-                "o_orderkey",
-                "o_orderstatus",
-                cents.alias("amount_cents"),
-                F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
-            )
-        )
-        merge_snapshot(path, late, "o_orderkey", "pbucket")
-        _EVOLVE_TABLES[key] = path
+    path = _clone(_legacy_orders(spark, sf_dir))
+    evolve_snapshot_schema(
+        path, renames={"price_cents": "amount_cents"}, drops=["legacy_flag"]
+    )
+    late = (
+        _priced_orders(spark, sf_dir)
+        .filter(F.col("o_orderkey") % 3 == 0)
+        .withColumnRenamed("price_cents", "amount_cents")
+    )
+    merge_snapshot(path, late, "o_orderkey", "pbucket")
     return read_snapshot(spark, path).select(
         "o_orderkey", "o_orderstatus", "amount_cents"
     )
@@ -6753,8 +6580,14 @@ FROM orders
 """
 
 
-#: z14's opt-out-delete snapshot tables, memoized like q98's.
-_DELETE_TABLES: dict = {}
+@_fixture
+def _bucketed_orders(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z14's table: every order, bucket-partitioned by key."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/tbl"
+    write_snapshot(_priced_orders(spark, sf_dir), path, "pbucket")
+    return path
 
 
 def z14_optout_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6767,24 +6600,10 @@ def z14_optout_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_delete_where.py); prior versions still see the rows
     until expiry, and the CDF reports them as deletes. The oracle
     replays the surviving set from the base table."""
-    import os
+    from ..sources.snapshot import delete_where, read_snapshot
 
-    from ..sources.snapshot import delete_where, read_snapshot, write_snapshot
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _DELETE_TABLES.get(key)
-    if path is None:
-        cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            cents.alias("price_cents"),
-            F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
-        )
-        path = _tracked_mkdtemp("snap_delete_") + "/tbl"
-        write_snapshot(base, path, "pbucket")
-        delete_where(spark, path, "o_orderkey % 7 = 0", txn=("optout", 1))
-        _DELETE_TABLES[key] = path
+    path = _clone(_bucketed_orders(spark, sf_dir))
+    delete_where(spark, path, "o_orderkey % 7 = 0", txn=("optout", 1))
     return read_snapshot(spark, path).select(
         "o_orderkey", "o_orderstatus", "price_cents"
     )
@@ -6897,109 +6716,33 @@ FROM grid g LEFT JOIN daily d
 """
 
 
-#: z11's (source table, view table) fixture, memoized per
-#: (applicationId, sf_dir) like the other snapshot fixtures.
-_MATVIEW_TABLES: dict = {}
-
-
-def _matview_tables(spark: SparkSession, sf_dir: str) -> str:
-    """Build the z11 incremental-view fixture: a source snapshot table
-    seeded from 2/3 of orders, then a second commit inserting the rest
-    and bumping every present %5 key's price by 777 cents — with ONE
-    maintenance cycle after each commit, so the view's final state is
-    the product of two genuine delta applications (never a full
-    recompute)."""
-    import os
-
+@_fixture
+def _matview_tables(spark: SparkSession, sf_dir: str, root: str) -> "tuple[str, str]":
+    """The z11 incremental-view estate: a source snapshot table seeded
+    from 2/3 of orders with the view maintained over that first commit,
+    then a second source commit inserting the rest and bumping every
+    present %5 key's price by 777 cents — left for z11 to maintain."""
     from ..sources.matview import maintain_sum_view
     from ..sources.snapshot import merge_snapshot, write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    paths = _MATVIEW_TABLES.get(key)
-    if paths is None:
-        root = _tracked_mkdtemp("snap_matview_")
-        src, view = root + "/src", root + "/view"
-        cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-            "long"
-        )
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            cents.alias("price_cents"),
-            F.pmod(F.col("o_orderkey"), F.lit(8)).alias("pbucket"),
-        )
-        write_snapshot(base.filter(F.col("o_orderkey") % 3 != 0), src, "pbucket")
-        maintain_sum_view(
-            spark,
-            src,
-            view,
-            key="o_orderkey",
-            group_col="o_orderstatus",
-            sum_col="price_cents",
-        )
-        # Bench estate (r12 verdict ask #2): freeze the view at its
-        # pre-second-delta state so `matview_maintain_cycle` can replay
-        # the second commit's maintenance against a fresh copy per rep.
-        # A plain dir clone of a tiny table — no extra Spark work.
-        import shutil
-
-        shutil.copytree(view, root + "/view_tpl")
-        second = base.filter(F.col("o_orderkey") % 3 == 0).unionByName(
-            base.filter(
-                (F.col("o_orderkey") % 5 == 0) & (F.col("o_orderkey") % 3 != 0)
-            ).withColumn("price_cents", F.col("price_cents") + 777)
-        )
-        merge_snapshot(src, second, "o_orderkey", "pbucket")
-        maintain_sum_view(
-            spark,
-            src,
-            view,
-            key="o_orderkey",
-            group_col="o_orderstatus",
-            sum_col="price_cents",
-        )
-        paths = view
-        _MATVIEW_TABLES[key] = paths
-    return paths
-
-
-def matview_maintain_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE incremental maintenance cycle, re-executable per bench rep:
-    clone the z11 view frozen at its pre-second-commit state and apply
-    the source's second CDF delta batch (inserts for the %3 keys +
-    update_pre/update_post for the %5 price bumps) through
-    ``maintain_sum_view``. Every rep computes the full delta algebra —
-    feed read after the cloned view's own txn watermark, signed
-    aggregation, bucket-pruned merge commit — against fresh state;
-    nothing about the cycle is memoized. Returns the maintained view's
-    final state (identical content to z11's declared result), which the
-    caller materializes. Bench-only: NOT a declared query — z11's
-    oracle already hash-verifies this exact delta algebra end-state."""
-    import os
-    import shutil
-    import uuid
-
-    from ..sources.matview import maintain_sum_view
-    from ..sources.snapshot import read_snapshot
-
-    view = _matview_tables(spark, sf_dir)  # ensures src + template exist
-    root = os.path.dirname(view)
-    work = os.path.join(root, f"view_rep_{uuid.uuid4().hex[:8]}")
-    shutil.copytree(os.path.join(root, "view_tpl"), work)
+    src, view = root + "/src", root + "/view"
+    base = _priced_orders(spark, sf_dir)
+    write_snapshot(base.filter(F.col("o_orderkey") % 3 != 0), src, "pbucket")
     maintain_sum_view(
         spark,
-        os.path.join(root, "src"),
-        work,
+        src,
+        view,
         key="o_orderkey",
         group_col="o_orderstatus",
         sum_col="price_cents",
     )
-    out = read_snapshot(spark, work).select(
-        F.col("o_orderstatus"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("total").cast("long").alias("total_cents"),
+    second = base.filter(F.col("o_orderkey") % 3 == 0).unionByName(
+        base.filter(
+            (F.col("o_orderkey") % 5 == 0) & (F.col("o_orderkey") % 3 != 0)
+        ).withColumn("price_cents", F.col("price_cents") + 777)
     )
-    return out
+    merge_snapshot(src, second, "o_orderkey", "pbucket")
+    return src, view
 
 
 def z11_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7007,12 +6750,26 @@ def z11_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed (sources.matview.maintain_sum_view): per-status order counts
     and cent totals kept up to date by applying ONLY the CDF deltas of
     each source commit (+post −pre signed aggregation → bucket-pruned
-    view merge, txn-idempotent = exactly-once). The oracle recomputes
-    the view's final state directly from the base table, so the entire
-    delta algebra is hash-verified."""
+    view merge, txn-idempotent = exactly-once). Every call runs ONE
+    maintenance cycle on a clone of the view frozen before the source's
+    second commit: the feed is read after the clone's own txn
+    watermark, so the view's final state is the product of two genuine
+    delta applications (never a full recompute). The oracle recomputes
+    that final state directly from the base table, so the entire delta
+    algebra is hash-verified."""
+    from ..sources.matview import maintain_sum_view
     from ..sources.snapshot import read_snapshot
 
-    view = _matview_tables(spark, sf_dir)
+    src, view = _matview_tables(spark, sf_dir)
+    view = _clone(view)
+    maintain_sum_view(
+        spark,
+        src,
+        view,
+        key="o_orderkey",
+        group_col="o_orderstatus",
+        sum_col="price_cents",
+    )
     return read_snapshot(spark, view).select(
         F.col("o_orderstatus"),
         F.col("n_rows").cast("long").alias("n_rows"),
@@ -7066,8 +6823,7 @@ def z04_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter and aggregates. The oracle replays filter+aggregate from
     the base table, so the skipping layer is hash-verified as an
     I/O optimization that changes nothing."""
-
-    from ..sources.snapshot import read_snapshot, write_snapshot
+    from ..sources.snapshot import read_snapshot
 
     path = _stats_snapshot_table(spark, sf_dir)
     lo, hi = 10000, 19999
@@ -7122,49 +6878,27 @@ FROM documents
 # ---------------------------------------------------------------------
 
 
-#: PQ index cache, keyed like _KMEANS_CODEBOOK_CACHE: codebooks AND
-#: the encoded corpus are both index-build artifacts — in production
-#: the codes table is PERSISTED next to the embeddings (that's the
-#: whole point: search reads 16 ints per vector, not 64 floats), so
-#: train+encode happen once per (app, fixture) and the timed steady
-#: state is the ADC scan (+ exact rerank for z23). Mirrors the
-#: persisted-IVF-index flow (build_ivf_index / probe).
-_PQ_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@_fixture
 def _pq_index(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> tuple[DataFrame, DataFrame]:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _PQ_INDEX_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        books = SIM.pq_codebooks(emb).localCheckpoint()
-        codes = SIM.pq_encode(emb, books).localCheckpoint()
-        cached = (books, codes)
-        _PQ_INDEX_CACHE[key] = cached
-    return cached
+    emb = load_table(spark, sf_dir, "embeddings")
+    books = SIM.pq_codebooks(emb).localCheckpoint()
+    codes = SIM.pq_encode(emb, books).localCheckpoint()
+    return (books, codes)
 
 
+@_fixture
 def _ivfpq_index(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> tuple[DataFrame, DataFrame]:
     """The coarse half of the IVF-PQ index: (coarse codebook, cell
     assignment) — built once per (app, fixture) like the fine half."""
-    import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _IVFPQ_INDEX_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        coarse = SIM.ivfpq_coarse(emb).localCheckpoint()
-        cells = SIM.ivfpq_cells(emb, coarse).localCheckpoint()
-        cached = (coarse, cells)
-        _IVFPQ_INDEX_CACHE[key] = cached
-    return cached
+    emb = load_table(spark, sf_dir, "embeddings")
+    coarse = SIM.ivfpq_coarse(emb).localCheckpoint()
+    cells = SIM.ivfpq_cells(emb, coarse).localCheckpoint()
+    return (coarse, cells)
 
 
 def z22_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7381,10 +7115,8 @@ FROM scored QUALIFY rank <= 5
     )
 
 
-_IVFPQ_STORES: dict = {}
-
-
-def _ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _ivfpq_store(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Build the z25 fixture: a persisted IVF-PQ index seeded from the
     vid%3==0 slice of embeddings, then two appends landing the %3==1
     and %3==2 slices in their own batch partitions — so the store's
@@ -7392,26 +7124,20 @@ def _ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
     encodes against the FROZEN stored quantizers (the cached z22/z24
     artifacts, trained on the full table, so the oracle's one training
     replay covers every batch)."""
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _IVFPQ_STORES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("ivfpq_idx_") + "/index"
-        books, _codes = _pq_index(spark, sf_dir)
-        coarse, _cells = _ivfpq_index(spark, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        SIM.build_ivfpq_index(
-            emb.filter(F.col("vec_id") % 3 == 0),
-            path,
-            books=books,
-            coarse=coarse,
+    path = root + "/index"
+    books, _codes = _pq_index(spark, sf_dir)
+    coarse, _cells = _ivfpq_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    SIM.build_ivfpq_index(
+        emb.filter(F.col("vec_id") % 3 == 0),
+        path,
+        books=books,
+        coarse=coarse,
+    )
+    for b in (1, 2):
+        SIM.append_ivfpq_index(
+            emb.filter(F.col("vec_id") % 3 == b), path, batch_id=b
         )
-        for b in (1, 2):
-            SIM.append_ivfpq_index(
-                emb.filter(F.col("vec_id") % 3 == b), path, batch_id=b
-            )
-        _IVFPQ_STORES[key] = path
     return path
 
 
@@ -8378,8 +8104,6 @@ WHERE l_shipdate >= DATE '1996-01-01'
 """
 
 
-_FILEBLOOM_TABLES: dict = {}
-
 #: The fixture's key permutation: Knuth's golden-ratio prime. Odd and
 #: prime, so it is a unit mod any m < 2^31 — ``(id·MULT) mod m`` is a
 #: BIJECTION of [0, m): every key exists exactly once, scattered
@@ -8388,7 +8112,8 @@ _FILEBLOOM_TABLES: dict = {}
 _FB_MULT = 2654435761
 
 
-def _filebloom_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
+@_fixture
+def _filebloom_table(spark: SparkSession, sf_dir: str, root: str) -> "tuple[str, int]":
     """Materialize the z96 snapshot fixture once per (app, sf_dir):
     the z76 exact-slicing layout (16 ``spark.range`` slices → 4 hive
     partitions × 4 files with KNOWN contents) but with the key column
@@ -8398,18 +8123,12 @@ def _filebloom_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
     sized to the fixture (~10 bits/key, 64-aligned) so the bitmaps
     stay discriminating at every sf — the sizing rule the constant's
     docstring prescribes, exercised end-to-end."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _FILEBLOOM_TABLES.get(key)
-    if hit is not None:
-        return hit
     n = load_table(spark, sf_dir, "orders").count()
     m = max((n // 16) * 16, 16)
     bits = ((m * 10 // 16 + 63) // 64) * 64
-    path = _tracked_mkdtemp("filebloom_") + "/tbl"
+    path = root + "/tbl"
     df = spark.range(0, m, 1, 16).select(
         ((F.col("id") * _FB_MULT) % m).cast("long").alias("k"),
         F.floor(F.col("id") / (m // 4)).cast("long").alias("bu"),
@@ -8417,7 +8136,6 @@ def _filebloom_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
     write_snapshot(
         df, path, "bu", stats_cols=["k"], bloom_cols=["k"], bloom_bits=bits
     )
-    _FILEBLOOM_TABLES[key] = (path, m)
     return path, m
 
 
@@ -8711,24 +8429,16 @@ SELECT
 """
 
 
-_SNAPSTREAM_TABLES: dict = {}
-
-
-def _snapstream_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _snapstream_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """Materialize the z99 fixture once per (app, sf_dir): a snapshot
     table built by FOUR commits under the append-only partition
     discipline the streaming source streams exactly — v1 writes batch
     0 (orders with o_orderkey % 4 = 0), v2..v4 append batches 1..3,
     each a brand-new partition directory."""
-    import os
-
     from ..sources.snapshot import append_snapshot, write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _SNAPSTREAM_TABLES.get(key)
-    if hit is not None:
-        return hit
-    path = _tracked_mkdtemp("snapstream_") + "/tbl"
+    path = root + "/tbl"
     orders = load_table(spark, sf_dir, "orders")
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
     base = orders.select(
@@ -8739,7 +8449,6 @@ def _snapstream_table(spark: SparkSession, sf_dir: str) -> str:
     write_snapshot(base.where(F.col("batch") == 0), path, "batch")
     for b in (1, 2, 3):
         append_snapshot(path, base.where(F.col("batch") == b), "batch")
-    _SNAPSTREAM_TABLES[key] = path
     return path
 
 
@@ -8874,7 +8583,20 @@ FROM lineitem
 """
 
 
-_NULLAUDIT_TABLES: dict = {}
+@_fixture
+def _nullaudit_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z104's orders-derived table: a NULL partition (p NULL for
+    o_orderkey % 11 = 0) and NULLs in every partition's v."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/tbl"
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    df = load_table(spark, sf_dir, "orders").select(
+        F.when(F.col("o_orderkey") % 11 != 0, F.col("o_orderkey") % 4).alias("p"),
+        F.when(F.col("o_orderkey") % 7 != 0, cents).alias("v"),
+    )
+    write_snapshot(df, path, "p", stats_cols=["v", "v::sum"])
+    return path
 
 
 def z104_metadata_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8890,28 +8612,9 @@ def z104_metadata_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture carries a NULL PARTITION (pcol NULL rows) and NULLs in
     every partition, and cross-column aggregates refuse to the scan
     (unit-pinned). The oracle recomputes everything from orders."""
-    import os
-
     from ..sources.metadata_sql import answer_from_manifest
-    from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _NULLAUDIT_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("nullaudit_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            F.when(
-                F.col("o_orderkey") % 11 != 0, F.col("o_orderkey") % 4
-            ).alias("p"),
-            F.when(F.col("o_orderkey") % 7 != 0, cents).alias("v"),
-        )
-        write_snapshot(df, path, "p", stats_cols=["v", "v::sum"])
-        _NULLAUDIT_TABLES[key] = path
-    T = {"t": path}
+    T = {"t": _nullaudit_table(spark, sf_dir)}
     grouped = answer_from_manifest(
         spark,
         "SELECT p, COUNT(*) AS n_null FROM t WHERE v IS NULL GROUP BY p",
@@ -8941,7 +8644,26 @@ FROM b WHERE v IS NULL GROUP BY p
 """
 
 
-_HYBNULL_TABLES: dict = {}
+@_fixture
+def _hybnull_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z105's orders-derived table: NULL-seeded v in 4 key partitions,
+    ONE of which carries merge-on-read tombstones."""
+    from ..sources.snapshot import delete_where, write_snapshot
+
+    path = root + "/tbl"
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    df = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.when(F.col("o_orderkey") % 7 != 0, cents).alias("v"),
+        (F.col("o_orderkey") % 4).alias("p"),
+    )
+    write_snapshot(df, path, "p", stats_cols=["v"])
+    delete_where(
+        spark, path,
+        (F.col("p") == 1) & (F.col("k") % 5 == 0),
+        mode="merge-on-read", key="k",
+    )
+    return path
 
 
 def z105_hybrid_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8956,35 +8678,9 @@ def z105_hybrid_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-contribution row groups. Classification counts ride the row
     (EXPLAIN's explain_only path — no scan paid for them); the oracle
     replays both audits and the 3-vs-1 classification from orders."""
-    import os
+    from ..sources.metadata_sql import explain_metadata_sql, hybrid_range_count
 
-    from ..sources.metadata_sql import (
-        explain_metadata_sql,
-        hybrid_range_count,
-    )
-    from ..sources.snapshot import delete_where, write_snapshot
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _HYBNULL_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("hybnull_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            F.col("o_orderkey").alias("k"),
-            F.when(F.col("o_orderkey") % 7 != 0, cents).alias("v"),
-            (F.col("o_orderkey") % 4).alias("p"),
-        )
-        write_snapshot(df, path, "p", stats_cols=["v"])
-        delete_where(
-            spark, path,
-            (F.col("p") == 1) & (F.col("k") % 5 == 0),
-            mode="merge-on-read", key="k",
-        )
-        _HYBNULL_TABLES[key] = path
-    T = {"t": path}
+    T = {"t": _hybnull_table(spark, sf_dir)}
     nulls = hybrid_range_count(
         spark, "SELECT COUNT(*) AS n_null FROM t WHERE v IS NULL", T
     )
@@ -9017,40 +8713,32 @@ SELECT
 """
 
 
-_MULTISPEC_TABLES: dict = {}
-
-
-def _multispec_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _multispec_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """The shared z106/z115/z117 fixture: orders snapshotted under the
     ordered spec ``(o_orderstatus, o_orderpriority)`` with cents
     min/max + exact-sum stats. One-time corpus delivery per
     (app, sf_dir) — bench times it in the ``builds`` block so the
     query timings measure the metadata answers, not the write."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _MULTISPEC_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("multispec_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_orderpriority",
-            cents.alias("cents"),
-        )
-        write_snapshot(
-            df,
-            path,
-            ["o_orderstatus", "o_orderpriority"],
-            stats_cols=["cents", "cents::sum"],
-        )
-        _MULTISPEC_TABLES[key] = path
+    path = root + "/tbl"
+    orders = load_table(spark, sf_dir, "orders")
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("long")
+    df = orders.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "o_orderpriority",
+        cents.alias("cents"),
+    )
+    write_snapshot(
+        df,
+        path,
+        ["o_orderstatus", "o_orderpriority"],
+        stats_cols=["cents", "cents::sum"],
+    )
     return path
 
 
@@ -9157,6 +8845,24 @@ LIMIT 3
 """
 
 
+@_fixture
+def _rangenull_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z108's orders-derived table: cents v, NULL-seeded w, 4 key
+    partitions, min/max stats on both."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/tbl"
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    df = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        cents.alias("v"),
+        F.when(F.col("o_orderkey") % 7 != 0, F.col("o_custkey")).alias("w"),
+        (F.col("o_orderkey") % 4).alias("p"),
+    )
+    write_snapshot(df, path, "p", stats_cols=["v", "w"])
+    return path
+
+
 def z108_range_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range AND NULL-predicate conjunction (r9 verdict ask #6b):
     ``COUNT(*) WHERE v <range> AND w IS [NOT] NULL`` — the
@@ -9170,33 +8876,9 @@ def z108_range_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS NOT NULL ≡ the plain range count), and EXPLAIN's
     classification counts are part of the oracle row. Shares the
     z104 fixture shape (orders with NULL-seeded v and p)."""
-    import os
+    from ..sources.metadata_sql import explain_metadata_sql, hybrid_range_count
 
-    from ..sources.metadata_sql import (
-        explain_metadata_sql,
-        hybrid_range_count,
-    )
-    from ..sources.snapshot import write_snapshot
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _RANGENULL_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("rangenull_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            F.col("o_orderkey").alias("k"),
-            cents.alias("v"),
-            F.when(F.col("o_orderkey") % 7 != 0, F.col("o_custkey")).alias(
-                "w"
-            ),
-            (F.col("o_orderkey") % 4).alias("p"),
-        )
-        write_snapshot(df, path, "p", stats_cols=["v", "w"])
-        _RANGENULL_TABLES[key] = path
-    T = {"t": path}
+    T = {"t": _rangenull_table(spark, sf_dir)}
     n_null = hybrid_range_count(
         spark,
         "SELECT COUNT(*) AS n_null FROM t"
@@ -9224,9 +8906,6 @@ def z108_range_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_null.crossJoin(n_vals).crossJoin(same0).crossJoin(exp)
 
 
-_RANGENULL_TABLES: dict = {}
-
-
 Z108_SQL = """
 WITH b AS (
   SELECT o_orderkey AS k,
@@ -9245,7 +8924,24 @@ SELECT
 """
 
 
-_MULTIDML_TABLES: dict = {}
+def _multidml_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_orderpriority", cents.alias("cents")
+    )
+
+
+@_fixture
+def _multidml_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z109's base table: orders (cents) under the ordered spec
+    ``(o_orderstatus, o_orderpriority)``, before any DML."""
+    from ..sources.snapshot import write_snapshot
+
+    path = root + "/tbl"
+    write_snapshot(
+        _multidml_rows(spark, sf_dir), path, ["o_orderstatus", "o_orderpriority"]
+    )
+    return path
 
 
 def z109_multicol_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9266,90 +8962,61 @@ def z109_multicol_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The final per-status rollup reads through the tombstone anti-join;
     the oracle replays both DML statements relationally from raw
-    orders. Table memoized per (app, sf_dir) — the DML is
-    deterministic, so re-reads see the same final state."""
-    from ..sources.snapshot import read_snapshot
-
-    out = read_snapshot(spark, _multidml_table(spark, sf_dir))
-    return (
-        out.groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s"))
-        .orderBy("o_orderstatus")
-    )
-
-
-def _multidml_table(spark: SparkSession, sf_dir: str) -> str:
-    """z109's fixture INCLUDING its deterministic DML: base write,
-    one MERGE, one merge-on-read DELETE — built once per
-    (app, sf_dir); bench times it in the builds block so the query
-    timing measures the tombstone-applied rollup read."""
-    import os
-
-    from ..sources.snapshot import read_manifest, write_snapshot
+    orders. Every call runs both statements on a clone of the
+    multi-spec base table."""
+    from ..sources.snapshot import read_manifest, read_snapshot
     from ..sources.sql_merge import execute_delete, execute_merge
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _MULTIDML_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("multidml_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_orderpriority",
-            cents.alias("cents"),
-        )
-        write_snapshot(df, path, ["o_orderstatus", "o_orderpriority"])
-        hit = df.filter(F.col("o_orderkey") % 97 == 0).filter(
-            F.col("o_orderkey") > 0
-        )
-        src = hit.select(
-            F.col("o_orderkey").alias("k"),
+    path = _clone(_multidml_table(spark, sf_dir))
+    hit = _multidml_rows(spark, sf_dir).filter(
+        (F.col("o_orderkey") % 97 == 0) & (F.col("o_orderkey") > 0)
+    )
+    src = hit.select(
+        F.col("o_orderkey").alias("k"),
+        "o_orderstatus",
+        "o_orderpriority",
+        F.lit(1000).cast("long").alias("cents_new"),
+    ).unionByName(
+        hit.select(
+            (-F.col("o_orderkey")).alias("k"),
             "o_orderstatus",
             "o_orderpriority",
             F.lit(1000).cast("long").alias("cents_new"),
-        ).unionByName(
-            hit.select(
-                (-F.col("o_orderkey")).alias("k"),
-                "o_orderstatus",
-                "o_orderpriority",
-                F.lit(1000).cast("long").alias("cents_new"),
-            )
         )
-        src.createOrReplaceTempView("z109_src")
-        v = execute_merge(
-            spark,
-            """
-            MERGE INTO tbl AS t USING z109_src AS s ON t.o_orderkey = s.k
-            WHEN MATCHED THEN UPDATE SET cents = t.cents + s.cents_new
-            WHEN NOT MATCHED THEN INSERT
-              (o_orderkey, o_orderstatus, o_orderpriority, cents)
-              VALUES (s.k, s.o_orderstatus, s.o_orderpriority, s.cents_new)
-            """,
-            tables={"tbl": path},
-        )
-        assert v == 2  # one partition-scoped commit
-        res = execute_delete(
-            spark,
-            "DELETE FROM tbl WHERE cents >= 40000000",
-            tables={"tbl": path},
-            mode="merge-on-read",
-            key="o_orderkey",
-        )
-        # the two hard claims: tombstones only (no rewrite), keyed to
-        # full composite directory names
-        assert res["mode"] == "merge-on-read"
-        assert res["rewritten_partitions"] == 0
-        assert res["tombstoned_keys"] > 0
-        tomb = read_manifest(path)["tombstones"]["parts"]
-        assert tomb and all(
-            p.count("=") == 2 and p.count("/") == 1 for p in tomb
-        )
-        _MULTIDML_TABLES[key] = path
-    return path
+    )
+    src.createOrReplaceTempView("z109_src")
+    v = execute_merge(
+        spark,
+        """
+        MERGE INTO tbl AS t USING z109_src AS s ON t.o_orderkey = s.k
+        WHEN MATCHED THEN UPDATE SET cents = t.cents + s.cents_new
+        WHEN NOT MATCHED THEN INSERT
+          (o_orderkey, o_orderstatus, o_orderpriority, cents)
+          VALUES (s.k, s.o_orderstatus, s.o_orderpriority, s.cents_new)
+        """,
+        tables={"tbl": path},
+    )
+    assert v == 2  # one partition-scoped commit
+    res = execute_delete(
+        spark,
+        "DELETE FROM tbl WHERE cents >= 40000000",
+        tables={"tbl": path},
+        mode="merge-on-read",
+        key="o_orderkey",
+    )
+    # the two hard claims: tombstones only (no rewrite), keyed to full
+    # composite directory names
+    assert res["mode"] == "merge-on-read"
+    assert res["rewritten_partitions"] == 0
+    assert res["tombstoned_keys"] > 0
+    tomb = read_manifest(path)["tombstones"]["parts"]
+    assert tomb and all(p.count("=") == 2 and p.count("/") == 1 for p in tomb)
+    return (
+        read_snapshot(spark, path)
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s"))
+        .orderBy("o_orderstatus")
+    )
 
 
 Z109_SQL = """
@@ -9373,52 +9040,44 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-_MULTIPRUNE_TABLES: dict = {}
-
-
-def _multiprune_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _multiprune_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """z110's fixture: orders under (o_orderstatus, o_year) with
     yyyymmdd min/max stats and keys-per-partition-scaled blooms —
     one-time corpus delivery per (app, sf_dir); bench times it in
     the builds block so the query timing measures the pruned reads."""
-    import os
-
     from ..sources.snapshot import write_snapshot
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _MULTIPRUNE_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("multiprune_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        od = (
-            F.year("o_orderdate") * 10000
-            + F.month("o_orderdate") * 100
-            + F.dayofmonth("o_orderdate")
-        ).cast("int")
-        df = orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.year("o_orderdate").cast("int").alias("o_year"),
-            od.alias("od"),
-            cents.alias("cents"),
-        )
-        # the documented bloom sizing rule (snapshot.BLOOM_BITS): aim
-        # m ≈ 10-20× the keys per partition, or the filter saturates
-        # and prunes nothing at larger SFs — size from the fixture
-        n_per_part = max(1, df.count() // 21)
-        bits = max(4096, 1 << (20 * n_per_part - 1).bit_length())
-        write_snapshot(
-            df,
-            path,
-            ["o_orderstatus", "o_year"],
-            stats_cols=["od"],
-            bloom_cols=["o_orderkey"],
-            bloom_bits=bits,
-        )
-        _MULTIPRUNE_TABLES[key] = path
+    path = root + "/tbl"
+    orders = load_table(spark, sf_dir, "orders")
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("long")
+    od = (
+        F.year("o_orderdate") * 10000
+        + F.month("o_orderdate") * 100
+        + F.dayofmonth("o_orderdate")
+    ).cast("int")
+    df = orders.select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.year("o_orderdate").cast("int").alias("o_year"),
+        od.alias("od"),
+        cents.alias("cents"),
+    )
+    # the documented bloom sizing rule (snapshot.BLOOM_BITS): aim
+    # m ≈ 10-20× the keys per partition, or the filter saturates
+    # and prunes nothing at larger SFs — size from the fixture
+    n_per_part = max(1, df.count() // 21)
+    bits = max(4096, 1 << (20 * n_per_part - 1).bit_length())
+    write_snapshot(
+        df,
+        path,
+        ["o_orderstatus", "o_year"],
+        stats_cols=["od"],
+        bloom_cols=["o_orderkey"],
+        bloom_bits=bits,
+    )
     return path
 
 
@@ -9610,17 +9269,13 @@ WHERE o_orderstatus = 'O'
 """
 
 
-_BACKFILL_TABLES: dict = {}
-
-
-def _backfill_demo_table(spark: SparkSession, sf_dir: str) -> str:
+@_fixture
+def _backfill_demo_table(spark: SparkSession, sf_dir: str, root: str) -> str:
     """z116's fixture INCLUDING the declare+materialize upgrade:
     a stats-less orders snapshot, alter_table_properties, then
     backfill_table_stats (asserted metadata-only) — built once per
     (app, sf_dir); bench times it in the builds block so the query
     timing measures the manifest answer and the bloom probe."""
-    import os
-
     from ..sources.snapshot import (
         alter_table_properties,
         backfill_table_stats,
@@ -9628,41 +9283,37 @@ def _backfill_demo_table(spark: SparkSession, sf_dir: str) -> str:
         write_snapshot,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    path = _BACKFILL_TABLES.get(key)
-    if path is None:
-        path = _tracked_mkdtemp("backfill_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            "o_orderkey", "o_orderstatus", cents.alias("cents")
-        )
-        write_snapshot(df, path, "o_orderstatus")  # no stats, no blooms
-        v1_parts = read_manifest(path, 1)["partitions"]
-        # the documented bloom sizing rule: m ≈ 20× keys/partition or
-        # the filter saturates at larger SFs (the z110 lesson)
-        n_per_part = max(1, df.count() // 3)
-        bits = max(4096, 1 << (20 * n_per_part - 1).bit_length())
-        alter_table_properties(
-            spark,
-            path,
-            stats_cols=["cents", "cents::sum"],
-            bloom_cols=["o_orderkey"],
-            bloom_bits=bits,
-        )
-        v = backfill_table_stats(spark, path)
-        man = read_manifest(path, v)
-        # metadata-only: every partition carried by reference, and the
-        # backfilled entries exist for each
-        assert man["partitions"] == v1_parts
-        assert all(
-            "cents" in man["stats"][p] and "cents::sum" in man["stats"][p]
-            for p in man["partitions"]
-        )
-        assert all("o_orderkey" in man["blooms"][p] for p in man["partitions"])
-        _BACKFILL_TABLES[key] = path
+    path = root + "/tbl"
+    orders = load_table(spark, sf_dir, "orders")
+    cents = (
+        F.col("o_totalprice").cast("decimal(18,2)") * 100
+    ).cast("long")
+    df = orders.select(
+        "o_orderkey", "o_orderstatus", cents.alias("cents")
+    )
+    write_snapshot(df, path, "o_orderstatus")  # no stats, no blooms
+    v1_parts = read_manifest(path, 1)["partitions"]
+    # the documented bloom sizing rule: m ≈ 20× keys/partition or
+    # the filter saturates at larger SFs (the z110 lesson)
+    n_per_part = max(1, df.count() // 3)
+    bits = max(4096, 1 << (20 * n_per_part - 1).bit_length())
+    alter_table_properties(
+        spark,
+        path,
+        stats_cols=["cents", "cents::sum"],
+        bloom_cols=["o_orderkey"],
+        bloom_bits=bits,
+    )
+    v = backfill_table_stats(spark, path)
+    man = read_manifest(path, v)
+    # metadata-only: every partition carried by reference, and the
+    # backfilled entries exist for each
+    assert man["partitions"] == v1_parts
+    assert all(
+        "cents" in man["stats"][p] and "cents::sum" in man["stats"][p]
+        for p in man["partitions"]
+    )
+    assert all("o_orderkey" in man["blooms"][p] for p in man["partitions"])
     return path
 
 
@@ -10065,7 +9716,22 @@ ORDER BY s_name
 """
 
 
-_DEEPCLONE_TABLES: dict = {}
+@_fixture
+def _deepclone_source(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z103's source: orders in 3 key buckets with per-file stats,
+    after a merge-on-read delete of every 10th key."""
+    from ..sources.snapshot import delete_where, write_snapshot
+
+    path = root + "/tbl"
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    df = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        cents.alias("cents"),
+        (F.col("o_orderkey") % 3).alias("bu"),
+    )
+    write_snapshot(df, path, "bu", stats_cols=["k", "cents::sum"])
+    delete_where(spark, path, F.col("k") % 10 == 0, mode="merge-on-read", key="k")
+    return path
 
 
 def z103_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10079,38 +9745,14 @@ def z103_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, and tombstone sidecar valid verbatim (a Spark rewrite
     would re-encode files and orphan the file-grain metadata); the
     oracle recomputes the post-delete profile from the source-of-
-    truth orders table."""
-    import os
-    import shutil
+    truth orders table. Every call deep-clones a fresh copy of the
+    source (so the source can be deleted without touching the fixture)."""
+    from ..sources.snapshot import deep_clone_snapshot, read_snapshot
 
-    from ..sources.snapshot import (
-        deep_clone_snapshot,
-        delete_where,
-        read_snapshot,
-        write_snapshot,
-    )
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    dst = _DEEPCLONE_TABLES.get(key)
-    if dst is None:
-        src = _tracked_mkdtemp("deepclone_src_") + "/tbl"
-        dst = _tracked_mkdtemp("deepclone_") + "/tbl"
-        orders = load_table(spark, sf_dir, "orders")
-        cents = (
-            F.col("o_totalprice").cast("decimal(18,2)") * 100
-        ).cast("long")
-        df = orders.select(
-            F.col("o_orderkey").alias("k"),
-            cents.alias("cents"),
-            (F.col("o_orderkey") % 3).alias("bu"),
-        )
-        write_snapshot(df, src, "bu", stats_cols=["k", "cents::sum"])
-        delete_where(
-            spark, src, F.col("k") % 10 == 0, mode="merge-on-read", key="k"
-        )
-        deep_clone_snapshot(src, dst)
-        shutil.rmtree(src)  # the clone must not notice
-        _DEEPCLONE_TABLES[key] = dst
+    src = _clone(_deepclone_source(spark, sf_dir))
+    dst = os.path.dirname(src) + "/backup"
+    deep_clone_snapshot(src, dst)
+    shutil.rmtree(src)  # the clone must not notice
     return (
         read_snapshot(spark, dst)
         .groupBy("bu")
@@ -10134,7 +9776,24 @@ GROUP BY 1
 """
 
 
-_MIRROR_TABLES: dict = {}
+@_fixture
+def _mirror_table(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """z101's mirror after its first drain of the z99 source table."""
+    from ..sources.pyds import SnapshotStreamDataSource
+    from ..streaming.streams import stream_append_sink
+
+    path = root + "/tbl"
+    spark.dataSource.register(SnapshotStreamDataSource)
+    stream_append_sink(
+        spark.readStream.format("snapshotstream").load(
+            _snapstream_table(spark, sf_dir)
+        ),
+        path,
+        "batch",
+        app_id="z101_mirror",
+        checkpoint_dir=root + "/ckpt",
+    )
+    return path
 
 
 def z101_live_table_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10145,31 +9804,27 @@ def z101_live_table_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once semantics (``txn=(app_id, batch_id)`` watermark — a
     crash-replayed or re-run drain is absorbed whole, proven here by
     draining with a FRESH checkpoint on every call: the mirror never
-    double-counts). This is CDC-free mirror maintenance at 100 TB:
+    double-counts: every call re-drains a clone of the once-drained
+    mirror). This is CDC-free mirror maintenance at 100 TB:
     no diffing, no full rescans — the driver plans appended
     directories from immutable manifests, executors move only the
     appended bytes, and the mirror is itself a snapshot table
     (time-travelable, stats-carrying, streamable onward). The oracle
     profiles the mirror against the source-of-truth orders table."""
-    import os
-
     from ..sources.pyds import SnapshotStreamDataSource
     from ..sources.snapshot import read_snapshot
     from ..streaming.streams import stream_append_sink
 
-    src = _snapstream_table(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    dst = _MIRROR_TABLES.get(key)
-    if dst is None:
-        dst = _tracked_mkdtemp("mirror_") + "/tbl"
-        _MIRROR_TABLES[key] = dst
+    dst = _clone(_mirror_table(spark, sf_dir))
     spark.dataSource.register(SnapshotStreamDataSource)
     stream_append_sink(
-        spark.readStream.format("snapshotstream").load(src),
+        spark.readStream.format("snapshotstream").load(
+            _snapstream_table(spark, sf_dir)
+        ),
         dst,
         "batch",
         app_id="z101_mirror",
-        checkpoint_dir=_tracked_mkdtemp("mirror_ckpt_"),
+        checkpoint_dir=os.path.dirname(dst) + "/ckpt",
     )
     return (
         read_snapshot(spark, dst)

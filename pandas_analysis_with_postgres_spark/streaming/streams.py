@@ -207,27 +207,12 @@ def events_stream_multibatch(
     under ``availableNow`` ⇒ ≥ ``n_files`` batches) — the multi-batch
     harness for stateful operators, where watermark advance and
     state-store handoff actually differ from a single-batch GROUP BY.
+    A failed split raises: it never degrades to a single-batch stream.
 
-    ``SPARK_GRAFT_STREAM_SINGLE_BATCH=1`` (bench-only floor-experiment
-    knob, r12 verdict ask #7) replays the fixture as ONE batch instead:
-    the final append output is identical (the time-ordered split never
-    produces a late event — pinned in tests/test_streaming.py), only
-    the per-micro-batch state-store commit count changes. Default off:
-    the ≥3-batch replay is what the streaming fixtures exist to
-    exercise. Production guidance: batch size is the
-    maxFilesPerTrigger / trigger-interval knob — fewer, larger
-    micro-batches amortize the per-store commit floor measured in
-    OPTIMIZATION_r13.md."""
-    if os.environ.get("SPARK_GRAFT_STREAM_SINGLE_BATCH") == "1":
-        return events_stream(spark, sf_dir)
-    try:
-        glob = split_events_by_time(spark, sf_dir, n_files)
-    except Exception:  # noqa: BLE001 — tmp not writable / exotic env
-        # Fall back to the single-file stream rather than failing the
-        # whole streaming surface: the time-ordered split never changes
-        # the final append output (pinned in tests/test_streaming.py),
-        # so the result is identical — only the batch count differs.
-        return events_stream(spark, sf_dir)
+    Production guidance: batch size is the maxFilesPerTrigger /
+    trigger-interval knob — fewer, larger micro-batches amortize the
+    per-store commit floor measured in OPTIMIZATION_r13.md."""
+    glob = split_events_by_time(spark, sf_dir, n_files)
     # Introspect a *split* file, not the source fixture: the split is
     # written by a batch round-trip, so its physical ts encoding is
     # whatever Spark wrote (NTZ stays NTZ; legacy nanos became LONG).
@@ -382,9 +367,9 @@ def run_available_now(
     df: DataFrame,
     *,
     output_mode: str = "append",
-    timeout_sec: int = 300,
+    timeout_sec: float = 300,
     progress_out: list[int] | None = None,
-    state_partitions: int | None = None,
+    state_partitions: int = 8,
 ) -> DataFrame:
     """Drain a finite stream to completion into an in-memory table and
     return it as a batch DataFrame.
@@ -402,17 +387,16 @@ def run_available_now(
     sized by live state volume, a deployment knob: an unbounded
     production stream with wide key spaces raises it (it is fixed at
     first start by the checkpoint); the finite harness fixture wants it
-    small. Default 8, env-overridable.
+    small. Default 8.
 
     ``progress_out``, if given, receives ``numInputRows`` per non-empty
     micro-batch — how tests pin that a multi-file source really
     executed multiple batches.
+
+    A drain that does not finish within ``timeout_sec`` is stopped and
+    raises ``TimeoutError`` — never a partial table.
     """
     spark = df.sparkSession
-    if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-        )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"__stream_result_{next(_memory_sink_ids)}"
     try:
@@ -424,7 +408,7 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_sec)
+        _await_or_stop(q, timeout_sec)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if progress_out is not None:
@@ -440,19 +424,31 @@ def foreach_batch_sink(
     batch_fn: Callable[[DataFrame, int], None],
     *,
     checkpoint_dir: str,
-    timeout_sec: int = 300,
+    timeout_sec: float = 300,
 ) -> None:
     """Run a finite stream through ``foreachBatch`` — each micro-batch
     is handed to ``batch_fn`` as a normal batch DataFrame, which is how
     the batch upsert/SCD2 operators serve streaming dimension
-    maintenance (reference E2/E3 flows, made incremental)."""
+    maintenance (reference E2/E3 flows, made incremental). Raises
+    ``TimeoutError`` (after stopping the query) if the stream does not
+    finish within ``timeout_sec``."""
     q = (
         df.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
+    _await_or_stop(q, timeout_sec)
+
+
+def _await_or_stop(q, timeout_sec: float) -> None:
+    """Wait for an availableNow query to drain; on timeout stop it and
+    raise rather than hand back a partial result."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not finish within {timeout_sec} s"
+        )
 
 
 def stream_merge_sink(

@@ -1,11 +1,12 @@
-"""Round-12 measurement harness: isolated per-query timing + plans.
+"""Measurement harness: isolated per-query timing + plans.
 
 Times each named query with the noop sink (same methodology as
 bench.py) in ONE warm JVM, optionally several repetitions, and can dump
-``.explain("formatted")`` output to plans/r12/<query>_<tag>.txt.
+``.explain("formatted")`` output to plans/<query>_<tag>.txt. Every
+query re-does its work per call, so ``--reps`` times real repetitions.
 
 Usage:
-  python scripts/measure_r12.py --names q24,q28 [--reps 3] \
+  python scripts/measure.py --names q24,q28 [--reps 3] \
       [--sf-dir /root/testdata/sf0.1] [--plans before|after] [--all]
 
 With --all, runs the full bench.py HEADLINE+EXTRA list.
@@ -32,7 +33,7 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--plans", default="", help="tag: dump explain(formatted) to plans/r12/<q>_<tag>.txt")
+    ap.add_argument("--plans", default="", help="tag: dump explain(formatted) to plans/<q>_<tag>.txt")
     args = ap.parse_args()
 
     if args.all:
@@ -42,17 +43,17 @@ def main() -> None:
     else:
         names = [n for n in args.names.split(",") if n]
 
-    spark = get_spark("measure_r12")
+    spark = get_spark("measure")
     sf_dir = args.sf_dir
     # Warm JVM + parquet footers, as bench.py does.
     QUERIES["q01_pricing_summary"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
+    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
     timings: dict[str, list[float]] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"r12:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{name}")
         runs = []
         for _ in range(args.reps):
             t0 = time.perf_counter()

@@ -7,7 +7,7 @@ significant figures, NaN/None both -> "NULL"). Queries without an
 oracle get a rows-only check.
 
 Usage:
-  python scripts/oracle_gate_r12.py [--only q24,z32] [--sf-dir DIR]
+  python scripts/oracle_gate.py [--only q24,z32] [--sf-dir DIR]
 
 Exit 0 iff every checked query matches.
 """
@@ -91,7 +91,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from pandas_analysis_with_postgres_spark.session import get_spark
 
-    spark = get_spark("oracle_gate_r12")
+    spark = get_spark("oracle_gate")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

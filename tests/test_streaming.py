@@ -515,3 +515,27 @@ def test_stream_semantic_dedup_ingest_end_to_end(spark, tmp_path):
     run()
     assert read_manifest(store)["version"] == store_v
     assert read_manifest(results)["version"] == results_v
+
+
+def test_timed_out_drains_stop_and_raise(spark, tmp_path):
+    """A stream that cannot finish inside its timeout raises instead of
+    returning a partial table, and leaves no query running — for both
+    the memory-sink drain and the foreachBatch sink."""
+    import time
+
+    import pytest
+
+    slow = F.udf(lambda v: time.sleep(3) or v, "long")
+    stream = events_stream(spark, SF_ORACLE).select(slow("event_id").alias("v"))
+    with pytest.raises(TimeoutError):
+        run_available_now(stream, timeout_sec=0.2)
+    assert spark.streams.active == []
+
+    with pytest.raises(TimeoutError):
+        foreach_batch_sink(
+            events_stream(spark, SF_ORACLE),
+            lambda df, batch_id: time.sleep(3),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            timeout_sec=0.2,
+        )
+    assert spark.streams.active == []
