@@ -16,6 +16,16 @@ Scale: cost per round is |E| shuffled on dst — the same shape as any
 big groupBy join; skewed high-degree vertices are AQE's skew-join
 case. Rounds are bounded (default 3): production PageRank runs a
 fixed budget or a convergence threshold on rank deltas.
+
+Lineage vs storage: ``pagerank`` stages its per-vertex out-degree
+frame with ``localCheckpoint(eager=False)``. That truncates lineage,
+so on a multi-executor cluster a lost executor fails the query
+instead of recomputing the frame, and the checkpointed blocks stay in
+executor storage until the DataFrame is garbage-collected — repeated
+calls in one session briefly hold O(|V|) rows each. At |V| rows
+re-running the query is cheap, the standard trade for iterative
+frames; ``persist()`` with an explicit ``unpersist()`` at exit is the
+alternative if fault tolerance or storage pressure ever matters.
 """
 
 from __future__ import annotations
@@ -121,11 +131,9 @@ def pagerank(
     # FOUR copies of that subtree for 3 rounds (no ReusedExchange: the
     # consumers differ in projection). One O(|V|) executor-local frame
     # replaces them; at 100 TB this is the same "stage the per-vertex
-    # state" step as staging the edge list above. (localCheckpoint
-    # trades lineage for executor-local storage: on a real cluster a
-    # lost executor fails the query instead of recomputing — at |V|
-    # rows re-staging is cheap, the standard trade for iterative
-    # frames.) Integer counts, same values — oracle-identical.
+    # state" step as staging the edge list above (lineage/storage
+    # trade: module docstring). Integer counts, same values —
+    # oracle-identical.
     deg = (
         edges.groupBy(F.col(src).alias("v"))
         .agg(F.count(F.lit(1)).alias("outdeg"))

@@ -610,10 +610,9 @@ def parse_metadata_select(sql: str) -> "dict | None":
         # The MANIFEST proof covers COUNT(*) only (clipped extremes /
         # range-restricted sketches are unprovable), but any list of
         # COUNT(*)/SUM/AVG/MIN/MAX items still PARSES so the hybrid
-        # boundary-scan tier can serve it — single items via the
-        # per-kind provers, multi-item lists via one shared
-        # range_multi_pruned pass; the metadata answerer refuses them
-        # at answer time. Sketch items (NDV/quantile/COUNT(col))
+        # boundary-scan tier can serve it — any item list via one
+        # shared range_multi_pruned pass; the metadata answerer
+        # refuses them at answer time. Sketch items (NDV/quantile/COUNT(col))
         # refuse here as before: no prover serves them under a range.
         if any(
             k in ("approx", "quantile", "countcol", "cdistinct")
@@ -1325,20 +1324,20 @@ def hybrid_range_count(
     version: "int | str | None" = None,
     explain: bool = False,
 ) -> "DataFrame | None":
-    """The MIDDLE tier between a metadata answer and a full scan:
-    a SINGLE-aggregate range statement — ``SELECT COUNT(*)/SUM(c)/
-    AVG(c)/MIN(c)/MAX(c) FROM t WHERE col <range>`` — answered by the
-    :func:`snapshot.range_count_pruned` / ``range_sum_pruned`` /
-    ``range_minmax_pruned`` family: proven partitions from the
-    manifest, ONLY the boundary scanned. COUNT additionally accepts
-    the conjunctive ``pcol = lit AND col <range>`` shape. Returns
-    ``None`` when the statement is not exactly one of those shapes
-    (multiple items, GROUP BY, non-range WHERE, unknown table) or the
-    literal's type is not manifest-comparable — the caller then falls
-    back to a real scan. Unlike ``answer_from_manifest`` this DOES
-    read data pages (the boundary), so it is a separate, caller-opted
-    tier: the CLI applies it after a metadata refusal and before the
-    full scan."""
+    """The MIDDLE tier between a metadata answer and a full scan: a
+    range statement — ``SELECT COUNT(*)/SUM(c)/AVG(c)/MIN(c)/MAX(c),
+    … FROM t WHERE col <range>`` with any item list — answered by the
+    hybrid range provers: proven partitions from the manifest, ONLY the
+    boundary scanned. A single window (optionally conjoined with
+    ``pcol = lit`` / ``pcol IN (…)``) runs one
+    :func:`snapshot.range_multi_pruned` pass; OR-windows, GROUP BY
+    pcol, and the NULL-predicate shapes have their own branches below.
+    Returns ``None`` when the statement is none of those shapes
+    (non-range WHERE, unknown table or column) or the literal's type is
+    not manifest-comparable — the caller then falls back to a real
+    scan. Unlike ``answer_from_manifest`` this DOES read data pages
+    (the boundary), so it is a separate, caller-opted tier: the CLI
+    applies it after a metadata refusal and before the full scan."""
     parsed = parse_metadata_select(sql)
     if (
         parsed is None
@@ -1383,122 +1382,8 @@ def hybrid_range_count(
         # disjunctive windows: one classification + boundary scan PER
         # merged disjoint interval, combined exactly (any item list)
         return _hybrid_or_range(spark, parsed, tables, version, explain)
-    if len(parsed["items"]) > 1:
-        # the dashboard shape — every aggregate shares ONE
-        # classification and ONE boundary scan
-        return _hybrid_multi(spark, parsed, tables, version, explain)
-    kind, agg_col, alias = parsed["items"][0]
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
-    try:
-        eq, col, lo_raw, hi_raw, lo_strict, hi_strict = _conj_where(
-            parsed["where"], spec_types
-        )
-    except _Refuse:
-        return None  # non-spec membership / uncoercible member: scan
-    coltype = (
-        spec_types[col]
-        if col in spec_types
-        else _spark_simple_type(field_types.get(col))
-    )
-    if not coltype:
-        return None  # unknown column: let the scan engine error
-    try:
-        lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-        hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    except _Refuse:
-        return None  # type-incomparable literal: full scan decides
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as _ST,
-    )
-
-    from .snapshot import (
-        range_count_pruned,
-        range_minmax_pruned,
-        range_sum_pruned,
-    )
-
-    bounds = dict(
-        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
-        version=version,
-    )
-    try:
-        if kind == "count":
-            out = range_count_pruned(
-                spark, path, col, where_partition=eq,
-                explain_only=explain, **bounds
-            )
-            if explain:
-                return _explain_frame(
-                    spark, "hybrid",
-                    out["meta_partitions"], out["scanned_partitions"],
-                    out["scanned_files"], out["total_files"],
-                )
-            return _local_rows_df(
-                spark, [(out["count"],)],
-                _ST([StructField(alias, LongType(), False)]),
-            )
-        if kind in ("sum", "avg"):
-            out = range_sum_pruned(
-                spark, path, col, agg_col, where_partition=eq,
-                explain_only=explain, **bounds
-            )
-            if explain:
-                return _explain_frame(
-                    spark, "hybrid",
-                    out["meta_partitions"], out["scanned_partitions"],
-                    out["scanned_files"], out["total_files"],
-                )
-            return _local_rows_df(
-                spark,
-                [(_sum_avg_value(kind, (out["sum"], out["n_nonnull"])),)],
-                _ST(
-                    [
-                        StructField(
-                            alias,
-                            LongType() if kind == "sum" else DoubleType(),
-                            True,
-                        )
-                    ]
-                ),
-            )
-        # validate the aggregated column BEFORE the prover runs — an
-        # unknown agg_col must not pay a boundary scan only to refuse
-        # (mirrors the early ``coltype`` check on the range column)
-        dt = field_types.get(agg_col)
-        if dt is None:
-            return None  # unknown aggregated column: scan decides
-        out = range_minmax_pruned(
-            spark, path, col, agg_col, where_partition=eq,
-            explain_only=explain, **bounds
-        )
-        if explain:
-            return _explain_frame(
-                spark, "hybrid",
-                out["meta_partitions"], out["scanned_partitions"],
-                out["scanned_files"], out["total_files"],
-            )
-        v = out[kind]
-        frame = _local_rows_df(
-            spark,
-            [(None if v is None else str(v),)],
-            _ST([StructField(alias, StringType(), True)]),
-        )
-        # manifest renderings → the scan-identical type via string cast
-        from pyspark.sql import functions as F
-
-        return frame.select(F.col(alias).cast(dt).alias(alias))
-    except ValueError:
-        return None  # mixed-spec / sketch-name guard: full scan decides
-    except _Refuse:
-        return None  # int64 overflow on SUM: a scan must decide/error
+    # one window, any item list: one classification, one boundary scan
+    return _hybrid_multi(spark, parsed, tables, version, explain)
 
 
 def _explain_frame(
@@ -1657,15 +1542,13 @@ def explain_metadata_sql(
 
 
 def _hybrid_multi(spark, parsed, tables, version, explain=False):
-    """MULTI-aggregate branch of :func:`hybrid_range_count`:
-    ``SELECT COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE col
-    <range>`` (the dashboard statement) served by ONE
+    """Single-window branch of :func:`hybrid_range_count`: ``SELECT
+    COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE col <range>``
+    with one or more items (the dashboard statement) served by ONE
     :func:`snapshot.range_multi_pruned` pass — one partition
-    classification, one boundary scan shared by every aggregate,
-    instead of falling to a full scan because the statement has more
-    than one item. The WHERE prelude mirrors the single-item path
-    (same refusal reasons: non-partition equality, unknown columns,
-    type-incomparable literals)."""
+    classification, one boundary scan shared by every aggregate.
+    Refuses (None → full scan) on non-partition equality, unknown
+    columns and type-incomparable literals."""
     path, version, schema_meta, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
@@ -1694,15 +1577,6 @@ def _hybrid_multi(spark, parsed, tables, version, explain=False):
     for kind, agg_col, _alias in parsed["items"]:
         if kind != "count" and agg_col != pcol and agg_col not in field_types:
             return None
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as _ST,
-    )
-
     from .snapshot import range_multi_pruned
 
     try:

@@ -1492,14 +1492,8 @@ def read_snapshot(
         if sj:
             from pyspark.sql.types import StructType
 
-            def _chain(name: str) -> str:
-                for old, new in renames:
-                    if name == old:
-                        name = new
-                return name
-
             for f in StructType.fromJson(json.loads(sj)).fields:
-                logical_name = _chain(f.name)
+                logical_name = _logical_name(renames, f.name)
                 if logical_name in dropped:
                     continue
                 if logical_name not in out.columns:
@@ -2597,6 +2591,36 @@ def _compute_sums(
 #: widen the bucket, don't bloat every future manifest).
 _HIST_KEY_RE = re.compile(r"^(?P<col>[A-Za-z_]\w*)::hist:(?P<width>[1-9]\d*)$")
 MAX_HIST_BUCKETS = 4096
+
+
+def _is_sketch_key(name: str) -> bool:
+    """True for a sketch stats entry (``::hll`` / ``::sum`` /
+    ``::hist:<w>``) rather than a data column's ``[min, max, nulls]``."""
+    return (
+        name.endswith(HLL_SUFFIX)
+        or name.endswith(SUM_SUFFIX)
+        or _HIST_KEY_RE.match(name) is not None
+    )
+
+
+def _refuse_sketch(cols, role: str) -> None:
+    """The sketch-column guard of the manifest answerers: raise when a
+    requested column is a sketch entry (or None) — ``role`` completes
+    "sketch entries … are not <role>"."""
+    if any(c is None or _is_sketch_key(c) for c in cols):
+        raise ValueError(
+            f"sketch entries (::hll / ::sum / ::hist:) are not {role}"
+        )
+
+
+def _logical_name(renames, name: str) -> str:
+    """Resolve a physical column name through the schema-evolution
+    rename chain (``[[old, new], …]`` in commit order): stats and
+    footers of old commits carry pre-rename names."""
+    for old, new in renames:
+        if name == old:
+            name = new
+    return name
 
 
 def _compute_hists(
@@ -5188,19 +5212,11 @@ def manifest_aggregate(
     meta = man.get("schema") or {}
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     want = list(columns or [])
-    if any(c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-           or _HIST_KEY_RE.match(c) for c in want):
-        raise ValueError(
-            "sketch entries (::hll / ::hist:) are not min/max columns "
-            "— use manifest_approx_distinct / manifest_quantile"
-        )
+    _refuse_sketch(
+        want,
+        "min/max columns — use manifest_approx_distinct / manifest_quantile",
+    )
     # PARTITION-SPEC columns' values live in directory names, not in
     # any data file (hive layout) — footer stats can never serve them,
     # but the manifest's partition list answers them exactly. This is
@@ -5227,7 +5243,7 @@ def manifest_aggregate(
     # (old commits' footers carry pre-rename physical names)
     aliases = set(want)
     for old, _new in renames:
-        if _chain(old) in aliases:
+        if _logical_name(renames, old) in aliases:
             aliases.add(old)
     stats = man.get("stats") or {}
     parts = man.get("partitions") or {}
@@ -5252,16 +5268,16 @@ def manifest_aggregate(
     for pname, rel in parts.items():
         entry = stats.get(pname) or {}
         # logical view of this partition's recorded stats
-        logical = {_chain(k): v for k, v in entry.items()
+        logical = {_logical_name(renames, k): v for k, v in entry.items()
             if k not in (N_ROWS_KEY, FILES_KEY)}
         need = [c for c in want if c not in logical]
         if entry.get(N_ROWS_KEY) is None or need:
             # pre-upgrade commit or un-tracked column: harvest the
             # footers of THIS partition only (physical names in the
-            # files are pre-rename for old commits — map via _chain)
+            # files are pre-rename for old commits — map via _logical_name)
             harvested, hrows = _footer_stats(Path(path) / rel, sorted(aliases))
             logical.update({
-                _chain(k): v for k, v in harvested.items()
+                _logical_name(renames, k): v for k, v in harvested.items()
                 if k != FILES_KEY
             })
             n_rows += (
@@ -5459,12 +5475,6 @@ def manifest_approx_distinct(
         )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     # eq restriction filters one component level; IN restriction = the
     # members' registers merged by max — the same arithmetic as the
     # global merge over a smaller set; an absent member simply
@@ -5488,8 +5498,8 @@ def manifest_approx_distinct(
         entry = stats.get(pname) or {}
         # the sketch key follows the rename chain of its BASE column
         for k, v in entry.items():
-            if k.endswith(HLL_SUFFIX) and _chain(
-                k[: -len(HLL_SUFFIX)]
+            if k.endswith(HLL_SUFFIX) and _logical_name(
+                renames, k[: -len(HLL_SUFFIX)]
             ) == column:
                 return v
         return None
@@ -5600,12 +5610,6 @@ def manifest_quantile(
         )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     # eq restriction filters one component level; IN restriction: the
     # members' bucket counts summed — the same merge as global, over
     # fewer partitions; absent members add 0
@@ -5628,7 +5632,10 @@ def manifest_quantile(
         entry = stats.get(pname) or {}
         for k, v in entry.items():
             hm = _HIST_KEY_RE.match(k)
-            if hm is not None and _chain(hm.group("col")) == column:
+            if (
+                hm is not None
+                and _logical_name(renames, hm.group("col")) == column
+            ):
                 return v, int(hm.group("width"))
         return None
 
@@ -5735,24 +5742,16 @@ def manifest_group_stats(
             "the grouped partition column's per-group min/max is the "
             "group value itself — select the column, not MIN/MAX of it"
         )
-    if any(c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-           or _HIST_KEY_RE.match(c) for c in columns):
-        raise ValueError(
-            "sketch entries (::hll / ::hist:) are not min/max columns "
-            "— use manifest_approx_distinct / manifest_quantile "
-            "(by_partition=True)"
-        )
+    _refuse_sketch(
+        columns,
+        "min/max columns — use manifest_approx_distinct / "
+        "manifest_quantile (by_partition=True)",
+    )
     renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
 
     aliases = set(columns)
     for old, _new in renames:
-        if _chain(old) in aliases:
+        if _logical_name(renames, old) in aliases:
             aliases.add(old)
     # a collection where_partition value restricts to the member SET
     # (the IN shape) in the same one-manifest-read pass as a scalar
@@ -5774,7 +5773,7 @@ def manifest_group_stats(
     for pname in sorted(parts):
         entry = stats.get(pname) or {}
         logical = {
-            _chain(k): v for k, v in entry.items()
+            _logical_name(renames, k): v for k, v in entry.items()
             if k not in (N_ROWS_KEY, FILES_KEY)
         }
         n = entry.get(N_ROWS_KEY)
@@ -5784,7 +5783,7 @@ def manifest_group_stats(
                 Path(path) / parts[pname], sorted(aliases)
             )
             logical.update({
-                _chain(k): v for k, v in harvested.items()
+                _logical_name(renames, k): v for k, v in harvested.items()
                 if k != FILES_KEY
             })
             if n is None:
@@ -5816,6 +5815,94 @@ def manifest_group_stats(
     ]
 
 
+def _range_cond(column: str, lo, hi, lo_strict: bool, hi_strict: bool):
+    """The SQL range predicate every boundary scan pushes down: NULL
+    never satisfies it, ``lo_strict``/``hi_strict`` make a bound
+    exclusive, a None bound is open."""
+    from pyspark.sql import functions as F
+
+    c = F.col(column)
+    cond = c.isNotNull()
+    if lo is not None:
+        cond = cond & (c > lo if lo_strict else c >= lo)
+    if hi is not None:
+        cond = cond & (c < hi if hi_strict else c <= hi)
+    return cond
+
+
+_INSIDE, _OUTSIDE, _SCAN = "inside", "outside", "scan"
+
+
+def _classify_range(man, path, range_col, lo, hi, lo_strict, hi_strict,
+                    targets):
+    """The one partition-vs-range proof of the hybrid range family:
+    classify every live partition against ``range_col <range>`` from
+    the manifest alone. Yields ``(pname, n, status, range_nulls,
+    logical, sums)``:
+
+    - ``n``: the partition's exact live row count;
+    - ``status``: ``_INSIDE`` when every non-NULL range value satisfies
+      the range, ``_OUTSIDE`` when none does, else ``_SCAN`` (no
+      stats, incomparable literal, partial overlap, or merge-on-read
+      rows whose positions in the range are unknown). A spec
+      component's value is constant per directory, so it is never
+      boundary; the outside proof survives tombstones because
+      ``[min, max]`` bounds a pre-delete superset;
+    - ``range_nulls``: the range column's recorded NULL count (0 for a
+      spec component, None for a legacy 2-element entry);
+    - ``logical``/``sums``: the partition's ``[min, max, nulls]``
+      entries and ``::sum`` pairs by logical column name — empty for
+      a tombstoned partition, whose stats still count deleted rows.
+
+    ``targets`` restricts to a member set (None: every partition).
+    Bounds are manifest renderings (`_stat_json` ordering)."""
+    meta = man.get("schema") or {}
+    renames = meta.get("renames") or []
+    stats = man.get("stats") or {}
+    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
+    comp = _spec_component(meta, man, range_col)
+    for pname, n in _partition_rows(man, path).items():
+        if n == 0 or (targets is not None and pname not in targets):
+            continue
+        logical, sums = {}, {}
+        for k, v in (stats.get(pname) or {}).items():
+            if k.endswith(SUM_SUFFIX):
+                sums[_logical_name(renames, k[: -len(SUM_SUFFIX)])] = v
+            elif k not in (N_ROWS_KEY, FILES_KEY) and not _is_sketch_key(k):
+                logical[_logical_name(renames, k)] = v
+        if comp is not None:
+            is_null, v = _partition_value(pname.split("/")[comp[0]], comp[1])
+            rng = None if is_null else [v, v, 0]
+        else:
+            rng = logical.get(range_col)
+        if pname in tomb_parts:
+            logical, sums = {}, {}
+        if rng is None:
+            # a NULL directory satisfies no range; no stats: unprovable
+            status = _OUTSIDE if comp is not None else _SCAN
+            yield pname, n, status, None, logical, sums
+            continue
+        try:
+            cmin, cmax = rng[0], rng[1]
+            if (
+                lo is not None and (cmax < lo or (lo_strict and cmax <= lo))
+            ) or (
+                hi is not None and (cmin > hi or (hi_strict and cmin >= hi))
+            ):
+                status = _OUTSIDE
+            elif (
+                (lo is None or (cmin > lo if lo_strict else cmin >= lo))
+                and (hi is None or (cmax < hi if hi_strict else cmax <= hi))
+                and (comp is not None or pname not in tomb_parts)
+            ):
+                status = _INSIDE
+            else:
+                status = _SCAN  # boundary, or tombstoned rows in range
+        except TypeError:
+            status = _SCAN  # incomparable literal: no proof
+        yield pname, n, status, rng[2] if len(rng) > 2 else None, logical, sums
+
+
 def manifest_range_count(
     path: str,
     column: str,
@@ -5835,8 +5922,10 @@ def manifest_range_count(
     minus its NULL count (min/max describe non-null values only, and
     SQL range predicates reject NULLs — a partition with an unknown
     null count is NOT answerable). Returns the exact count, or
-    ``None`` when any partition's containment is unprovable — partial
-    overlap, missing/legacy stats, unknown null count — so the caller
+    ``None`` when any partition lands in :func:`_classify_range`'s
+    scan set — partial overlap, missing/legacy stats (an all-NULL
+    partition records no entry for the column, so it refuses too),
+    tombstones inside the range, unknown null count — so the caller
     falls back to a real scan: a metadata answerer refuses what it
     cannot prove, never approximates.
 
@@ -5845,108 +5934,36 @@ def manifest_range_count(
     ``hi_strict`` make the corresponding bound exclusive. The
     PARTITION column is always answerable: each directory holds ONE
     value (in-or-out, partial overlap impossible; the NULL partition
-    contributes 0 like SQL)."""
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
-        raise ValueError(
-            "sketch entries (::hll / ::hist:) are not range columns "
-            "— use manifest_approx_distinct / manifest_quantile"
-        )
+    contributes 0 like SQL). A layout-mixed table refuses (None) for
+    the partition column and for ``where_partition``, as does a
+    restriction on a non-spec column; a sketch column raises."""
+    _refuse_sketch(
+        [column],
+        "range columns — use manifest_approx_distinct / manifest_quantile",
+    )
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
     spec_cols = [c for c, _t in _spec_meta(meta)]
-    if column in spec_cols and _mixed_spec(man):
-        # old-spec directory names are not values of the current
-        # partition spec; the stats branch below (non-spec column)
-        # stays valid — per-partition stats are spec-independent
+    if _mixed_spec(man) and (
+        column in spec_cols or where_partition is not None
+    ):
+        # old-spec directory names are not values of the current spec;
+        # per-partition stats stay valid (they are spec-independent)
         return None
-    if where_partition is not None:
-        # partition-equality restriction composes with the range proof:
-        # only the member partitions' containment matters (the
-        # conjunctive "WHERE pcol = v AND col <range>" dashboard shape)
-        if (
-            any(w not in spec_cols for w, _v in _wp_conjuncts(where_partition))
-            or _mixed_spec(man)
-        ):
-            return None
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    part_rows = _restrict_parts(
-        _partition_rows(man, path), meta, where_partition=where_partition
+    if any(w not in spec_cols for w, _v in _wp_conjuncts(where_partition)):
+        return None
+    targets = _eq_targets(
+        man, path, meta.get("partition_col"), where_partition
     )
-    if column in spec_cols:
-        cidx, _cc, ctype = _partition_selector(meta, column)
-        total = 0
-        for pname, n in part_rows.items():
-            is_null, v = _partition_value(pname.split("/")[cidx], ctype)
-            if is_null:
-                continue  # NULL satisfies no range predicate
-            try:
-                if _in_lo(v) and _in_hi(v):
-                    total += n
-            except TypeError:
-                return None  # incomparable literal vs partition type
-        return total
-
-    renames = (meta.get("renames") or [])
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
     total = 0
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(column)
-        if rng is None:
-            return None  # no recorded stats: containment unprovable
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-            # fully outside: every non-null value fails one bound
-            outside_lo = lo is not None and (
-                cmax < lo or (lo_strict and cmax <= lo)
-            )
-            outside_hi = hi is not None and (
-                cmin > hi or (hi_strict and cmin >= hi)
-            )
-        except TypeError:
-            return None  # incomparable bound type
-        if outside_lo or outside_hi:
-            # non-null values all excluded; nulls excluded by SQL —
-            # contributes 0 (tombstoned rows were a subset: still 0)
-            continue
-        if pname in tomb_parts:
-            # merge-on-read tombstones: the deleted rows' positions in
-            # the range are unknown, so a contributing partition's
-            # count is unprovable — refuse; compaction restores it
+    for _p, n, status, rnulls, _l, _s in _classify_range(
+        man, path, column, lo, hi, lo_strict, hi_strict, targets
+    ):
+        if status == _SCAN or (status == _INSIDE and rnulls is None):
             return None
-        nulls = rng[2] if len(rng) > 2 else None
-        if inside:
-            if nulls is None:
-                return None  # legacy entry: null count unknown
-            total += n - nulls
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL partition: nothing satisfies a range
-        else:
-            return None  # partial overlap: not provable from stats
+        if status == _INSIDE:
+            total += n - int(rnulls)
     return total
-
 
 
 def manifest_column_count(
@@ -5976,11 +5993,7 @@ def manifest_column_count(
     the live rows outside the NULL partition. ``where_partition`` /
     ``where_partition_in`` restrict to member partitions (absent
     members contribute 0, SQL semantics)."""
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
-        raise ValueError(
-            "sketch entries (::hll / ::hist:) are not countable columns"
-        )
+    _refuse_sketch([column], "countable columns")
     if where_partition is not None and where_partition_in is not None:
         raise ValueError(
             "pass one of where_partition / where_partition_in, not both"
@@ -6035,12 +6048,6 @@ def manifest_column_count(
         return sum(_nn(pname, n) for pname, n in part_rows.items())
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
 
@@ -6053,7 +6060,7 @@ def manifest_column_count(
             )
         entry = stats.get(pname) or {}
         logical = {
-            _chain(k): v for k, v in entry.items()
+            _logical_name(renames, k): v for k, v in entry.items()
             if k not in (N_ROWS_KEY, FILES_KEY)
         }
         rng = logical.get(column)
@@ -6137,12 +6144,6 @@ def manifest_column_sum(
             )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
     part_rows = _restrict_parts(
@@ -6162,8 +6163,8 @@ def manifest_column_sum(
         entry = stats.get(pname) or {}
         # the sum key follows the rename chain of its BASE column
         for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX) and _chain(
-                k[: -len(SUM_SUFFIX)]
+            if k.endswith(SUM_SUFFIX) and _logical_name(
+                renames, k[: -len(SUM_SUFFIX)]
             ) == column:
                 return (v[0], int(v[1]))
         raise ValueError(
@@ -6203,12 +6204,14 @@ def manifest_column_sum(
     return (total if seen_value else None, n_total)
 
 
-def _window_file_counts(stats, scan_parts, column, lo, hi):
-    """File-grain accounting for a boundary scan set: over scan
-    partitions WITH per-file stats, how many files could overlap the
-    window (closed-bound, the same _ranges_overlap the read path
-    prunes with) vs how many exist. Driver-side, zero data pages —
+def _range_accounting(man, meta_parts, scan_parts, column, lo, hi) -> dict:
+    """The I/O a hybrid range prover commits to — the return keys every
+    one of them shares: partitions answered from metadata vs scanned,
+    and, over scan partitions WITH per-file stats, how many files could
+    overlap the window (closed-bound, the same _ranges_overlap the read
+    path prunes with) vs how many exist. Driver-side, zero data pages;
     partitions without FILES_KEY (legacy commits) count in neither."""
+    stats = man.get("stats") or {}
     files_total = files_scanned = 0
     for pname in scan_parts:
         fstats = (stats.get(pname) or {}).get(FILES_KEY)
@@ -6220,7 +6223,22 @@ def _window_file_counts(stats, scan_parts, column, lo, hi):
             for fs in fstats.values()
             if _ranges_overlap(fs, {column: (lo, hi)})
         )
-    return files_scanned, files_total
+    return {
+        "meta_partitions": len(meta_parts),
+        "scanned_partitions": len(scan_parts),
+        "scanned_files": files_scanned,
+        "total_files": files_total,
+    }
+
+
+def _range_scan(spark, path, version, scan_parts, range_col, lo, hi,
+                lo_strict, hi_strict) -> DataFrame:
+    """The boundary scan: only ``scan_parts``, range pushed down."""
+    return read_snapshot(
+        spark, path, version,
+        partition_filter=lambda p: p in scan_parts,
+        column_ranges={range_col: (lo, hi)},
+    ).filter(_range_cond(range_col, lo, hi, lo_strict, hi_strict))
 
 
 def range_count_pruned(
@@ -6250,139 +6268,18 @@ def range_count_pruned(
     boundary is O(1) partitions regardless of table size — THE 100 TB
     shape for "how many rows in this key range".
 
-    Bounds are manifest-rendering values (`_stat_json` ordering).
-    Returns ``{"count", "meta_partitions", "scanned_partitions"}``.
-    """
-    from pyspark.sql import functions as F
-
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
-        raise ValueError(
-            "sketch entries (::hll / ::sum / ::hist:) are not range "
-            "columns — pass the data column itself"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    # conjunctive shape: the pcol equality prunes the universe the
-    # range classification runs over — exact, it IS the partition index
-    targets = _eq_targets(man, path, pcol, where_partition)
-    meta_total = 0
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        if (comp := _spec_component(meta, man, column)) is not None:
-            # one value per directory: in-or-out, never boundary —
-            # any spec COMPONENT's level proves it (multi-column too)
-            is_null, v = _partition_value(
-                pname.split("/")[comp[0]], comp[1]
-            )
-            try:
-                if not is_null and _in_lo(v) and _in_hi(v):
-                    meta_total += n
-                    meta_parts.add(pname)
-                continue
-            except TypeError:
-                scan_parts.add(pname)  # incomparable literal: scan it
-                continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(column)
-        # classify FIRST (mirrors range_sum_pruned): [min,max] is a
-        # pre-delete SUPERSET, so a proven-OUTSIDE partition counts
-        # zero even when tombstoned — no data pages needed for it.
-        if rng is not None:
-            try:
-                outside = (
-                    lo is not None
-                    and (rng[1] < lo or (lo_strict and rng[1] <= lo))
-                ) or (
-                    hi is not None
-                    and (rng[0] > hi or (hi_strict and rng[0] >= hi))
-                )
-            except TypeError:
-                outside = False  # incomparable literal: no proof
-            if outside:
-                continue  # proven zero (nulls excluded by SQL anyway)
-        if rng is None or pname in tomb_parts:
-            scan_parts.add(pname)  # unprovable: scan exactly this one
-            continue
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        nulls = rng[2] if len(rng) > 2 else None
-        if inside and nulls is not None:
-            meta_total += n - int(nulls)
-            meta_parts.add(pname)
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL partition: proven zero
-        else:
-            scan_parts.add(pname)
-    scanned = 0
-    if scan_parts and not explain_only:
-        c = F.col(column)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        scanned = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={column: (lo, hi)},
-            )
-            .filter(cond)
-            .count()
-        )
-    # file-grain accounting, mirroring exactly what the boundary scan
-    # above read (zero data pages itself)
-    files_scanned, files_total = _window_file_counts(
-        stats, scan_parts, column, lo, hi
+    :func:`range_multi_pruned` with the one item ``("count", None)``.
+    Returns ``{"count", "meta_partitions", "scanned_partitions",
+    "scanned_files", "total_files"}`` (count None under
+    ``explain_only``)."""
+    out = range_multi_pruned(
+        spark, path, column, [("count", None)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
     )
-    if explain_only:
-        return {
-            "count": None,  # the boundary was not scanned: no value
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": files_scanned,
-            "total_files": files_total,
-        }
-    return {
-        "count": int(meta_total + scanned),
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-        "scanned_files": files_scanned,
-        "total_files": files_total,
-    }
+    (count,) = out.pop("values") or [None]
+    return {"count": count, **out}
 
 
 def read_metadata_table(
@@ -6542,23 +6439,12 @@ def null_count_pruned(
     skips the scan (count None) for the EXPLAIN surface."""
     from pyspark.sql import functions as F
 
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
-        raise ValueError(
-            "sketch entries (::hll / ::sum / ::hist:) are not data "
-            "columns — pass the column itself"
-        )
+    _refuse_sketch([column], "data columns — pass the column itself")
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
     pcol = meta.get("partition_col")
     ptype = meta.get("partition_type") or "string"
     renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
 
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
@@ -6584,7 +6470,7 @@ def null_count_pruned(
             continue
         entry = stats.get(pname) or {}
         logical = {
-            _chain(k): v for k, v in entry.items()
+            _logical_name(renames, k): v for k, v in entry.items()
             if k not in (N_ROWS_KEY, FILES_KEY)
         }
         rng = logical.get(column)
@@ -6624,7 +6510,9 @@ def null_count_pruned(
                 continue
             files_total += len(fstats)
             for fs in fstats.values():
-                rng = {_chain(k): v for k, v in fs.items()}.get(column)
+                rng = {
+                    _logical_name(renames, k): v for k, v in fs.items()
+                }.get(column)
                 fn = fs.get(N_ROWS_KEY)
                 if rng is not None and len(rng) > 2 and rng[2] is not None:
                     zero = (
@@ -6671,23 +6559,21 @@ def range_null_count_pruned(
     null predicate's exact answer is the partition's recorded
     ``null_col`` null count — cross-column reasoning is legal only in
     this all-rows-match case) contributes from metadata; everything
-    else — boundary, range nulls, legacy entries, tombstones — scans
-    with BOTH predicates pushed. ``null_col == range_col`` simplifies
-    exactly: a range predicate already rejects NULLs, so IS NULL is a
-    constant 0 and IS NOT NULL is the plain hybrid range count.
+    else — boundary, range nulls, legacy entries, tombstones, and a
+    partition whose range column is all NULL (it records no stats
+    entry) — scans with BOTH predicates pushed. ``null_col ==
+    range_col`` simplifies exactly: a range predicate already rejects
+    NULLs, so IS NULL is a constant 0 and IS NOT NULL is the plain
+    hybrid range count.
 
     Returns ``{"count", "meta_partitions", "scanned_partitions",
     "scanned_files", "total_files"}`` (count None under
     ``explain_only``)."""
     from pyspark.sql import functions as F
 
-    for c in (range_col, null_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "sketch entries (::hll / ::sum / ::hist:) are not data "
-                "columns — pass the column itself"
-            )
+    _refuse_sketch(
+        [range_col, null_col], "data columns — pass the column itself"
+    )
     if null_col == range_col:
         if not is_not:
             # rows satisfying the range have a non-NULL range column by
@@ -6705,110 +6591,44 @@ def range_null_count_pruned(
             version=version, explain_only=explain_only,
         )
     man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
     meta_total = 0
     meta_parts: set = set()
     scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if n == 0:
+    for pname, n, status, rnulls, logical, _s in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict, None
+    ):
+        if status == _OUTSIDE:
             continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(range_col)
-        # classify FIRST: [min,max] is a pre-delete SUPERSET, so a
-        # proven-OUTSIDE partition counts zero even when tombstoned
-        if rng is not None:
-            try:
-                outside = (
-                    lo is not None
-                    and (rng[1] < lo or (lo_strict and rng[1] <= lo))
-                ) or (
-                    hi is not None
-                    and (rng[0] > hi or (hi_strict and rng[0] >= hi))
-                )
-            except TypeError:
-                outside = False  # incomparable literal: no proof
-            if outside:
-                continue  # proven zero (range NULLs excluded by SQL too)
         nrng = logical.get(null_col)
         if (
-            rng is None
-            or pname in tomb_parts
-            or len(rng) < 3
-            or rng[2] is None
+            status == _SCAN
+            or rnulls != 0
             or nrng is None
             or len(nrng) < 3
             or nrng[2] is None
         ):
             scan_parts.add(pname)
             continue
-        if int(rng[2]) == n:
-            # all-NULL range column: nothing passes the range — proven
-            # zero BEFORE the bound comparison (its [min, max] are
-            # None and would TypeError against any literal)
-            continue
-        try:
-            inside = _in_lo(rng[0]) and _in_hi(rng[1])
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        if inside and int(rng[2]) == 0:
-            # every row passes the range; the null predicate's answer
-            # IS the recorded null count of null_col
-            nulls = int(nrng[2])
-            meta_total += (n - nulls) if is_not else nulls
-            meta_parts.add(pname)
-        else:
-            scan_parts.add(pname)
+        # every row passes the range; the null predicate's answer IS
+        # the recorded null count of null_col
+        nulls = int(nrng[2])
+        meta_total += (n - nulls) if is_not else nulls
+        meta_parts.add(pname)
+    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
+    if explain_only:
+        return {"count": None, **out}
     scanned = 0
-    if scan_parts and not explain_only:
-        rc = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (rc > lo if lo_strict else rc >= lo)
-        if hi is not None:
-            cond = cond & (rc < hi if hi_strict else rc <= hi)
+    if scan_parts:
         nc = F.col(null_col)
-        cond = cond & (nc.isNotNull() if is_not else nc.isNull())
         scanned = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
+            _range_scan(
+                spark, path, version, scan_parts, range_col, lo, hi,
+                lo_strict, hi_strict,
             )
-            .filter(cond)
+            .filter(nc.isNotNull() if is_not else nc.isNull())
             .count()
         )
-    files_scanned, files_total = _window_file_counts(
-        stats, scan_parts, range_col, lo, hi
-    )
-    return {
-        "count": None if explain_only else int(meta_total + scanned),
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-        "scanned_files": files_scanned,
-        "total_files": files_total,
-    }
+    return {"count": int(meta_total + scanned), **out}
 
 
 def _eq_targets(man, path, pcol, where_partition):
@@ -6868,152 +6688,22 @@ def range_sum_pruned(
     range-column NULL COUNT to be zero (recorded in its stats entry):
     rows with a NULL range column fail the SQL predicate but ARE
     inside the partition's sum entry, so any nulls push the partition
-    to the scan set — provability, not approximation. Returns
-    ``{"sum" (None when nothing matched), "n_nonnull",
-    "meta_partitions", "scanned_partitions"}`` — n_nonnull is the
-    AVG denominator (predicate-passing rows with a non-null sum_col).
-    """
-    from pyspark.sql import functions as F
+    to the scan set — provability, not approximation.
 
-    for c in (range_col, sum_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    meta_sum, meta_n = 0, 0
-    meta_seen = False
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        sum_pair = None
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX) and _chain(
-                k[: -len(SUM_SUFFIX)]
-            ) == sum_col:
-                sum_pair = v
-        # classify FIRST: a proven-outside partition contributes
-        # nothing and needs neither a sum entry nor a scan (stats
-        # bound pre-delete rows, a superset of live — the outside
-        # proof survives tombstones)
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside  # one value per dir: in or out
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue  # proven zero contribution
-        if pname in tomb_parts or sum_pair is None:
-            scan_parts.add(pname)
-            continue
-        if inside and rnulls == 0:
-            sv, nn = sum_pair[0], int(sum_pair[1])
-            if sv is not None:
-                meta_sum += int(sv)
-                meta_seen = True
-            meta_n += nn
-            meta_parts.add(pname)
-        else:
-            scan_parts.add(pname)  # boundary / unknown or >0 nulls
-    scan_sum, scan_n = None, 0
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "sum": None,
-            "n_nonnull": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .agg(
-                F.sum(F.col(sum_col).cast("decimal(38,0)")).alias("s"),
-                F.count(F.col(sum_col)).alias("n"),
-            )
-            .collect()[0]
-        )
-        scan_sum = None if row["s"] is None else int(row["s"])
-        scan_n = int(row["n"])
-    total = None
-    if meta_seen or scan_sum is not None:
-        total = (meta_sum if meta_seen else 0) + (scan_sum or 0)
-    return {
-        "sum": total,
-        "n_nonnull": meta_n + scan_n,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
+    :func:`range_multi_pruned` with the one item ``("sum", sum_col)``.
+    Returns ``{"sum" (None when nothing matched), "n_nonnull",
+    "meta_partitions", "scanned_partitions", "scanned_files",
+    "total_files"}`` — n_nonnull is the AVG denominator
+    (predicate-passing rows with a non-null sum_col); both are None
+    under ``explain_only``."""
+    out = range_multi_pruned(
+        spark, path, range_col, [("sum", sum_col)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
+    )
+    ((total, n_nonnull),) = out.pop("values") or [(None, None)]
+    return {"sum": total, "n_nonnull": n_nonnull, **out}
 
 
 def _exact_extreme(v):
@@ -7059,143 +6749,116 @@ def range_minmax_pruned(
     the aggregated column (its NULL rows fail the predicate and are
     absent from the stats anyway). Values compare in manifest
     rendering (`_stat_json`): numbers natively, dates as ISO strings.
-    Returns ``{"min", "max", "meta_partitions",
-    "scanned_partitions"}`` (None extremes when nothing matched)."""
+
+    :func:`range_multi_pruned` with the items ``("min", agg_col),
+    ("max", agg_col)``. Returns ``{"min", "max", "meta_partitions",
+    "scanned_partitions", "scanned_files", "total_files"}`` (None
+    extremes when nothing matched or under ``explain_only``)."""
+    out = range_multi_pruned(
+        spark, path, range_col, [("min", agg_col), ("max", agg_col)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
+    )
+    lo_v, hi_v = out.pop("values") or (None, None)
+    return {"min": lo_v, "max": hi_v, **out}
+
+
+_RANGE_KINDS = ("count", "sum", "avg", "min", "max")
+
+
+def _check_range_items(range_col: str, items) -> None:
+    """Validate a multi-aggregate item list: known kinds, data columns."""
+    bad = {k for k, _c in items} - set(_RANGE_KINDS)
+    if bad:
+        raise ValueError(f"unknown aggregate kind(s) {sorted(bad)}")
+    _refuse_sketch(
+        [range_col] + [c for k, c in items if k != "count"],
+        "data columns — pass the column itself",
+    )
+
+
+def _meta_values(items, comps, pname, n, range_col, rnulls, logical, sums):
+    """The per-item gate and values of a proven-INSIDE partition: its
+    metadata answer for every item, or None when any item is
+    unprovable there (the whole partition then scans — one boundary
+    scan serves every item, so provability differences cost no I/O).
+    count needs the range column's recorded null count; sum/avg need
+    the ``::sum`` entry plus zero range nulls (a NULL range value
+    fails the predicate but sits in the entry); min/max need the
+    column's extremes (a spec component's is its directory value)
+    plus zero range nulls, unless the range column IS the aggregated
+    one. Shapes: count → int; sum/avg → ``(total | None,
+    n_nonnull)``; min/max → manifest-rendered value."""
+    vals = []
+    for kind, c in items:
+        if kind == "count":
+            if rnulls is None:
+                return None
+            vals.append(n - int(rnulls))
+        elif kind in ("sum", "avg"):
+            if rnulls != 0 or c not in sums:
+                return None
+            sv, nn = sums[c]
+            vals.append((None if sv is None else int(sv), int(nn)))
+        else:
+            if comps[c] is not None:
+                is_null, v = _partition_value(
+                    pname.split("/")[comps[c][0]], comps[c][1]
+                )
+                rng = None if is_null else (v, v)
+            else:
+                rng = logical.get(c)
+            if rng is None or (rnulls != 0 and c != range_col):
+                return None
+            vals.append(rng[0] if kind == "min" else rng[1])
+    return vals
+
+
+def _scan_aggs(items) -> list:
+    """The boundary-scan aggregates, one per item (sum/avg also count
+    non-null values), aliased by item position."""
     from pyspark.sql import functions as F
 
-    for c in (range_col, agg_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    mins, maxs = [], []
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v
-            for k, v in entry.items()
-            if k != N_ROWS_KEY and not k.endswith(HLL_SUFFIX)
-            and not k.endswith(SUM_SUFFIX) and not _HIST_KEY_RE.match(k)
-        }
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
+    aggs = []
+    for i, (kind, c) in enumerate(items):
+        if kind == "count":
+            aggs.append(F.count(F.lit(1)).alias(f"__v{i}"))
+        elif kind in ("sum", "avg"):
+            aggs.append(F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__v{i}"))
+            aggs.append(F.count(F.col(c)).alias(f"__n{i}"))
         else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue
-        acomp = _spec_component(meta, man, agg_col)
-        arng = logical.get(agg_col) if acomp is None else None
-        if acomp is not None:
-            pv = _partition_value(pname.split("/")[acomp[0]], acomp[1])
-            arng = None if pv[0] else [pv[1], pv[1], 0]
-        null_ok = rnulls == 0 or range_col == agg_col
-        if (
-            inside
-            and null_ok
-            and arng is not None
-            and pname not in tomb_parts
-        ):
-            mins.append(arng[0])
-            maxs.append(arng[1])
-            meta_parts.add(pname)
+            aggs.append(getattr(F, kind)(F.col(c)).alias(f"__v{i}"))
+    return aggs
+
+
+def _scan_values(items, row) -> list:
+    """One boundary-scan result row in :func:`_meta_values`' shapes."""
+    vals = []
+    for i, (kind, _c) in enumerate(items):
+        v = row[f"__v{i}"]
+        if kind == "count":
+            vals.append(int(v))
+        elif kind in ("sum", "avg"):
+            vals.append((None if v is None else int(v), int(row[f"__n{i}"])))
         else:
-            scan_parts.add(pname)
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "min": None,
-            "max": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .agg(
-                F.min(agg_col).alias("lo"), F.max(agg_col).alias("hi")
-            )
-            .collect()[0]
-        )
-        slo, shi = _exact_extreme(row["lo"]), _exact_extreme(row["hi"])
-        if slo is not None:
-            mins.append(slo)
-        if shi is not None:
-            maxs.append(shi)
-    return {
-        "min": min(mins) if mins else None,
-        "max": max(maxs) if maxs else None,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
+            vals.append(_exact_extreme(v))
+    return vals
+
+
+def _fold_values(kind: str, vals: list):
+    """Combine one item's values over DISJOINT row sets: counts add,
+    sums and non-null counts add (a sum stays None while every value
+    is NULL — SQL SUM), extremes nest skipping None."""
+    if kind == "count":
+        return sum(vals)
+    if kind in ("sum", "avg"):
+        sums = [s for s, _n in vals if s is not None]
+        return (sum(sums) if sums else None, sum(n for _s, n in vals))
+    present = [v for v in vals if v is not None]
+    if not present:
+        return None
+    return min(present) if kind == "min" else max(present)
 
 
 def range_multi_pruned(
@@ -7214,236 +6877,71 @@ def range_multi_pruned(
 ) -> dict:
     """MULTI-AGGREGATE hybrid range pass — ``SELECT COUNT(*), SUM(x),
     AVG(x), MIN(y), MAX(y) … WHERE range_col <range>`` answered with
-    ONE partition classification and ONE boundary scan shared by every
-    aggregate (the dashboard statement shape; running the single-item
-    provers per aggregate would pay N boundary scans over the same
-    directories). ``items`` is ``[(kind, agg_col)]`` with kind one of
-    ``count/sum/avg/min/max`` (``agg_col`` ignored for count).
+    ONE partition classification (:func:`_classify_range`) and ONE
+    boundary scan shared by every aggregate (the dashboard statement
+    shape). ``items`` is ``[(kind, agg_col)]`` with kind one of
+    ``count/sum/avg/min/max`` (``agg_col`` ignored for count); the
+    single-aggregate provers are this pass with one or two items.
 
-    Classification is the strictest union of the single provers'
-    gates: a partition contributes from metadata only when EVERY item
-    is provable there — count needs the range column's recorded null
-    count, sum/avg need the ``agg_col::sum`` entry plus zero range
-    nulls (a NULL range value fails the predicate but lives in the sum
-    entry), min/max need the agg column's [min, max] plus zero range
-    nulls unless the range column IS the aggregated column. Any
-    unprovable item sends the partition to the scan set for ALL items
-    — the boundary scan computes every aggregate in a single job, so
-    provability differences cost no extra I/O. Exact by construction;
-    proven-outside partitions contribute nothing regardless of
-    tombstones ([min, max] bounds a pre-delete superset).
+    A proven-inside partition contributes from metadata only when
+    EVERY item is provable there (:func:`_meta_values`); otherwise it
+    joins the boundary scan, which computes every aggregate in a
+    single job. Exact by construction; proven-outside partitions
+    contribute nothing regardless of tombstones. ``where_partition``
+    restricts to partition-value members (eq or IN on a spec column).
 
     Returns ``{"values": [per-item], "meta_partitions",
-    "scanned_partitions"}`` where a count item yields an int, sum/avg
-    yield ``(total | None, n_nonnull)`` (the caller divides for AVG —
-    same float semantics as the scan), and min/max yield a manifest-
-    rendered value or None."""
-    from pyspark.sql import functions as F
-
-    kinds = {k for k, _ in items}
-    if not kinds <= {"count", "sum", "avg", "min", "max"}:
-        raise ValueError(
-            f"unknown aggregate kind(s) {sorted(kinds - {'count', 'sum', 'avg', 'min', 'max'})}"
-        )
-    agg_cols = [c for k, c in items if k != "count"]
-    for c in [range_col] + agg_cols:
-        if c is None or (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                         or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
+    "scanned_partitions", "scanned_files", "total_files"}`` where a
+    count item yields an int, sum/avg yield ``(total | None,
+    n_nonnull)`` (the caller divides for AVG — same float semantics as
+    the scan), and min/max yield a manifest-rendered value or None;
+    ``values`` is None under ``explain_only``."""
+    _check_range_items(range_col, items)
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    sum_cols = sorted({c for k, c in items if k in ("sum", "avg")})
-    mm_cols = sorted({c for k, c in items if k in ("min", "max")})
-    meta_count = 0
-    meta_sums = {c: [0, 0, False] for c in sum_cols}  # [sum, n, seen]
-    meta_mins: dict = {c: [] for c in mm_cols}
-    meta_maxs: dict = {c: [] for c in mm_cols}
+    targets = _eq_targets(
+        man, path, meta.get("partition_col"), where_partition
+    )
+    comps = {
+        c: _spec_component(meta, man, c)
+        for k, c in items if k in ("min", "max")
+    }
+    per_part: list = []
     meta_parts: set = set()
     scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-            and not k.endswith(HLL_SUFFIX) and not k.endswith(SUM_SUFFIX)
-            and not _HIST_KEY_RE.match(k)
-        }
-        sum_pairs = {}
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX):
-                base = _chain(k[: -len(SUM_SUFFIX)])
-                if base in sum_cols:
-                    sum_pairs[base] = v
-        # classify FIRST (shared with the single provers): outside
-        # proofs survive tombstones and need no per-item entries
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
+    for pname, n, status, rnulls, logical, sums in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict, targets
+    ):
+        if status == _OUTSIDE:
             continue  # proven zero contribution for every item
-        if not inside or pname in tomb_parts:
+        vals = None
+        if status == _INSIDE:
+            vals = _meta_values(
+                items, comps, pname, n, range_col, rnulls, logical, sums
+            )
+        if vals is None:
             scan_parts.add(pname)
-            continue
-        # proven inside: every item must be provable here, or the
-        # whole partition scans (one scan serves all items anyway)
-        def _mm_rng(c):
-            mcomp = _spec_component(meta, man, c)
-            if mcomp is not None:
-                pv = _partition_value(
-                    pname.split("/")[mcomp[0]], mcomp[1]
-                )
-                return None if pv[0] else [pv[1], pv[1], 0]
-            return logical.get(c)
-
-        provable = ("count" not in kinds or rnulls is not None) and all(
-            c in sum_pairs and rnulls == 0 for c in sum_cols
-        ) and all(
-            _mm_rng(c) is not None and (rnulls == 0 or range_col == c)
-            for c in mm_cols
-        )
-        if not provable:
-            scan_parts.add(pname)
-            continue
-        meta_parts.add(pname)
-        meta_count += n - int(rnulls or 0)
-        for c in sum_cols:
-            sv, nn = sum_pairs[c][0], int(sum_pairs[c][1])
-            if sv is not None:
-                meta_sums[c][0] += int(sv)
-                meta_sums[c][2] = True
-            meta_sums[c][1] += nn
-        for c in mm_cols:
-            arng = _mm_rng(c)
-            meta_mins[c].append(arng[0])
-            meta_maxs[c].append(arng[1])
-    scan_count = 0
-    scan_sums = {c: (None, 0) for c in sum_cols}
-    scan_mins = {c: None for c in mm_cols}
-    scan_maxs = {c: None for c in mm_cols}
+        else:
+            per_part.append(vals)
+            meta_parts.add(pname)
+    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
     if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "values": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
+        return {"values": None, **out}
     if scan_parts:
-        col = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (col > lo if lo_strict else col >= lo)
-        if hi is not None:
-            cond = cond & (col < hi if hi_strict else col <= hi)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in sum_cols:
-            aggs.append(
-                F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s_{c}")
-            )
-            aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
-        for c in mm_cols:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
         row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
+            _range_scan(
+                spark, path, version, scan_parts, range_col, lo, hi,
+                lo_strict, hi_strict,
             )
-            .filter(cond)
-            .agg(*aggs)
+            .agg(*_scan_aggs(items))
             .collect()[0]
         )
-        scan_count = int(row["__n"])
-        for c in sum_cols:
-            s = row[f"__s_{c}"]
-            scan_sums[c] = (
-                None if s is None else int(s), int(row[f"__c_{c}"])
-            )
-        for c in mm_cols:
-            scan_mins[c] = _exact_extreme(row[f"__lo_{c}"])
-            scan_maxs[c] = _exact_extreme(row[f"__hi_{c}"])
-    values = []
-    for kind, c in items:
-        if kind == "count":
-            values.append(int(meta_count + scan_count))
-        elif kind in ("sum", "avg"):
-            msum, mn, mseen = meta_sums[c]
-            ssum, sn = scan_sums[c]
-            total = None
-            if mseen or ssum is not None:
-                total = (msum if mseen else 0) + (ssum or 0)
-            values.append((total, mn + sn))
-        elif kind == "min":
-            cand = list(meta_mins[c])
-            if scan_mins[c] is not None:
-                cand.append(scan_mins[c])
-            values.append(min(cand) if cand else None)
-        else:
-            cand = list(meta_maxs[c])
-            if scan_maxs[c] is not None:
-                cand.append(scan_maxs[c])
-            values.append(max(cand) if cand else None)
-    return {
-        "values": values,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
+        per_part.append(_scan_values(items, row))
+    values = [
+        _fold_values(kind, [vals[i] for vals in per_part])
+        for i, (kind, _c) in enumerate(items)
+    ]
+    return {"values": values, **out}
 
 
 def range_group_counts(
@@ -7467,130 +6965,16 @@ def range_group_counts(
     100 TB: metadata for the interior days, data pages only for the
     two edge days.
 
+    :func:`range_group_multi` with the one item ``("count", None)``.
     Returns ``{"groups": [(value, n), …] sorted by partition name
     (zero-count groups omitted), "meta_partitions",
-    "scanned_partitions"}``."""
-    from pyspark.sql import functions as F
-
-    if (range_col.endswith(HLL_SUFFIX) or range_col.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(range_col)):
-        raise ValueError(
-            "pass a data column, not a sketch entry (::hll / ::sum "
-            "/ ::hist:)"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    if not pcol:
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {pcol!r} is unprovable while {path} holds "
-            "old-spec directories — compact_snapshot to migrate"
-        )
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    counts: dict = {}  # pname -> n (metadata-proven)
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        if range_col == pcol:
-            is_null, v = _partition_value(pname, ptype)
-            try:
-                if (not is_null) and _in_lo(v) and _in_hi(v):
-                    counts[pname] = n
-                    meta_parts.add(pname)
-                continue  # outside (or NULL): no group
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-        rng = logical.get(range_col)
-        if rng is None:
-            scan_parts.add(pname)
-            continue
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-            outside = (
-                lo is not None
-                and (cmax < lo or (lo_strict and cmax <= lo))
-            ) or (
-                hi is not None
-                and (cmin > hi or (hi_strict and cmin >= hi))
-            )
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        nulls = rng[2] if len(rng) > 2 else None
-        if outside:
-            continue
-        if pname in tomb_parts:
-            scan_parts.add(pname)
-            continue
-        if inside and nulls is not None:
-            if n - int(nulls) > 0:
-                counts[pname] = n - int(nulls)
-                meta_parts.add(pname)
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL: no group
-        else:
-            scan_parts.add(pname)
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        rows = _collect_partition_groups(
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .groupBy(pcol)
-            .agg(F.count(F.lit(1)).alias("n")),
-            pcol,
-            what="range_group_counts",
-        )
-        for r in rows:
-            counts[_hive_part_name(pcol, r[0])] = int(r["n"])
-    groups = [
-        (_partition_value(pname, ptype)[1], counts[pname])
-        for pname in sorted(counts)
-    ]
-    return {
-        "groups": groups,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
+    "scanned_partitions", "scanned_files", "total_files"}``."""
+    out = range_group_multi(
+        spark, path, range_col, [("count", None)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version,
+    )
+    return {**out, "groups": [(v, n) for v, (n,) in out["groups"]]}
 
 
 def range_group_multi(
@@ -7609,41 +6993,23 @@ def range_group_multi(
 ) -> dict:
     """Grouped MULTI-AGGREGATE hybrid range pass: ``SELECT pcol,
     COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE range_col
-    <range> GROUP BY pcol`` — :func:`range_group_counts` generalized
-    to :func:`range_multi_pruned`'s item lists. Group ≡ partition, so
-    each group classifies independently: a partition proven fully
-    inside serves EVERY item from its metadata (same per-item gates
-    as range_multi_pruned — count: recorded range nulls; sum/avg:
-    the ``::sum`` entry + zero range nulls; min/max: recorded
-    extremes, null guard waived when range col == agg col), a
-    proven-outside or empty-after-nulls partition produces NO group
-    (SQL: empty groups don't exist), and every partition with ANY
-    unprovable item scans — all of them in ONE grouped job over just
-    those directories, every aggregate computed together. The
+    <range> GROUP BY pcol`` — :func:`range_multi_pruned` per group.
+    Group ≡ partition, so each group classifies independently: a
+    partition proven fully inside serves EVERY item from its metadata
+    (the same :func:`_meta_values` gate, plus a known range-column null
+    count to decide whether the group exists), a proven-outside or
+    empty-after-nulls partition produces NO group (SQL: empty groups
+    don't exist), and every partition with ANY unprovable item scans
+    — all of them in ONE grouped job over just those directories. The
     per-ingest-day dashboard panel at 100 TB: metadata rows for the
     interior days, one grouped scan for the two edge days.
 
     Returns ``{"groups": [(value, [per-item values]), …] sorted by
-    partition name, "meta_partitions", "scanned_partitions"}`` with
-    the same per-item value shapes as range_multi_pruned (count →
-    int; sum/avg → ``(total | None, n_nonnull)``; min/max → rendered
-    value or None)."""
-    from pyspark.sql import functions as F
-
-    kinds = {k for k, _ in items}
-    if not kinds <= {"count", "sum", "avg", "min", "max"}:
-        raise ValueError(
-            f"unknown aggregate kind(s) "
-            f"{sorted(kinds - {'count', 'sum', 'avg', 'min', 'max'})}"
-        )
-    agg_cols = [c for k, c in items if k != "count"]
-    for c in [range_col] + agg_cols:
-        if c is None or (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                         or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
+    partition name, "meta_partitions", "scanned_partitions",
+    "scanned_files", "total_files"}`` with range_multi_pruned's
+    per-item value shapes; ``groups`` is None under
+    ``explain_only``."""
+    _check_range_items(range_col, items)
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
     pcol = meta.get("partition_col")
@@ -7657,171 +7023,48 @@ def range_group_multi(
             f"GROUP BY {pcol!r} is unprovable while {path} holds "
             "old-spec directories — compact_snapshot to migrate"
         )
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
     ptype = meta.get("partition_type") or "string"
     targets = _eq_targets(man, path, pcol, where_partition)
-    sum_cols = sorted({c for k, c in items if k in ("sum", "avg")})
-    mm_cols = sorted({c for k, c in items if k in ("min", "max")})
+    comps = {
+        c: _spec_component(meta, man, c)
+        for k, c in items if k in ("min", "max")
+    }
     per_group: dict = {}  # pname -> [per-item values]
     meta_parts: set = set()
     scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue  # non-member: no group (IN restricts directories)
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-            and not k.endswith(HLL_SUFFIX) and not k.endswith(SUM_SUFFIX)
-            and not _HIST_KEY_RE.match(k)
-        }
-        sum_pairs = {}
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX):
-                base = _chain(k[: -len(SUM_SUFFIX)])
-                if base in sum_cols:
-                    sum_pairs[base] = v
-        if range_col == pcol:
-            is_null, v = _partition_value(pname, ptype)
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
+    for pname, n, status, rnulls, logical, sums in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict, targets
+    ):
+        if status == _OUTSIDE:
             continue  # no group
-        if not inside or pname in tomb_parts:
+        vals = None
+        if status == _INSIDE and rnulls is not None:
+            vals = _meta_values(
+                items, comps, pname, n, range_col, rnulls, logical, sums
+            )
+        if vals is None:
             scan_parts.add(pname)
-            continue
-
-        def _mm_rng(c):
-            if c == pcol:
-                pv = _partition_value(pname, ptype)
-                return None if pv[0] else [pv[1], pv[1], 0]
-            return logical.get(c)
-
-        provable = rnulls is not None and all(
-            c in sum_pairs and rnulls == 0 for c in sum_cols
-        ) and all(
-            _mm_rng(c) is not None and (rnulls == 0 or range_col == c)
-            for c in mm_cols
-        )
-        if not provable:
-            scan_parts.add(pname)
-            continue
-        live = n - int(rnulls)
-        if live <= 0:
-            continue  # all rows fail the predicate: no group
-        meta_parts.add(pname)
-        vals = []
-        for kind, c in items:
-            if kind == "count":
-                vals.append(live)
-            elif kind in ("sum", "avg"):
-                sv, nn = sum_pairs[c][0], int(sum_pairs[c][1])
-                vals.append((None if sv is None else int(sv), nn))
-            elif kind == "min":
-                vals.append(_mm_rng(c)[0])
-            else:
-                vals.append(_mm_rng(c)[1])
-        per_group[pname] = vals
+        elif n > int(rnulls):  # some row passes the range: a group
+            per_group[pname] = vals
+            meta_parts.add(pname)
+    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
     if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "groups": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
+        return {"groups": None, **out}
     if scan_parts:
-        col = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (col > lo if lo_strict else col >= lo)
-        if hi is not None:
-            cond = cond & (col < hi if hi_strict else col <= hi)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in sum_cols:
-            aggs.append(
-                F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s_{c}")
-            )
-            aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
-        for c in mm_cols:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
         rows = _collect_partition_groups(
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
+            _range_scan(
+                spark, path, version, scan_parts, range_col, lo, hi,
+                lo_strict, hi_strict,
             )
-            .filter(cond)
             .groupBy(pcol)
-            .agg(*aggs),
+            .agg(*_scan_aggs(items)),
             pcol,
             what="range_group_multi",
         )
         for r in rows:
-            vals = []
-            for kind, c in items:
-                if kind == "count":
-                    vals.append(int(r["__n"]))
-                elif kind in ("sum", "avg"):
-                    s = r[f"__s_{c}"]
-                    vals.append(
-                        (None if s is None else int(s), int(r[f"__c_{c}"]))
-                    )
-                elif kind == "min":
-                    vals.append(_exact_extreme(r[f"__lo_{c}"]))
-                else:
-                    vals.append(_exact_extreme(r[f"__hi_{c}"]))
-            per_group[_hive_part_name(pcol, r[0])] = vals
+            per_group[_hive_part_name(pcol, r[0])] = _scan_values(items, r)
     groups = [
         (_partition_value(pname, ptype)[1], per_group[pname])
         for pname in sorted(per_group)
     ]
-    return {
-        "groups": groups,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
+    return {"groups": groups, **out}

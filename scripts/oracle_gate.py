@@ -4,7 +4,9 @@ Mirrors the driver's CORRECTNESS comparison: run each ``queries()``
 entry on Spark and its ``oracle_sql()`` on DuckDB, compare row count,
 sorted column names, and an order-insensitive value hash (floats at 6
 significant figures, NaN/None both -> "NULL"). Queries without an
-oracle get a rows-only check.
+oracle get a rows-only check. Each per-query line carries the Spark
+and DuckDB wall times (``spark_s``, ``oracle_s``); a final summary
+ranks the 15 most expensive queries, the driver's per-pass budget.
 
 Usage:
   python scripts/oracle_gate.py [--only q24,z32] [--sf-dir DIR]
@@ -19,6 +21,7 @@ import hashlib
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -107,7 +110,10 @@ def main() -> None:
         names = [n for n in names if n in only or n.split("_")[0] in only]
 
     failed = []
+    cost = {}
+    t_all = time.monotonic()
     for name in names:
+        t0 = time.monotonic()
         try:
             sdf = qs[name](spark, args.sf_dir).toPandas()
             s_n, s_cols, s_h = _hash_df(sdf)
@@ -115,9 +121,12 @@ def main() -> None:
             print(f"FAIL {name}: spark error {type(exc).__name__}: {exc}"[:300], flush=True)
             failed.append(name)
             continue
+        spark_s = time.monotonic() - t0
+        cost[name] = spark_s
         if name not in oracles:
-            print(f"ok(rows-only) {name}: rows={s_n}", flush=True)
+            print(f"ok(rows-only) {name}: rows={s_n} spark_s={spark_s:.2f}", flush=True)
             continue
+        t1 = time.monotonic()
         try:
             odf = con.execute(oracles[name]).df()
             o_n, o_cols, o_h = _hash_df(odf)
@@ -125,16 +134,23 @@ def main() -> None:
             print(f"FAIL {name}: oracle error {type(exc).__name__}: {exc}"[:300], flush=True)
             failed.append(name)
             continue
+        oracle_s = time.monotonic() - t1
+        cost[name] += oracle_s
+        times = f"spark_s={spark_s:.2f} oracle_s={oracle_s:.2f}"
         if (s_n, s_cols, s_h) == (o_n, o_cols, o_h):
-            print(f"ok {name}: rows={s_n} hash={s_h}", flush=True)
+            print(f"ok {name}: rows={s_n} hash={s_h} {times}", flush=True)
         else:
             print(
                 f"FAIL {name}: spark(rows={s_n}, cols={s_cols}, h={s_h}) "
-                f"vs oracle(rows={o_n}, cols={o_cols}, h={o_h})",
+                f"vs oracle(rows={o_n}, cols={o_cols}, h={o_h}) {times}",
                 flush=True,
             )
             failed.append(name)
 
+    print(f"total_s={time.monotonic() - t_all:.1f} queries={len(names)}")
+    print("TOP 15 BY COST (spark_s + oracle_s):")
+    for name, s in sorted(cost.items(), key=lambda kv: -kv[1])[:15]:
+        print(f"  {name:36s} {s:7.2f}s")
     print(f"FAILED: {len(failed)}" + (f" -> {failed}" if failed else ""))
     sys.exit(1 if failed else 0)
 
