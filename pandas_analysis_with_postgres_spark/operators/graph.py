@@ -33,21 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import _profile_salt, _shuffle_partitions  # noqa: F401
+
 #: Fixed-point unit for ranks (1.0 == PAGERANK_SCALE).
 PAGERANK_SCALE = 1_000_000
 #: Damping factor as an exact percentage (0.85).
 PAGERANK_DAMP_PCT = 85
 PAGERANK_ROUNDS = 3
-
-
-def _shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating the
-    literal string "auto" that AQE-managed platforms set — fall back to
-    the cluster's default parallelism instead of failing the caller."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        return spark.sparkContext.defaultParallelism
 
 
 def pagerank(
@@ -85,9 +77,9 @@ def pagerank(
     ``salt_partitions=None`` (default) chooses from a measured degree
     profile, the same plan decision as ``auto_salted_join``: one
     map-combined aggregate over edges yields the max in-degree ``hot``
-    and ``|E|``; with ``target = |E| / shuffle_partitions`` rows per
-    reducer, an even graph (``hot ≤ 4·target``) takes the plain
-    single-stage aggregate (the extra stage costs more than it saves —
+    and ``|E|``; with ``target = |E| / max(shuffle_partitions, 32)``
+    rows per reducer (`joins._profile_salt`), an even graph
+    (``hot ≤ 4·target``) takes the plain single-stage aggregate (the extra stage costs more than it saves —
     measured +30% on the even sf0.1 supply graph), while a hub graph
     salts by ``ceil(hot / target)`` clamped to [2, 32]. The profile is
     measured once and reused by every round. Lineage is truncated every
@@ -98,8 +90,6 @@ def pagerank(
     still cannot grow its plan superlinearly.
     """
     if salt_partitions is None:
-        import math
-
         # The profile is a separate action; if ``edges`` is a derived
         # frame that action would re-execute the whole construction,
         # and so would every round's plan copy. Materialize once —
@@ -112,18 +102,7 @@ def pagerank(
         derived = any(k in plan for k in ("Join", "Aggregate", "Window", "Union"))
         if derived and "LogicalRDD" not in plan.splitlines()[0]:
             edges = edges.localCheckpoint()
-        parts = _shuffle_partitions(edges.sparkSession)
-        prof = (
-            edges.groupBy(dst)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("hot"), F.sum("n").alias("total"))
-            .collect()[0]
-        )
-        hot, total = prof["hot"] or 0, prof["total"] or 0
-        target = max(1, total // max(1, parts))
-        salt_partitions = (
-            1 if hot <= 4 * target else max(2, min(32, math.ceil(hot / target)))
-        )
+        salt_partitions = _profile_salt(edges, dst, max_salt=32)
     # Materialize the degree frame ONCE (lazy localCheckpoint): deg is
     # consumed by round 0's rank init and by every round's rank⨝deg
     # join, and without the boundary each consumer re-runs the full

@@ -209,7 +209,8 @@ def auto_salted_join(
     One cheap profiling aggregate over the skewed side (groupBy(key)
     count → max/sum — map-side combinable, output is two longs) gives
     ``hot`` (rows under the heaviest key) and ``total``. With
-    ``target = total / shuffle_partitions`` rows per task:
+    ``target = total / max(shuffle_partitions, 32)`` rows per task
+    (`_profile_salt`):
 
     - ``hot <= skew_factor · target`` → the heaviest key does not
       dominate a task → degrade to a PLAIN join (no replication cost);
@@ -224,22 +225,56 @@ def auto_salted_join(
     — amortize it by caching the profile when joining the same fact
     side repeatedly.
     """
+    salt = _profile_salt(
+        skewed, key, skew_factor=skew_factor, max_salt=max_salt
+    )
+    if salt == 1:
+        return skewed.join(other, key, how)
+    return salted_join(skewed, other, key, how=how, salt=salt)
+
+
+def _shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, tolerating the
+    literal string "auto" that AQE-managed platforms set — fall back to
+    the cluster's default parallelism instead of failing the caller."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
+#: The fewest reducers the skew rule assumes. The rule compares the
+#: heaviest key with ``skew_factor`` tasks' worth of rows; with the
+#: session's own partition count at 4 or fewer that bound reads
+#: ``hot > total`` and no key could ever qualify, so the per-task
+#: target never assumes fewer than this many tasks. At 32 or more
+#: partitions the floor changes nothing.
+_SKEW_PARTITION_FLOOR = 32
+
+
+def _profile_salt(
+    df: DataFrame, key: str, *, skew_factor: float = 4.0, max_salt: int = 64
+) -> int:
+    """The measured skew decision shared by `auto_salted_join` and
+    `pagerank`: one map-combined profile (groupBy(key) count →
+    max/sum) gives ``hot`` and ``total``; with ``target = total /
+    max(shuffle_partitions, _SKEW_PARTITION_FLOOR)`` rows per task,
+    ``hot <= skew_factor · target`` returns 1 (no salt), otherwise
+    ``ceil(hot / target)`` clamped to [2, max_salt]."""
     import math
 
-    spark = skewed.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = _shuffle_partitions(df.sparkSession)
     prof = (
-        skewed.groupBy(key)
+        df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(F.max("n").alias("hot"), F.sum("n").alias("total"))
         .collect()[0]
     )
     hot, total = prof["hot"] or 0, prof["total"] or 0
-    target = max(1, total // max(1, parts))
+    target = max(1, total // max(_SKEW_PARTITION_FLOOR, parts))
     if hot <= skew_factor * target:
-        return skewed.join(other, key, how)
-    salt = max(2, min(max_salt, math.ceil(hot / target)))
-    return salted_join(skewed, other, key, how=how, salt=salt)
+        return 1
+    return max(2, min(max_salt, math.ceil(hot / target)))
 
 
 def range_join(

@@ -86,6 +86,7 @@ def strong_mix(col: Column) -> Column:
     non-negative 64-bit key: (v>>24) ≤ 2^40, so the product stays
     < 2^56 in both engines. All later intermediates stay ≤ 2^31-1;
     DuckDB replays via ``xor()``, ``>>``, ``&``."""
+    col = col.cast("long")  # narrower integral inputs would overflow
     a3, b3 = HASH_ROWS[3]
     h = (
         F.shiftright(col, MIX_LO_BITS) * F.lit(a3) + F.lit(b3)

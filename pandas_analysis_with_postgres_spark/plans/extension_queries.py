@@ -8601,7 +8601,7 @@ def _nullaudit_table(spark: SparkSession, sf_dir: str, root: str) -> str:
 
 def z104_metadata_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-membership predicates in the PURE-METADATA tier
-    (metadata_sql._answer_isnull / the grouped isnull branch): the
+    (the null predicate of snapshot._manifest_fold's one pass): the
     data-quality audit every ingest pipeline runs — per-partition NULL
     row counts (``WHERE v IS NULL GROUP BY p``, served from the
     recorded per-partition null counts: live rows minus the
@@ -9181,7 +9181,7 @@ def z115_multicol_conj_metadata(
     - **composite GROUP BY** (``GROUP BY o_orderstatus,
       o_orderpriority``) under an IN restriction — every live
       directory name IS its group tuple, counts and exact sums merge
-      by addition (_answer_group_by_multi).
+      by addition (snapshot._manifest_fold).
 
     Refusal = hard fail (assert), like z106; the oracle recomputes
     both frames from raw orders."""

@@ -6,64 +6,53 @@ answer from manifest numRecords). At 100 TB the difference is a driver
 JSON read vs a cluster-wide scan for a poll a dashboard issues every
 minute.
 
-The grammar is deliberately STRICT — a metadata answerer must refuse
-what it cannot prove, never approximate it. The answerable statement
-shapes; everything else returns ``None`` and the caller falls back to
-a real scan:
+A metadata answerer must refuse what it cannot prove, never
+approximate it: every statement outside the shapes below returns
+``None`` and the caller falls back to a real scan. The grammar
+(:func:`parse_metadata_select`) is strict; answering is three steps.
 
-1. ``SELECT COUNT(*)/COUNT(col)/COUNT(DISTINCT pcol)/MIN(col)/
-   MAX(col)/SUM(col)/AVG(col)/APPROX_COUNT_DISTINCT(col)/
-   APPROX_QUANTILE(col, p)[, …] FROM t
-   [WHERE pcol = lit | pcol IN (…)]`` — counts from the reserved
-   ``::n_rows`` stats; null-skipping COUNT(col), SUM, AVG from the
-   ``[min, max, nulls]`` and ``col::sum`` entries; extremes from
-   ``stats_cols`` statistics (or partition names for the partition
-   column); NDV from ``::hll`` register sketches; quantiles from
-   ``::hist:<width>`` bucket counts. WHERE is answered only on the
-   partition column — equality and IN membership are the predicates
-   the manifest proves exactly (IN serves EVERY aggregate:
-   counts and sums add, registers max-merge, histograms add, and
-   MIN/MAX merge per-member recorded extremes exactly).
-2. ``SELECT COUNT(*) FROM t WHERE col <op> lit`` / ``col BETWEEN a
-   AND b`` (op ∈ <, <=, >, >=), optionally conjoined as ``pcol = lit
-   AND col <range>`` — the stats-proven RANGE count: answered ONLY
-   when every (member) partition's recorded [min, max] proves it
-   fully inside or fully outside the range (the Iceberg scan-planning
-   trick) AND its null count is recorded. Partial overlap refuses —
-   or is served by the separate caller-opted HYBRID tier
-   (:func:`hybrid_range_count`), which also serves single
-   SUM/AVG/MIN/MAX items under a range by scanning only the boundary.
-   The IN-conjunction ``pcol IN (…) AND col <range>`` parses too and
-   is hybrid-only: the member set restricts the classification
-   (non-members never enter the pass); the pure answerer refuses it.
-   Both conjunctions compose with GROUP BY pcol (the grouped hybrid
-   classifies only member partitions; eqrange + GROUP BY still
-   refuses — the member IS the group).
-3. ``SELECT pcol[, aggregates…] FROM t [WHERE pcol = lit | pcol IN
-   (…)] GROUP BY pcol [HAVING <alias> <op> <num>] [ORDER BY <output
-   alias> [ASC|DESC] [LIMIT n]]`` — group ≡ partition, so the
-   per-partition entries are exactly the per-group answers; the
-   IN-list filters assembled groups (absent members contribute no
-   group); HAVING and ORDER BY/LIMIT are provable because the full
-   group set is assembled before filtering/ordering (HAVING
-   references a numeric aggregate output alias; ties break by the
-   group column ascending).
-4. ``SELECT DISTINCT pcol FROM t [WHERE pcol = lit | pcol IN (…)]``
-   — rewritten to form 3 at parse: the live partition list IS the
-   distinct value set (COUNT(DISTINCT pcol) rides form 1 the same
-   way, skipping the NULL partition as SQL does).
+1. **Resolve** (:func:`_resolve_table`): one manifest read, pinned —
+   the statement's ``FOR VERSION/TIMESTAMP AS OF`` (Delta/Iceberg
+   syntax, timestamps via :func:`snapshot.resolve_as_of`), the
+   caller's version, or else the newest version it read, so a commit
+   landing mid-statement cannot mix two snapshots in one answer. Types
+   are the table's LOGICAL schema: the rename chain applied, dropped
+   columns gone.
+2. **Fold** (:func:`snapshot._manifest_fold`): the WHERE normaliser
+   (:func:`_restriction`) turns ``pcol = lit``, ``pcol IN (…)`` and
+   their conjunctions over spec components into one partition
+   restriction, and ``col IS [NOT] NULL`` (optionally member-
+   restricted) into a null predicate; the GROUP BY list names spec
+   components (one or several — a composite-partition rollup). One
+   pass over the live partitions then serves every item:
+   ``COUNT(*)`` from ``::n_rows``, ``COUNT(col)`` from recorded null
+   counts, ``COUNT(DISTINCT pcol)`` from the live directory names,
+   ``SUM``/``AVG`` from ``col::sum`` pairs, ``MIN``/``MAX`` from
+   ``stats_cols`` entries (partition names for spec columns),
+   ``APPROX_COUNT_DISTINCT`` from ``::hll`` registers and
+   ``APPROX_QUANTILE(col, p)`` from ``::hist:<width>`` buckets. Under a
+   null predicate COUNT(*) is the column's null-skipping count (or live
+   rows minus it) and only same-column aggregates are provable. The
+   fold raises on anything unprovable — layout-mixed tables,
+   tombstoned partitions under a value item, missing stats, dropped
+   columns — and the statement refuses.
+3. **Assemble** (:func:`_assemble_grouped`): scan-identical types
+   (MIN of a date column is a DATE, not the manifest's ISO string),
+   then ``HAVING <alias> <op> <num>`` and ``ORDER BY <output alias>
+   [ASC|DESC] [LIMIT n]`` — provable because the full group set exists
+   before filtering or ordering (ties break by the group columns
+   ascending). ``SELECT DISTINCT pcol`` parses as ``GROUP BY pcol``.
 
-Every shape composes with SQL time travel — ``FROM t FOR VERSION AS
-OF <n>`` / ``FOR TIMESTAMP AS OF '<ts>'`` (the Delta/Iceberg syntax;
-timestamps resolve against each commit's recorded ``committed_at``
-via :func:`snapshot.resolve_as_of`) — because history is just older
-manifests: time travel costs one JSON read. ``extract_as_of`` strips
-the clause for callers that fall back to a real scan and need to pin
-the view themselves (the CLI's scan path).
-
-Result types come from the table's recorded ``spark_schema``, so a
-metadata answer is schema-identical to the scan it replaced — MIN of a
-date column is a DATE, not the manifest's ISO string.
+Range predicates (``col <op> lit``, ``BETWEEN``, optionally conjoined
+with ``pcol = lit``) answer COUNT(*) from the manifest only when every
+partition's [min, max] proves it fully inside or outside the range
+(:func:`snapshot.manifest_range_count`). Partial overlap, other items
+under a range, OR-windows, IN/conj + range and range + NULL predicates
+belong to the separate, caller-opted HYBRID tier
+(:func:`hybrid_range_count`), which scans only the boundary;
+:func:`explain_metadata_sql` reports which tier serves a statement.
+``extract_as_of`` strips a time-travel clause for callers that fall
+back to a real scan and must pin the view themselves (the CLI).
 """
 
 from __future__ import annotations
@@ -75,13 +64,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .snapshot import (
-    manifest_aggregate,
-    manifest_column_count,
-    manifest_column_sum,
-    manifest_approx_distinct,
-    manifest_quantile,
-    manifest_group_stats,
-    manifest_partition_counts,
+    _logical_name,
+    _manifest_fold,
     manifest_range_count,
     read_manifest,
 )
@@ -819,12 +803,14 @@ def _coerce_conj(conj: list, spec_types: dict) -> list:
 
 
 def _resolve_table(parsed: dict, tables: dict, version):
-    """Shared statement preamble (one home — it used to be copied into
-    every answerer): resolve the table path, fold the statement's
-    ``FOR … AS OF`` into the caller's pinned version (raising on a
-    double pin), read the manifest's schema metadata, and derive the
-    typed field map and the partition-spec types. Returns
-    ``(path, version, schema_meta, field_types, spec_types)``."""
+    """Shared statement preamble: resolve the table path, fold the
+    statement's ``FOR … AS OF`` into the caller's pinned version
+    (raising on a double pin), and read the manifest ONCE — an unpinned
+    statement pins the version it read, so every later read of the same
+    statement sees that snapshot whatever commits land meanwhile.
+    ``field_types`` are LOGICAL: the rename chain applied to the
+    recorded spark_schema, dropped columns gone. Returns ``(path,
+    version, manifest, field_types, spec_types)``."""
     path = tables[parsed["table"]]
     if parsed["as_of"] is not None:
         if version is not None:
@@ -838,16 +824,21 @@ def _resolve_table(parsed: dict, tables: dict, version):
             from .snapshot import resolve_as_of
 
             version = resolve_as_of(path, parsed["as_of"]["timestamp"])
-    schema_meta = read_manifest(path, version).get("schema") or {}
-    sj = schema_meta.get("spark_schema")
+    man = read_manifest(path, version)
+    if version is None:
+        version = int(man.get("version") or 0)
+    meta = man.get("schema") or {}
+    renames = meta.get("renames") or []
+    live = meta.get("columns")
+    sj = meta.get("spark_schema")
     from pyspark.sql.types import StructType
 
-    field_types = (
-        {f.name: f.dataType for f in StructType.fromJson(json.loads(sj)).fields}
-        if sj
-        else {}
-    )
-    return path, version, schema_meta, field_types, _spec_types_of(schema_meta)
+    field_types = {}
+    for f in StructType.fromJson(json.loads(sj)).fields if sj else []:
+        name = _logical_name(renames, f.name)
+        if live is None or name in live:
+            field_types[name] = f.dataType
+    return path, version, man, field_types, _spec_types_of(meta)
 
 
 def _spec_types_of(schema_meta: dict) -> dict:
@@ -912,312 +903,114 @@ def _answer(spark, sql, tables, version) -> "DataFrame | None":
     # SQL time travel (Delta/Iceberg FOR ... AS OF syntax): the
     # statement pins the version; a caller-side pin on top of it is
     # ambiguous and loud (_resolve_table raises)
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     where = parsed["where"]
-    if isinstance(parsed["group_by"], list):
-        return _answer_group_by_multi(
-            spark, parsed, path, spec_types, field_types, version
+    if where is not None and where[0] in ("range", "eqrange"):
+        meta = man.get("schema") or {}
+        answer = (
+            _answer_range_count if where[0] == "range"
+            else _answer_eq_range_count
         )
-    if parsed["group_by"] is not None:
-        return _answer_group_by(
-            spark, parsed, path, spec_types, field_types, version
+        return answer(
+            spark, parsed, path, meta.get("partition_col"),
+            meta.get("partition_type") or "string", field_types, meta,
+            version,
         )
-    if where is not None and where[0] in ("isnull", "eqnull"):
-        return _answer_isnull(
-            spark, parsed, path, spec_types, field_types, version
-        )
-    if where is not None and where[0] == "range":
-        return _answer_range_count(
-            spark, parsed, path, pcol, ptype, field_types, schema_meta, version
-        )
-    if where is not None and where[0] == "eqrange":
-        return _answer_eq_range_count(
-            spark, parsed, path, pcol, ptype, field_types, schema_meta, version
-        )
-    if where is not None and where[0] in ("inrange", "conjrange"):
-        # conjunctive membership + range: the caller-opted HYBRID tier
-        # serves it (one member-restricted classification, one
-        # boundary scan; conjrange restricts at EVERY named component)
-        raise _Refuse()
-    if where is not None and where[0] == "orrange":
-        # disjunctive windows: hybrid-only (per-interval passes)
-        raise _Refuse()
-    if where is not None and where[0] == "rangenull":
-        # range AND NULL-predicate conjunction: hybrid-only (the
-        # boundary needs a scan)
-        raise _Refuse()
-
-    if where is not None and where[0] == "in":
-        # IN over a partition-spec column: COUNT(*) = summed member
-        # counts (absent member contributes 0, the SQL semantics), NDV
-        # = member registers max-merged, quantile = member histograms
-        # summed — each an exact manifest merge over the member set
-        wcol = where[1]
-        wtype = spec_types.get(wcol)
-        if wtype is None:
-            raise _Refuse()
-        vals = {_coerce_partition_literal(r, wtype) for r in where[2]}
-        in_spec = (wcol, sorted(vals, key=repr))
-        from pyspark.sql.types import DoubleType
-
-        try:
-            total = 0
-            if any(k == "count" for k, _, _ in parsed["items"]):
-                # ONE manifest read (the live partition list)
-                # restricted to the member set at the component's own
-                # directory level — not a per-member manifest re-parse;
-                # an absent member contributes 0, the SQL semantics
-                total = sum(
-                    n
-                    for _v, n in manifest_partition_counts(
-                        path,
-                        version=version,
-                        where_partition=(wcol, list(in_spec[1])),
-                        group_col=wcol,
-                    )
-                )
-            values, fields = [], []
-            in_casts: dict = {}
-            for k, c, alias in parsed["items"]:
-                if k == "count":
-                    values.append(total)
-                    fields.append(StructField(alias, LongType(), False))
-                elif k == "countcol":
-                    values.append(
-                        int(
-                            manifest_column_count(
-                                path, c, version=version,
-                                where_partition_in=in_spec,
-                            )
-                        )
-                    )
-                    fields.append(StructField(alias, LongType(), False))
-                elif k == "cdistinct":
-                    if c not in spec_types:
-                        raise _Refuse()  # non-spec exact NDV: scan
-                    # distinct values under IN = members present with
-                    # live rows (absent member contributes nothing;
-                    # NULL can't appear in an IN literal list). ONE
-                    # manifest read — the live partition list —
-                    # intersected with the member set by canonical
-                    # hive name, not a per-member manifest re-parse.
-                    # live DISTINCT values of component c among the
-                    # member partitions (c may differ from the IN
-                    # column on a multi-column spec)
-                    values.append(
-                        sum(
-                            1
-                            for v, _n in manifest_partition_counts(
-                                path,
-                                version=version,
-                                where_partition=(wcol, list(in_spec[1])),
-                                group_col=c,
-                            )
-                            if v is not None
-                        )
-                    )
-                    fields.append(StructField(alias, LongType(), False))
-                elif k in ("sum", "avg"):
-                    pair = manifest_column_sum(
-                        path, c, version=version,
-                        where_partition_in=in_spec,
-                    )
-                    values.append(_sum_avg_value(k, pair))
-                    fields.append(
-                        StructField(
-                            alias,
-                            LongType() if k == "sum" else DoubleType(),
-                            True,
-                        )
-                    )
-                elif k == "approx":
-                    values.append(
-                        float(
-                            manifest_approx_distinct(
-                                path, c, version=version,
-                                where_partition_in=in_spec,
-                            )
-                        )
-                    )
-                    fields.append(StructField(alias, DoubleType(), False))
-                elif k in ("min", "max"):
-                    # per-member extremes merge EXACTLY: IN restricts
-                    # to whole partitions and each member's recorded
-                    # [min, max] IS its clipped extreme (renderings
-                    # order; absent/empty members contribute nothing).
-                    # ONE manifest read over the member set — never a
-                    # per-member manifest re-parse.
-                    if c not in spec_types and field_types.get(c) is None:
-                        raise _Refuse()  # unknown column: scan decides
-                    merged = _member_minmax(
-                        path, wcol, c, k, in_spec[1], version, spec_types
-                    )
-                    values.append(None if merged is None else str(merged))
-                    fields.append(StructField(alias, StringType(), True))
-                    in_casts[alias] = (
-                        spec_types[c] if c in spec_types else field_types[c]
-                    )
-                else:  # quantile
-                    values.append(
-                        int(
-                            manifest_quantile(
-                                path, c[0], c[1], version=version,
-                                where_partition_in=in_spec,
-                            )
-                        )
-                    )
-                    fields.append(StructField(alias, LongType(), False))
-        except ValueError:
-            raise _Refuse()  # mixed specs / missing sketch / empty set
-        frame = _local_rows_df(spark, [tuple(values)], StructType(fields))
-        if in_casts:
-            from pyspark.sql import functions as F
-
-            frame = frame.select(
-                *[
-                    F.col(f.name).cast(in_casts[f.name]).alias(f.name)
-                    if f.name in in_casts
-                    else F.col(f.name)
-                    for f in frame.schema.fields
-                ]
-            )
-        return frame
-    eq = None
-    if where is not None and where[0] == "conj":
-        # conjunctive eq/IN on MULTIPLE spec components: one member-set
-        # restriction per component, applied at its own directory level
-        # by _restrict_parts — every manifest helper below receives the
-        # whole conjunction through its where_partition pass-through
-        eq = _coerce_conj(where[1], spec_types)
-    elif where is not None:
-        _, wcol, raw = where
-        wtype = spec_types.get(wcol)
-        if wtype is None:
-            raise _Refuse()  # only spec-column equality is manifest-provable
-        eq = (wcol, _coerce_partition_literal(raw, wtype))
-    cols = sorted(
-        {c for k, c, _ in parsed["items"] if c and k in ("min", "max")}
-    )
+    restrict, null_pred = _restriction(where, spec_types)
+    groups = _group_cols(parsed)
+    if any(g not in spec_types for g in groups):
+        raise _Refuse()  # only spec components group at the manifest
+    items = [(k, c) for k, c, _a in parsed["items"] if k != "group"]
     try:
-        agg = manifest_aggregate(
-            path, columns=cols, version=version, where_partition=eq
+        rows = _manifest_fold(
+            man, path,
+            items if null_pred is None else _null_items(items, *null_pred),
+            restrict, groups,
         )
-        approx = {
-            c: manifest_approx_distinct(
-                path, c, version=version, where_partition=eq
-            )
-            for k, c, _ in parsed["items"]
-            if k == "approx"
-        }
-        quant = {
-            c: manifest_quantile(
-                path, c[0], c[1], version=version, where_partition=eq
-            )
-            for k, c, _ in parsed["items"]
-            if k == "quantile"
-        }
-        ccount = {
-            c: manifest_column_count(
-                path, c, version=version, where_partition=eq
-            )
-            for k, c, _ in parsed["items"]
-            if k == "countcol"
-        }
-        csum = {
-            c: manifest_column_sum(
-                path, c, version=version, where_partition=eq
-            )
-            for k, c, _ in parsed["items"]
-            if k in ("sum", "avg")
-        }
-        cdn_vals = {}
-        for k, c, _ in parsed["items"]:
-            if k != "cdistinct":
-                continue
-            if c not in spec_types:
-                # only spec columns' value sets are a manifest fact
-                # (the live partition list); any other column's exact
-                # NDV needs a scan (APPROX_COUNT_DISTINCT serves the
-                # sketch-tolerant caller)
-                raise _Refuse()
-            # COUNT(DISTINCT <spec col>) = live groups of that
-            # component with a non-NULL value (SQL COUNT(DISTINCT)
-            # skips NULLs; the NULL partition still forms a
-            # DISTINCT/GROUP BY group)
-            cdn_vals[c] = sum(
-                1
-                for v, _n in manifest_partition_counts(
-                    path, version=version, where_partition=eq, group_col=c
-                )
-                if v is not None
-            )
     except ValueError:
-        # e.g. extremes over merge-on-read tombstoned partitions, a
-        # column with no usable stats anywhere, or a missing NDV
-        # sketch: not provable → scan
+        # mixed spec, tombstones under a value item, missing stats or
+        # sketch, a dropped/unknown column: not provable → scan
         raise _Refuse()
+    if null_pred is not None:
+        rows = _null_rows(rows, items, null_pred[1], bool(groups))
+    return _assemble_grouped(
+        spark, parsed, [(g, vals) for g, _n, vals in rows], spec_types,
+        field_types,
+    )
 
-    from pyspark.sql.types import DoubleType
 
-    values, fields = [], []
-    for fn, col, alias in parsed["items"]:
-        if fn == "count":
-            values.append(agg["n_rows"])
-            fields.append(StructField(alias, LongType(), False))
-        elif fn == "approx":
-            values.append(float(approx[col]))
-            fields.append(StructField(alias, DoubleType(), False))
-        elif fn == "quantile":
-            values.append(int(quant[col]))
-            fields.append(StructField(alias, LongType(), False))
-        elif fn == "countcol":
-            values.append(int(ccount[col]))
-            fields.append(StructField(alias, LongType(), False))
-        elif fn == "cdistinct":
-            values.append(cdn_vals[col])
-            fields.append(StructField(alias, LongType(), False))
-        elif fn in ("sum", "avg"):
-            values.append(_sum_avg_value(fn, csum[col]))
-            fields.append(
-                StructField(
-                    alias,
-                    LongType() if fn == "sum" else DoubleType(),
-                    True,
-                )
-            )
-        else:
-            v = agg["columns"][col][fn]
-            dt = field_types.get(col)
-            if dt is None:
-                return None  # evolved-away or unknown column: real scan
-            # manifest values are _stat_json renderings; route through
-            # a string cast so dates/timestamps land as their real type
-            values.append(None if v is None else str(v))
-            fields.append(StructField(alias, StringType(), True))
-    row = _local_rows_df(spark, [tuple(values)], StructType(fields))
-    from pyspark.sql import functions as F  # noqa: F401
+def _restriction(where, spec_types: dict):
+    """The one WHERE normaliser of the pure-metadata path: ``(conjuncts,
+    null predicate)``. eq, IN and conj become the typed ``[(spec col,
+    [members]), …]`` restriction that snapshot._restrict_parts applies
+    at each component's own directory level; ``col IS [NOT] NULL``
+    (optionally member-restricted) becomes ``(col, is_not)``. Range,
+    OR-window and range+NULL shapes belong to the range/hybrid tiers."""
+    if where is None:
+        return None, None
+    shape = where[0]
+    if shape == "isnull":
+        return None, (where[1], where[2])
+    if shape == "eqnull":
+        return _coerce_conj([where[1:3]], spec_types), (where[3], where[4])
+    if shape == "eq":
+        return _coerce_conj([(where[1], [where[2]])], spec_types), None
+    if shape == "in":
+        return _coerce_conj([where[1:3]], spec_types), None
+    if shape == "conj":
+        return _coerce_conj(where[1], spec_types), None
+    raise _Refuse()  # hybrid-only: the boundary needs a scan
 
-    exprs = []
-    for fn, col, alias in parsed["items"]:
-        if fn in (
-            "count", "approx", "quantile", "countcol", "cdistinct",
-            "sum", "avg",
+
+#: what a same-column aggregate is under ``col IS NULL``: no value
+#: survives, so counts are 0 and every other aggregate is NULL
+_UNDER_IS_NULL = {
+    "countcol": 0, "sum": (None, 0), "avg": (None, 0), "min": None,
+    "max": None, "approx": 0.0,
+}
+
+
+def _null_items(items, ncol: str, is_not: bool) -> list:
+    """The fold items behind ``WHERE ncol IS [NOT] NULL``: the column's
+    null-skipping count first (COUNT(*) is it, or live rows minus it),
+    then — under IS NOT NULL, where every SQL aggregate already skips
+    NULLs — the same-column items as they stand; under IS NULL they are
+    the :data:`_UNDER_IS_NULL` constants. Cross-column items refuse:
+    which rows of another column survive the filter is unprovable from
+    per-column stats."""
+    allowed = set(_UNDER_IS_NULL) | ({"quantile"} if is_not else set())
+    for k, c in items:
+        if k != "count" and (
+            k not in allowed or (c[0] if k == "quantile" else c) != ncol
         ):
-            exprs.append(F.col(alias))
-        else:
-            exprs.append(F.col(alias).cast(field_types[col]).alias(alias))
-    # ONE partition: createDataFrame slices even a 1-row answer across
-    # defaultParallelism, and a caller crossJoining two answers then
-    # plans a 32x32 CartesianProduct task storm (measured: three
-    # crossJoined answers = thousands of tasks). A metadata answer is
-    # a handful of rows; one partition is its correct physical shape.
-    return row.select(*exprs).coalesce(1)
+            raise _Refuse()
+    rest = [it for it in items if it[0] != "count"] if is_not else []
+    return [("countcol", ncol)] + rest
+
+
+def _null_rows(rows, items, is_not: bool, grouped: bool) -> list:
+    """Fold rows of :func:`_null_items` → rows of the statement's items
+    over the null-filtered rows; a group the filter empties emits no
+    row (SQL: no surviving rows, no group)."""
+    out = []
+    for g, n, vals in rows:
+        kept = vals[0] if is_not else n - vals[0]
+        if grouped and kept == 0:
+            continue
+        rest = iter(vals[1:])
+        out.append((g, kept, [
+            kept if k == "count" else next(rest) if is_not
+            else _UNDER_IS_NULL[k]
+            for k, _c in items
+        ]))
+    return out
+
+
+def _group_cols(parsed: dict) -> list:
+    gb = parsed["group_by"]
+    return [] if gb is None else [gb] if isinstance(gb, str) else list(gb)
 
 
 def _spark_simple_type(dt) -> str:
@@ -1549,11 +1342,10 @@ def _hybrid_multi(spark, parsed, tables, version, explain=False):
     classification, one boundary scan shared by every aggregate.
     Refuses (None → full scan) on non-partition equality, unknown
     columns and type-incomparable literals."""
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
+    pcol = (man.get("schema") or {}).get("partition_col")
     try:
         eq, col, lo_raw, hi_raw, lo_strict, hi_strict = _conj_where(
             parsed["where"], spec_types
@@ -1592,8 +1384,8 @@ def _hybrid_multi(spark, parsed, tables, version, explain=False):
                 out["meta_partitions"], out["scanned_partitions"],
                 out["scanned_files"], out["total_files"],
             )
-        return _assemble_multi(
-            spark, parsed, out["values"], ptype, pcol, field_types
+        return _assemble_grouped(
+            spark, parsed, [((), out["values"])], spec_types, field_types
         )
     except ValueError:
         return None  # mixed-spec / sketch-name guard: full scan decides
@@ -1617,7 +1409,7 @@ def _hybrid_isnull(spark, parsed, tables, version, explain=False):
         return None  # COUNT(*) is the provable shape
     from pyspark.sql.types import LongType, StructField, StructType
 
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, _man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
     w = parsed["where"]
@@ -1676,7 +1468,7 @@ def _hybrid_range_null(spark, parsed, tables, version, explain=False):
         StructType,
     )
 
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, _man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
     _, rcol, lo_raw, hi_raw, lo_strict, hi_strict, ncol, is_not = (
@@ -1720,50 +1512,6 @@ def _hybrid_range_null(spark, parsed, tables, version, explain=False):
     )
 
 
-def _assemble_multi(spark, parsed, values, ptype, pcol, field_types):
-    """One multi-aggregate value list → the typed one-row answer frame
-    (shared by the single-window and disjunctive-window paths)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as _ST,
-    )
-
-    fields, row, casts = [], [], {}
-    for (kind, agg_col, alias), v in zip(parsed["items"], values):
-        if kind == "count":
-            fields.append(StructField(alias, LongType(), False))
-            row.append(int(v))
-        elif kind in ("sum", "avg"):
-            fields.append(
-                StructField(
-                    alias,
-                    LongType() if kind == "sum" else DoubleType(),
-                    True,
-                )
-            )
-            row.append(_sum_avg_value(kind, v))
-        else:  # min/max: manifest rendering → scan type via cast
-            dt = ptype if agg_col == pcol else field_types[agg_col]
-            fields.append(StructField(alias, StringType(), True))
-            row.append(None if v is None else str(v))
-            casts[alias] = dt
-    frame = _local_rows_df(spark, [tuple(row)], _ST(fields))
-    if casts:
-        frame = frame.select(
-            *[
-                F.col(f.name).cast(casts[f.name]).alias(f.name)
-                if f.name in casts
-                else F.col(f.name)
-                for f in frame.schema.fields
-            ]
-        )
-    return frame
-
-
 def _hybrid_or_range(spark, parsed, tables, version, explain=False):
     """DISJUNCTIVE-window branch of :func:`hybrid_range_count`:
     ``… WHERE col BETWEEN a AND b OR col BETWEEN c AND d`` — "this
@@ -1780,11 +1528,11 @@ def _hybrid_or_range(spark, parsed, tables, version, explain=False):
     partitioned fact wants. A partition straddling the GAP between
     two merged windows is boundary for both (scanned once per
     interval — explain counts scan TASKS, not distinct partitions)."""
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
+    pcol = (man.get("schema") or {}).get("partition_col")
+    ptype = spec_types.get(pcol)
     col = parsed["where"][1]
     coltype = (
         ptype if col == pcol else _spark_simple_type(field_types.get(col))
@@ -1855,7 +1603,9 @@ def _hybrid_or_range(spark, parsed, tables, version, explain=False):
         else:
             cand = [v for v in per if v is not None]
             values.append(max(cand) if cand else None)
-    return _assemble_multi(spark, parsed, values, ptype, pcol, field_types)
+    return _assemble_grouped(
+        spark, parsed, [((), values)], spec_types, field_types
+    )
 
 
 def _hybrid_group_multi(spark, parsed, tables, version, explain=False):
@@ -1864,17 +1614,16 @@ def _hybrid_group_multi(spark, parsed, tables, version, explain=False):
     GROUP BY pcol`` served by ONE :func:`snapshot.range_group_multi`
     pass — per-group metadata for interior partitions, one grouped
     boundary scan for the edges. Group values come back in the
-    column's recorded type (string-render → cast, the same route as
-    `_answer_group_by` — scan-identical schema). ORDER
+    column's recorded type (string-render → cast in
+    `_assemble_grouped` — scan-identical schema). ORDER
     BY <output alias> [DESC] LIMIT k applies on the assembled frame —
     the full group set exists before ordering, ties break by the
     group column ascending (the z63 discipline), so "top-k days by
     revenue in this key range" serves end-to-end."""
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
+    pcol = (man.get("schema") or {}).get("partition_col")
     if pcol is None or parsed["group_by"] != pcol:
         return None  # only the partition column groups at the manifest
     try:
@@ -1934,7 +1683,8 @@ def _hybrid_group_multi(spark, parsed, tables, version, explain=False):
                 out["scanned_files"], out["total_files"],
             )
         return _assemble_grouped(
-            spark, parsed, out["groups"], pcol, ptype, field_types
+            spark, parsed, [((g,), v) for g, v in out["groups"]],
+            spec_types, field_types,
         )
     except ValueError:
         return None  # mixed-spec / unpartitioned / sketch guard: scan
@@ -1942,83 +1692,68 @@ def _hybrid_group_multi(spark, parsed, tables, version, explain=False):
         return None  # int64 overflow on SUM: a scan must decide/error
 
 
-def _assemble_grouped(spark, parsed, groups, pcol, ptype, field_types):
-    """Assemble a grouped hybrid answer frame from ``groups`` =
-    ``[(group value, [per-item values]), …]`` (range_group_multi's
-    shape): scan-identical group typing (string render → cast, the
-    form-3 contract), then HAVING, then ORDER BY <output alias> with
-    the group-asc tie-break and LIMIT (the z63 discipline)."""
+def _assemble_grouped(spark, parsed, groups, spec_types, field_types):
+    """The one answer assembler: ``groups`` = ``[(group value tuple,
+    [per-item values]), …]`` — the fold's rows or a hybrid prover's
+    (one ``((), values)`` row for an ungrouped statement),
+    values in statement order with group items left out, sum/avg as
+    ``(sum, n)`` pairs. Scan-identical typing (group values and MIN/MAX
+    renderings go through a string cast to the column's recorded type),
+    then HAVING, then ORDER BY <output alias> with the group-asc
+    tie-break on every group column and LIMIT (the z63 discipline: the
+    full group set exists before filtering or ordering)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         DoubleType,
         LongType,
         StringType,
         StructField,
-        StructType as _ST,
+        StructType,
     )
 
+    gnames = _group_cols(parsed)
+    gidx = [g.lower() for g in gnames]
     fields, casts = [], {}
-    for kind, agg_col, alias in parsed["items"]:
+    for kind, col, alias in parsed["items"]:
         if kind == "group":
-            # scan-identical group type (the form-3 contract): the
-            # string rendering routes through the same cast as
-            # _answer_group_by, so a LONG partition column comes
-            # back LONG, not the manifest's directory-name string
+            col = gnames[gidx.index(col.lower())]
+        if kind in ("group", "min", "max"):
             fields.append(StructField(alias, StringType(), True))
-            casts[alias] = field_types.get(pcol) or ptype
-        elif kind == "count":
-            fields.append(StructField(alias, LongType(), False))
-        elif kind in ("sum", "avg"):
-            fields.append(
-                StructField(
-                    alias,
-                    LongType() if kind == "sum" else DoubleType(),
-                    True,
-                )
-            )
-        else:
-            dt = ptype if agg_col == pcol else field_types[agg_col]
-            fields.append(StructField(alias, StringType(), True))
+            dt = field_types.get(col) or spec_types.get(col)
+            if dt is None:
+                raise _Refuse()  # unknown column: the scan decides
             casts[alias] = dt
+        else:
+            typ = DoubleType() if kind in ("avg", "approx") else LongType()
+            fields.append(StructField(alias, typ, kind in ("sum", "avg")))
     rows = []
-    for gval, vals in groups:
+    for gvals, vals in groups:
         it = iter(vals)
         row = []
-        for kind, agg_col, alias in parsed["items"]:
-            if kind == "group":
-                row.append(None if gval is None else str(gval))
-                continue
-            v = next(it)
-            if kind == "count":
-                row.append(int(v))
+        for kind, col, _alias in parsed["items"]:
+            v = gvals[gidx.index(col.lower())] if kind == "group" else next(it)
+            if kind in ("group", "min", "max"):
+                row.append(None if v is None else str(v))
             elif kind in ("sum", "avg"):
                 row.append(_sum_avg_value(kind, v))
             else:
-                row.append(None if v is None else str(v))
+                row.append(float(v) if kind == "approx" else int(v))
         rows.append(tuple(row))
-    frame = _local_rows_df(spark, rows, _ST(fields))
-    if casts:
-        frame = frame.select(
-            *[
-                F.col(f.name).cast(casts[f.name]).alias(f.name)
-                if f.name in casts
-                else F.col(f.name)
-                for f in frame.schema.fields
-            ]
-        )
+    frame = _local_rows_df(spark, rows, StructType(fields))
+    frame = frame.select(*[
+        F.col(f.name).cast(casts[f.name]).alias(f.name)
+        if f.name in casts else F.col(f.name)
+        for f in frame.schema.fields
+    ])
     frame = _apply_having(frame, parsed)
     if parsed.get("order_by") is not None:
-        # the full group set is assembled — ordering the local
-        # frame proves itself; group-asc tie-break (z63)
         ocol, desc = parsed["order_by"]
-        out_aliases = [a for _, _, a in parsed["items"]]
-        if ocol not in out_aliases:
-            return None  # ORDER BY names a non-output column
-        gcol_alias = next(
-            a for k, _, a in parsed["items"] if k == "group"
-        )
+        if ocol not in [a for _, _, a in parsed["items"]]:
+            raise _Refuse()  # ORDER BY names a non-output column
         key = F.col(ocol).desc() if desc else F.col(ocol).asc()
-        frame = frame.orderBy(key, F.col(gcol_alias).asc())
+        frame = frame.orderBy(key, *[
+            F.col(a).asc() for k, _, a in parsed["items"] if k == "group"
+        ])
         if parsed.get("limit") is not None:
             frame = frame.limit(parsed["limit"])
     return frame
@@ -2036,11 +1771,10 @@ def _hybrid_group_or_range(spark, parsed, tables, version, explain=False):
     group absent from an interval simply contributes nothing). At
     100 TB this is k tiny grouped boundary scans for k windows on a
     clustered table, never a scan of the gap between them."""
-    path, version, schema_meta, field_types, spec_types = _resolve_table(
+    path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = schema_meta.get("partition_col")
-    ptype = schema_meta.get("partition_type") or "string"
+    pcol = (man.get("schema") or {}).get("partition_col")
     if pcol is None or parsed["group_by"] != pcol:
         return None  # only the partition column groups at the manifest
     col = parsed["where"][1]
@@ -2136,10 +1870,10 @@ def _hybrid_group_or_range(spark, parsed, tables, version, explain=False):
                             if cur[i] is None
                             else max(cur[i], vals[i])
                         )
-    groups = [tuple(acc[k]) for k in sorted(order)]
+    groups = [((acc[k][0],), acc[k][1]) for k in sorted(order)]
     try:
         return _assemble_grouped(
-            spark, parsed, groups, pcol, ptype, field_types
+            spark, parsed, groups, spec_types, field_types
         )
     except _Refuse:
         # e.g. a HAVING alias that is not an output column, or a
@@ -2193,643 +1927,3 @@ def _answer_eq_range_count(
     return _local_rows_df(
         spark, [tuple(n for _ in parsed["items"])], StructType(fields)
     )
-
-
-def _member_minmax(path, mcol, c, kind, members, version, spec_types):
-    """MIN/MAX of column ``c`` restricted to member partitions of spec
-    column ``mcol`` in ONE manifest read (manifest_group_stats over
-    the member set — never a per-member manifest re-parse): each
-    member's recorded [min, max] IS its clipped extreme, so the merge
-    is exact. Spec columns themselves need no stats: their extremes
-    are the component VALUES present with live rows (``c`` may be a
-    different spec component than the membership column). Returns the
-    manifest rendering (string form; the caller casts) or None. Raises
-    ValueError when unprovable (tombstones, missing stats) — caller
-    refuses."""
-    from .snapshot import manifest_group_stats, manifest_partition_counts
-
-    restrict = (mcol, list(members))
-    if c in spec_types:
-        present = [
-            v
-            for v, n in manifest_partition_counts(
-                path, version=version, where_partition=restrict, group_col=c
-            )
-            if v is not None and n > 0
-        ]
-        if not present:
-            return None
-        return min(present) if kind == "min" else max(present)
-    groups3 = manifest_group_stats(
-        path, [c], version=version, where_partition=restrict, group_col=mcol
-    )
-    idx = 0 if kind == "min" else 1
-    ext = [s[c][idx] for _v, _n, s in groups3 if s[c][idx] is not None]
-    if not ext:
-        return None
-    return min(ext) if kind == "min" else max(ext)
-
-
-def _answer_isnull(spark, parsed, path, spec_types, field_types, version):
-    """NULL-membership WHERE, pure-metadata: ``COUNT(*) WHERE col IS
-    NULL`` is the recorded per-partition null counts summed (live
-    rows minus the null-skipping COUNT(col) — two existing exact
-    answerers composed, inheriting every refusal: missing 3-element
-    entries, tombstones); IS NOT NULL is COUNT(col) itself. SAME-
-    column aggregates are provable too: under IS NOT NULL every SQL
-    aggregate already skips NULLs, so SUM/AVG/MIN/MAX/NDV/quantile of
-    the predicate column ARE the plain manifest answers; under IS
-    NULL they are constants (COUNT(col) = 0, SUM/AVG/MIN/MAX = NULL,
-    NDV = 0). CROSS-column aggregates refuse — which rows of the
-    other column survive the filter is unprovable from per-column
-    stats."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .snapshot import (
-        manifest_aggregate,
-        manifest_approx_distinct,
-        manifest_column_count,
-        manifest_column_sum,
-        manifest_partition_counts,
-        manifest_quantile,
-    )
-
-    w = parsed["where"]
-    if w[0] == "isnull":
-        _, ncol, is_not = w
-        members = None
-        wp_in = None
-        mcol = None
-    else:  # eqnull: spec-col equality / IN-membership AND the predicate
-        _, ecol, raws, ncol, is_not = w
-        etype = spec_types.get(ecol)
-        if etype is None:
-            raise _Refuse()  # only partition membership is provable
-        members = sorted(
-            {_coerce_partition_literal(r, etype) for r in raws}, key=repr
-        )
-        wp_in = (ecol, members)
-        mcol = ecol
-    if ncol not in spec_types and field_types and ncol not in field_types:
-        raise _Refuse()  # unknown predicate column: let the scan error
-    try:
-        nn = int(
-            manifest_column_count(
-                path, ncol, version=version, where_partition_in=wp_in
-            )
-        )
-        if members is None:
-            total = sum(
-                n
-                for _v, n in manifest_partition_counts(path, version=version)
-            )
-        else:
-            total = sum(
-                n
-                for _v, n in manifest_partition_counts(
-                    path,
-                    version=version,
-                    where_partition=(mcol, members),
-                    group_col=mcol,
-                )
-            )
-    except ValueError:
-        raise _Refuse()  # unprovable nulls (legacy entry / tombstones)
-    values, fields, casts = [], [], {}
-    try:
-        for k, c, alias in parsed["items"]:
-            if k == "count":
-                values.append(nn if is_not else total - nn)
-                fields.append(StructField(alias, LongType(), False))
-                continue
-            same = (c[0] if k == "quantile" else c) == ncol
-            if not same:
-                raise _Refuse()  # cross-column: unprovable
-            if k == "countcol":
-                values.append(nn if is_not else 0)
-                fields.append(StructField(alias, LongType(), False))
-            elif k in ("sum", "avg"):
-                pair = (
-                    manifest_column_sum(
-                        path, c, version=version, where_partition_in=wp_in
-                    )
-                    if is_not
-                    else (None, 0)
-                )
-                values.append(_sum_avg_value(k, pair))
-                fields.append(
-                    StructField(
-                        alias,
-                        LongType() if k == "sum" else DoubleType(),
-                        True,
-                    )
-                )
-            elif k in ("min", "max"):
-                if not is_not:
-                    mv = None
-                elif members is None:
-                    a = manifest_aggregate(path, columns=[c], version=version)
-                    mv = a["columns"][c][k]
-                else:
-                    # per-member extremes merge exactly (the IN rule),
-                    # in one manifest read over the member set
-                    mv = _member_minmax(
-                        path, mcol, c, k, members, version, spec_types
-                    )
-                values.append(None if mv is None else str(mv))
-                fields.append(StructField(alias, StringType(), True))
-                casts[alias] = (
-                    spec_types[c] if c in spec_types else field_types[c]
-                )
-            elif k == "approx":
-                values.append(
-                    float(
-                        manifest_approx_distinct(
-                            path, c, version=version,
-                            where_partition_in=wp_in,
-                        )
-                    )
-                    if is_not
-                    else 0.0
-                )
-                fields.append(StructField(alias, DoubleType(), False))
-            elif k == "quantile":
-                if not is_not:
-                    raise _Refuse()  # quantile of zero rows: scan decides
-                values.append(
-                    int(
-                        manifest_quantile(
-                            path, c[0], c[1], version=version,
-                            where_partition_in=wp_in,
-                        )
-                    )
-                )
-                fields.append(StructField(alias, LongType(), False))
-            else:
-                raise _Refuse()  # cdistinct etc.: scan decides
-    except ValueError:
-        raise _Refuse()  # missing sketch / tombstones: scan
-    frame = _local_rows_df(spark, [tuple(values)], StructType(fields))
-    if casts:
-        from pyspark.sql import functions as F
-
-        frame = frame.select(
-            *[
-                F.col(f.name).cast(casts[f.name]).alias(f.name)
-                if f.name in casts
-                else F.col(f.name)
-                for f in frame.schema.fields
-            ]
-        )
-    return frame
-
-
-def _answer_group_by_multi(
-    spark, parsed, path, spec_types, field_types, version
-):
-    """``GROUP BY <component>, <component>[, …]`` — the composite-
-    partition rollup of a multi-column spec, served from ONE manifest
-    read: every live partition's directory name IS its group tuple
-    (the hive bijection holds per level), so COUNT(*) sums the netted
-    per-partition row counts, SUM/AVG merge the recorded ``::sum``
-    pairs by addition, and MIN/MAX nest the recorded per-partition
-    extremes. An optional eq/IN/conj partition restriction folds in at
-    the manifest. Refusals (→ scan): layout-mixed tables, a live
-    tombstone under any value-dependent item (the suppressed rows may
-    hold the extreme), a live partition missing a required stat."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from .snapshot import (
-        SUM_SUFFIX as _SUM_SUFFIX,
-        _mixed_spec,
-        _partition_rows,
-        _partition_value,
-        _restrict_parts,
-        _spec_meta,
-        read_manifest,
-    )
-
-    gcols = parsed["group_by"]
-    for c in gcols:
-        if spec_types.get(c) is None:
-            raise _Refuse()  # only spec components group at the manifest
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    if _mixed_spec(man):
-        raise _Refuse()
-    spec_order = [c for c, _t in _spec_meta(meta)]
-    idxs = [spec_order.index(c) for c in gcols]
-    eq = None
-    if parsed["where"] is not None:
-        kind_ = parsed["where"][0]
-        if kind_ == "conj":
-            eq = _coerce_conj(parsed["where"][1], spec_types)
-        elif kind_ in ("eq", "in"):
-            wcol = parsed["where"][1]
-            wtype = spec_types.get(wcol)
-            if wtype is None:
-                raise _Refuse()
-            raws = (
-                parsed["where"][2]
-                if kind_ == "in"
-                else [parsed["where"][2]]
-            )
-            eq = [
-                (
-                    wcol,
-                    sorted(
-                        {_coerce_partition_literal(r, wtype) for r in raws},
-                        key=repr,
-                    ),
-                )
-            ]
-        else:
-            raise _Refuse()
-    try:
-        rows = _restrict_parts(
-            _partition_rows(man, path), meta, where_partition=eq
-        )
-    except ValueError:
-        raise _Refuse()
-    val_items = [
-        (k, c)
-        for k, c, _a in parsed["items"]
-        if k in ("sum", "avg", "min", "max")
-    ]
-    tomb = (man.get("tombstones") or {}).get("parts") or {}
-    if val_items and any(p in tomb for p in rows):
-        raise _Refuse()  # suppressed rows may hold the extreme / sum
-    stats = man.get("stats") or {}
-    groups: "dict[tuple, dict]" = {}
-    for p, n in rows.items():
-        if n <= 0:
-            continue  # fully-suppressed partition: no live group
-        levels = p.split("/")
-        g = groups.setdefault(
-            tuple(levels[i] for i in idxs), {"n": 0, "parts": []}
-        )
-        g["n"] += n
-        g["parts"].append(p)
-
-    def _merged_sum(parts: list, col: str) -> "tuple":
-        total, nn = 0, 0
-        for p in parts:
-            pair = (stats.get(p) or {}).get(f"{col}{_SUM_SUFFIX}")
-            if pair is None:
-                raise _Refuse()
-            s, k = pair
-            if k:
-                total += int(s)
-                nn += int(k)
-        return (total if nn else None, nn)
-
-    def _merged_extreme(parts: list, col: str, kind: str):
-        vals = []
-        for p in parts:
-            ent = (stats.get(p) or {}).get(col)
-            if ent is None:
-                raise _Refuse()
-            v = ent[0] if kind == "min" else ent[1]
-            if v is not None:
-                vals.append(v)
-        if not vals:
-            return None
-        return min(vals) if kind == "min" else max(vals)
-
-    out_rows, fields, casts = [], [], {}
-    for k, c, alias in parsed["items"]:
-        if k == "group":
-            fields.append(StructField(alias, StringType(), True))
-            casts[alias] = spec_types[c]
-        elif k == "count":
-            fields.append(StructField(alias, LongType(), False))
-        elif k == "sum":
-            fields.append(StructField(alias, LongType(), True))
-        elif k == "avg":
-            fields.append(StructField(alias, DoubleType(), True))
-        else:  # min / max
-            if field_types.get(c) is None:
-                raise _Refuse()
-            fields.append(StructField(alias, StringType(), True))
-            casts[alias] = field_types[c]
-    for gkey in sorted(groups, key=repr):
-        g = groups[gkey]
-        vals = []
-        for k, c, _a in parsed["items"]:
-            if k == "group":
-                lvl = gkey[gcols.index(c)]
-                is_null, v = _partition_value(lvl, spec_types[c])
-                vals.append(None if is_null else str(v))
-            elif k == "count":
-                vals.append(int(g["n"]))
-            elif k in ("sum", "avg"):
-                s, nn = _merged_sum(g["parts"], c)
-                vals.append(
-                    s if k == "sum"
-                    else (None if not nn else float(s) / nn)
-                )
-            else:
-                v = _merged_extreme(g["parts"], c, k)
-                vals.append(None if v is None else str(v))
-        out_rows.append(tuple(vals))
-    out = _local_rows_df(spark, out_rows, StructType(fields))
-    out = out.select(
-        *[
-            F.col(f.name).cast(casts[f.name]).alias(f.name)
-            if f.name in casts
-            else F.col(f.name)
-            for f in out.schema.fields
-        ]
-    ).coalesce(1)
-    out = _apply_having(out, parsed)
-    if parsed["order_by"] is not None:
-        ocol, desc = parsed["order_by"]
-        out_aliases = [a for _k, _c, a in parsed["items"]]
-        if ocol not in out_aliases:
-            raise _Refuse()  # ORDER BY names a non-output column
-        # group-asc tie-break on EVERY group column (the z63
-        # discipline) — a LIMIT cut must be deterministic
-        g_aliases = [a for k, _c, a in parsed["items"] if k == "group"]
-        key = F.col(ocol).desc() if desc else F.col(ocol).asc()
-        out = out.orderBy(key, *[F.col(a).asc() for a in g_aliases])
-        if parsed["limit"] is not None:
-            out = out.limit(parsed["limit"])
-    return out
-
-
-def _answer_group_by(spark, parsed, path, spec_types, field_types, version):
-    gcol = parsed["group_by"]
-    gtype = spec_types.get(gcol)
-    if gtype is None:
-        raise _Refuse()  # only spec columns group at the manifest
-    eq = None
-    isnull_groups = None
-    if parsed["where"] is not None:
-        kind_, wcol = parsed["where"][0], parsed["where"][1]
-        if kind_ in ("isnull", "eqnull"):
-            # per-group null / non-null row counts — the null-rate
-            # dashboard GROUP BY, optionally member-restricted
-            # ("per-day null rates for THESE days"). COUNT(*) only
-            # (other aggregates over the null-filtered rows are
-            # cross-column unprovable); a group whose filtered count
-            # is zero emits NO row (SQL: no surviving rows, no group).
-            if kind_ == "isnull":
-                ncol, is_not = parsed["where"][1], parsed["where"][2]
-                wp = None
-            else:
-                _, ecol, raws, ncol, is_not = parsed["where"]
-                etype = spec_types.get(ecol)
-                if etype is None:
-                    raise _Refuse()
-                wp = (
-                    ecol,
-                    sorted(
-                        {_coerce_partition_literal(r, etype) for r in raws},
-                        key=repr,
-                    ),
-                )
-            if any(k not in ("group", "count") for k, _, _ in parsed["items"]):
-                raise _Refuse()
-            from .snapshot import manifest_column_count as _mcc
-            from .snapshot import manifest_partition_counts as _mpc
-
-            try:
-                nn_pairs = _mcc(
-                    path, ncol, version=version, by_partition=True,
-                    where_partition=wp, group_col=gcol,
-                )
-                live = _mpc(
-                    path, version=version, where_partition=wp,
-                    group_col=gcol,
-                )
-            except ValueError:
-                raise _Refuse()
-            if [v for v, _ in live] != [v for v, _ in nn_pairs]:
-                raise _Refuse()  # membership drift: never answer wrong
-            isnull_groups = [
-                (v, c if is_not else n - c)
-                for (v, n), (_v2, c) in zip(live, nn_pairs)
-                if (c if is_not else n - c) > 0
-            ]
-        elif kind_ == "conj":
-            # conjunctive eq/IN on several spec components: the whole
-            # restriction folds into every manifest call below (each
-            # conjunct matches at its own directory level)
-            eq = _coerce_conj(parsed["where"][1], spec_types)
-        elif kind_ not in ("eq", "in"):
-            # range WHERE + GROUP BY parses (the grouped hybrid tier
-            # serves it), but the pure-metadata proof stops here:
-            # clipped per-group aggregates are unprovable
-            raise _Refuse()
-        else:
-            # eq / IN restriction on ANY spec component (which may
-            # differ from the grouped component): folds into every
-            # manifest call below, so all the per-group lists stay
-            # membership-aligned by construction
-            wtype = spec_types.get(wcol)
-            if wtype is None:
-                raise _Refuse()
-            if kind_ == "in":
-                eq = (
-                    wcol,
-                    sorted(
-                        {
-                            _coerce_partition_literal(r, wtype)
-                            for r in parsed["where"][2]
-                        },
-                        key=repr,
-                    ),
-                )
-            else:
-                eq = (
-                    wcol,
-                    _coerce_partition_literal(parsed["where"][2], wtype),
-                )
-    stat_cols = sorted(
-        {c for k, c, _ in parsed["items"] if k in ("min", "max")}
-    )
-    approx_cols = sorted(
-        {c for k, c, _ in parsed["items"] if k == "approx"}
-    )
-    if stat_cols:
-        if any(field_types.get(c) is None for c in stat_cols):
-            raise _Refuse()  # unknown/evolved-away column
-        # group ≡ component level: the per-partition stats entries
-        # merge into per-group extremes (manifest_group_stats; footer
-        # fallback for pre-upgrade partitions, raise → refuse when
-        # unprovable)
-        try:
-            groups3 = manifest_group_stats(
-                path, stat_cols, version=version, where_partition=eq,
-                group_col=gcol,
-            )
-        except ValueError:
-            raise _Refuse()
-        groups = [(v, n) for v, n, _ in groups3]
-        col_stats = [s for _, _, s in groups3]
-    elif isnull_groups is not None:
-        groups = isnull_groups
-        col_stats = [{} for _ in groups]
-    else:
-        groups = manifest_partition_counts(
-            path, version=version, where_partition=eq, group_col=gcol
-        )
-        col_stats = [{} for _ in groups]
-    approx_lists = {}
-    for c in approx_cols:
-        # by_partition lists sort by group level name and skip
-        # zero-live groups — the same order and membership as `groups`
-        try:
-            approx_lists[c] = [
-                e
-                for _, e in manifest_approx_distinct(
-                    path, c, version=version, where_partition=eq,
-                    by_partition=True, group_col=gcol,
-                )
-            ]
-        except ValueError:
-            raise _Refuse()  # missing sketch / tombstones: scan
-    quant_lists = {}
-    for spec in {c for k, c, _ in parsed["items"] if k == "quantile"}:
-        try:
-            quant_lists[spec] = [
-                e
-                for _, e in manifest_quantile(
-                    path, spec[0], spec[1], version=version,
-                    where_partition=eq, by_partition=True, group_col=gcol,
-                )
-            ]
-        except ValueError:
-            raise _Refuse()  # missing histogram / tombstones: scan
-    ccount_lists = {}
-    for c in {c for k, c, _ in parsed["items"] if k == "countcol"}:
-        try:
-            ccount_lists[c] = [
-                e
-                for _, e in manifest_column_count(
-                    path, c, version=version,
-                    where_partition=eq, by_partition=True, group_col=gcol,
-                )
-            ]
-        except ValueError:
-            raise _Refuse()  # no null-counted entry / tombstones: scan
-    csum_lists = {}
-    for c in {c for k, c, _ in parsed["items"] if k in ("sum", "avg")}:
-        try:
-            csum_lists[c] = [
-                (sv, nn)
-                for _, sv, nn in manifest_column_sum(
-                    path, c, version=version,
-                    where_partition=eq, by_partition=True, group_col=gcol,
-                )
-            ]
-        except ValueError:
-            raise _Refuse()  # no sum entry / tombstones: scan
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    fields, row_fn = [], []
-    for kind, col, alias in parsed["items"]:
-        if kind == "group":
-            dt = field_types.get(gcol)
-            if dt is None:
-                raise _Refuse()
-            # values decoded from directory names are already typed for
-            # integral/boolean partitions; strings/dates go through the
-            # same string-cast path as the aggregate answerer
-            fields.append(StructField(alias, StringType(), True))
-            row_fn.append(lambda v, n, s, gi: None if v is None else str(v))
-        elif kind == "count":
-            fields.append(StructField(alias, LongType(), False))
-            row_fn.append(lambda v, n, s, gi: n)
-        elif kind == "approx":
-            fields.append(StructField(alias, DoubleType(), False))
-            row_fn.append(
-                lambda v, n, s, gi, c=col: float(approx_lists[c][gi])
-            )
-        elif kind == "quantile":
-            fields.append(StructField(alias, LongType(), False))
-            row_fn.append(
-                lambda v, n, s, gi, c=col: int(quant_lists[c][gi])
-            )
-        elif kind == "countcol":
-            fields.append(StructField(alias, LongType(), False))
-            row_fn.append(
-                lambda v, n, s, gi, c=col: int(ccount_lists[c][gi])
-            )
-        elif kind in ("sum", "avg"):
-            fields.append(
-                StructField(
-                    alias,
-                    LongType() if kind == "sum" else DoubleType(),
-                    True,
-                )
-            )
-            row_fn.append(
-                lambda v, n, s, gi, c=col, k=kind: _sum_avg_value(
-                    k, csum_lists[c][gi]
-                )
-            )
-        else:  # min/max: stat_json rendering → string-cast like z34
-            fields.append(StructField(alias, StringType(), True))
-            idx = 0 if kind == "min" else 1
-            row_fn.append(
-                lambda v, n, s, gi, c=col, i=idx: (
-                    None if s[c][i] is None else str(s[c][i])
-                )
-            )
-    rows = [
-        tuple(fn(v, n, s, gi) for fn in row_fn)
-        for gi, ((v, n), s) in enumerate(zip(groups, col_stats))
-    ]
-    frame = _local_rows_df(spark, rows, StructType(fields))
-    from pyspark.sql import functions as F
-
-    exprs = []
-    for kind, col, alias in parsed["items"]:
-        if kind == "group":
-            exprs.append(F.col(alias).cast(field_types[gcol]).alias(alias))
-        elif kind in ("count", "approx", "quantile", "countcol",
-                      "sum", "avg"):
-            exprs.append(F.col(alias))
-        else:
-            exprs.append(F.col(alias).cast(field_types[col]).alias(alias))
-    out = frame.select(*exprs).coalesce(1)
-    # HAVING before ORDER BY/LIMIT — SQL's evaluation order.
-    out = _apply_having(out, parsed)
-    # ORDER BY <output alias> [DESC] LIMIT n — legal on a grouped
-    # metadata answer because the FULL group set is already assembled
-    # (ordering a complete local frame proves itself); ties break by
-    # the group column ascending so LIMIT is deterministic and the
-    # scan/oracle can replay it exactly.
-    if parsed.get("order_by") is not None:
-        ocol, desc = parsed["order_by"]
-        out_aliases = [a for _, _, a in parsed["items"]]
-        if ocol not in out_aliases:
-            raise _Refuse()  # ORDER BY names a non-output column
-        gcol_alias = next(
-            a for k, _, a in parsed["items"] if k == "group"
-        )
-        key = F.col(ocol).desc() if desc else F.col(ocol).asc()
-        out = out.orderBy(key, F.col(gcol_alias).asc())
-        if parsed.get("limit") is not None:
-            out = out.limit(parsed["limit"])
-    return out

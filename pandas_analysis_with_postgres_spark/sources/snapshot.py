@@ -1907,29 +1907,6 @@ def _hive_path_name(spec_cols: list[str], values) -> str:
     )
 
 
-def _pname_levels(pname: str, spec: "list[tuple[str, str]]") -> "list":
-    """Decode a manifest partition name against a spec: one
-    ``(is_null, typed_value)`` per spec column (see
-    :func:`_partition_value`). Raises if the name's depth or column
-    labels disagree with the spec — the caller is then looking at a
-    retired-spec directory and must refuse, not guess."""
-    levels = pname.split("/")
-    if len(levels) != len(spec):
-        raise ValueError(
-            f"partition name {pname!r} has {len(levels)} level(s); the "
-            f"current spec has {len(spec)} — retired-spec directory"
-        )
-    out = []
-    for level, (col, typ) in zip(levels, spec):
-        if not level.startswith(f"{col}="):
-            raise ValueError(
-                f"partition name level {level!r} does not belong to "
-                f"spec column {col!r} — retired-spec directory"
-            )
-        out.append(_partition_value(level, typ))
-    return out
-
-
 def _pname_conforms(pname: str, spec: "list[tuple[str, str]]") -> bool:
     """True iff a manifest partition name speaks the CURRENT spec —
     right depth, right column label at every level."""
@@ -2028,21 +2005,6 @@ def _spec_component(meta: dict, man: dict, column: str):
         if c == column:
             return None if _mixed_spec(man) else (i, t)
     return None
-
-
-def _group_parts(
-    parts, meta: dict, group_col: str
-) -> "dict[str, list[str]]":
-    """Group manifest partition names by ONE spec component's level
-    (``{level_name: [pnames]}``, level names sort deterministically).
-    The hive bijection holds per level, so merging the members' stats
-    answers ``GROUP BY <component>`` exactly — counts/sums add, HLL
-    registers max, histogram buckets add, min/max nest."""
-    idx, _c, _t = _partition_selector(meta, group_col)
-    out: dict[str, list[str]] = {}
-    for p in parts:
-        out.setdefault(p.split("/")[idx], []).append(p)
-    return out
 
 
 def _default_group_col(meta: dict, group_col: "str | None", what: str) -> str:
@@ -3284,10 +3246,15 @@ def evolve_snapshot_schema(
     Rules (enforced): renamed-from and dropped names RETIRE — they can
     never be reused by later writers (merge/replace reject sources
     that mention them), which is what makes applying the cumulative
-    chain to every commit safe. The partition column and the
-    stats/bloom index columns cannot be renamed or dropped (their
-    per-partition index entries are keyed by physical name); evolve
-    the indexes first if needed. Returns the committed version.
+    chain to every commit safe. The partition column and the literal
+    ``stats_cols``/``bloom_cols`` entries cannot be renamed or dropped
+    (their per-partition index entries are keyed by physical name);
+    evolve the indexes first if needed. The BASE column of a
+    ``::sum``/``::hll``/``::hist:`` entry can be: a rename keeps its
+    sketch answering under the new name (sketch keys follow the rename
+    chain), a drop makes manifest answers over it refuse (they resolve
+    columns against the logical schema). Returns the committed
+    version.
     """
     renames = dict(renames or {})
     drops = list(drops or [])
@@ -5167,6 +5134,293 @@ def consume_changes(
     return {"from_version": cur, "to_version": latest, "applied": True}
 
 
+#: the stats entry behind each sketch-backed kind (for refusals)
+_FOLD_SKETCH = {
+    "sum": "'{}::sum' entry", "avg": "'{}::sum' entry",
+    "approx": "'{}::hll' sketch", "quantile": "'::hist:' histogram of {!r}",
+}
+
+
+def _hll_estimate(regs: list) -> float:
+    """The in-query HLL estimate (operators.sketches.hll_estimate) over
+    one merged register list: integer harmonic sum, linear counting in
+    the small range."""
+    import math
+
+    from ..operators import sketches as SK
+
+    cap = SK.HLL_W_BITS + 1
+    present = [r for r in regs if r > 0]
+    zeros = SK.HLL_M - len(present)
+    s_total = sum(1 << (cap - r) for r in present) + (zeros << cap)
+    raw = SK.HLL_ALPHA * SK.HLL_M * SK.HLL_M * (1 << cap) / float(s_total)
+    if raw <= SK.HLL_LC_THRESHOLD and zeros > 0:
+        return float(SK.HLL_M) * math.log(float(SK.HLL_M) / zeros)
+    return raw
+
+
+def _hist_quantile(buckets: dict, width, column: str, p: int) -> int:
+    """The q90 recipe over merged bucket counts: the lower edge of the
+    first bucket whose cumulative count crosses ``p`` percent."""
+    total = sum(buckets.values())
+    if width is None or total == 0:
+        raise ValueError(
+            "no live partitions selected" if width is None else
+            f"no non-null {column!r} rows in the selected partition(s)"
+            " — no rank to cross"
+        )
+    cum = 0
+    for b in sorted(buckets):
+        cum += buckets[b]
+        if cum * 100 >= total * p:
+            return b * width
+    raise AssertionError("rank crossing unreachable")  # p <= 100
+
+
+def _manifest_fold(man, path, items, where_partition=None, groups=()):
+    """The one pass behind every un-ranged manifest answer: fold one
+    manifest's live partitions into ``[(group values, live n, [value
+    per item]), …]`` reading no data pages.
+
+    ``items`` are ``(kind, column)`` pairs — kind one of ``count``,
+    ``countcol``, ``cdistinct``, ``sum``, ``avg``, ``min``, ``max``,
+    ``approx``, ``quantile`` (column ``(column, p)``). Columns are
+    LOGICAL names, resolved against the manifest's
+    ``schema["columns"]``: a dropped or renamed-away column raises even
+    while its old stats linger.
+    ``where_partition`` is one eq/IN/conjunctive restriction
+    (:func:`_restrict_parts`); ``groups`` names spec components. No
+    groups → exactly one row ``((), n, values)``; otherwise one row per
+    group with live rows, sorted by directory level names.
+
+    Values: ``count``/``countcol``/``cdistinct`` ints; ``sum``/``avg``
+    the ``(sum or None, n_nonnull)`` pair; ``min``/``max`` manifest
+    renderings (None over no values); ``approx`` the HLL estimate;
+    ``quantile`` the histogram estimate. The rules, once each:
+
+    - a sketch entry is never an item column;
+    - a layout-mixed table answers no partition-VALUE question
+      (restriction, grouping, spec-column item);
+    - a spec component's values come from directory names (NULL
+      level skipped) and stay exact under tombstones;
+    - any other value item refuses a live merge-on-read tombstoned
+      partition (the deleted rows' values are unknown);
+    - stats follow the rename chain; a partition predating the row
+      count or lacking a min/max column falls back to a footer
+      harvest of that partition only.
+
+    Raises ValueError whenever an answer is unprovable."""
+    from ..operators import sketches as SK
+
+    meta = man.get("schema") or {}
+    spec = dict(_spec_meta(meta))
+    renames = meta.get("renames") or []
+    cols = [c[0] if k == "quantile" else c for k, c in items]
+    for (kind, _c), c in zip(items, cols):
+        if kind != "count":
+            _refuse_sketch([c], (
+                "min/max columns — use manifest_approx_distinct / "
+                "manifest_quantile" if kind in ("min", "max")
+                else f"{kind} columns"
+            ))
+        if kind == "cdistinct" and c not in spec:
+            raise ValueError(
+                f"exact COUNT(DISTINCT {c}) is a manifest fact only for "
+                "partition-spec columns — scan, or APPROX_COUNT_DISTINCT"
+            )
+    known = set(meta.get("columns") or cols)  # legacy: no record
+    unknown = sorted({c for c in cols if c is not None} - known)
+    if unknown:
+        raise ValueError(
+            f"no column {unknown} in the logical schema of {path} "
+            "(dropped, renamed away, or never written) — scan decides"
+        )
+    if (where_partition or groups or any(c in spec for c in cols)) and (
+        _mixed_spec(man)
+    ):
+        raise ValueError(
+            "partition-VALUE answers (grouping, partition restriction, "
+            f"spec-column values) are unprovable while {path} holds "
+            "old-spec directories — compact_snapshot to migrate, or scan"
+        )
+    gsel = [_partition_selector(meta, g) for g in groups]
+    if any(k in ("min", "max") and c in groups for (k, _), c in
+           zip(items, cols)):
+        raise ValueError(
+            "a grouped partition column's per-group min/max is the "
+            "group value itself — select the column, not MIN/MAX of it"
+        )
+    parts = _restrict_parts(
+        man.get("partitions") or {}, meta, where_partition=where_partition
+    )
+    spec_idx = {c: i for i, c in enumerate(spec)}
+    # physical names whose rename chain lands on a wanted min/max column
+    harvest = [c for (k, _), c in zip(items, cols)
+               if k in ("min", "max") and c not in spec]
+    aliases = sorted(
+        set(harvest) | {o for o, _n in renames
+                        if _logical_name(renames, o) in harvest}
+    )
+    stats = man.get("stats") or {}
+    tomb = (man.get("tombstones") or {}).get("parts") or {}
+    upd = (man.get("updates") or {}).get("parts") or {}
+
+    def _init(kind):
+        return {"countcol": 0, "cdistinct": set(), "sum": (None, 0),
+                "avg": (None, 0), "approx": [0] * SK.HLL_M,
+                "quantile": ({}, None)}.get(kind)
+
+    acc: dict = {}
+    for pname in sorted(parts):
+        entry = stats.get(pname) or {}
+        # this partition's entries by LOGICAL column: [min, max, nulls]
+        # values, and the sketch serving each sketch-backed kind
+        logical, sketch = {}, {}
+        for k, v in entry.items():
+            hm = _HIST_KEY_RE.match(k)
+            if hm is not None:
+                sketch["quantile", _logical_name(renames, hm["col"])] = (
+                    v, int(hm["width"])
+                )
+            elif k.endswith((SUM_SUFFIX, HLL_SUFFIX)):
+                base = _logical_name(renames, k.rsplit("::", 1)[0])
+                sketch["sum" if k.endswith(SUM_SUFFIX) else "approx", base] = v
+            elif k not in (N_ROWS_KEY, FILES_KEY):
+                logical[_logical_name(renames, k)] = v
+        n = entry.get(N_ROWS_KEY)
+        if n is None or any(c not in logical for c in harvest):
+            got, hrows = _footer_stats(Path(path) / parts[pname], aliases)
+            logical.update({_logical_name(renames, k): v
+                            for k, v in got.items() if k != FILES_KEY})
+            n = hrows if n is None else n
+        n = (int(n) - int((tomb.get(pname) or {}).get("n_deleted") or 0)
+             + int((upd.get(pname) or {}).get("n_rows") or 0))
+        if n <= 0:
+            continue  # no live rows: no values, no group
+        levels = pname.split("/")
+        key = tuple(levels[i] for i, _c, _t in gsel)
+        row = acc.setdefault(key, [0, [_init(k) for k, _c in items]])
+        row[0] += n
+        vals = row[1]
+        for i, ((kind, _c), c) in enumerate(zip(items, cols)):
+            if kind == "count":
+                continue
+            if c in spec and kind in ("countcol", "cdistinct", "min", "max"):
+                null, v = _partition_value(levels[spec_idx[c]], spec[c])
+                got = (0 if null else n) if kind == "countcol" else (
+                    None if null else v
+                )
+            elif pname in tomb:
+                raise ValueError(
+                    f"{kind.upper()}({c}) over tombstoned partition "
+                    f"{pname!r} is unprovable from the manifest (deleted "
+                    "rows' values are unknown) — compact_snapshot first, "
+                    "or scan"
+                )
+            elif kind in ("countcol", "min", "max"):
+                rng = logical.get(c)
+                if rng is None or kind == "countcol" and (
+                    len(rng) < 3 or rng[2] is None
+                ):
+                    need = "null-counted" if kind == "countcol" else "min/max"
+                    raise ValueError(
+                        f"no usable {need} statistics for {c!r} in "
+                        f"{pname!r} — add it to stats_cols and rewrite, or "
+                        "scan the data"
+                    )
+                got = n - int(rng[2]) if kind == "countcol" else (
+                    rng[0] if kind == "min" else rng[1]
+                )
+            else:
+                got = sketch.get(("sum" if kind == "avg" else kind, c))
+                if got is None:
+                    raise ValueError(
+                        f"no {_FOLD_SKETCH[kind].format(c)} recorded for "
+                        f"{pname!r} — add it to stats_cols and rewrite, or "
+                        "scan the data"
+                    )
+            vals[i] = _fold_merge(kind, vals[i], got)
+    if not groups:
+        acc.setdefault((), [0, [_init(k) for k, _c in items]])
+    out = []
+    for key in sorted(acc):
+        n, vals = acc[key]
+        final = []
+        for (kind, c), v in zip(items, vals):
+            if kind == "count":
+                v = n
+            elif kind == "cdistinct":
+                v = len(v)
+            elif kind == "approx":
+                v = _hll_estimate(v)
+            elif kind == "quantile":
+                v = _hist_quantile(v[0], v[1], c[0], c[1])
+            final.append(v)
+        gvals = tuple(_partition_value(lvl, t)[1]
+                      for lvl, (_i, _c, t) in zip(key, gsel))
+        out.append((gvals, n, final))
+    return out
+
+
+def _fold_merge(kind, acc, v):
+    """Merge one partition's contribution into an item accumulator —
+    disjoint rows, so counts and sums add, extremes nest (None never
+    tightens), HLL registers max, histogram buckets add."""
+    if kind == "countcol":
+        return acc + v
+    if kind == "cdistinct":
+        return acc | {v} if v is not None else acc
+    if kind in ("sum", "avg"):
+        s, nn = v
+        return (acc[0] if s is None else int(s) + (acc[0] or 0),
+                acc[1] + int(nn))
+    if kind in ("min", "max"):
+        if v is None or acc is None:
+            return acc if v is None else v
+        return min(acc, v) if kind == "min" else max(acc, v)
+    if kind == "approx":
+        return [max(a, b) for a, b in zip(acc, v)]
+    buckets, width = acc
+    hist, w = v
+    if width is not None and w != width:
+        raise ValueError(
+            f"histogram widths disagree across partitions ({w} vs "
+            f"{width}) — rewrite to a uniform width before merging"
+        )
+    merged = dict(buckets)
+    for b, c in hist:
+        merged[b] = merged.get(b, 0) + c
+    return merged, w
+
+
+def _fold_answer(path, version, items, *, where_partition=None,
+                 where_partition_in=None, by_partition=False,
+                 group_col=None, what=""):
+    """The public answerers' shared call: read one manifest, resolve
+    the grouping column, fold. Returns :func:`_manifest_fold`'s rows."""
+    man = read_manifest(path, version)
+    meta = man.get("schema") or {}
+    groups = []
+    if by_partition:
+        if not _spec_meta(meta):
+            raise ValueError(
+                f"snapshot table at {path!r} is unpartitioned — no "
+                "partition column to group by"
+            )
+        groups = [_default_group_col(meta, group_col, what)]
+    restrict = _wp_conjuncts(where_partition) + (
+        [tuple(where_partition_in)] if where_partition_in is not None else []
+    )
+    return _manifest_fold(man, path, items, restrict or None, groups)
+
+
+def _one_restriction(where_partition, where_partition_in) -> None:
+    if where_partition is not None and where_partition_in is not None:
+        raise ValueError(
+            "pass one of where_partition / where_partition_in, not both"
+        )
+
+
 def manifest_aggregate(
     path: str,
     *,
@@ -5177,157 +5431,47 @@ def manifest_aggregate(
     """Answer ``COUNT(*)`` — and ``MIN``/``MAX`` over ``columns`` —
     for a snapshot version from MANIFEST METADATA, reading no data
     pages: the Iceberg "scan planning answers the query" / Delta
-    numRecords idiom. At 100 TB this is the difference between an
-    O(partitions) JSON read on the driver and a full-table scan for a
-    row count a dashboard polls every minute.
+    numRecords idiom — an O(partitions) JSON read instead of a
+    full-table scan for the row count a dashboard polls every minute.
 
     Row counts come from the reserved ``::n_rows`` stats entry every
     commit records (exact, from parquet footer ``num_rows``); column
-    min/max come from the table's recorded ``stats_cols`` statistics.
-    ``columns`` are LOGICAL names — the schema-evolution rename chain
-    is resolved, so stats recorded under a pre-rename physical name
-    still serve the renamed column. Partitions predating the row-count
-    upgrade — or lacking stats for a requested column — fall back to a
-    footer harvest of just those partitions (footer bytes only, still
-    no data pages; driver-side, so it is a transition path, not the
-    steady state). A requested column with usable stats in NO source
-    raises rather than returning a silently-partial extreme.
+    min/max from the recorded ``stats_cols`` statistics (a footer
+    harvest of just the partitions lacking them), spec columns' from
+    the directory names. ``columns`` are LOGICAL names. A column with
+    no usable stats, a dropped column, or extremes over merge-on-read
+    tombstoned partitions raise — never a silently-partial extreme.
 
-    ``where_partition=(col, value)`` restricts the aggregate to ONE
-    partition — the manifest can prove partition-equality pruning
-    exactly (it IS the partition index), so ``COUNT(*) WHERE day = X``
-    stays a metadata read; ``col`` must be the table's partition
-    column (raises otherwise — the SQL front-end refuses first and
-    falls back to a scan).
+    ``where_partition=(col, value)`` restricts the aggregate to the
+    partitions with that spec-column value (a collection value: the
+    member set; a list of pairs: one conjunct per component) — the
+    manifest IS the partition index, so ``COUNT(*) WHERE day = X``
+    stays a metadata read; a non-spec ``col`` raises.
 
     Returns ``{"version", "n_rows", "n_partitions", "columns":
     {col: {"min": v, "max": v}}}``. Min/max values are the manifest's
     JSON renderings (`_stat_json`): numbers natively, dates/timestamps
-    as ISO-8601 strings — exact for numeric columns; long strings may
-    be unrecorded (parquet stat truncation) rather than wrong.
-    Aggregates other than COUNT/MIN/MAX (SUM, AVG) need data: use a
-    real scan, or maintain a materialized view (sources.matview).
-    """
+    as ISO-8601 strings; an empty selection yields None (SQL MIN/MAX
+    over zero rows). SUM/AVG: :func:`manifest_column_sum`."""
     man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    renames = meta.get("renames") or []
-
-    want = list(columns or [])
-    _refuse_sketch(
-        want,
-        "min/max columns — use manifest_approx_distinct / manifest_quantile",
+    want = list(dict.fromkeys(columns or []))
+    [(_g, n, vals)] = _manifest_fold(
+        man, path,
+        [("count", None)] + [(k, c) for c in want for k in ("min", "max")],
+        where_partition,
     )
-    # PARTITION-SPEC columns' values live in directory names, not in
-    # any data file (hive layout) — footer stats can never serve them,
-    # but the manifest's partition list answers them exactly. This is
-    # the single most-polled metadata query there is
-    # ("SELECT max(day) FROM table"). NULL/empty partitions
-    # (__HIVE_DEFAULT_PARTITION__) are skipped, matching SQL MIN/MAX
-    # null semantics. Multi-column specs serve every component.
-    spec = _spec_meta(meta)
-    spec_cols = [c for c, _t in spec]
-    spec_wanted = [c for c in want if c in spec_cols]
-    if spec_wanted:
-        want = [c for c in want if c not in spec_cols]
-    if (spec_wanted or where_partition is not None) and _mixed_spec(man):
-        raise ValueError(
-            "partition-VALUE answers (spec-column extremes, "
-            f"eq-partition restriction) are unprovable while {path} "
-            "holds old-spec directories — compact_snapshot to migrate, "
-            "or scan"
-        )
-    for wcol, _wv in _wp_conjuncts(where_partition):
-        _partition_selector(meta, wcol)  # validate/raise
-    # physical-name candidates for the wanted logical columns: the
-    # name itself plus any retired name whose rename chain lands on it
-    # (old commits' footers carry pre-rename physical names)
-    aliases = set(want)
-    for old, _new in renames:
-        if _logical_name(renames, old) in aliases:
-            aliases.add(old)
-    stats = man.get("stats") or {}
-    parts = man.get("partitions") or {}
-    if where_partition is not None:
-        parts = _restrict_parts(parts, meta, where_partition=where_partition)
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    if (want or spec_wanted) and any(p in tomb_parts for p in parts):
-        # merge-on-read tombstones: the physical extreme may be a
-        # deleted row (and a fully-suppressed partition's value must
-        # not count for the partition column) — COUNT stays exact via
-        # the recorded suppressed counts, extremes do not. Refuse
-        # loudly; compaction folds tombstones away and restores them.
-        raise ValueError(
-            "min/max over tombstoned partition(s) is unprovable from "
-            "the manifest — compact_snapshot first (COUNT(*) remains "
-            "answerable)"
-        )
-    n_rows = 0
-    mins: dict = {}
-    maxs: dict = {}
-    missing: dict = {}
-    for pname, rel in parts.items():
-        entry = stats.get(pname) or {}
-        # logical view of this partition's recorded stats
-        logical = {_logical_name(renames, k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)}
-        need = [c for c in want if c not in logical]
-        if entry.get(N_ROWS_KEY) is None or need:
-            # pre-upgrade commit or un-tracked column: harvest the
-            # footers of THIS partition only (physical names in the
-            # files are pre-rename for old commits — map via _logical_name)
-            harvested, hrows = _footer_stats(Path(path) / rel, sorted(aliases))
-            logical.update({
-                _logical_name(renames, k): v for k, v in harvested.items()
-                if k != FILES_KEY
-            })
-            n_rows += (
-                entry[N_ROWS_KEY] if entry.get(N_ROWS_KEY) is not None else hrows
-            )
-        else:
-            n_rows += entry[N_ROWS_KEY]
-        # merge-on-read deletes: suppressed rows are not in COUNT(*);
-        # merge-on-read update deltas add their appended new versions
-        n_rows -= int((tomb_parts.get(pname) or {}).get("n_deleted") or 0)
-        n_rows += int(
-            (
-                ((man.get("updates") or {}).get("parts") or {}).get(pname)
-                or {}
-            ).get("n_rows")
-            or 0
-        )
-        for c in want:
-            rng = logical.get(c)
-            if rng is None:
-                missing.setdefault(c, []).append(pname)
-                continue
-            lo, hi = rng[0], rng[1]  # entry may carry [min, max, nulls]
-            mins[c] = lo if c not in mins else min(mins[c], lo)
-            maxs[c] = hi if c not in maxs else max(maxs[c], hi)
-    if missing:
-        raise ValueError(
-            "no usable min/max statistics for "
-            + ", ".join(f"{c!r} in {ps[:3]}" for c, ps in sorted(missing.items()))
-            + " — scan the data or add the column to stats_cols"
-        )
-    for sc in spec_wanted:
-        idx, _c, st = _partition_selector(meta, sc)
-        vals = []
-        for pname in parts:
-            is_null, v = _partition_value(pname.split("/")[idx], st)
-            if is_null:
-                continue  # NULL/empty partition: ignored like SQL MIN/MAX
-            vals.append(v)
-        want.append(sc)
-        if vals:
-            mins[sc], maxs[sc] = min(vals), max(vals)
+    parts = _restrict_parts(
+        man.get("partitions") or {}, man.get("schema") or {},
+        where_partition=where_partition,
+    )
     return {
         "version": int(man.get("version") or 0),
-        "n_rows": int(n_rows),
+        "n_rows": n,
         "n_partitions": len(parts),
-        # an EMPTY table yields min/max None — SQL's MIN/MAX over zero
-        # rows — rather than raising (the missing-stats raise above is
-        # for partitions that HAVE rows but no usable statistics)
-        "columns": {c: {"min": mins.get(c), "max": maxs.get(c)} for c in want},
+        "columns": {
+            c: {"min": vals[1 + 2 * i], "max": vals[2 + 2 * i]}
+            for i, c in enumerate(want)
+        },
     }
 
 
@@ -5382,50 +5526,23 @@ def manifest_partition_counts(
     METADATA: the per-partition ``::n_rows`` map IS that result — the
     hive layout makes partition value ↔ directory a bijection, so the
     group-by needs zero data pages (Iceberg's ``partitions`` metadata
-    table serves exactly this). At 100 TB the difference is an
-    O(partitions) JSON read vs a full shuffle-aggregate for the
-    "rows per day" poll every ingest dashboard runs.
+    table serves exactly this).
 
     Returns ``[(value, n_rows), …]`` sorted by group level NAME, one
-    entry per group — including the NULL group
+    entry per group with live rows — including the NULL group
     (``__HIVE_DEFAULT_PARTITION__`` → value None), matching SQL
-    GROUP BY semantics where NULLs form a group. Values are typed via
-    the recorded partition type. ``where_partition=(col, value)``
-    restricts to one partition value of any spec column — a collection
-    value restricts to the member set (same provability contract as
-    :func:`manifest_aggregate`). On a multi-column spec,
-    ``group_col`` names WHICH component to group by (member counts
-    merge by addition — the hive bijection holds per level); a
-    single-column spec defaults to its one column."""
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    if not _spec_meta(meta):
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    gcol = _default_group_col(meta, group_col, "manifest_partition_counts")
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {gcol!r} is unprovable while {path} holds "
-            "old-spec directories (their names are not values of the "
-            "current partition column) — compact_snapshot to migrate"
-        )
-    idx, _c, gtype = _partition_selector(meta, gcol)
-    rows = _restrict_parts(
-        _partition_rows(man, path), meta, where_partition=where_partition
-    )
-    # a group exists only where live rows do (SQL GROUP BY semantics) —
-    # a partition fully suppressed by merge-on-read tombstones has no
-    # live rows and therefore no group
-    merged: dict[str, int] = {}
-    for p, n in rows.items():
-        if n > 0:
-            level = p.split("/")[idx]
-            merged[level] = merged.get(level, 0) + n
+    GROUP BY semantics. Values are typed via the recorded partition
+    type. ``where_partition`` restricts as in
+    :func:`manifest_aggregate`. On a multi-column spec ``group_col``
+    names WHICH component to group by (member counts merge by
+    addition); a single-column spec defaults to its one column."""
     return [
-        (_partition_value(level, gtype)[1], n)
-        for level, n in sorted(merged.items())
+        (g[0], n)
+        for g, n, _v in _fold_answer(
+            path, version, [], where_partition=where_partition,
+            by_partition=True, group_col=group_col,
+            what="manifest_partition_counts",
+        )
     ]
 
 
@@ -5448,117 +5565,21 @@ def manifest_approx_distinct(
     The estimate is the SAME deterministic HLL recipe as the in-query
     operator (operators.sketches: strong_mix hash, m=256 integer
     registers, linear-counting small-range branch), so it equals what
-    scanning the same rows would have produced, modulo nothing.
+    scanning the same rows would have produced.
 
     ``by_partition=True`` returns ``[(value, estimate), …]`` — the
     per-GROUP NDVs for ``GROUP BY partition_col`` (zero-live groups
-    omitted). Raises when any selected partition lacks the sketch
+    omitted). Raises when any selected live partition lacks the sketch
     (pre-upgrade commit, column not sketched) or carries merge-on-read
-    tombstones (deleted rows cannot leave an HLL — compact first):
-    refuse-what-you-cannot-prove, like every manifest answer."""
-    import math
-
-    from ..operators import sketches as SK
-
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    if (
-        by_partition
-        or where_partition is not None
-        or where_partition_in is not None
-    ) and _mixed_spec(man):
-        raise ValueError(
-            "per-partition NDV / partition restriction is "
-            f"unprovable while {path} holds old-spec directories — "
-            "the GLOBAL merged estimate still answers; compact to "
-            "migrate"
-        )
-    renames = meta.get("renames") or []
-
-    # eq restriction filters one component level; IN restriction = the
-    # members' registers merged by max — the same arithmetic as the
-    # global merge over a smaller set; an absent member simply
-    # contributes no registers
-    parts = _restrict_parts(
-        man.get("partitions") or {},
-        meta,
-        where_partition=where_partition,
-        where_partition_in=where_partition_in,
+    tombstones (deleted rows cannot leave an HLL — compact first)."""
+    rows = _fold_answer(
+        path, version, [("approx", column)], where_partition=where_partition,
+        where_partition_in=where_partition_in, by_partition=by_partition,
+        group_col=group_col, what="manifest_approx_distinct",
     )
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    if any(p in tomb_parts for p in parts):
-        raise ValueError(
-            "NDV over tombstoned partition(s) is unprovable from the "
-            "manifest (deleted rows cannot leave an HLL sketch) — "
-            "compact_snapshot first"
-        )
-    stats = man.get("stats") or {}
-
-    def _regs_of(pname: str) -> "list | None":
-        entry = stats.get(pname) or {}
-        # the sketch key follows the rename chain of its BASE column
-        for k, v in entry.items():
-            if k.endswith(HLL_SUFFIX) and _logical_name(
-                renames, k[: -len(HLL_SUFFIX)]
-            ) == column:
-                return v
-        return None
-
-    def _estimate(regs: list) -> float:
-        cap = SK.HLL_W_BITS + 1
-        scale = 1 << cap
-        n_present = sum(1 for r in regs if r > 0)
-        s_present = sum((1 << (cap - r)) for r in regs if r > 0)
-        zeros = SK.HLL_M - n_present
-        s_total = s_present + zeros * scale
-        raw = SK.HLL_ALPHA * SK.HLL_M * SK.HLL_M * scale / float(s_total)
-        if raw <= SK.HLL_LC_THRESHOLD and zeros > 0:
-            return float(SK.HLL_M) * math.log(float(SK.HLL_M) / zeros)
-        return raw
-
-    part_rows = _partition_rows(man, path)
-    if by_partition:
-        gcol = _default_group_col(
-            meta, group_col, "manifest_approx_distinct"
-        )
-        _idx, _c, gtype = _partition_selector(meta, gcol)
-        live = {p for p in parts if part_rows.get(p, 0) > 0}
-        out = []
-        # per-GROUP merge: a group's registers are the max of its
-        # member partitions' (union semantics, exactly the global
-        # merge over the group's members)
-        for level, members in sorted(
-            _group_parts(live, meta, gcol).items()
-        ):
-            g = [0] * SK.HLL_M
-            for pname in members:
-                regs = _regs_of(pname)
-                if regs is None:
-                    raise ValueError(
-                        f"no '{column}{HLL_SUFFIX}' sketch recorded for "
-                        f"{pname!r} — add it to stats_cols and rewrite, "
-                        "or scan the data"
-                    )
-                for i, r in enumerate(regs):
-                    if r > g[i]:
-                        g[i] = r
-            out.append((_partition_value(level, gtype)[1], _estimate(g)))
-        return out
-    merged = [0] * SK.HLL_M
-    for pname in parts:
-        if part_rows.get(pname, 0) == 0:
-            continue
-        regs = _regs_of(pname)
-        if regs is None:
-            raise ValueError(
-                f"no '{column}{HLL_SUFFIX}' sketch recorded for "
-                f"{pname!r} — add it to stats_cols and rewrite, or "
-                "scan the data"
-            )
-        for i, r in enumerate(regs):
-            if r > merged[i]:
-                merged[i] = r
-    return _estimate(merged)
+    if not by_partition:
+        return rows[0][2][0]
+    return [(g[0], vals[0]) for g, _n, vals in rows]
 
 
 def manifest_quantile(
@@ -5575,129 +5596,29 @@ def manifest_quantile(
     """Approximate ``PERCENTILE(column, p/100)`` from MANIFEST
     METADATA: the per-partition equi-width histograms recorded at
     commit time (``stats_cols=["col::hist:<width>"]``) merge across
-    partitions by SUMMING bucket counts — exact integers end-to-end —
-    so a table-wide (or partition-restricted) quantile poll reads zero
-    data pages at any scale. The estimate is the q90 recipe verbatim:
-    the LOWER EDGE (bucket × width) of the first bucket whose
-    cumulative count crosses ``ceil(total × p/100)`` — deterministic
-    integer arithmetic, which is what makes the answer hash-verifiable
-    rather than a confidence interval (the same contract as the HLL /
-    CMS sketches). Approximation error is bounded by one bucket width,
-    the caller's sizing lever at write time.
+    partitions by SUMMING bucket counts — exact integers end-to-end.
+    The estimate is the q90 recipe verbatim: the LOWER EDGE (bucket ×
+    width) of the first bucket whose cumulative count crosses
+    ``ceil(total × p/100)`` — deterministic integer arithmetic, which
+    is what makes the answer hash-verifiable rather than a confidence
+    interval. Approximation error is bounded by one bucket width.
 
     ``by_partition=True`` returns ``[(value, estimate), …]`` per live
-    partition. Raises when any selected partition lacks the histogram,
-    carries merge-on-read tombstones (deleted rows cannot leave a
-    count), or — for the partition-restricted shapes — when the table
-    is layout-mixed after spec evolution: refuse-what-you-cannot-
-    prove, like every manifest answer. NULLs never entered the counts,
-    matching SQL percentile semantics; an all-NULL selection raises
-    (no rank to cross)."""
+    group. Raises when any selected partition lacks the histogram,
+    carries merge-on-read tombstones, or — for the partition-restricted
+    shapes — when the table is layout-mixed after spec evolution; an
+    all-NULL selection raises (no rank to cross)."""
     if not (0 < p <= 100):
         raise ValueError(f"quantile p must be in (0, 100], got {p}")
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    if (
-        by_partition
-        or where_partition is not None
-        or where_partition_in is not None
-    ) and _mixed_spec(man):
-        raise ValueError(
-            "per-partition quantile / eq-partition restriction is "
-            f"unprovable while {path} holds old-spec directories — "
-            "the GLOBAL merged histogram still answers; compact to "
-            "migrate"
-        )
-    renames = meta.get("renames") or []
-
-    # eq restriction filters one component level; IN restriction: the
-    # members' bucket counts summed — the same merge as global, over
-    # fewer partitions; absent members add 0
-    parts = _restrict_parts(
-        man.get("partitions") or {},
-        meta,
+    rows = _fold_answer(
+        path, version, [("quantile", (column, p))],
         where_partition=where_partition,
-        where_partition_in=where_partition_in,
+        where_partition_in=where_partition_in, by_partition=by_partition,
+        group_col=group_col, what="manifest_quantile",
     )
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    if any(q in tomb_parts for q in parts):
-        raise ValueError(
-            "quantile over tombstoned partition(s) is unprovable from "
-            "the manifest (deleted rows cannot leave a histogram "
-            "count) — compact_snapshot first"
-        )
-    stats = man.get("stats") or {}
-
-    def _hist_of(pname: str) -> "tuple[list, int] | None":
-        entry = stats.get(pname) or {}
-        for k, v in entry.items():
-            hm = _HIST_KEY_RE.match(k)
-            if (
-                hm is not None
-                and _logical_name(renames, hm.group("col")) == column
-            ):
-                return v, int(hm.group("width"))
-        return None
-
-    def _estimate(counts: dict, width: int) -> int:
-        total = sum(counts.values())
-        if total == 0:
-            raise ValueError(
-                f"no non-null {column!r} rows in the selected "
-                "partition(s) — no rank to cross"
-            )
-        cum = 0
-        for b in sorted(counts):
-            cum += counts[b]
-            if cum * 100 >= total * p:
-                return b * width
-        raise AssertionError("rank crossing unreachable")  # p <= 100
-
-    part_rows = _partition_rows(man, path)
-    live = [q for q in sorted(parts) if part_rows.get(q, 0) > 0]
-    per = {}
-    width = None
-    for pname in live:
-        got = _hist_of(pname)
-        if got is None:
-            raise ValueError(
-                f"no '::hist:' histogram recorded for {column!r} in "
-                f"{pname!r} — add col::hist:<width> to stats_cols and "
-                "rewrite, or scan the data"
-            )
-        buckets, w = got
-        if width is None:
-            width = w
-        elif w != width:
-            raise ValueError(
-                f"histogram widths disagree across partitions ({w} vs "
-                f"{width}) — rewrite to a uniform width before merging"
-            )
-        per[pname] = buckets
-    if by_partition:
-        gcol = _default_group_col(meta, group_col, "manifest_quantile")
-        _idx, _c, gtype = _partition_selector(meta, gcol)
-        out = []
-        # per-GROUP merge: a group's histogram is its member
-        # partitions' bucket counts summed (exact integers)
-        for level, members in sorted(
-            _group_parts(live, meta, gcol).items()
-        ):
-            g: dict = {}
-            for pname in members:
-                for b, n in per[pname]:
-                    g[b] = g.get(b, 0) + n
-            out.append(
-                (_partition_value(level, gtype)[1], _estimate(g, width))
-            )
-        return out
-    merged: dict = {}
-    for buckets in per.values():
-        for b, n in buckets:
-            merged[b] = merged.get(b, 0) + n
-    if width is None:
-        raise ValueError(f"no live partitions selected in {path}")
-    return _estimate(merged, width)
+    if not by_partition:
+        return rows[0][2][0]
+    return [(g[0], vals[0]) for g, _n, vals in rows]
 
 
 def manifest_group_stats(
@@ -5710,109 +5631,93 @@ def manifest_group_stats(
 ) -> list:
     """Per-group COUNT + MIN/MAX for ``GROUP BY partition_col`` from
     MANIFEST METADATA: a group IS a partition (hive bijection), so the
-    per-partition stats entries — recorded from parquet footers at
-    commit time — are exactly the per-group extremes, and ``::n_rows``
-    the per-group counts. MIN/MAX skip NULLs in SQL and parquet
-    min/max describe non-null values, so null counts don't enter.
-    Zero data pages in the steady state; partitions predating stats
-    coverage fall back to a footer harvest of just those partitions
-    (footer bytes only). Raises when a requested column has no usable
-    stats anywhere for some partition, or when merge-on-read
-    tombstones make extremes unprovable (compact first).
+    per-partition stats entries are exactly the per-group extremes and
+    ``::n_rows`` the per-group counts. Refusals as in
+    :func:`manifest_aggregate`.
 
     Returns ``[(value, n_rows, {col: (min, max)}), …]`` sorted by
     partition name, zero-live groups omitted (SQL GROUP BY), NULL
     partition included as value None while it has live rows."""
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    if not _spec_meta(meta):
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    gcol = _default_group_col(meta, group_col, "manifest_group_stats")
-    gidx, _gc, gtype = _partition_selector(meta, gcol)
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {gcol!r} is unprovable while {path} holds "
-            "old-spec directories — compact_snapshot to migrate"
-        )
-    if gcol in columns:
-        raise ValueError(
-            "the grouped partition column's per-group min/max is the "
-            "group value itself — select the column, not MIN/MAX of it"
-        )
-    _refuse_sketch(
-        columns,
-        "min/max columns — use manifest_approx_distinct / "
-        "manifest_quantile (by_partition=True)",
+    rows = _fold_answer(
+        path, version, [(k, c) for c in columns for k in ("min", "max")],
+        where_partition=where_partition, by_partition=True,
+        group_col=group_col, what="manifest_group_stats",
     )
-    renames = meta.get("renames") or []
-
-    aliases = set(columns)
-    for old, _new in renames:
-        if _logical_name(renames, old) in aliases:
-            aliases.add(old)
-    # a collection where_partition value restricts to the member SET
-    # (the IN shape) in the same one-manifest-read pass as a scalar
-    parts = _restrict_parts(
-        man.get("partitions") or {}, meta, where_partition=where_partition
-    )
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    if any(p in tomb_parts for p in parts):
-        raise ValueError(
-            "min/max over tombstoned partition(s) is unprovable from "
-            "the manifest — compact_snapshot first (COUNT(*) remains "
-            "answerable via manifest_partition_counts)"
-        )
-    stats = man.get("stats") or {}
-    # per-GROUP merge over the component level: counts add, extremes
-    # nest (min of mins / max of maxs) — exact because every member
-    # partition's stats describe disjoint rows
-    grouped: dict = {}
-    for pname in sorted(parts):
-        entry = stats.get(pname) or {}
-        logical = {
-            _logical_name(renames, k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        n = entry.get(N_ROWS_KEY)
-        need = [c for c in columns if c not in logical]
-        if n is None or need:
-            harvested, hrows = _footer_stats(
-                Path(path) / parts[pname], sorted(aliases)
-            )
-            logical.update({
-                _logical_name(renames, k): v for k, v in harvested.items()
-                if k != FILES_KEY
-            })
-            if n is None:
-                n = hrows
-        missing = [c for c in columns if c not in logical]
-        if missing and n > 0:
-            raise ValueError(
-                f"no usable min/max statistics for {missing} in "
-                f"{pname!r} — scan the data or add the column(s) to "
-                "stats_cols"
-            )
-        if n == 0:
-            continue  # no live rows: no group (SQL semantics)
-        level = pname.split("/")[gidx]
-        g = grouped.setdefault(level, [0, {}])
-        g[0] += int(n)
-        for c in columns:
-            lo, hi = logical[c][0], logical[c][1]
-            if c in g[1]:
-                plo, phi = g[1][c]
-                # None bounds (all-NULL member) never tighten SQL
-                # MIN/MAX — skip them like the rows they describe
-                lo = plo if lo is None else lo if plo is None else min(plo, lo)
-                hi = phi if hi is None else hi if phi is None else max(phi, hi)
-            g[1][c] = (lo, hi)
     return [
-        (_partition_value(level, gtype)[1], n, cols)
-        for level, (n, cols) in sorted(grouped.items())
+        (g[0], n, {c: (v[2 * i], v[2 * i + 1]) for i, c in enumerate(columns)})
+        for g, n, v in rows
     ]
+
+
+def manifest_column_count(
+    path: str,
+    column: str,
+    *,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    where_partition_in: "tuple[str, list] | None" = None,
+    by_partition: bool = False,
+    group_col: "str | None" = None,
+) -> "int | list":
+    """Exact null-skipping ``COUNT(column)`` from MANIFEST METADATA:
+    each partition contributes its live row count minus its recorded
+    per-column null count (the 3-element ``[min, max, nulls]`` stats
+    entry every ``stats_cols`` commit writes). This is the half of
+    COUNT the plain ``::n_rows`` idiom cannot serve (``COUNT(col)``
+    is NOT ``COUNT(*)`` — SQL skips NULLs).
+
+    Raises (→ scan fallback) when any contributing partition lacks a
+    null-counted entry for the column (legacy 2-element entries,
+    un-statted columns), or carries merge-on-read tombstones. The
+    PARTITION column needs no stats at all: ``COUNT(pcol)`` is exactly
+    the live rows outside the NULL partition. ``where_partition`` /
+    ``where_partition_in`` restrict to member partitions (absent
+    members contribute 0); ``by_partition=True`` returns
+    ``[(value, count), …]`` like :func:`manifest_partition_counts`."""
+    _one_restriction(where_partition, where_partition_in)
+    rows = _fold_answer(
+        path, version, [("countcol", column)],
+        where_partition=where_partition,
+        where_partition_in=where_partition_in, by_partition=by_partition,
+        group_col=group_col, what="manifest_column_count",
+    )
+    if not by_partition:
+        return rows[0][2][0]
+    return [(g[0], vals[0]) for g, _n, vals in rows]
+
+
+def manifest_column_sum(
+    path: str,
+    column: str,
+    *,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    where_partition_in: "tuple[str, list] | None" = None,
+    by_partition: bool = False,
+    group_col: "str | None" = None,
+) -> "tuple | list":
+    """Exact ``SUM(column)`` — and the ``n_nonnull`` that makes
+    ``AVG(column)`` = sum/n — from MANIFEST METADATA: the per-partition
+    ``[sum, n_nonnull]`` entries recorded by ``stats_cols=
+    ["col::sum"]`` merge by ADDITION, so the answer costs one JSON
+    read at any scale. Returns ``(sum_or_None, n_nonnull)`` — sum is
+    None when every contributing value is NULL (SQL SUM semantics) —
+    or, with ``by_partition=True``, ``[(value, sum, n), …]`` sorted by
+    partition name with zero-live groups skipped.
+
+    Raises (→ scan fallback) when any contributing partition lacks a
+    sum entry for the column or carries merge-on-read tombstones."""
+    if column.endswith(SUM_SUFFIX):
+        column = column[: -len(SUM_SUFFIX)]
+    _one_restriction(where_partition, where_partition_in)
+    rows = _fold_answer(
+        path, version, [("sum", column)], where_partition=where_partition,
+        where_partition_in=where_partition_in, by_partition=by_partition,
+        group_col=group_col, what="manifest_column_sum",
+    )
+    if not by_partition:
+        return rows[0][2][0]
+    return [(g[0], *vals[0]) for g, _n, vals in rows]
 
 
 def _range_cond(column: str, lo, hi, lo_strict: bool, hi_strict: bool):
@@ -5964,244 +5869,6 @@ def manifest_range_count(
         if status == _INSIDE:
             total += n - int(rnulls)
     return total
-
-
-def manifest_column_count(
-    path: str,
-    column: str,
-    *,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    where_partition_in: "tuple[str, list] | None" = None,
-    by_partition: bool = False,
-    group_col: "str | None" = None,
-) -> "int | list":
-    """Exact null-skipping ``COUNT(column)`` from MANIFEST METADATA:
-    each partition contributes its live row count minus its recorded
-    per-column null count (the 3-element ``[min, max, nulls]`` stats
-    entry every ``stats_cols`` commit writes) — summed across
-    partitions, zero data pages at any scale. This is the half of
-    COUNT the plain ``::n_rows`` idiom cannot serve (``COUNT(col)``
-    is NOT ``COUNT(*)`` — SQL skips NULLs).
-
-    Raises (→ scan fallback) when any contributing partition lacks a
-    null-counted entry for the column (legacy 2-element entries,
-    un-statted columns), or carries merge-on-read tombstones (the
-    deleted rows' null-ness is unknown; compaction restores
-    provability). The PARTITION column needs no stats at all: its
-    value is constant per directory, so ``COUNT(pcol)`` is exactly
-    the live rows outside the NULL partition. ``where_partition`` /
-    ``where_partition_in`` restrict to member partitions (absent
-    members contribute 0, SQL semantics)."""
-    _refuse_sketch([column], "countable columns")
-    if where_partition is not None and where_partition_in is not None:
-        raise ValueError(
-            "pass one of where_partition / where_partition_in, not both"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    spec_cols = [c for c, _t in _spec_meta(meta)]
-    restricted = where_partition is not None or where_partition_in is not None
-    if by_partition and not spec_cols:
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if restricted or by_partition or column in spec_cols:
-        if _mixed_spec(man):
-            raise ValueError(
-                "partition-VALUE answers are unprovable while "
-                f"{path} holds old-spec directories — compact_snapshot "
-                "to migrate, or scan"
-            )
-    part_rows = _restrict_parts(
-        _partition_rows(man, path),
-        meta,
-        where_partition=where_partition,
-        where_partition_in=where_partition_in,
-    )
-    if by_partition:
-        gcol = _default_group_col(meta, group_col, "manifest_column_count")
-        gidx, _gc, gtype = _partition_selector(meta, gcol)
-    if column in spec_cols:
-        # tombstones already subtracted by _partition_rows — the
-        # spec component's value is constant per directory, so the
-        # live count IS the non-null count (0 for the NULL level)
-        cidx, _cc, ctype = _partition_selector(meta, column)
-
-        def _nn(pname: str, n: int) -> int:
-            return 0 if _partition_value(
-                pname.split("/")[cidx], ctype
-            )[0] else n
-
-        if by_partition:
-            merged: dict = {}
-            for pname, n in part_rows.items():
-                if n <= 0:
-                    continue
-                level = pname.split("/")[gidx]
-                merged[level] = merged.get(level, 0) + _nn(pname, n)
-            return [
-                (_partition_value(level, gtype)[1], c)
-                for level, c in sorted(merged.items())
-            ]
-        return sum(_nn(pname, n) for pname, n in part_rows.items())
-    renames = meta.get("renames") or []
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-
-    def _one(pname: str, n: int) -> int:
-        if pname in tomb_parts:
-            raise ValueError(
-                f"COUNT({column}) unprovable: partition {pname} carries "
-                "merge-on-read tombstones (deleted rows' null-ness "
-                "unknown) — compact first, or scan"
-            )
-        entry = stats.get(pname) or {}
-        logical = {
-            _logical_name(renames, k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(column)
-        if rng is None or len(rng) < 3 or rng[2] is None:
-            raise ValueError(
-                f"COUNT({column}) unprovable: partition {pname} has no "
-                f"null-counted stats entry — add {column!r} to "
-                "stats_cols and rewrite, or scan"
-            )
-        return n - int(rng[2])
-
-    if by_partition:
-        # sorted by group level name, zero-live groups skipped — the
-        # same order and membership as manifest_partition_counts;
-        # member non-null counts merge by addition
-        merged = {}
-        for pname, n in part_rows.items():
-            if n <= 0:
-                continue
-            level = pname.split("/")[gidx]
-            merged[level] = merged.get(level, 0) + _one(pname, n)
-        return [
-            (_partition_value(level, gtype)[1], c)
-            for level, c in sorted(merged.items())
-        ]
-    total = 0
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        total += _one(pname, n)
-    return total
-
-
-
-def manifest_column_sum(
-    path: str,
-    column: str,
-    *,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    where_partition_in: "tuple[str, list] | None" = None,
-    by_partition: bool = False,
-    group_col: "str | None" = None,
-) -> "tuple | list":
-    """Exact ``SUM(column)`` — and the ``n_nonnull`` that makes
-    ``AVG(column)`` = sum/n — from MANIFEST METADATA: the per-partition
-    ``[sum, n_nonnull]`` entries recorded by ``stats_cols=
-    ["col::sum"]`` merge by ADDITION, so the answer costs one JSON
-    read at any scale. Returns ``(sum_or_None, n_nonnull)`` — sum is
-    None when every contributing value is NULL (SQL SUM semantics) —
-    or, with ``by_partition=True``, ``[(value, sum, n), …]`` sorted by
-    partition name with zero-live groups skipped (the
-    manifest_partition_counts convention).
-
-    Raises (→ scan fallback) when any contributing partition lacks a
-    sum entry for the column or carries merge-on-read tombstones (the
-    deleted rows' values are unknown; compaction restores
-    provability)."""
-    if not column.endswith(SUM_SUFFIX):
-        key = f"{column}{SUM_SUFFIX}"
-    else:
-        column, key = column[: -len(SUM_SUFFIX)], column
-    if where_partition is not None and where_partition_in is not None:
-        raise ValueError(
-            "pass one of where_partition / where_partition_in, not both"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    restricted = where_partition is not None or where_partition_in is not None
-    if by_partition and not _spec_meta(meta):
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if restricted or by_partition:
-        if _mixed_spec(man):
-            raise ValueError(
-                "partition-VALUE answers are unprovable while "
-                f"{path} holds old-spec directories — compact_snapshot "
-                "to migrate, or scan"
-            )
-    renames = meta.get("renames") or []
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _restrict_parts(
-        _partition_rows(man, path),
-        meta,
-        where_partition=where_partition,
-        where_partition_in=where_partition_in,
-    )
-
-    def _one(pname: str) -> "tuple":
-        if pname in tomb_parts:
-            raise ValueError(
-                f"SUM({column}) unprovable: partition {pname} carries "
-                "merge-on-read tombstones (deleted rows' values "
-                "unknown) — compact first, or scan"
-            )
-        entry = stats.get(pname) or {}
-        # the sum key follows the rename chain of its BASE column
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX) and _logical_name(
-                renames, k[: -len(SUM_SUFFIX)]
-            ) == column:
-                return (v[0], int(v[1]))
-        raise ValueError(
-            f"no '{column}{SUM_SUFFIX}' entry recorded for {pname!r} — "
-            "add it to stats_cols and rewrite, or scan the data"
-        )
-
-    if by_partition:
-        gcol = _default_group_col(meta, group_col, "manifest_column_sum")
-        gidx, _gc, gtype = _partition_selector(meta, gcol)
-        # per-GROUP merge: member sums and non-null counts add;
-        # a group whose every member sum is None stays None (SQL SUM)
-        merged: dict = {}
-        for pname, n in part_rows.items():
-            if n <= 0:
-                continue
-            sv, nn = _one(pname)
-            level = pname.split("/")[gidx]
-            g = merged.setdefault(level, [None, 0])
-            if sv is not None:
-                g[0] = int(sv) + (g[0] or 0)
-            g[1] += nn
-        return [
-            (_partition_value(level, gtype)[1], g[0], g[1])
-            for level, g in sorted(merged.items())
-        ]
-    total, n_total = 0, 0
-    seen_value = False
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        sv, nn = _one(pname)
-        if sv is not None:
-            total += int(sv)
-            seen_value = True
-        n_total += nn
-    return (total if seen_value else None, n_total)
 
 
 def _range_accounting(man, meta_parts, scan_parts, column, lo, hi) -> dict:
