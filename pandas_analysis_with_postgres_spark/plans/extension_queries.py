@@ -5323,7 +5323,7 @@ FROM meta LEFT JOIN g ON TRUE
 
 def z78_group_multi_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED MULTI-AGGREGATE hybrid (snapshot.range_group_multi +
-    metadata_sql._hybrid_group_multi): ``SELECT pcol, COUNT(*),
+    metadata_sql.hybrid_range_count): ``SELECT pcol, COUNT(*),
     SUM(x), MIN(k), MAX(k) … WHERE k <range> GROUP BY pcol`` — the
     per-ingest-day dashboard panel — answered with per-group METADATA
     for interior partitions and ONE grouped boundary scan for the
@@ -5549,7 +5549,7 @@ SELECT
 
 def z77_multi_agg_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MULTI-AGGREGATE hybrid range statement (snapshot.
-    range_multi_pruned + metadata_sql._hybrid_multi): ``SELECT
+    range_multi_pruned + metadata_sql.hybrid_range_count): ``SELECT
     COUNT(*), SUM(x), AVG(x), MIN(k), MAX(k) FROM t WHERE k BETWEEN …``
     — the dashboard statement — answered with ONE partition
     classification and ONE boundary scan shared by every aggregate,
@@ -5564,7 +5564,7 @@ def z77_multi_agg_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     [30001, 95000] (empty at sf0.01 — NULL sum/avg/extremes, the SQL
     aggregate-over-nothing shapes) via the prover API with its
     classification counts, and a low [1000, 9500] via the FULL
-    metadata-SQL tier (parse → _hybrid_multi → typed columns), which
+    metadata-SQL tier (parse → hybrid_range_count → typed columns), which
     must serve, not refuse. Unit proofs (one-pass zero-data-page,
     unprovable-item spill, typed casts) live in
     tests/test_range_count_pruned.py."""
@@ -7273,7 +7273,7 @@ CROSS JOIN (SELECT COUNT(*)::BIGINT AS n_in,
 
 def z85_metadata_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``GROUP BY pcol HAVING <agg alias> <op> <num>`` from MANIFEST
-    METADATA (metadata_sql form 3 + _apply_having): HAVING is provable
+    METADATA (metadata_sql._assemble_grouped): HAVING is provable
     for the same reason ORDER BY/LIMIT is (z63) — the FULL group set
     is assembled driver-side before the filter, so filtering the local
     frame is exactly the engine's post-aggregate HAVING, still zero
@@ -8338,7 +8338,7 @@ SELECT 'neq_filter', 'scan',
 
 def z100_window_disjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISJUNCTIVE range windows in the hybrid tier (metadata_sql.
-    _hybrid_or_range): ``SELECT COUNT(*), SUM(k), MIN(k), MAX(k) FROM
+    hybrid_range_count): ``SELECT COUNT(*), SUM(k), MIN(k), MAX(k) FROM
     t WHERE k BETWEEN a AND b OR k BETWEEN c AND d`` — "this week OR
     the same week last year", the comparison statement every
     dashboard runs. The typed windows merge into disjoint closed
@@ -8668,7 +8668,7 @@ def _hybnull_table(spark: SparkSession, sf_dir: str, root: str) -> str:
 
 def z105_hybrid_null_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID NULL audit (snapshot.null_count_pruned + metadata_sql.
-    _hybrid_isnull): ``COUNT(*) WHERE v IS [NOT] NULL`` on a table
+    hybrid_range_count): ``COUNT(*) WHERE v IS [NOT] NULL`` on a table
     where ONE partition carries merge-on-read tombstones — the shape
     the pure-metadata tier must refuse WHOLE (deleted rows' null-ness
     is unknown), run to completion instead: the three provable
@@ -8803,7 +8803,7 @@ def z107_grouped_or_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SELECT o_orderstatus, COUNT(*), SUM(cents), MIN/MAX(cents)
     WHERE cents BETWEEN a AND b OR cents BETWEEN c AND d GROUP BY
     o_orderstatus`` — "this price band OR that one, per status" —
-    served by metadata_sql._hybrid_group_or_range: the typed windows
+    served by metadata_sql.hybrid_range_count: the typed windows
     merge into disjoint closed intervals, each interval runs ONE
     grouped range_group_multi pass (interior partitions from
     metadata, one grouped boundary scan for the edges), and the

@@ -7,52 +7,55 @@ JSON read vs a cluster-wide scan for a poll a dashboard issues every
 minute.
 
 A metadata answerer must refuse what it cannot prove, never
-approximate it: every statement outside the shapes below returns
-``None`` and the caller falls back to a real scan. The grammar
-(:func:`parse_metadata_select`) is strict; answering is three steps.
+approximate it: every statement outside the grammar below returns
+``None`` and the caller falls back to a real scan. Answering is four
+steps, shared by both tiers.
 
-1. **Resolve** (:func:`_resolve_table`): one manifest read, pinned —
-   the statement's ``FOR VERSION/TIMESTAMP AS OF`` (Delta/Iceberg
-   syntax, timestamps via :func:`snapshot.resolve_as_of`), the
-   caller's version, or else the newest version it read, so a commit
-   landing mid-statement cannot mix two snapshots in one answer. Types
-   are the table's LOGICAL schema: the rename chain applied, dropped
-   columns gone.
-2. **Fold** (:func:`snapshot._manifest_fold`): the WHERE normaliser
-   (:func:`_restriction`) turns ``pcol = lit``, ``pcol IN (…)`` and
-   their conjunctions over spec components into one partition
-   restriction, and ``col IS [NOT] NULL`` (optionally member-
-   restricted) into a null predicate; the GROUP BY list names spec
-   components (one or several — a composite-partition rollup). One
-   pass over the live partitions then serves every item:
-   ``COUNT(*)`` from ``::n_rows``, ``COUNT(col)`` from recorded null
-   counts, ``COUNT(DISTINCT pcol)`` from the live directory names,
-   ``SUM``/``AVG`` from ``col::sum`` pairs, ``MIN``/``MAX`` from
-   ``stats_cols`` entries (partition names for spec columns),
-   ``APPROX_COUNT_DISTINCT`` from ``::hll`` registers and
-   ``APPROX_QUANTILE(col, p)`` from ``::hist:<width>`` buckets. Under a
-   null predicate COUNT(*) is the column's null-skipping count (or live
-   rows minus it) and only same-column aggregates are provable. The
-   fold raises on anything unprovable — layout-mixed tables,
-   tombstoned partitions under a value item, missing stats, dropped
-   columns — and the statement refuses.
-3. **Assemble** (:func:`_assemble_grouped`): scan-identical types
+1. **Parse** (:func:`parse_metadata_select`): a strict select list and
+   a WHERE read as atoms of one conjunct grammar — ``col = lit``,
+   ``col IN (…)``, ``col <op> lit``, ``col BETWEEN a AND b`` and
+   ``col IS [NOT] NULL``, AND-ed in any order, or one OR of BETWEENs
+   on one column. One combiner names the atom set (the ``where``
+   tuple's kind); an atom set no kind represents refuses.
+2. **One spec** (:func:`_restriction`), after :func:`_resolve_table`
+   pinned one manifest (the statement's ``FOR VERSION/TIMESTAMP AS
+   OF``, the caller's version, or else the version it read, so a
+   commit landing mid-statement cannot mix two snapshots) and the
+   table's LOGICAL types (rename chain applied, dropped columns gone):
+   the eq/IN members typed into one partition restriction, the range
+   column with its typed windows (OR-windows merged into disjoint
+   intervals), and the null predicate.
+3. **Fold or classify.** The pure-metadata tier
+   (:func:`answer_from_manifest`) reads no data page: an un-ranged
+   spec folds every item in one pass over the live partitions
+   (:func:`snapshot._manifest_fold` — ``COUNT(*)`` from ``::n_rows``,
+   ``COUNT(col)`` from null counts, ``COUNT(DISTINCT pcol)`` from
+   directory names, ``SUM``/``AVG`` from ``::sum`` pairs,
+   ``MIN``/``MAX`` from ``stats_cols``, ``APPROX_COUNT_DISTINCT`` from
+   ``::hll`` registers, ``APPROX_QUANTILE`` from ``::hist`` buckets;
+   under a null predicate only same-column items); a ranged spec
+   answers ``COUNT(*)`` of one window when every restricted partition
+   is proven fully inside or outside it
+   (:func:`snapshot.manifest_range_count`). The caller-opted HYBRID
+   tier (:func:`hybrid_range_count`) serves what needs a boundary
+   scan: per window one :func:`snapshot.range_multi_pruned` /
+   :func:`snapshot.range_group_multi` pass, windows merged with
+   :func:`snapshot._fold_values`, null predicates through
+   :func:`snapshot.null_count_pruned` /
+   :func:`snapshot.range_null_count_pruned`.
+4. **Assemble** (:func:`_assemble_grouped`): scan-identical types
    (MIN of a date column is a DATE, not the manifest's ISO string),
    then ``HAVING <alias> <op> <num>`` and ``ORDER BY <output alias>
    [ASC|DESC] [LIMIT n]`` — provable because the full group set exists
    before filtering or ordering (ties break by the group columns
    ascending). ``SELECT DISTINCT pcol`` parses as ``GROUP BY pcol``.
 
-Range predicates (``col <op> lit``, ``BETWEEN``, optionally conjoined
-with ``pcol = lit``) answer COUNT(*) from the manifest only when every
-partition's [min, max] proves it fully inside or outside the range
-(:func:`snapshot.manifest_range_count`). Partial overlap, other items
-under a range, OR-windows, IN/conj + range and range + NULL predicates
-belong to the separate, caller-opted HYBRID tier
-(:func:`hybrid_range_count`), which scans only the boundary;
-:func:`explain_metadata_sql` reports which tier serves a statement.
-``extract_as_of`` strips a time-travel clause for callers that fall
-back to a real scan and must pin the view themselves (the CLI).
+Anything unprovable — layout-mixed tables, tombstones under a value
+item, missing stats, dropped columns, partial overlap — raises inside
+the provers and the statement refuses. :func:`explain_metadata_sql`
+reports which tier serves a statement and the I/O it commits to;
+:func:`extract_as_of` strips a time-travel clause for callers that
+fall back to a real scan and must pin the view themselves (the CLI).
 """
 
 from __future__ import annotations
@@ -64,10 +67,19 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .snapshot import (
+    FILES_KEY,
+    _fold_items,
     _logical_name,
     _manifest_fold,
+    _restrict_parts,
+    _spec_meta,
     manifest_range_count,
+    null_count_pruned,
+    range_group_multi,
+    range_multi_pruned,
+    range_null_count_pruned,
     read_manifest,
+    resolve_as_of,
 )
 
 _STMT = re.compile(
@@ -125,6 +137,8 @@ def extract_as_of(sql: str) -> "tuple[str, dict | None]":
         else {"timestamp": m.group("ts")}
     )
     return sql[: m.start()] + sql[m.end():], spec
+
+
 _ITEM = re.compile(
     r"^\s*(?:COUNT\s*\(\s*\*\s*\)"
     r"|(?P<cdn>COUNT)\s*\(\s*DISTINCT\s+(?P<cdncol>[A-Za-z_]\w*)\s*\)"
@@ -164,41 +178,6 @@ _W_NULL = re.compile(
     r"^\s*(?P<col>[A-Za-z_]\w*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*$",
     re.IGNORECASE,
 )
-
-#: Conjunctive NULL-membership: partition equality / IN-membership
-#: AND a NULL predicate — "today's null rate". Strictly eq/IN-first.
-_W_EQ_NULL = re.compile(
-    rf"^\s*(?P<ecol>[A-Za-z_]\w*)\s*=\s*(?P<eval>{_LIT})\s+AND\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*$",
-    re.IGNORECASE,
-)
-_W_IN_NULL = re.compile(
-    rf"^\s*(?P<icol>[A-Za-z_]\w*)\s+IN\s*\(\s*"
-    rf"(?P<ivals>{_LIT}(?:\s*,\s*{_LIT})*)\s*\)\s+AND\s+"
-    r"(?P<col>[A-Za-z_]\w*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*$",
-    re.IGNORECASE,
-)
-
-#: Disjunctive window shape: two or more closed BETWEENs on the SAME
-#: column OR-ed together — "this week OR the same week last year".
-#: Served by the hybrid tier as a union of disjoint intervals (each
-#: classified and boundary-scanned independently after merging
-#: overlaps); open-ended comparisons in a disjunct refuse to the scan.
-#: Range conjoined with a NULL predicate — "COUNT(*) WHERE latency >
-#: 500 AND user_id IS NULL" (the data-quality drill-down on a window).
-#: Strictly range-first; hybrid-tier only (r9 verdict ask #6b).
-_W_RANGE_NULL = re.compile(
-    rf"^\s*(?:(?P<col>[A-Za-z_]\w*)\s*(?P<op><=|>=|<|>)\s*(?P<val>{_LIT})"
-    rf"|(?P<bcol>[A-Za-z_]\w*)\s+BETWEEN\s+(?P<blo>{_LIT})\s+AND\s+(?P<bhi>{_LIT}))"
-    rf"\s+AND\s+(?P<ncol>[A-Za-z_]\w*)\s+IS\s+(?P<not>NOT\s+)?NULL\s*$",
-    re.IGNORECASE,
-)
-
-_W_OR_RANGE = re.compile(
-    rf"^\s*[A-Za-z_]\w*\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}"
-    rf"(?:\s+OR\s+[A-Za-z_]\w*\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT})+\s*$",
-    re.IGNORECASE,
-)
 _OR_SPLIT = re.compile(r"\s+OR\s+", re.IGNORECASE)
 _AND_SPLIT = re.compile(r"\s+AND\s+", re.IGNORECASE)
 #: a conjunct CUT SHORT by the split: "col BETWEEN lit" missing its
@@ -206,10 +185,22 @@ _AND_SPLIT = re.compile(r"\s+AND\s+", re.IGNORECASE)
 _BTW_DANGLING = re.compile(rf"\bBETWEEN\s+{_LIT}\s*$", re.IGNORECASE)
 
 
+def _split_top(text: str, sep: "re.Pattern") -> list:
+    """Split on ``sep`` outside string literals: a position is inside
+    a literal iff an odd number of quotes precede it (SQL doubles an
+    embedded quote, which keeps the parity exact)."""
+    out, start = [], 0
+    for m in sep.finditer(text):
+        if text.count("'", 0, m.start()) % 2 == 0:
+            out.append(text[start:m.start()])
+            start = m.end()
+    return out + [text[start:]]
+
+
 def _split_and(wtext: str) -> list:
     """Split a WHERE on conjunction ANDs, stitching back the AND that
     belongs to a BETWEEN (``v BETWEEN 100 AND 300`` is ONE atom)."""
-    raw = _AND_SPLIT.split(wtext)
+    raw = _split_top(wtext, _AND_SPLIT)
     out, i = [], 0
     while i < len(raw):
         p = raw[i]
@@ -222,92 +213,90 @@ def _split_and(wtext: str) -> list:
     return out
 
 
-def _parse_conjrange(wtext: str) -> "tuple | None":
-    """Parse ``m1 = … AND m2 IN (…) AND col <range>`` — ≥2 eq/IN atoms
-    on DISTINCT columns plus exactly ONE range/BETWEEN atom, in any
-    order (the 1+1 shapes keep their dedicated eqrange/inrange kinds).
-    Returns ``(members, (rng_col, lo, hi, lo_strict, hi_strict))`` or
+#: item kinds the range/hybrid provers (and composite GROUP BY) serve
+_RANGE_ITEMS = ("group", "count", "sum", "avg", "min", "max")
+#: ``where`` kinds that carry a range window
+_RANGED = ("range", "eqrange", "inrange", "orrange", "conjrange", "rangenull")
+
+
+def _atom(text: str) -> "tuple | None":
+    """One WHERE atom: ``("eq", col, raw)``, ``("in", col, [raw, …])``,
+    ``("range", col, lo, hi, lo_strict, hi_strict)`` (a None bound is
+    open) or ``("isnull", col, is_not)`` — raw literal strings — else
     None."""
-    parts = _split_and(wtext)
-    if len(parts) < 3:
-        return None
-    members, rng, seen = [], None, set()
-    for p in parts:
-        if (em := _W_EQ.match(p)) is not None:
-            col, vals = em.group("col"), [em.group("val")]
-        elif (im_ := _W_IN.match(p)) is not None:
-            col = im_.group("col")
-            vals = [v.group(0) for v in _LIT_RE.finditer(im_.group("vals"))]
-        elif (cm := _W_CMP.match(p)) is not None:
-            if rng is not None:
-                return None  # two ranges: scan decides
-            op, val = cm.group("op"), cm.group("val")
-            rng = (cm.group("col"),) + (
-                (None, val, False, op == "<")
-                if op in ("<", "<=")
-                else (val, None, op == ">", False)
-            )
-            continue
-        elif (bm := _W_BETWEEN.match(p)) is not None:
-            if rng is not None:
-                return None
-            rng = (bm.group("col"), bm.group("lo"), bm.group("hi"),
-                   False, False)
-            continue
-        else:
-            return None
-        if col.lower() in seen:
-            return None
-        seen.add(col.lower())
-        members.append((col, vals))
-    if rng is None or len(members) < 2 or rng[0].lower() in seen:
-        return None
-    return members, rng
+    if (m := _W_EQ.match(text)) is not None:
+        return ("eq", m["col"], m["val"])
+    if (m := _W_IN.match(text)) is not None:
+        return ("in", m["col"], _LIT_RE.findall(m["vals"]))
+    if (m := _W_CMP.match(text)) is not None:
+        op, val = m["op"], m["val"]
+        if op in ("<", "<="):
+            return ("range", m["col"], None, val, False, op == "<")
+        return ("range", m["col"], val, None, op == ">", False)
+    if (m := _W_BETWEEN.match(text)) is not None:
+        return ("range", m["col"], m["lo"], m["hi"], False, False)
+    if (m := _W_NULL.match(text)) is not None:
+        return ("isnull", m["col"], m["not"] is not None)
+    return None
 
 
-def _parse_conj(wtext: str) -> "list | None":
-    """Parse a conjunction of ≥2 eq / IN atoms on DISTINCT columns —
-    ``day = 'd1' AND source IN ('web','api')`` — the multi-component
-    restriction of a multi-column partition spec. Returns
-    ``[(col, [raw literals]), …]`` or None (any non-eq/IN atom, a
-    repeated column, or a literal containing ' AND ' that the naive
-    split corrupts simply fails to match → the caller scans)."""
-    parts = _split_and(wtext)
-    if len(parts) < 2:
-        return None
-    out, seen = [], set()
-    for p in parts:
-        if (em := _W_EQ.match(p)) is not None:
-            col, vals = em.group("col"), [em.group("val")]
-        elif (im_ := _W_IN.match(p)) is not None:
-            col = im_.group("col")
-            vals = [v.group(0) for v in _LIT_RE.finditer(im_.group("vals"))]
-        else:
-            return None
-        if col.lower() in seen:
-            return None  # repeated column: scan decides
-        seen.add(col.lower())
-        out.append((col, vals))
-    return out
+def _parse_where(wtext: str) -> "tuple | None":
+    """The conjunct grammar. A WHERE is one atom (:func:`_atom`, whose
+    tuple it returns), one OR of two or more BETWEENs on one column
+    (``("orrange", col, [(lo, hi), …])``), or an AND of atoms, in any
+    order, named by its atom set — members are eq/IN atoms on distinct
+    columns, as ``(col, [raw, …])``:
 
-#: Conjunctive dashboard shape: partition equality AND one range —
-#: "COUNT(*) WHERE day = '2026-08-01' AND latency > 500". Strictly
-#: eq-first (the reverse order refuses to the scan).
-_W_EQ_RANGE = re.compile(
-    rf"^\s*(?P<ecol>[A-Za-z_]\w*)\s*=\s*(?P<eval>{_LIT})\s+AND\s+"
-    rf"(?:(?P<col>[A-Za-z_]\w*)\s*(?P<op><=|>=|<|>)\s*(?P<val>{_LIT})"
-    rf"|(?P<bcol>[A-Za-z_]\w*)\s+BETWEEN\s+(?P<blo>{_LIT})\s+AND\s+(?P<bhi>{_LIT}))\s*$",
-    re.IGNORECASE,
-)
-#: Conjunctive IN-membership AND one range — "COUNT(*) WHERE day IN
-#: ('2026-08-01', '2026-08-02') AND latency > 500". Strictly IN-first.
-_W_IN_RANGE = re.compile(
-    rf"^\s*(?P<icol>[A-Za-z_]\w*)\s+IN\s*\(\s*"
-    rf"(?P<ivals>{_LIT}(?:\s*,\s*{_LIT})*)\s*\)\s+AND\s+"
-    rf"(?:(?P<col>[A-Za-z_]\w*)\s*(?P<op><=|>=|<|>)\s*(?P<val>{_LIT})"
-    rf"|(?P<bcol>[A-Za-z_]\w*)\s+BETWEEN\s+(?P<blo>{_LIT})\s+AND\s+(?P<bhi>{_LIT}))\s*$",
-    re.IGNORECASE,
-)
+    - members only: ``("conj", [member, …])``;
+    - one member + a NULL atom: ``("eqnull", col, [raw, …], ncol,
+      is_not)``; a range + a NULL atom: ``("rangenull", col, lo, hi,
+      lo_strict, hi_strict, ncol, is_not)``;
+    - one eq / one IN + a range: ``("eqrange", col, raw, lo, hi,
+      lo_strict, hi_strict, rcol)`` / ``("inrange", col, [raw, …], …)``;
+      several members + a range: ``("conjrange", [member, …], lo, hi,
+      lo_strict, hi_strict, rcol)``.
+
+    Every other atom set — two ranges, two NULL atoms, a repeated
+    member column, members with both a range and a NULL atom — returns
+    None. ANDs and ORs inside string literals never split."""
+    one = _atom(wtext)
+    if one is not None:
+        return one
+    ors = [_W_BETWEEN.match(p) for p in _split_top(wtext, _OR_SPLIT)]
+    if len(ors) > 1 and None not in ors:
+        if len({b["col"] for b in ors}) > 1:
+            return None  # disjuncts on different columns: scan
+        return ("orrange", ors[0]["col"], [(b["lo"], b["hi"]) for b in ors])
+    atoms = [_atom(p) for p in _split_and(wtext)]
+    if None in atoms:
+        return None
+    members = [
+        (a[1], [a[2]] if a[0] == "eq" else a[2])
+        for a in atoms if a[0] in ("eq", "in")
+    ]
+    ranges = [a[1:] for a in atoms if a[0] == "range"]
+    nulls = [a[1:] for a in atoms if a[0] == "isnull"]
+    if (
+        len({c.lower() for c, _v in members}) < len(members)
+        or len(ranges) > 1
+        or len(nulls) > 1
+    ):
+        return None
+    if nulls:
+        if ranges and not members:
+            return ("rangenull",) + ranges[0] + nulls[0]
+        if len(members) == 1 and not ranges:
+            return ("eqnull",) + members[0] + nulls[0]
+        return None
+    if not ranges:
+        return ("conj", members)
+    rcol, *bounds = ranges[0]  # member kinds carry the window column last
+    if len(members) > 1:
+        return ("conjrange", members, *bounds, rcol)
+    kind, col, raw = next(a for a in atoms if a[0] in ("eq", "in"))
+    return (kind + "range", col, raw, *bounds, rcol)
+
+
 # keywords that must not be mistaken for a bare select column (the
 # items split sees only commas, so these cannot appear there anyway,
 # but guard the bare-column path against e.g. "SELECT all FROM t")
@@ -320,11 +309,13 @@ _KEYWORDS = {
 def parse_metadata_select(sql: str) -> "dict | None":
     """Parse ``sql`` against the strict metadata-answerable grammar.
     Returns ``{"table", "items": [(kind, col, alias)], "where",
-    "group_by"}`` — kind is ``count``/``min``/``max``/``group`` (col
-    is None for count, the grouped column for ``group``); ``where`` is
-    ``None``, ``("eq", col, raw)`` or ``("range", col, lo, hi,
-    lo_strict, hi_strict)`` with raw literal strings — or ``None`` if
-    the statement is not provably metadata-answerable."""
+    "group_by", "having", "order_by", "limit", "as_of"}`` — kind is
+    ``count``/``countcol``/``cdistinct``/``sum``/``avg``/``min``/
+    ``max``/``approx``/``quantile`` or ``group`` (col is None for
+    count, the grouped column for ``group``); ``where`` is ``None`` or
+    :func:`_parse_where`'s tuple (``("eq", col, raw)``, ``("range",
+    col, lo, hi, lo_strict, hi_strict)``, …) with raw literal strings —
+    or ``None`` if the statement is not provably metadata-answerable."""
     m = _STMT.match(sql)
     if not m:
         return None
@@ -435,117 +426,10 @@ def parse_metadata_select(sql: str) -> "dict | None":
         as_of = {"timestamp": m.group("asof_ts")}
     where = None
     if m.group("where") is not None:
-        wtext = m.group("where")
-        if (em := _W_EQ.match(wtext)) is not None:
-            where = ("eq", em.group("col"), em.group("val"))
-        elif (im_ := _W_IN.match(wtext)) is not None:
-            vals = [v.group(0) for v in _LIT_RE.finditer(im_.group("vals"))]
-            where = ("in", im_.group("col"), vals)
-        elif (cm := _W_CMP.match(wtext)) is not None:
-            op, val = cm.group("op"), cm.group("val")
-            if op in ("<", "<="):
-                where = ("range", cm.group("col"), None, val, False, op == "<")
-            else:
-                where = ("range", cm.group("col"), val, None, op == ">", False)
-        elif (bm := _W_BETWEEN.match(wtext)) is not None:
-            where = (
-                "range",
-                bm.group("col"),
-                bm.group("lo"),
-                bm.group("hi"),
-                False,
-                False,
-            )
-        elif (nm := _W_NULL.match(wtext)) is not None:
-            where = ("isnull", nm.group("col"), nm.group("not") is not None)
-        elif (enm := _W_EQ_NULL.match(wtext)) is not None:
-            where = (
-                "eqnull",
-                enm.group("ecol"),
-                [enm.group("eval")],
-                enm.group("col"),
-                enm.group("not") is not None,
-            )
-        elif (inm := _W_IN_NULL.match(wtext)) is not None:
-            where = (
-                "eqnull",
-                inm.group("icol"),
-                [v.group(0) for v in _LIT_RE.finditer(inm.group("ivals"))],
-                inm.group("col"),
-                inm.group("not") is not None,
-            )
-        elif (rnm := _W_RANGE_NULL.match(wtext)) is not None:
-            if rnm.group("col") is not None:
-                op, val = rnm.group("op"), rnm.group("val")
-                rng = (
-                    (None, val, False, op == "<")
-                    if op in ("<", "<=")
-                    else (val, None, op == ">", False)
-                )
-                rcol = rnm.group("col")
-            else:
-                rng = (rnm.group("blo"), rnm.group("bhi"), False, False)
-                rcol = rnm.group("bcol")
-            where = ("rangenull", rcol) + rng + (
-                rnm.group("ncol"),
-                rnm.group("not") is not None,
-            )
-        elif _W_OR_RANGE.match(wtext) is not None:
-            col0, ivs = None, []
-            for part in _OR_SPLIT.split(wtext):
-                pm = _W_BETWEEN.match(part)
-                if pm is None:
-                    return None
-                if col0 is None:
-                    col0 = pm.group("col")
-                elif pm.group("col") != col0:
-                    return None  # disjuncts on different columns: scan
-                ivs.append((pm.group("lo"), pm.group("hi")))
-            where = ("orrange", col0, ivs)
-        elif (erm := _W_EQ_RANGE.match(wtext)) is not None:
-            if erm.group("col") is not None:
-                op, val = erm.group("op"), erm.group("val")
-                rng = (
-                    (None, val, False, op == "<")
-                    if op in ("<", "<=")
-                    else (val, None, op == ">", False)
-                )
-            else:
-                rng = (erm.group("blo"), erm.group("bhi"), False, False)
-            where = (
-                "eqrange",
-                erm.group("ecol"),
-                erm.group("eval"),
-            ) + rng + (erm.group("bcol") or erm.group("col"),)
-        elif (irm := _W_IN_RANGE.match(wtext)) is not None:
-            if irm.group("col") is not None:
-                op, val = irm.group("op"), irm.group("val")
-                rng = (
-                    (None, val, False, op == "<")
-                    if op in ("<", "<=")
-                    else (val, None, op == ">", False)
-                )
-            else:
-                rng = (irm.group("blo"), irm.group("bhi"), False, False)
-            vals = [
-                v.group(0) for v in _LIT_RE.finditer(irm.group("ivals"))
-            ]
-            where = (
-                "inrange",
-                irm.group("icol"),
-                vals,
-            ) + rng + (irm.group("bcol") or irm.group("col"),)
-        elif (cr := _parse_conjrange(wtext)) is not None:
-            # ≥2 eq/IN atoms + ONE range: the multi-component hybrid
-            # shape (day = x AND source = y AND cents BETWEEN a AND b)
-            members, rng = cr
-            where = ("conjrange", members) + rng[1:] + (rng[0],)
-        elif (conj := _parse_conj(wtext)) is not None:
-            # conjunction of eq/IN atoms on DISTINCT columns — each
-            # restricts its own directory level of a multi-column spec
-            where = ("conj", conj)
-        else:
+        where = _parse_where(m.group("where"))
+        if where is None:
             return None  # unsupported predicate: scan
+    kind = where[0] if where is not None else None
     if gcols is not None:
         if n_bare != len(gcols):
             return None  # every grouped column must appear in the list
@@ -554,60 +438,31 @@ def parse_metadata_select(sql: str) -> "dict | None":
             # COUNT(DISTINCT pcol) GROUP BY pcol (= 1 per group) would
             # be provable — not worth a special case; scan decides
             return None
-        if len(gcols) > 1:
-            # composite GROUP BY: the multi-group answerer serves
-            # count/sum/avg/min/max under no WHERE or an eq/IN/conj
-            # partition restriction; everything else scans
-            if any(
-                k not in ("group", "count", "sum", "avg", "min", "max")
-                for k, _, _ in items
-            ):
-                return None
-            if where is not None and where[0] not in ("eq", "in", "conj"):
-                return None
-        elif where is not None and where[0] not in (
-            "eq", "in", "range", "inrange", "orrange", "isnull", "eqnull",
-            "conj", "conjrange",
+        if len(gcols) > 1 and (
+            kind not in (None, "eq", "in", "conj")
+            or any(k not in _RANGE_ITEMS for k, _, _ in items)
         ):
-            return None  # eqrange + GROUP BY: the member IS the group
-        if where is not None and where[0] in ("isnull", "eqnull"):
-            # grouped NULL predicate: per-group null/non-null COUNTs
-            # only — other aggregates over the null-filtered rows are
-            # cross-column unprovable; scan decides
-            if any(k not in ("group", "count") for k, _, _ in items):
-                return None
-        if where is not None and where[0] in (
-            "range", "inrange", "orrange", "conjrange",
-        ):
-            # range / disjunctive windows + GROUP BY parse ONLY when
-            # the grouped hybrid tier can serve every item
-            # (count/sum/avg/min/max); the pure-metadata answerer
-            # refuses them at answer time
-            if any(
-                k not in ("group", "count", "sum", "avg", "min", "max")
-                for k, _, _ in items
-            ):
-                return None
-    if where is not None and where[0] in (
-        "range", "eqrange", "inrange", "orrange", "conjrange"
-    ):
-        # The MANIFEST proof covers COUNT(*) only (clipped extremes /
-        # range-restricted sketches are unprovable), but any list of
-        # COUNT(*)/SUM/AVG/MIN/MAX items still PARSES so the hybrid
-        # boundary-scan tier can serve it — any item list via one
-        # shared range_multi_pruned pass; the metadata answerer
-        # refuses them at answer time. Sketch items (NDV/quantile/COUNT(col))
-        # refuse here as before: no prover serves them under a range.
-        if any(
-            k in ("approx", "quantile", "countcol", "cdistinct")
-            for k, _, _ in items
-        ):
+            # composite GROUP BY: count/sum/avg/min/max under no WHERE
+            # or a partition restriction; everything else scans
             return None
-    if where is not None and where[0] == "rangenull":
-        # range AND NULL-predicate conjunction: COUNT(*) only (the
-        # hybrid tier's cross-column proof covers nothing else)
-        if any(k != "count" for k, _, _ in items):
+        if kind in ("eqrange", "rangenull"):
+            # eqrange: the member IS the group; range AND NULL counts
+            # are served ungrouped only
             return None
+        if kind in ("isnull", "eqnull") and any(
+            k not in ("group", "count") for k, _, _ in items
+        ):
+            # grouped NULL predicate: per-group COUNTs only — other
+            # aggregates over the null-filtered rows are cross-column
+            # unprovable
+            return None
+    if kind in _RANGED and any(k not in _RANGE_ITEMS for k, _, _ in items):
+        # under a window only count/sum/avg/min/max are served (the
+        # hybrid provers); sketches, COUNT(col) and COUNT(DISTINCT)
+        # have no prover there
+        return None
+    if kind == "rangenull" and any(k != "count" for k, _, _ in items):
+        return None  # range AND NULL predicate: COUNT(*) only
     having = None
     if m.group("hcol") is not None:
         if gcol is None:
@@ -664,7 +519,10 @@ def _typed_literal(raw: str, coltype: str):
     manifest-rendering value it compares against — or raise
     ``_Refuse`` on a provability mismatch (quoted literal vs numeric
     column, bare number vs string column, timestamp columns whose ISO
-    'T' rendering is not literal-comparable, …)."""
+    'T' rendering is not literal-comparable, …). An open (None) bound
+    stays None."""
+    if raw is None:
+        return None
     numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
     if raw.startswith("'"):
         if coltype not in ("string", "date"):
@@ -702,39 +560,6 @@ def _sum_avg_value(kind: str, pair: "tuple"):
 
 class _Refuse(Exception):
     """Internal: this statement is not provably metadata-answerable."""
-
-
-def _apply_having(out: DataFrame, parsed: dict) -> DataFrame:
-    """``HAVING <output alias> <op> <numeric lit>`` on a grouped
-    metadata answer. Provable for the same reason ORDER BY/LIMIT is
-    (z63): the FULL group set is assembled before the filter, so
-    filtering the local frame is exactly the engine's post-aggregate
-    HAVING. Strictly numeric aggregate aliases — a HAVING on the group
-    column or a MIN/MAX rendering (typed date/string comparisons)
-    refuses to the scan; NULL aggregates drop, SQL semantics."""
-    having = parsed.get("having")
-    if having is None:
-        return out
-    from pyspark.sql import functions as F
-
-    hcol, hop, hval = having
-    numeric = {
-        a
-        for k, _, a in parsed["items"]
-        if k in ("count", "countcol", "sum", "avg", "approx", "quantile")
-    }
-    if hcol not in numeric:
-        raise _Refuse()
-    c = F.col(hcol)
-    cond = {
-        "=": c == hval,
-        "<>": c != hval,
-        "<": c < hval,
-        "<=": c <= hval,
-        ">": c > hval,
-        ">=": c >= hval,
-    }[hop]
-    return out.filter(cond)
 
 
 def answer_from_manifest(
@@ -809,8 +634,9 @@ def _resolve_table(parsed: dict, tables: dict, version):
     statement pins the version it read, so every later read of the same
     statement sees that snapshot whatever commits land meanwhile.
     ``field_types`` are LOGICAL: the rename chain applied to the
-    recorded spark_schema, dropped columns gone. Returns ``(path,
-    version, manifest, field_types, spec_types)``."""
+    recorded spark_schema, dropped columns gone; ``spec_types`` maps
+    every partition-spec component to its simple type. Returns
+    ``(path, version, manifest, field_types, spec_types)``."""
     path = tables[parsed["table"]]
     if parsed["as_of"] is not None:
         if version is not None:
@@ -821,8 +647,6 @@ def _resolve_table(parsed: dict, tables: dict, version):
         if "version" in parsed["as_of"]:
             version = parsed["as_of"]["version"]
         else:
-            from .snapshot import resolve_as_of
-
             version = resolve_as_of(path, parsed["as_of"]["timestamp"])
     man = read_manifest(path, version)
     if version is None:
@@ -838,19 +662,7 @@ def _resolve_table(parsed: dict, tables: dict, version):
         name = _logical_name(renames, f.name)
         if live is None or name in live:
             field_types[name] = f.dataType
-    return path, version, man, field_types, _spec_types_of(meta)
-
-
-def _spec_types_of(schema_meta: dict) -> dict:
-    """``{spec column: simple type string}`` for the table's partition
-    spec — one entry for a legacy single-column table, one per
-    component for a multi-column spec. Grammar checks that used to be
-    ``col == pcol`` become ``col in spec_types``: eq/IN/GROUP BY are
-    provable on ANY spec component (the manifest restriction and
-    grouping machinery matches the component's own directory level)."""
-    from .snapshot import _spec_meta
-
-    return dict(_spec_meta(schema_meta))
+    return path, version, man, field_types, dict(_spec_meta(meta))
 
 
 def _local_rows_df(spark, rows, schema) -> DataFrame:
@@ -906,62 +718,142 @@ def _answer(spark, sql, tables, version) -> "DataFrame | None":
     path, version, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    where = parsed["where"]
-    if where is not None and where[0] in ("range", "eqrange"):
-        meta = man.get("schema") or {}
-        answer = (
-            _answer_range_count if where[0] == "range"
-            else _answer_eq_range_count
-        )
-        return answer(
-            spark, parsed, path, meta.get("partition_col"),
-            meta.get("partition_type") or "string", field_types, meta,
-            version,
-        )
-    restrict, null_pred = _restriction(where, spec_types)
+    _check_outputs(parsed)
+    restrict, window, null_pred = _restriction(
+        parsed["where"], spec_types, field_types
+    )
     groups = _group_cols(parsed)
-    if any(g not in spec_types for g in groups):
-        raise _Refuse()  # only spec components group at the manifest
     items = [(k, c) for k, c, _a in parsed["items"] if k != "group"]
     try:
-        rows = _manifest_fold(
-            man, path,
-            items if null_pred is None else _null_items(items, *null_pred),
-            restrict, groups,
-        )
+        if window is not None:
+            # the manifest proves one window for COUNT(*) only: every
+            # restricted partition fully inside or fully outside it
+            col, windows = window
+            if (
+                groups or null_pred is not None or len(windows) != 1
+                or any(k != "count" for k, _c in items)
+            ):
+                raise _Refuse()  # boundary scans: the hybrid tier
+            n = manifest_range_count(
+                path, col, **_bounds(windows[0]), version=version,
+                where_partition=restrict,
+            )
+            if n is None:
+                raise _Refuse()  # partial overlap / legacy stats: scan
+            rows = [((), [n] * len(items))]
+        else:
+            if any(g not in spec_types for g in groups):
+                raise _Refuse()  # only spec components group here
+            rows = _manifest_fold(
+                man, path,
+                items if null_pred is None
+                else _null_items(items, *null_pred),
+                restrict, groups,
+            )
+            if null_pred is not None:
+                rows = _null_rows(rows, items, null_pred[1], bool(groups))
+            rows = [(g, vals) for g, _n, vals in rows]
     except ValueError:
         # mixed spec, tombstones under a value item, missing stats or
         # sketch, a dropped/unknown column: not provable → scan
         raise _Refuse()
-    if null_pred is not None:
-        rows = _null_rows(rows, items, null_pred[1], bool(groups))
-    return _assemble_grouped(
-        spark, parsed, [(g, vals) for g, _n, vals in rows], spec_types,
-        field_types,
+    return _assemble_grouped(spark, parsed, rows, spec_types, field_types)
+
+
+def _where_parts(where) -> tuple:
+    """A ``where`` tuple back into its atoms: ``(members [(col, [raw,
+    …])], window (col, [(lo, hi, lo_strict, hi_strict), …]) | None,
+    null predicate (col, is_not) | None)``."""
+    kind, *a = where or (None,)
+    if kind in ("eq", "in"):
+        return [(a[0], [a[1]] if kind == "eq" else a[1])], None, None
+    if kind == "conj":
+        return a[0], None, None
+    if kind == "isnull":
+        return [], None, tuple(a)
+    if kind == "eqnull":
+        return [tuple(a[:2])], None, tuple(a[2:])
+    if kind in ("range", "rangenull"):
+        return [], (a[0], [tuple(a[1:5])]), tuple(a[5:]) or None
+    if kind == "orrange":
+        return [], (a[0], [(lo, hi, False, False) for lo, hi in a[1]]), None
+    if kind in ("eqrange", "inrange", "conjrange"):
+        *head, lo, hi, lo_strict, hi_strict, rcol = a
+        members = head[0] if kind == "conjrange" else [
+            (head[0], [head[1]] if kind == "eqrange" else head[1])
+        ]
+        return members, (rcol, [(lo, hi, lo_strict, hi_strict)]), None
+    return [], None, None
+
+
+def _restriction(where, spec_types: dict, field_types: dict):
+    """The one WHERE spec of both tiers and of EXPLAIN: ``(restriction,
+    window, null predicate)``.
+
+    - restriction: the eq/IN members typed against the partition spec,
+      ``[(spec col, [members]), …]`` — snapshot._restrict_parts applies
+      them conjunctively, each at its component's own directory level —
+      or None;
+    - window: ``(col, [(lo, hi, lo_strict, hi_strict), …])`` with the
+      literals typed to manifest renderings; OR-windows merge into
+      disjoint closed intervals (an empty ``lo > hi`` BETWEEN
+      contributes nothing) — or None;
+    - null predicate: ``(col, is_not)`` or None.
+
+    Raises _Refuse on a non-spec member column, an unknown window
+    column or a literal the column's type cannot compare."""
+    members, window, null_pred = _where_parts(where)
+    restrict = _coerce_conj(members, spec_types) or None
+    if window is not None:
+        col, windows = window
+        t = _col_type(col, spec_types, field_types)
+        windows = [
+            (_typed_literal(lo, t), _typed_literal(hi, t), ls, hs)
+            for lo, hi, ls, hs in windows
+        ]
+        if len(windows) > 1:
+            merged: list = []
+            for lo, hi, _ls, _hs in sorted(windows):
+                if lo > hi:
+                    continue
+                if merged and lo <= merged[-1][1]:
+                    merged[-1] = (merged[-1][0], max(merged[-1][1], hi),
+                                  False, False)
+                else:
+                    merged.append((lo, hi, False, False))
+            windows = merged
+        window = (col, windows)
+    return restrict, window, null_pred
+
+
+def _bounds(w: tuple) -> dict:
+    return dict(zip(("lo", "hi", "lo_strict", "hi_strict"), w))
+
+
+def _col_type(col: str, spec_types: dict, field_types: dict) -> str:
+    """A referenced column's simple type (spec components first); an
+    unknown column refuses — the scan engine reports it."""
+    t = spec_types.get(col) or (
+        field_types[col].simpleString() if col in field_types else ""
     )
+    if not t:
+        raise _Refuse()
+    return t
 
 
-def _restriction(where, spec_types: dict):
-    """The one WHERE normaliser of the pure-metadata path: ``(conjuncts,
-    null predicate)``. eq, IN and conj become the typed ``[(spec col,
-    [members]), …]`` restriction that snapshot._restrict_parts applies
-    at each component's own directory level; ``col IS [NOT] NULL``
-    (optionally member-restricted) becomes ``(col, is_not)``. Range,
-    OR-window and range+NULL shapes belong to the range/hybrid tiers."""
-    if where is None:
-        return None, None
-    shape = where[0]
-    if shape == "isnull":
-        return None, (where[1], where[2])
-    if shape == "eqnull":
-        return _coerce_conj([where[1:3]], spec_types), (where[3], where[4])
-    if shape == "eq":
-        return _coerce_conj([(where[1], [where[2]])], spec_types), None
-    if shape == "in":
-        return _coerce_conj([where[1:3]], spec_types), None
-    if shape == "conj":
-        return _coerce_conj(where[1], spec_types), None
-    raise _Refuse()  # hybrid-only: the boundary needs a scan
+def _check_outputs(parsed: dict) -> None:
+    """``HAVING`` must name a numeric aggregate alias (a MIN/MAX
+    rendering or the group column would compare typed dates/strings)
+    and ``ORDER BY`` an output alias — checked before anything is
+    computed, so a refusal never throws a boundary scan away."""
+    kinds = {a: k for k, _c, a in parsed["items"]}
+    having, order_by = parsed["having"], parsed["order_by"]
+    if having is not None and kinds.get(having[0]) not in (
+        "count", "countcol", "sum", "avg", "approx", "quantile"
+    ):
+        raise _Refuse()
+    if order_by is not None and order_by[0] not in kinds:
+        raise _Refuse()
 
 
 #: what a same-column aggregate is under ``col IS NULL``: no value
@@ -1013,102 +905,6 @@ def _group_cols(parsed: dict) -> list:
     return [] if gb is None else [gb] if isinstance(gb, str) else list(gb)
 
 
-def _spark_simple_type(dt) -> str:
-    return dt.simpleString() if dt is not None else ""
-
-
-def _answer_range_count(
-    spark, parsed, path, pcol, ptype, field_types, schema_meta, version
-):
-    if any(k != "count" for k, _, _ in parsed["items"]):
-        raise _Refuse()  # aggregates under a range: hybrid tier / scan
-    _, col, lo_raw, hi_raw, lo_strict, hi_strict = parsed["where"]
-    spec_types = _spec_types_of(schema_meta)
-    if col in spec_types:
-        coltype = spec_types[col]
-    else:
-        coltype = _spark_simple_type(field_types.get(col))
-        if not coltype:
-            raise _Refuse()  # unknown column
-        stats_cols = schema_meta.get("stats_cols") or []
-        if col not in stats_cols:
-            # without recorded stats every partition would need a
-            # footer harvest; the provability contract wants the
-            # steady-state manifest answer, so refuse → scan
-            raise _Refuse()
-    lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-    hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    n = manifest_range_count(
-        path,
-        col,
-        lo=lo,
-        hi=hi,
-        lo_strict=lo_strict,
-        hi_strict=hi_strict,
-        version=version,
-    )
-    if n is None:
-        return None  # partial overlap / legacy stats: real scan
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    fields = [
-        StructField(alias, LongType(), False)
-        for _, _, alias in parsed["items"]
-    ]
-    return _local_rows_df(
-        spark, [tuple(n for _ in parsed["items"])], StructType(fields)
-    )
-
-
-def _conj_where(where: tuple, spec_types: dict):
-    """Unpack a hybrid-tier WHERE — plain ``range``, conjunctive
-    ``eqrange`` (pcol = lit AND range) or ``inrange`` (pcol IN (…)
-    AND range) — into ``(where_partition, range_col, lo_raw, hi_raw,
-    lo_strict, hi_strict)``. The membership side must be A PARTITION
-    SPEC column with coercible literals; anything else refuses
-    (the full scan decides). An IN-list passes the coerced member
-    LIST through ``where_partition`` — `snapshot._eq_targets` expands
-    it to the member directory set, so all four provers restrict
-    their classification to members with no per-member passes."""
-    if where[0] == "eqrange":
-        _, ecol, eraw, lo_raw, hi_raw, lo_strict, hi_strict, col = where
-        etype = spec_types.get(ecol)
-        if etype is None:
-            raise _Refuse()
-        return (
-            (ecol, _coerce_partition_literal(eraw, etype)),
-            col, lo_raw, hi_raw, lo_strict, hi_strict,
-        )
-    if where[0] == "conjrange":
-        _, members, lo_raw, hi_raw, lo_strict, hi_strict, col = where
-        conj = []
-        for mcol, raws in members:
-            mtype = spec_types.get(mcol)
-            if mtype is None:
-                raise _Refuse()
-            conj.append(
-                (
-                    mcol,
-                    sorted(
-                        {_coerce_partition_literal(r, mtype) for r in raws},
-                        key=repr,
-                    ),
-                )
-            )
-        return conj, col, lo_raw, hi_raw, lo_strict, hi_strict
-    if where[0] == "inrange":
-        _, icol, raws, lo_raw, hi_raw, lo_strict, hi_strict, col = where
-        itype = spec_types.get(icol)
-        if itype is None:
-            raise _Refuse()
-        vals = sorted(
-            {_coerce_partition_literal(r, itype) for r in raws}, key=repr
-        )
-        return (icol, vals), col, lo_raw, hi_raw, lo_strict, hi_strict
-    _, col, lo_raw, hi_raw, lo_strict, hi_strict = where
-    return None, col, lo_raw, hi_raw, lo_strict, hi_strict
-
-
 def hybrid_range_count(
     spark: SparkSession,
     sql: str,
@@ -1118,65 +914,105 @@ def hybrid_range_count(
     explain: bool = False,
 ) -> "DataFrame | None":
     """The MIDDLE tier between a metadata answer and a full scan: a
-    range statement — ``SELECT COUNT(*)/SUM(c)/AVG(c)/MIN(c)/MAX(c),
-    … FROM t WHERE col <range>`` with any item list — answered by the
-    hybrid range provers: proven partitions from the manifest, ONLY the
-    boundary scanned. A single window (optionally conjoined with
-    ``pcol = lit`` / ``pcol IN (…)``) runs one
-    :func:`snapshot.range_multi_pruned` pass; OR-windows, GROUP BY
-    pcol, and the NULL-predicate shapes have their own branches below.
-    Returns ``None`` when the statement is none of those shapes
-    (non-range WHERE, unknown table or column) or the literal's type is
-    not manifest-comparable — the caller then falls back to a real
-    scan. Unlike ``answer_from_manifest`` this DOES read data pages
-    (the boundary), so it is a separate, caller-opted tier: the CLI
-    applies it after a metadata refusal and before the full scan."""
+    statement whose WHERE carries a range window or a NULL predicate,
+    answered from the manifest where it proves a partition and by ONE
+    boundary scan per window over the rest. The spec
+    (:func:`_restriction`) routes it:
+
+    - windows (``col <op> lit``, ``BETWEEN``, an OR of BETWEENs on one
+      column), optionally member-restricted (``pcol = lit``, ``pcol IN
+      (…)``, their conjunctions), with any COUNT(*)/SUM/AVG/MIN/MAX
+      list: one :func:`snapshot.range_multi_pruned` pass per merged
+      window — or :func:`snapshot.range_group_multi` under ``GROUP BY
+      pcol`` — and the disjoint windows' values merged with
+      :func:`snapshot._fold_values`;
+    - ``COUNT(*) WHERE col IS [NOT] NULL`` (optionally
+      member-restricted) via :func:`snapshot.null_count_pruned`, and
+      ``COUNT(*) WHERE <range> AND col IS [NOT] NULL`` via
+      :func:`snapshot.range_null_count_pruned` — ungrouped only.
+
+    Returns ``None`` for every other shape, an unknown table or column,
+    a literal the column's type cannot compare, or anything a prover
+    refuses — the caller then falls back to a real scan. Unlike
+    :func:`answer_from_manifest` this DOES read data pages (the
+    boundary), so it is a separate, caller-opted tier: the CLI applies
+    it after a metadata refusal and before the full scan. ``explain``
+    returns :func:`explain_metadata_sql`'s frame instead of the answer,
+    reading no data page."""
     parsed = parse_metadata_select(sql)
     if (
         parsed is None
         or parsed["table"] not in tables
-        or parsed["where"] is None
-        or parsed["where"][0]
-        not in (
-            "range", "eqrange", "inrange", "orrange", "rangenull",
-            "isnull", "eqnull", "conjrange",
-        )
-        or any(
-            k not in ("group", "count", "sum", "avg", "min", "max")
-            for k, _, _ in parsed["items"]
-        )
+        or _where_parts(parsed["where"])[1:] == (None, None)
+        or any(k not in _RANGE_ITEMS for k, _c, _a in parsed["items"])
     ):
         return None
-    if parsed["where"][0] == "rangenull":
-        # range AND NULL-predicate conjunction (COUNT(*) only,
-        # enforced at parse): composed classifier, boundary scanned
-        # with both predicates pushed
-        if parsed["group_by"] is not None:
-            return None
-        return _hybrid_range_null(spark, parsed, tables, version, explain)
-    if parsed["where"][0] in ("isnull", "eqnull"):
-        # NULL-audit COUNT run to completion: provable partitions from
-        # metadata, ONLY the unprovable remainder (tombstones, legacy
-        # entries) scanned — the statement the pure tier must refuse
-        # whole on any such partition
-        return _hybrid_isnull(spark, parsed, tables, version, explain)
-    if parsed["group_by"] is not None:
-        # GROUP BY pcol + range (or IN+range / OR-windows): grouped tier
-        if parsed["where"][0] == "orrange":
-            return _hybrid_group_or_range(
-                spark, parsed, tables, version, explain
-            )
-        if parsed["where"][0] not in ("range", "inrange", "conjrange"):
-            return None  # eqrange + GROUP BY: the member IS the group
-        return _hybrid_group_multi(spark, parsed, tables, version, explain)
-    if any(k == "group" for k, _, _ in parsed["items"]):
-        return None  # bare column without GROUP BY never parses, but guard
-    if parsed["where"][0] == "orrange":
-        # disjunctive windows: one classification + boundary scan PER
-        # merged disjoint interval, combined exactly (any item list)
-        return _hybrid_or_range(spark, parsed, tables, version, explain)
-    # one window, any item list: one classification, one boundary scan
-    return _hybrid_multi(spark, parsed, tables, version, explain)
+    path, version, man, field_types, spec_types = _resolve_table(
+        parsed, tables, version
+    )
+    items = [(k, c) for k, c, _a in parsed["items"] if k != "group"]
+    groups = _group_cols(parsed)
+    try:
+        _check_outputs(parsed)
+        restrict, window, null_pred = _restriction(
+            parsed["where"], spec_types, field_types
+        )
+        for k, c in items:
+            if k != "count":
+                _col_type(c, spec_types, field_types)  # refuse pre-scan
+        if null_pred is not None:
+            if groups or any(k != "count" for k, _c in items):
+                return None  # the null provers count rows, nothing else
+            ncol, is_not = null_pred
+            if window is None:
+                outs = [null_count_pruned(
+                    spark, path, ncol, is_not=is_not, version=version,
+                    where_partition=restrict, explain_only=explain,
+                )]
+            else:
+                (w,) = window[1]  # rangenull: one window, no members
+                outs = [range_null_count_pruned(
+                    spark, path, window[0], ncol, **_bounds(w),
+                    is_not=is_not, version=version, explain_only=explain,
+                )]
+        else:
+            if groups and groups != [
+                (man.get("schema") or {}).get("partition_col")
+            ]:
+                return None  # only the partition column groups here
+            prover = range_group_multi if groups else range_multi_pruned
+            outs = [
+                prover(
+                    spark, path, window[0], items, **_bounds(w),
+                    version=version, where_partition=restrict,
+                    explain_only=explain,
+                )
+                for w in window[1]
+            ]
+        if explain:
+            return _explain_frame(spark, "hybrid", *(
+                sum(o[k] for o in outs)
+                for k in ("meta_partitions", "scanned_partitions",
+                          "scanned_files", "total_files")
+            ))
+        if null_pred is not None:
+            rows = [((), [outs[0]["count"]] * len(items))]
+        elif groups:
+            per_group: dict = {}
+            for o in outs:
+                for g, vals in o["groups"]:
+                    per_group.setdefault(g, []).append(vals)
+            rows = [((g,), _fold_items(items, vs))
+                    for g, vs in per_group.items()]
+        else:
+            rows = [((), _fold_items(items, [o["values"] for o in outs]))]
+        return _assemble_grouped(
+            spark, parsed, rows, spec_types, field_types
+        )
+    except (_Refuse, ValueError):
+        # uncoercible literal, unknown column, mixed spec, sketch or
+        # dropped column, SUM past int64: the scan decides or errors
+        return None
 
 
 def _explain_frame(
@@ -1230,466 +1066,67 @@ def explain_metadata_sql(
     the classification that decides it is pure manifest arithmetic):
 
     - ``tier='metadata'`` — the statement is served entirely from the
-      manifest (zero data pages). ``partitions_metadata`` is the
-      restricted universe (1 for ``pcol = lit``, the present members
-      for ``IN``, all live partitions otherwise).
+      manifest (zero data pages). ``partitions_metadata`` is the live
+      partitions its eq/IN members restrict to (1 for ``pcol = lit``,
+      the present members for ``IN``, all live partitions without
+      members) — whatever range or NULL predicate rides along.
     - ``tier='hybrid'`` — proven partitions answer from metadata and
       ONLY the boundary scans; the row carries the exact
       classification the real execution will use (same code path,
-      scan skipped).
+      scan skipped), summed over the statement's windows.
     - ``tier='scan'`` — the shape refuses both tiers; every live
-      partition (and every file with recorded per-file stats) would
-      be read.
+      partition the members restrict to (and every file with recorded
+      per-file stats) would be read.
 
     The routing is THE SAME code the answering path runs
     (:func:`answer_from_manifest` → :func:`hybrid_range_count` →
-    scan), so EXPLAIN can never drift from execution — pinned by
-    tests that compare these counts against the real provers'."""
-    meta = answer_from_manifest(spark, sql, tables, version=version)
-    parsed = parse_metadata_select(sql)
-    if parsed is not None:
-        path = tables.get(parsed["table"])
+    scan), and the restriction comes from the same spec
+    (:func:`_restriction`), so EXPLAIN can never drift from execution —
+    pinned by tests that compare these counts against the real
+    provers'."""
+    if answer_from_manifest(spark, sql, tables, version=version) is None:
+        hyb = hybrid_range_count(
+            spark, sql, tables, version=version, explain=True
+        )
+        if hyb is not None:
+            return hyb
+        tier = "scan"
     else:
+        tier = "metadata"
+    parsed = parse_metadata_select(sql)
+    if parsed is None:
         # unparseable shape: still attribute the scan to its table so
         # the partition/file counts are honest
-        body, _asof = extract_as_of(sql)
+        body, as_of = extract_as_of(sql)
         m = re.search(r"\bFROM\s+([A-Za-z_]\w*)", body, re.IGNORECASE)
-        path = tables.get(m.group(1)) if m else None
-
-    def _pin() -> "int | str | None":
-        v = version
-        if parsed is not None and parsed.get("as_of") is not None and v is None:
-            if "version" in parsed["as_of"]:
-                v = parsed["as_of"]["version"]
-            else:
-                from .snapshot import resolve_as_of
-
-                v = resolve_as_of(path, parsed["as_of"]["timestamp"])
-        return v
-
-    def _universe() -> int:
-        # the live-partition count the statement's WHERE restricts to
-        if path is None:
-            return 0
-        man = read_manifest(path, _pin())
-        schema_meta = man.get("schema") or {}
-        spec_types = _spec_types_of(schema_meta)
-        live = man.get("partitions") or {}
-        where = parsed.get("where") if parsed is not None else None
-        if (
-            where is not None
-            and where[0] in ("eq", "in")
-            and where[1] in spec_types
-        ):
-            from .snapshot import _restrict_parts
-
-            wtype = spec_types[where[1]]
-            raws = [where[2]] if where[0] == "eq" else list(where[2])
-            try:
-                vals = [_coerce_partition_literal(r, wtype) for r in raws]
-                return len(
-                    _restrict_parts(
-                        live, schema_meta, where_partition=(where[1], vals)
-                    )
-                )
-            except (_Refuse, ValueError):
-                # uncoercible literal / retired-spec directories: the
-                # estimate degrades to the full live count, it never
-                # crashes an EXPLAIN
-                return len(live)
-        if where is not None and where[0] in ("conj", "conjrange"):
-            # multi-component restriction: the universe is the
-            # conjunct-restricted member set
-            from .snapshot import _restrict_parts
-
-            try:
-                conj = _coerce_conj(where[1], spec_types)
-                return len(
-                    _restrict_parts(
-                        live, schema_meta, where_partition=conj
-                    )
-                )
-            except (_Refuse, ValueError):
-                return len(live)
-        return len(live)
-
-    if meta is not None:
-        return _explain_frame(spark, "metadata", _universe(), 0, 0, 0)
-    hyb = hybrid_range_count(
-        spark, sql, tables, version=version, explain=True
-    )
-    if hyb is not None:
-        return hyb
-    # full scan: every live partition; files where per-file stats are
-    # recorded (unrecorded directories read whole either way)
-    n_files = 0
-    if path is not None:
-        man = read_manifest(path, _pin())
-        from .snapshot import FILES_KEY
-
-        n_files = sum(
-            len((s or {}).get(FILES_KEY) or {})
-            for s in (man.get("stats") or {}).values()
-        )
-    return _explain_frame(spark, "scan", 0, _universe(), n_files, n_files)
-
-
-def _hybrid_multi(spark, parsed, tables, version, explain=False):
-    """Single-window branch of :func:`hybrid_range_count`: ``SELECT
-    COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE col <range>``
-    with one or more items (the dashboard statement) served by ONE
-    :func:`snapshot.range_multi_pruned` pass — one partition
-    classification, one boundary scan shared by every aggregate.
-    Refuses (None → full scan) on non-partition equality, unknown
-    columns and type-incomparable literals."""
-    path, version, man, field_types, spec_types = _resolve_table(
+        parsed = {
+            "table": m.group(1) if m else None, "where": None,
+            "as_of": as_of if version is None else None,
+        }
+    if parsed["table"] not in tables:
+        return _explain_frame(spark, tier, 0, 0, 0, 0)
+    _path, _v, man, field_types, spec_types = _resolve_table(
         parsed, tables, version
     )
-    pcol = (man.get("schema") or {}).get("partition_col")
+    live = man.get("partitions") or {}
     try:
-        eq, col, lo_raw, hi_raw, lo_strict, hi_strict = _conj_where(
-            parsed["where"], spec_types
-        )
-    except _Refuse:
-        return None  # non-spec membership / uncoercible member: scan
-    coltype = (
-        spec_types[col]
-        if col in spec_types
-        else _spark_simple_type(field_types.get(col))
+        restrict = _restriction(parsed["where"], spec_types, field_types)[0]
+        universe = len(_restrict_parts(
+            live, man.get("schema") or {}, where_partition=restrict
+        ))
+    except (_Refuse, ValueError):
+        # uncoercible literal / retired-spec directories: the estimate
+        # degrades to the full live count, it never crashes an EXPLAIN
+        universe = len(live)
+    if tier == "metadata":
+        return _explain_frame(spark, tier, universe, 0, 0, 0)
+    # full scan: files where per-file stats are recorded (unrecorded
+    # directories read whole either way)
+    n_files = sum(
+        len((s or {}).get(FILES_KEY) or {})
+        for s in (man.get("stats") or {}).values()
     )
-    if not coltype:
-        return None  # unknown column: let the scan engine error
-    try:
-        lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-        hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    except _Refuse:
-        return None  # type-incomparable literal: full scan decides
-    # validate every aggregated column BEFORE the prover runs — an
-    # unknown column must refuse without paying a boundary scan
-    for kind, agg_col, _alias in parsed["items"]:
-        if kind != "count" and agg_col != pcol and agg_col not in field_types:
-            return None
-    from .snapshot import range_multi_pruned
-
-    try:
-        out = range_multi_pruned(
-            spark, path, col,
-            [(k, c) for k, c, _a in parsed["items"]],
-            lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
-            version=version, where_partition=eq, explain_only=explain,
-        )
-        if explain:
-            return _explain_frame(
-                spark, "hybrid",
-                out["meta_partitions"], out["scanned_partitions"],
-                out["scanned_files"], out["total_files"],
-            )
-        return _assemble_grouped(
-            spark, parsed, [((), out["values"])], spec_types, field_types
-        )
-    except ValueError:
-        return None  # mixed-spec / sketch-name guard: full scan decides
-    except _Refuse:
-        return None  # int64 overflow on SUM: a scan must decide/error
-
-
-def _hybrid_isnull(spark, parsed, tables, version, explain=False):
-    """NULL-membership branch of :func:`hybrid_range_count`:
-    ``COUNT(*) WHERE col IS [NOT] NULL`` (plain or member-restricted)
-    via :func:`snapshot.null_count_pruned` — the pure-metadata
-    answerer refuses the WHOLE statement when any partition is
-    unprovable (tombstones, legacy 2-element entries, all-NULL
-    partitions); this tier answers the provable partitions from
-    metadata and scans only the remainder, with the predicate pushed
-    (the parquet reader's own null-count statistics then skip
-    zero-contribution row groups)."""
-    if parsed["group_by"] is not None:
-        return None  # grouped null audits stay pure-metadata-or-scan
-    if len(parsed["items"]) != 1 or parsed["items"][0][0] != "count":
-        return None  # COUNT(*) is the provable shape
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    path, version, _man, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    w = parsed["where"]
-    if w[0] == "isnull":
-        ncol, is_not, eq = w[1], w[2], None
-    else:
-        _, ecol, raws, ncol, is_not = w
-        etype = spec_types.get(ecol)
-        if etype is None:
-            return None  # non-partition membership: scan
-        try:
-            eq = (
-                ecol,
-                sorted(
-                    {_coerce_partition_literal(r, etype) for r in raws},
-                    key=repr,
-                ),
-            )
-        except _Refuse:
-            return None
-    if ncol not in spec_types and field_types and ncol not in field_types:
-        return None  # unknown column: let the scan engine error
-    from .snapshot import null_count_pruned
-
-    try:
-        out = null_count_pruned(
-            spark, path, ncol, is_not=is_not, version=version,
-            where_partition=eq, explain_only=explain,
-        )
-    except ValueError:
-        return None  # mixed-spec / sketch-name guard: full scan decides
-    if explain:
-        return _explain_frame(
-            spark, "hybrid",
-            out["meta_partitions"], out["scanned_partitions"],
-            out["scanned_files"], out["total_files"],
-        )
-    alias = parsed["items"][0][2]
-    return _local_rows_df(
-        spark,
-        [(out["count"],)],
-        StructType([StructField(alias, LongType(), False)]),
-    )
-
-
-def _hybrid_range_null(spark, parsed, tables, version, explain=False):
-    """Range AND NULL-predicate conjunction (r9 verdict ask #6b):
-    ``COUNT(*) WHERE range_col <range> AND null_col IS [NOT] NULL``
-    via :func:`snapshot.range_null_count_pruned` — partitions proven
-    fully inside the range with zero range-column nulls answer the
-    null predicate from their recorded null counts; only the
-    unprovable remainder scans, with BOTH predicates pushed."""
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    path, version, _man, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    _, rcol, lo_raw, hi_raw, lo_strict, hi_strict, ncol, is_not = (
-        parsed["where"]
-    )
-    coltype = (
-        spec_types[rcol]
-        if rcol in spec_types
-        else _spark_simple_type(field_types.get(rcol))
-    )
-    if not coltype:
-        return None  # unknown range column: let the scan engine error
-    if ncol not in field_types and ncol not in spec_types:
-        return None  # unknown null column: let the scan engine error
-    try:
-        lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-        hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    except _Refuse:
-        return None  # type-incomparable literal: full scan decides
-    from .snapshot import range_null_count_pruned
-
-    try:
-        out = range_null_count_pruned(
-            spark, path, rcol, ncol,
-            lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
-            is_not=is_not, version=version, explain_only=explain,
-        )
-    except ValueError:
-        return None  # sketch-name guard: full scan decides
-    if explain:
-        return _explain_frame(
-            spark, "hybrid",
-            out["meta_partitions"], out["scanned_partitions"],
-            out["scanned_files"], out["total_files"],
-        )
-    alias = parsed["items"][0][2]
-    return _local_rows_df(
-        spark,
-        [(out["count"],)],
-        StructType([StructField(alias, LongType(), False)]),
-    )
-
-
-def _hybrid_or_range(spark, parsed, tables, version, explain=False):
-    """DISJUNCTIVE-window branch of :func:`hybrid_range_count`:
-    ``… WHERE col BETWEEN a AND b OR col BETWEEN c AND d`` — "this
-    week OR the same week last year". The typed windows MERGE into
-    disjoint closed intervals (overlaps/containment collapse; an
-    empty ``lo > hi`` window contributes nothing, SQL BETWEEN
-    semantics), then each interval runs its own
-    :func:`snapshot.range_multi_pruned` pass and the per-interval
-    aggregates combine EXACTLY — disjointness makes COUNT/SUM add and
-    MIN/MAX merge with no double counting. At 100 TB each window's
-    boundary is O(1) partitions on a clustered table, so k windows
-    cost k tiny boundary scans, not one full scan of everything in
-    between — precisely what a date-window disjunction over a time-
-    partitioned fact wants. A partition straddling the GAP between
-    two merged windows is boundary for both (scanned once per
-    interval — explain counts scan TASKS, not distinct partitions)."""
-    path, version, man, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    pcol = (man.get("schema") or {}).get("partition_col")
-    ptype = spec_types.get(pcol)
-    col = parsed["where"][1]
-    coltype = (
-        ptype if col == pcol else _spark_simple_type(field_types.get(col))
-    )
-    if not coltype:
-        return None  # unknown column: let the scan engine error
-    try:
-        typed = [
-            (_typed_literal(lo, coltype), _typed_literal(hi, coltype))
-            for lo, hi in parsed["where"][2]
-        ]
-    except _Refuse:
-        return None  # type-incomparable literal: full scan decides
-    for kind, agg_col, _alias in parsed["items"]:
-        if kind != "count" and agg_col != pcol and agg_col not in field_types:
-            return None  # unknown aggregated column: scan decides
-    # merge into disjoint closed intervals (BETWEEN lo > hi = empty)
-    ivs = sorted((lo, hi) for lo, hi in typed if not lo > hi)
-    merged: list = []
-    for lo, hi in ivs:
-        if merged and lo <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
-        else:
-            merged.append((lo, hi))
-    from .snapshot import range_multi_pruned
-
-    items = [(k, c) for k, c, _a in parsed["items"]]
-    try:
-        outs = [
-            range_multi_pruned(
-                spark, path, col, items, lo=lo, hi=hi,
-                version=version, explain_only=explain,
-            )
-            for lo, hi in merged
-        ]
-    except ValueError:
-        return None  # mixed-spec / sketch-name guard: full scan decides
-    except _Refuse:
-        return None  # int64 overflow on SUM: a scan must decide/error
-    if explain:
-        return _explain_frame(
-            spark, "hybrid",
-            sum(o["meta_partitions"] for o in outs),
-            sum(o["scanned_partitions"] for o in outs),
-            sum(o["scanned_files"] for o in outs),
-            sum(o["total_files"] for o in outs),
-        )
-    # combine per-interval aggregates — exact because intervals are
-    # disjoint: counts/sums add, MIN/MAX merge, AVG re-derives from
-    # the combined (sum, n) pair
-    values = []
-    for i, (kind, _c) in enumerate(items):
-        per = [o["values"][i] for o in outs]
-        if kind == "count":
-            values.append(sum(int(v) for v in per))
-        elif kind in ("sum", "avg"):
-            tot, n, seen = 0, 0, False
-            for v in per:
-                s, vn = v
-                if s is not None:
-                    tot += int(s)
-                    seen = True
-                n += int(vn)
-            values.append((tot if seen else None, n))
-        elif kind == "min":
-            cand = [v for v in per if v is not None]
-            values.append(min(cand) if cand else None)
-        else:
-            cand = [v for v in per if v is not None]
-            values.append(max(cand) if cand else None)
-    return _assemble_grouped(
-        spark, parsed, [((), values)], spec_types, field_types
-    )
-
-
-def _hybrid_group_multi(spark, parsed, tables, version, explain=False):
-    """GROUPED branch of :func:`hybrid_range_count`: ``SELECT pcol,
-    COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE col <range>
-    GROUP BY pcol`` served by ONE :func:`snapshot.range_group_multi`
-    pass — per-group metadata for interior partitions, one grouped
-    boundary scan for the edges. Group values come back in the
-    column's recorded type (string-render → cast in
-    `_assemble_grouped` — scan-identical schema). ORDER
-    BY <output alias> [DESC] LIMIT k applies on the assembled frame —
-    the full group set exists before ordering, ties break by the
-    group column ascending (the z63 discipline), so "top-k days by
-    revenue in this key range" serves end-to-end."""
-    path, version, man, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    pcol = (man.get("schema") or {}).get("partition_col")
-    if pcol is None or parsed["group_by"] != pcol:
-        return None  # only the partition column groups at the manifest
-    try:
-        eq, col, lo_raw, hi_raw, lo_strict, hi_strict = _conj_where(
-            parsed["where"], spec_types
-        )
-    except _Refuse:
-        return None  # non-spec membership / uncoercible member: scan
-    coltype = (
-        spec_types[col]
-        if col in spec_types
-        else _spark_simple_type(field_types.get(col))
-    )
-    if not coltype:
-        return None  # unknown range column: let the scan engine error
-    try:
-        lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-        hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    except _Refuse:
-        return None
-    for kind, agg_col, _alias in parsed["items"]:
-        if (
-            kind in ("sum", "avg", "min", "max")
-            and agg_col != pcol
-            and agg_col not in field_types
-        ):
-            return None  # unknown aggregated column: refuse pre-scan
-    if parsed.get("order_by") is not None:
-        # validate the ORDER BY alias BEFORE the prover pays the
-        # grouped boundary scan — a post-scan refusal would throw the
-        # boundary I/O away and hand the statement to a second, full
-        # scan (every other refusal here is pre-scan for this reason)
-        if parsed["order_by"][0] not in [a for _, _, a in parsed["items"]]:
-            return None  # ORDER BY names a non-output column
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as _ST,
-    )
-
-    from .snapshot import range_group_multi
-
-    items = [(k, c) for k, c, _a in parsed["items"] if k != "group"]
-    try:
-        out = range_group_multi(
-            spark, path, col, items,
-            lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
-            version=version, where_partition=eq, explain_only=explain,
-        )
-        if explain:
-            return _explain_frame(
-                spark, "hybrid",
-                out["meta_partitions"], out["scanned_partitions"],
-                out["scanned_files"], out["total_files"],
-            )
-        return _assemble_grouped(
-            spark, parsed, [((g,), v) for g, v in out["groups"]],
-            spec_types, field_types,
-        )
-    except ValueError:
-        return None  # mixed-spec / unpartitioned / sketch guard: scan
-    except _Refuse:
-        return None  # int64 overflow on SUM: a scan must decide/error
+    return _explain_frame(spark, tier, 0, universe, n_files, n_files)
 
 
 def _assemble_grouped(spark, parsed, groups, spec_types, field_types):
@@ -1699,9 +1136,11 @@ def _assemble_grouped(spark, parsed, groups, spec_types, field_types):
     values in statement order with group items left out, sum/avg as
     ``(sum, n)`` pairs. Scan-identical typing (group values and MIN/MAX
     renderings go through a string cast to the column's recorded type),
-    then HAVING, then ORDER BY <output alias> with the group-asc
-    tie-break on every group column and LIMIT (the z63 discipline: the
-    full group set exists before filtering or ordering)."""
+    then HAVING (numeric aliases, NULL aggregates drop — SQL), then
+    ORDER BY <output alias> with the group-asc tie-break on every group
+    column and LIMIT (the z63 discipline: the full group set exists
+    before filtering or ordering — :func:`_check_outputs` vetted the
+    aliases)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         DoubleType,
@@ -1745,185 +1184,19 @@ def _assemble_grouped(spark, parsed, groups, spec_types, field_types):
         if f.name in casts else F.col(f.name)
         for f in frame.schema.fields
     ])
-    frame = _apply_having(frame, parsed)
-    if parsed.get("order_by") is not None:
+    if parsed["having"] is not None:
+        hcol, hop, hval = parsed["having"]
+        c = F.col(hcol)
+        frame = frame.filter({
+            "=": c == hval, "<>": c != hval, "<": c < hval,
+            "<=": c <= hval, ">": c > hval, ">=": c >= hval,
+        }[hop])
+    if parsed["order_by"] is not None:
         ocol, desc = parsed["order_by"]
-        if ocol not in [a for _, _, a in parsed["items"]]:
-            raise _Refuse()  # ORDER BY names a non-output column
         key = F.col(ocol).desc() if desc else F.col(ocol).asc()
         frame = frame.orderBy(key, *[
             F.col(a).asc() for k, _, a in parsed["items"] if k == "group"
         ])
-        if parsed.get("limit") is not None:
+        if parsed["limit"] is not None:
             frame = frame.limit(parsed["limit"])
     return frame
-
-
-def _hybrid_group_or_range(spark, parsed, tables, version, explain=False):
-    """Grouped DISJUNCTIVE windows (r9 verdict ask #6a): ``SELECT
-    pcol, COUNT(*), SUM(x), … WHERE col BETWEEN a AND b OR col BETWEEN
-    c AND d GROUP BY pcol`` — the per-interval discipline of
-    :func:`_hybrid_or_range` composed with the grouped prover: the
-    typed windows merge into disjoint closed intervals, each interval
-    runs its own :func:`snapshot.range_group_multi` pass, and the
-    per-interval GROUP results merge EXACTLY (disjointness: counts and
-    sums add, extremes nest, AVG re-derives from the combined pair; a
-    group absent from an interval simply contributes nothing). At
-    100 TB this is k tiny grouped boundary scans for k windows on a
-    clustered table, never a scan of the gap between them."""
-    path, version, man, field_types, spec_types = _resolve_table(
-        parsed, tables, version
-    )
-    pcol = (man.get("schema") or {}).get("partition_col")
-    if pcol is None or parsed["group_by"] != pcol:
-        return None  # only the partition column groups at the manifest
-    col = parsed["where"][1]
-    coltype = (
-        spec_types[col]
-        if col in spec_types
-        else _spark_simple_type(field_types.get(col))
-    )
-    if not coltype:
-        return None  # unknown range column: let the scan engine error
-    try:
-        typed = [
-            (_typed_literal(lo, coltype), _typed_literal(hi, coltype))
-            for lo, hi in parsed["where"][2]
-        ]
-    except _Refuse:
-        return None  # type-incomparable literal: full scan decides
-    for kind, agg_col, _alias in parsed["items"]:
-        if (
-            kind in ("sum", "avg", "min", "max")
-            and agg_col != pcol
-            and agg_col not in field_types
-        ):
-            return None  # unknown aggregated column: refuse pre-scan
-    if parsed.get("order_by") is not None:
-        if parsed["order_by"][0] not in [a for _, _, a in parsed["items"]]:
-            return None  # ORDER BY names a non-output column
-    # merge into disjoint closed intervals (BETWEEN lo > hi = empty)
-    ivs = sorted((lo, hi) for lo, hi in typed if not lo > hi)
-    merged: list = []
-    for lo, hi in ivs:
-        if merged and lo <= merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], hi))
-        else:
-            merged.append((lo, hi))
-    from .snapshot import range_group_multi
-
-    items = [(k, c) for k, c, _a in parsed["items"] if k != "group"]
-    try:
-        outs = [
-            range_group_multi(
-                spark, path, col, items, lo=lo, hi=hi,
-                version=version, explain_only=explain,
-            )
-            for lo, hi in merged
-        ]
-    except ValueError:
-        return None  # mixed-spec / unpartitioned / sketch guard: scan
-    except _Refuse:
-        return None  # int64 overflow on SUM: a scan must decide/error
-    if explain:
-        return _explain_frame(
-            spark, "hybrid",
-            sum(o["meta_partitions"] for o in outs),
-            sum(o["scanned_partitions"] for o in outs),
-            sum(o["scanned_files"] for o in outs),
-            sum(o["total_files"] for o in outs),
-        )
-    # exact cross-interval group merge (disjoint windows): counts and
-    # (sum, n) pairs add, extremes nest; group order = value render
-    # (the same sorted-by-partition-name order each pass emits)
-    acc: dict = {}
-    order: list = []
-    for o in outs:
-        for gval, vals in o["groups"]:
-            key = (gval is None, None if gval is None else str(gval))
-            if key not in acc:
-                acc[key] = [gval, list(vals)]
-                order.append(key)
-                continue
-            cur = acc[key][1]
-            for i, (kind, _c) in enumerate(items):
-                if kind == "count":
-                    cur[i] = int(cur[i]) + int(vals[i])
-                elif kind in ("sum", "avg"):
-                    s0, n0 = cur[i]
-                    s1, n1 = vals[i]
-                    tot = None
-                    if s0 is not None or s1 is not None:
-                        tot = int(s0 or 0) + int(s1 or 0)
-                    cur[i] = (tot, int(n0) + int(n1))
-                elif kind == "min":
-                    if vals[i] is not None:
-                        cur[i] = (
-                            vals[i]
-                            if cur[i] is None
-                            else min(cur[i], vals[i])
-                        )
-                else:  # max
-                    if vals[i] is not None:
-                        cur[i] = (
-                            vals[i]
-                            if cur[i] is None
-                            else max(cur[i], vals[i])
-                        )
-    groups = [((acc[k][0],), acc[k][1]) for k in sorted(order)]
-    try:
-        return _assemble_grouped(
-            spark, parsed, groups, spec_types, field_types
-        )
-    except _Refuse:
-        # e.g. a HAVING alias that is not an output column, or a
-        # merged SUM past int64 — the scan tier must decide/error
-        # (mirrors _hybrid_group_multi, whose assembly sits inside
-        # its try)
-        return None
-
-
-def _answer_eq_range_count(
-    spark, parsed, path, pcol, ptype, field_types, schema_meta, version
-):
-    """The conjunctive shape: partition equality restricts the
-    universe, the range proof runs over just the member partition —
-    both halves exact, so the COUNT is (manifest_range_count with
-    where_partition)."""
-    if any(k != "count" for k, _, _ in parsed["items"]):
-        raise _Refuse()  # aggregates under a range: hybrid tier / scan
-    _, ecol, eraw, lo_raw, hi_raw, lo_strict, hi_strict, rcol = (
-        parsed["where"]
-    )
-    spec_types = _spec_types_of(schema_meta)
-    etype = spec_types.get(ecol)
-    if etype is None:
-        raise _Refuse()  # only spec-column equality is provable
-    eq = (ecol, _coerce_partition_literal(eraw, etype))
-    if rcol in spec_types:
-        coltype = spec_types[rcol]
-    else:
-        coltype = _spark_simple_type(field_types.get(rcol))
-        if not coltype:
-            raise _Refuse()
-        stats_cols = schema_meta.get("stats_cols") or []
-        if rcol not in stats_cols:
-            raise _Refuse()
-    lo = _typed_literal(lo_raw, coltype) if lo_raw is not None else None
-    hi = _typed_literal(hi_raw, coltype) if hi_raw is not None else None
-    n = manifest_range_count(
-        path, rcol,
-        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
-        version=version, where_partition=eq,
-    )
-    if n is None:
-        return None  # partial overlap in the member partition: scan
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    fields = [
-        StructField(alias, LongType(), False)
-        for _, _, alias in parsed["items"]
-    ]
-    return _local_rows_df(
-        spark, [tuple(n for _ in parsed["items"])], StructType(fields)
-    )

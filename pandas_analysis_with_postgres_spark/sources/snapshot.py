@@ -5228,13 +5228,7 @@ def _manifest_fold(man, path, items, where_partition=None, groups=()):
                 f"exact COUNT(DISTINCT {c}) is a manifest fact only for "
                 "partition-spec columns — scan, or APPROX_COUNT_DISTINCT"
             )
-    known = set(meta.get("columns") or cols)  # legacy: no record
-    unknown = sorted({c for c in cols if c is not None} - known)
-    if unknown:
-        raise ValueError(
-            f"no column {unknown} in the logical schema of {path} "
-            "(dropped, renamed away, or never written) — scan decides"
-        )
+    _check_logical(meta, path, cols)
     if (where_partition or groups or any(c in spec for c in cols)) and (
         _mixed_spec(man)
     ):
@@ -5360,6 +5354,19 @@ def _manifest_fold(man, path, items, where_partition=None, groups=()):
                       for lvl, (_i, _c, t) in zip(key, gsel))
         out.append((gvals, n, final))
     return out
+
+
+def _check_logical(meta: dict, path: str, cols) -> None:
+    """Raise unless every named column is in the manifest's LOGICAL
+    schema (``schema["columns"]``): a dropped or renamed-away column's
+    stats linger in the manifest, but no answer may come from them."""
+    known = set(meta.get("columns") or cols)  # legacy: no record
+    unknown = sorted({c for c in cols if c is not None} - known)
+    if unknown:
+        raise ValueError(
+            f"no column {unknown} in the logical schema of {path} "
+            "(dropped, renamed away, or never written) — scan decides"
+        )
 
 
 def _fold_merge(kind, acc, v):
@@ -5841,13 +5848,15 @@ def manifest_range_count(
     value (in-or-out, partial overlap impossible; the NULL partition
     contributes 0 like SQL). A layout-mixed table refuses (None) for
     the partition column and for ``where_partition``, as does a
-    restriction on a non-spec column; a sketch column raises."""
+    restriction on a non-spec column; a sketch or dropped column
+    raises."""
     _refuse_sketch(
         [column],
         "range columns — use manifest_approx_distinct / manifest_quantile",
     )
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
+    _check_logical(meta, path, [column])
     spec_cols = [c for c, _t in _spec_meta(meta)]
     if _mixed_spec(man) and (
         column in spec_cols or where_partition is not None
@@ -5857,9 +5866,7 @@ def manifest_range_count(
         return None
     if any(w not in spec_cols for w, _v in _wp_conjuncts(where_partition)):
         return None
-    targets = _eq_targets(
-        man, path, meta.get("partition_col"), where_partition
-    )
+    targets = _eq_targets(man, path, where_partition)
     total = 0
     for _p, n, status, rnulls, _l, _s in _classify_range(
         man, path, column, lo, hi, lo_strict, hi_strict, targets
@@ -6103,20 +6110,21 @@ def null_count_pruned(
     ``where_partition`` restricts to members, the conjunctive
     ``pcol = lit AND col IS NULL`` shape. Returns ``{"count",
     "meta_partitions", "scanned_partitions"}``; ``explain_only``
-    skips the scan (count None) for the EXPLAIN surface."""
+    skips the scan (count None) for the EXPLAIN surface. A column
+    outside the logical schema (dropped, renamed away) raises
+    ValueError."""
     from pyspark.sql import functions as F
 
     _refuse_sketch([column], "data columns — pass the column itself")
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    ptype = meta.get("partition_type") or "string"
+    _check_logical(meta, path, [column])
     renames = meta.get("renames") or []
 
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
     part_rows = _partition_rows(man, path)
-    targets = _eq_targets(man, path, pcol, where_partition)
+    targets = _eq_targets(man, path, where_partition)
     meta_total = 0
     meta_parts: set = set()
     scan_parts: set = set()
@@ -6241,6 +6249,8 @@ def range_null_count_pruned(
     _refuse_sketch(
         [range_col, null_col], "data columns — pass the column itself"
     )
+    man = read_manifest(path, version)
+    _check_logical(man.get("schema") or {}, path, [range_col, null_col])
     if null_col == range_col:
         if not is_not:
             # rows satisfying the range have a non-NULL range column by
@@ -6257,7 +6267,6 @@ def range_null_count_pruned(
             lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
             version=version, explain_only=explain_only,
         )
-    man = read_manifest(path, version)
     meta_total = 0
     meta_parts: set = set()
     scan_parts: set = set()
@@ -6298,7 +6307,7 @@ def range_null_count_pruned(
     return {"count": int(meta_total + scanned), **out}
 
 
-def _eq_targets(man, path, pcol, where_partition):
+def _eq_targets(man, path, where_partition):
     """Shared partition-VALUE restriction for the hybrid provers:
     None (unrestricted), the singleton member set for an equality
     ``(pcol, value)``, or the member set for an IN-list ``(pcol,
@@ -6528,6 +6537,99 @@ def _fold_values(kind: str, vals: list):
     return min(present) if kind == "min" else max(present)
 
 
+def _range_pass(spark, path, range_col, items, lo, hi, lo_strict,
+                hi_strict, version, where_partition, explain_only,
+                grouped):
+    """The one hybrid range pass behind :func:`range_multi_pruned` and
+    :func:`range_group_multi`: read one manifest, check every named
+    column against its logical schema, classify
+    (:func:`_classify_range`), gate each proven-inside partition
+    (:func:`_meta_values`), and run at most ONE boundary scan over the
+    rest — one aggregate row, or one row per partition-column group.
+
+    A ``grouped`` pass also needs a known range-column null count for a
+    metadata partition (to decide whether its group exists) and drops
+    partitions no row of which passes the range (SQL: empty groups
+    don't exist). Returns ``(answer, accounting)``: the answer is the
+    per-item values (ungrouped) or ``[(group value, per-item values),
+    …]`` sorted by partition name (grouped), None under
+    ``explain_only``."""
+    _check_range_items(range_col, items)
+    man = read_manifest(path, version)
+    meta = man.get("schema") or {}
+    _check_logical(
+        meta, path, [range_col] + [c for k, c in items if k != "count"]
+    )
+    pcol = meta.get("partition_col")
+    if grouped and not pcol:
+        raise ValueError(
+            f"snapshot table at {path!r} is unpartitioned — no "
+            "partition column to group by"
+        )
+    if grouped and _mixed_spec(man):
+        raise ValueError(
+            f"GROUP BY {pcol!r} is unprovable while {path} holds "
+            "old-spec directories — compact_snapshot to migrate"
+        )
+    targets = _eq_targets(man, path, where_partition)
+    comps = {
+        c: _spec_component(meta, man, c)
+        for k, c in items if k in ("min", "max")
+    }
+    values: dict = {}
+    meta_parts: set = set()
+    scan_parts: set = set()
+    for pname, n, status, rnulls, logical, sums in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict, targets
+    ):
+        if status == _OUTSIDE:
+            continue  # proven zero contribution for every item
+        vals = None
+        if status == _INSIDE and not (grouped and rnulls is None):
+            vals = _meta_values(
+                items, comps, pname, n, range_col, rnulls, logical, sums
+            )
+        if vals is None:
+            scan_parts.add(pname)
+        elif not grouped or n > int(rnulls):
+            values[pname] = vals
+            meta_parts.add(pname)
+    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
+    if explain_only:
+        return None, out
+    if scan_parts:
+        df = _range_scan(
+            spark, path, version, scan_parts, range_col, lo, hi,
+            lo_strict, hi_strict,
+        )
+        if grouped:
+            for r in _collect_partition_groups(
+                df.groupBy(pcol).agg(*_scan_aggs(items)), pcol,
+                what="range_group_multi",
+            ):
+                values[_hive_part_name(pcol, r[0])] = _scan_values(items, r)
+        else:
+            values[None] = _scan_values(
+                items, df.agg(*_scan_aggs(items)).collect()[0]
+            )
+    if grouped:
+        ptype = meta.get("partition_type") or "string"
+        return [
+            (_partition_value(pname, ptype)[1], values[pname])
+            for pname in sorted(values)
+        ], out
+    return _fold_items(items, list(values.values())), out
+
+
+def _fold_items(items, per_part: list) -> list:
+    """Per-item :func:`_fold_values` over disjoint row sets' value
+    lists — partitions of one pass, or the disjoint windows of an OR."""
+    return [
+        _fold_values(kind, [vals[i] for vals in per_part])
+        for i, (kind, _c) in enumerate(items)
+    ]
+
+
 def range_multi_pruned(
     spark: SparkSession,
     path: str,
@@ -6556,6 +6658,8 @@ def range_multi_pruned(
     single job. Exact by construction; proven-outside partitions
     contribute nothing regardless of tombstones. ``where_partition``
     restricts to partition-value members (eq or IN on a spec column).
+    A column outside the logical schema (dropped, renamed away) raises
+    ValueError, whatever stats it left behind.
 
     Returns ``{"values": [per-item], "meta_partitions",
     "scanned_partitions", "scanned_files", "total_files"}`` where a
@@ -6563,51 +6667,10 @@ def range_multi_pruned(
     n_nonnull)`` (the caller divides for AVG — same float semantics as
     the scan), and min/max yield a manifest-rendered value or None;
     ``values`` is None under ``explain_only``."""
-    _check_range_items(range_col, items)
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    targets = _eq_targets(
-        man, path, meta.get("partition_col"), where_partition
+    values, out = _range_pass(
+        spark, path, range_col, items, lo, hi, lo_strict, hi_strict,
+        version, where_partition, explain_only, grouped=False,
     )
-    comps = {
-        c: _spec_component(meta, man, c)
-        for k, c in items if k in ("min", "max")
-    }
-    per_part: list = []
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n, status, rnulls, logical, sums in _classify_range(
-        man, path, range_col, lo, hi, lo_strict, hi_strict, targets
-    ):
-        if status == _OUTSIDE:
-            continue  # proven zero contribution for every item
-        vals = None
-        if status == _INSIDE:
-            vals = _meta_values(
-                items, comps, pname, n, range_col, rnulls, logical, sums
-            )
-        if vals is None:
-            scan_parts.add(pname)
-        else:
-            per_part.append(vals)
-            meta_parts.add(pname)
-    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
-    if explain_only:
-        return {"values": None, **out}
-    if scan_parts:
-        row = (
-            _range_scan(
-                spark, path, version, scan_parts, range_col, lo, hi,
-                lo_strict, hi_strict,
-            )
-            .agg(*_scan_aggs(items))
-            .collect()[0]
-        )
-        per_part.append(_scan_values(items, row))
-    values = [
-        _fold_values(kind, [vals[i] for vals in per_part])
-        for i, (kind, _c) in enumerate(items)
-    ]
     return {"values": values, **out}
 
 
@@ -6676,62 +6739,8 @@ def range_group_multi(
     "scanned_files", "total_files"}`` with range_multi_pruned's
     per-item value shapes; ``groups`` is None under
     ``explain_only``."""
-    _check_range_items(range_col, items)
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    if not pcol:
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {pcol!r} is unprovable while {path} holds "
-            "old-spec directories — compact_snapshot to migrate"
-        )
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    comps = {
-        c: _spec_component(meta, man, c)
-        for k, c in items if k in ("min", "max")
-    }
-    per_group: dict = {}  # pname -> [per-item values]
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n, status, rnulls, logical, sums in _classify_range(
-        man, path, range_col, lo, hi, lo_strict, hi_strict, targets
-    ):
-        if status == _OUTSIDE:
-            continue  # no group
-        vals = None
-        if status == _INSIDE and rnulls is not None:
-            vals = _meta_values(
-                items, comps, pname, n, range_col, rnulls, logical, sums
-            )
-        if vals is None:
-            scan_parts.add(pname)
-        elif n > int(rnulls):  # some row passes the range: a group
-            per_group[pname] = vals
-            meta_parts.add(pname)
-    out = _range_accounting(man, meta_parts, scan_parts, range_col, lo, hi)
-    if explain_only:
-        return {"groups": None, **out}
-    if scan_parts:
-        rows = _collect_partition_groups(
-            _range_scan(
-                spark, path, version, scan_parts, range_col, lo, hi,
-                lo_strict, hi_strict,
-            )
-            .groupBy(pcol)
-            .agg(*_scan_aggs(items)),
-            pcol,
-            what="range_group_multi",
-        )
-        for r in rows:
-            per_group[_hive_part_name(pcol, r[0])] = _scan_values(items, r)
-    groups = [
-        (_partition_value(pname, ptype)[1], per_group[pname])
-        for pname in sorted(per_group)
-    ]
+    groups, out = _range_pass(
+        spark, path, range_col, items, lo, hi, lo_strict, hi_strict,
+        version, where_partition, explain_only, grouped=True,
+    )
     return {"groups": groups, **out}

@@ -7,7 +7,12 @@ two-component ``[k, r]`` spec with a NULL ``r`` partition, ``::sum`` and
 are still in the manifest, min/max/null/sum/hll/hist stats, and one
 merge-on-read tombstoned partition. Every item kind runs under every
 WHERE shape and every grouping; an answered statement must equal the
-scan, and the answered set may only grow."""
+scan, and the answered set may only grow.
+
+The range/hybrid family runs the same way over that table and over a
+single-column table (``GROUP BY p`` is the grouped hybrid tier's
+shape): every WHERE kind, each conjunction in both atom orders, at the
+metadata and the hybrid tier."""
 
 from __future__ import annotations
 
@@ -21,6 +26,9 @@ from pandas_analysis_with_postgres_spark.sources import metadata_sql as MS
 from pandas_analysis_with_postgres_spark.sources import snapshot as S
 from pandas_analysis_with_postgres_spark.sources.metadata_sql import (
     answer_from_manifest,
+    explain_metadata_sql,
+    hybrid_range_count,
+    parse_metadata_select,
 )
 from pandas_analysis_with_postgres_spark.sources.snapshot import (
     append_snapshot,
@@ -29,6 +37,12 @@ from pandas_analysis_with_postgres_spark.sources.snapshot import (
     manifest_aggregate,
     manifest_approx_distinct,
     manifest_column_sum,
+    manifest_range_count,
+    null_count_pruned,
+    range_count_pruned,
+    range_group_multi,
+    range_null_count_pruned,
+    range_sum_pruned,
     register_snapshot_view,
     write_snapshot,
 )
@@ -316,3 +330,204 @@ def test_int_hll_sketch_matches_bigint(spark, tmp_path):
         ests.append(manifest_approx_distinct(path, "w"))
     assert ests[0] == ests[1]
     assert 80 <= ests[0] <= 120  # 101 true distinct, HLL tolerance
+
+
+# ------------------------------------------------ range / hybrid family
+#: the single-column table: p in 0..3, v = p*100 + i clustered by p,
+#: w NULL on every third row
+RANGE_SCHEMA = "v bigint, p bigint, w bigint"
+RANGE_ROWS = [
+    (p * 100 + i, p, (p * 100 + i) if (p + i) % 3 else None)
+    for p in range(4)
+    for i in range(30)
+]
+#: (where id, table, WHERE, item lists, groupings) — ``_r`` is the same
+#: conjunction with its atoms in the other order
+RANGE_WHERES = [
+    ("range", "t", "v > 30", "nm", "0"),
+    ("specrange", "t", "k >= 2", "n", "0"),
+    ("eqrange", "t", "k = 1 AND v > 30", "nm", "0"),
+    ("eqrange_r", "t", "v > 30 AND k = 1", "n", "0"),
+    ("inrange", "t", "k IN (1, 2) AND id BETWEEN 10 AND 30", "n", "0"),
+    ("inrange_r", "t", "id BETWEEN 10 AND 30 AND k IN (1, 2)", "m", "0"),
+    ("conjrange", "t", "k IN (1, 2) AND r = 'a' AND v < 20", "n", "0"),
+    ("conjrange_r", "t", "v < 20 AND r = 'a' AND k IN (1, 2)", "m", "0"),
+    ("orrange", "t", "id BETWEEN 1 AND 10 OR id BETWEEN 40 AND 45", "nm", "0"),
+    ("rangenull", "t", "id > 20 AND v IS NULL", "n", "0"),
+    ("rangenull_r", "t", "v IS NULL AND id > 20", "n", "0"),
+    ("isnull", "t", "v IS NULL", "n", "0"),
+    ("eqnull", "t", "k = 1 AND v IS NOT NULL", "n", "0"),
+    ("eqnull_r", "t", "v IS NOT NULL AND k = 1", "n", "0"),
+    ("andliteral", "t", "k = 1 AND r = 'a AND b'", "n", "0"),
+    ("orliteral", "t", "r = 'x OR y' AND v > 3", "n", "0"),
+    ("inrange", "g", "p IN (1, 2) AND v > 150", "n", "0g"),
+    ("inrange_r", "g", "v > 150 AND p IN (1, 2)", "n", "0"),
+    ("eqrange", "g", "p = 1 AND v > 150", "n", "0"),
+    ("eqrange_r", "g", "v > 150 AND p = 1", "n", "0"),
+    ("range", "g", "v BETWEEN 50 AND 250", "m", "g"),
+    ("orrange", "g", "v BETWEEN 10 AND 120 OR v BETWEEN 300 AND 315", "m", "g"),
+    ("eqnull", "g", "p = 1 AND w IS NULL", "n", "0"),
+    ("innull", "g", "p IN (1, 2) AND w IS NOT NULL", "n", "0"),
+]
+RANGE_ITEMS = {
+    "n": "COUNT(*) AS n",
+    "m": "COUNT(*) AS n, SUM(v) AS s, MIN(v) AS lo, MAX(v) AS hi",
+}
+RANGE_STATEMENTS = [
+    (f"{tbl}|{wid}|{ik}|{g}", tbl, where, ik, g == "g")
+    for wid, tbl, where, iks, gs in RANGE_WHERES
+    for ik in iks
+    for g in gs
+]
+
+#: the tier that answered each statement before the range/hybrid family
+#: shared one WHERE spec (the metadata tier is tried first); each must
+#: still be answered, by the same tier or by metadata instead of hybrid
+PARENT_RANGE_ANSWERED = {
+    "t|range|n|0": "hybrid",
+    "t|range|m|0": "hybrid",
+    "t|specrange|n|0": "metadata",
+    "t|eqrange|n|0": "hybrid",
+    "t|eqrange|m|0": "hybrid",
+    "t|inrange|n|0": "hybrid",
+    "t|conjrange|n|0": "hybrid",
+    "t|conjrange_r|m|0": "hybrid",
+    "t|orrange|n|0": "hybrid",
+    "t|orrange|m|0": "hybrid",
+    "t|rangenull|n|0": "hybrid",
+    "t|isnull|n|0": "hybrid",
+    "t|eqnull|n|0": "metadata",
+    "t|orliteral|n|0": "metadata",
+    "g|inrange|n|0": "hybrid",
+    "g|inrange|n|g": "hybrid",
+    "g|eqrange|n|0": "metadata",
+    "g|range|m|g": "hybrid",
+    "g|orrange|m|g": "hybrid",
+    "g|eqnull|n|0": "metadata",
+    "g|innull|n|0": "metadata",
+}
+#: answered only since: the reversed atom orders, a literal holding
+#: ' AND ' inside a conjunction, and the metadata tier's
+#: member-restricted window (which the hybrid tier served before)
+NEWLY_ANSWERED = {
+    "t|eqrange_r|n|0": "hybrid",
+    "t|inrange_r|m|0": "hybrid",
+    "t|rangenull_r|n|0": "hybrid",
+    "t|eqnull_r|n|0": "metadata",
+    "t|andliteral|n|0": "metadata",
+    "g|inrange|n|0": "metadata",
+    "g|inrange_r|n|0": "metadata",
+    "g|eqrange_r|n|0": "metadata",
+}
+
+
+@pytest.fixture(scope="module")
+def rtable(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("range") / "g")
+    write_snapshot(
+        spark.createDataFrame(RANGE_ROWS, RANGE_SCHEMA), path, "p",
+        stats_cols=["v", "w", "v::sum"],
+    )
+    register_snapshot_view(spark, path, "range_view")
+    return path
+
+
+def _range_sql(where: str, ik: str, grouped: bool) -> str:
+    sel = ("p, " if grouped else "") + RANGE_ITEMS[ik]
+    return f"SELECT {sel} FROM t WHERE {where}" + (
+        " GROUP BY p" if grouped else ""
+    )
+
+
+def _rows(df) -> list:
+    return sorted(
+        (tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+         for r in df.collect()),
+        key=lambda r: [(v is None, v) for v in r],
+    )
+
+
+def test_range_family_matches_the_scan(spark, table, rtable):
+    tiers = {}
+    for sid, tbl, where, ik, grouped in RANGE_STATEMENTS:
+        sql = _range_sql(where, ik, grouped)
+        tables = {"t": table if tbl == "t" else rtable}
+        want = None
+        for tier, answer in (
+            ("metadata", answer_from_manifest), ("hybrid", hybrid_range_count)
+        ):
+            out = answer(spark, sql, tables)
+            if out is None:
+                continue
+            tiers.setdefault(sid, tier)
+            if want is None:
+                view = "fold_view" if tbl == "t" else "range_view"
+                want = _rows(spark.sql(sql.replace(" FROM t", f" FROM {view}")))
+            assert _rows(out) == want, (sid, tier)
+    for sid, tier in PARENT_RANGE_ANSWERED.items():
+        assert sid in tiers, sid
+        assert tier == "hybrid" or tiers[sid] == "metadata", sid
+    for sid, tier in NEWLY_ANSWERED.items():
+        assert tiers.get(sid) == tier, sid
+
+
+def test_range_family_parse_corners():
+    # an OR across columns, or next to another atom, stays unparseable
+    for where in (
+        "v BETWEEN 1 AND 2 OR r = 'x OR y'",
+        "k = 1 AND v BETWEEN 1 AND 2 OR v BETWEEN 5 AND 9",
+        "v > 1 AND v < 9",
+        "k = 1 AND k = 2",
+        "k = 1 AND r = 'a' AND v IS NULL",
+        "v > 1 AND k = 1 AND w IS NULL",
+    ):
+        assert parse_metadata_select(
+            f"SELECT COUNT(*) AS n FROM t WHERE {where}"
+        ) is None, where
+    # any atom order names the same kind with the same tuple
+    a = parse_metadata_select("SELECT COUNT(*) FROM t WHERE k = 1 AND v > 3")
+    b = parse_metadata_select("SELECT COUNT(*) FROM t WHERE v > 3 AND k = 1")
+    assert a["where"] == b["where"] == (
+        "eqrange", "k", "1", "3", None, True, False, "v"
+    )
+
+
+def test_explain_universe_follows_the_restriction(spark, rtable):
+    for where, n in (
+        ("p = 1 AND w IS NULL", 1),
+        ("p IN (1, 2) AND w IS NOT NULL", 2),
+        ("p = 1 AND v > 150", 1),
+        ("v > 150 AND p = 1", 1),
+    ):
+        e = explain_metadata_sql(
+            spark, f"SELECT COUNT(*) AS n FROM t WHERE {where}", {"t": rtable}
+        ).collect()[0]
+        assert (e.tier, e.partitions_metadata, e.partitions_scanned) == (
+            "metadata", n, 0
+        ), where
+
+
+def test_range_and_null_provers_refuse_dropped_columns(spark, table):
+    # 'd' was dropped after the write: its d::sum / d::hll stats linger,
+    # and the scan raises UNRESOLVED_COLUMN, so no prover may answer
+    wp = ("k", 1)
+    for call in (
+        lambda: range_sum_pruned(
+            spark, table, "id", "d", lo=0, hi=1000, where_partition=wp
+        ),
+        lambda: range_count_pruned(spark, table, "d", lo=0, hi=10),
+        lambda: null_count_pruned(spark, table, "d"),
+        lambda: range_null_count_pruned(
+            spark, table, "id", "d", lo=0, hi=1000, is_not=True
+        ),
+        lambda: range_group_multi(
+            spark, table, "id", [("sum", "d")], lo=0, hi=1000
+        ),
+        lambda: manifest_range_count(table, "d", lo=0),
+    ):
+        with pytest.raises(ValueError, match="'d'"):
+            call()
+    # the renamed column still answers under its new name
+    assert range_sum_pruned(
+        spark, table, "id", "c2", lo=0, hi=1000, where_partition=wp
+    )["sum"] == sum(r[4] for r in ROWS if r[1] == 1)
