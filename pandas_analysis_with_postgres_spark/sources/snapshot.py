@@ -37,6 +37,17 @@ same ``vN.json`` name; the loser gets ``EEXIST`` →
 (Delta's optimistic model). Writers never block readers; readers never
 block writers.
 
+**One write path.** Every table-data commit runs one data-write step,
+:func:`_write_table_data` (CHECK constraints → partition blooms →
+:func:`_write_commit_data`'s fsync'd files and footer stats → file
+blooms): full writes, the partition-scoped merge/append/replace and
+compaction. Row-level DML goes through one of two cores:
+:func:`_cow_rewrite` (copy-on-write: hit scan → scoped read → the
+caller's row function → :func:`replace_partitions`) and
+:func:`_mor_write` (merge-on-read: tombstones, plus update deltas when
+given a SET map). SET and INSERT values follow one rule,
+:func:`_assign`.
+
 At 100 TB: manifests are O(partitions) JSON, not O(files) — each entry
 is a directory written by exactly one commit, so no file-listing storm;
 ``merge_snapshot`` rewrites ONLY the partitions the source touches and
@@ -213,13 +224,9 @@ def tag_snapshot(path: str, name: str, version: int | None = None) -> int:
         raise ValueError(f"cannot tag {path} at nonexistent version {v}")
     tp = _tag_path(path, name)
     tp.parent.mkdir(parents=True, exist_ok=True)
-    tmp = tp.parent / f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "version": v, "created": _now()}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, tp)
-    _fsync_dir(tp.parent)
+    _write_json(
+        {"name": name, "version": v, "created": _now()}, tp, exclusive=False
+    )
     return v
 
 
@@ -304,19 +311,11 @@ def create_branch(path: str, name: str, version: int | None = None) -> int:
     if version > 0 and not (_snap_dir(path) / _manifest_name(version)).exists():
         raise ValueError(f"cannot branch {path} at nonexistent version {version}")
     bd.mkdir(parents=True, exist_ok=True)
-    rp = bd / "ref.json"
-    tmp = bd / f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "fork_base": version, "created": _now()}, f)
-        f.flush()
-        os.fsync(f.fileno())
+    ref = {"name": name, "fork_base": version, "created": _now()}
     try:
-        os.link(tmp, rp)
+        _write_json(ref, bd / "ref.json", exclusive=True)
     except FileExistsError:
         raise ValueError(f"branch {name!r} already exists on {path}")
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(bd)
     return version
 
 
@@ -432,13 +431,11 @@ def fast_forward_branch(path: str, name: str) -> int:
     _fsync_dir(snap)
     # re-point the ref, then retire the published manifests from the
     # branch dir (they are main's now; the hard link shared the inode)
-    rp = bd / "ref.json"
-    tmp = bd / f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "fork_base": head, "created": ref.get("created")}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, rp)
+    _write_json(
+        {"name": name, "fork_base": head, "created": ref.get("created")},
+        bd / "ref.json",
+        exclusive=False,
+    )
     for v in range(fork + 1, head + 1):
         try:
             os.unlink(bd / _manifest_name(v))
@@ -1649,15 +1646,11 @@ def register_snapshot_view(
     return df
 
 
-#: _commit default for ``tombstones``: carry the parent's entries per
-#: the directory rule. An EXPLICIT None (restore_snapshot restoring a
-#: tombstone-free version) must instead mean "no tombstones", so the
-#: default is a sentinel, not None.
-_TOMB_CARRY = object()
-
-#: _commit default for ``updates`` (merge-on-read UPDATE delta rels):
-#: same carry-vs-explicit-None distinction as _TOMB_CARRY.
-_UPD_CARRY = object()
+#: _commit default for ``tombstones`` and ``updates`` (merge-on-read
+#: delta rels): carry the parent's entries per the directory rule. An
+#: EXPLICIT None (restore_snapshot restoring a sidecar-free version)
+#: must instead mean "none", so the default is a sentinel, not None.
+_CARRY = object()
 
 #: Tombstone/delta sequence for legacy (pre-round-12) tombstone rels
 #: that recorded no "seqs": they predate update deltas, so "applies to
@@ -1681,10 +1674,9 @@ def _commit(
     txn: tuple[str, int] | None = None,
     stats: dict | None = None,
     blooms: dict | None = None,
-    parent_txns: dict | None = None,
     parent_manifest: dict | None = None,
-    tombstones: "dict | None | object" = _TOMB_CARRY,
-    updates: "dict | None | object" = _UPD_CARRY,
+    tombstones: "dict | None | object" = _CARRY,
+    updates: "dict | None | object" = _CARRY,
     branch: str | None = None,
 ) -> int:
     """Atomically publish ``parent + 1``; raise on a lost race.
@@ -1695,11 +1687,10 @@ def _commit(
     ``txn=(app_id, version)`` records an idempotence watermark carried
     forward from the parent manifest — the mechanism behind
     exactly-once ``foreachBatch`` sinks (same public pattern as
-    Delta's txnAppId/txnVersion). ``parent_txns`` lets a caller that
-    already parsed the parent manifest hand over its txn dict instead
-    of paying a second full-manifest parse here (large tables carry
-    big partition maps in that JSON); ``parent_manifest`` does the
-    same for the whole parent manifest.
+    Delta's txnAppId/txnVersion). ``parent_manifest`` lets a caller
+    that already parsed the parent manifest hand it over instead of
+    paying a second full-manifest parse here (large tables carry big
+    partition maps in that JSON).
 
     Merge-on-read TOMBSTONES (see :func:`delete_where` mode
     ``"merge-on-read"``) ride the manifest as ``{"key": col, "parts":
@@ -1731,33 +1722,28 @@ def _commit(
             path, parent if branch is None else f"branch:{branch}@{parent}"
         )
     parent_manifest = parent_manifest or {}
-    txns = dict(
-        (parent_manifest.get("txn") or {})
-        if parent_txns is None
-        else parent_txns
-    )
+    txns = dict(parent_manifest.get("txn") or {})
     if txn is not None:
         txns[txn[0]] = txn[1]
-    if tombstones is _TOMB_CARRY:
-        ptomb = parent_manifest.get("tombstones") or {}
-        carried = {
+    parent_parts = parent_manifest.get("partitions") or {}
+
+    def carry(side: str) -> "dict | None":
+        """The parent's sidecar entries of every partition carried by
+        reference (same rel as the parent)."""
+        prev = parent_manifest.get(side) or {}
+        kept = {
             p: e
-            for p, e in (ptomb.get("parts") or {}).items()
-            if p in partitions
-            and partitions[p] == (parent_manifest.get("partitions") or {}).get(p)
+            for p, e in (prev.get("parts") or {}).items()
+            if p in partitions and partitions[p] == parent_parts.get(p)
         }
-        tombstones = (
-            {"key": ptomb["key"], "parts": carried} if carried else None
-        )
-    if updates is _UPD_CARRY:
-        pupd = parent_manifest.get("updates") or {}
-        carried_u = {
-            p: e
-            for p, e in (pupd.get("parts") or {}).items()
-            if p in partitions
-            and partitions[p] == (parent_manifest.get("partitions") or {}).get(p)
-        }
-        updates = {"parts": carried_u} if carried_u else None
+        if not kept:
+            return None
+        return {**prev, "parts": kept}
+
+    if tombstones is _CARRY:
+        tombstones = carry("tombstones")
+    if updates is _CARRY:
+        updates = carry("updates")
     manifest = {
         "version": version,
         "parent": parent,
@@ -1781,22 +1767,25 @@ def _commit(
         manifest["tombstones"] = tombstones
     if updates:
         manifest["updates"] = updates
-    tmp = snap / f".tmp-{uuid.uuid4().hex[:12]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, snap / _manifest_name(version))
+        _write_json(manifest, snap / _manifest_name(version), exclusive=True)
     except FileExistsError as exc:
         raise ConcurrentCommitError(
             f"version {version} of {path} was committed by another writer; "
             "re-read the snapshot and retry"
         ) from exc
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(snap)
     return version
+
+
+def _meta_commit(path: str, parent: int, man: dict, op: str, meta: dict, **kw) -> int:
+    """A METADATA-ONLY commit on parent manifest ``man``: every
+    partition carried by reference with its stats and blooms, unless
+    ``kw`` (the rest of :func:`_commit`'s keywords) says otherwise."""
+    kw.setdefault("stats", man.get("stats"))
+    kw.setdefault("blooms", man.get("blooms"))
+    return _commit(
+        path, parent, dict(man["partitions"]), op, meta, parent_manifest=man, **kw
+    )
 
 
 #: Cap on driver-side partition-value collects. These collects are
@@ -2048,6 +2037,27 @@ def _fsync_dir(path) -> None:
         os.close(fd)
 
 
+def _write_json(obj, dst: Path, *, exclusive: bool) -> None:
+    """Publish ``obj`` as JSON at ``dst``, durably and atomically: an
+    fsync'd temp file in the same directory, then ``os.link`` when
+    ``exclusive`` (atomic AND fails with FileExistsError when ``dst``
+    exists — the optimistic-concurrency lock of every commit) or
+    ``os.replace`` (re-point), then an fsync of the directory entry."""
+    tmp = dst.parent / f".tmp-{uuid.uuid4().hex[:12]}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    if exclusive:
+        try:
+            os.link(tmp, dst)
+        finally:
+            os.unlink(tmp)
+    else:
+        os.replace(tmp, dst)
+    _fsync_dir(dst.parent)
+
+
 def _check_retired(columns, prev_meta: dict, who: str) -> None:
     """Reject retired column names (renamed-from or dropped by
     evolve_snapshot_schema): the read-side cumulative rename chain
@@ -2153,6 +2163,96 @@ def _enforce_constraints(df: DataFrame, constraints: list[str]) -> None:
         )
 
 
+def _write_table_data(
+    df: DataFrame,
+    path: str,
+    partition_col: "str | list[str]",
+    *,
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
+    bloom_bits: int,
+    constraints: list[str] | None = None,
+    pinned: bool = False,
+) -> tuple[dict, dict, dict]:
+    """The one data-write step every table-data commit runs
+    (:func:`write_snapshot`, :func:`stage_commit`, the partition-scoped
+    merge/append/replace, :func:`compact_snapshot`): CHECK the rows,
+    compute the partition blooms, write the data files with their
+    footer stats (:func:`_write_commit_data`), then the per-file
+    blooms. Returns ``(entries, stats, blooms)`` for the manifest.
+
+    A bloom or constraint pass evaluates ``df`` a second time, so the
+    plan is pinned first (unless the caller already did — ``pinned``):
+    a nondeterministic input must not persist bitmaps, or pass checks,
+    that disagree with the written rows."""
+    if (bloom_cols or constraints) and not pinned:
+        df = df.localCheckpoint(eager=False)
+    if constraints:
+        _enforce_constraints(df, constraints)
+    blooms = (
+        _compute_blooms(df, partition_col, bloom_cols, bloom_bits)
+        if bloom_cols
+        else {}
+    )
+    entries, stats = _write_commit_data(df, path, partition_col, stats_cols)
+    if bloom_cols:
+        _add_file_blooms(
+            df.sparkSession, path, entries, blooms, bloom_cols, bloom_bits
+        )
+    return entries, stats, blooms
+
+
+def _overwrite_data(
+    df: DataFrame,
+    path: str,
+    partition_col: "str | list[str]",
+    parent: int,
+    op: str,
+    *,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    bloom_bits: int | None = None,
+    constraints: list[str] | None = None,
+) -> tuple[dict, dict, dict, dict, dict]:
+    """Full-content write shared by :func:`write_snapshot` and
+    :func:`stage_commit`: resolve the table properties against the
+    parent (each omitted property inherits the recorded one), write
+    the data, and build the new schema meta. Returns ``(parent
+    manifest, meta, entries, stats, blooms)``."""
+    prior_man = read_manifest(path, parent) if parent else {}
+    prior_schema = prior_man.get("schema") or {}
+    if stats_cols is None:
+        stats_cols = prior_schema.get("stats_cols")
+    if constraints is None:
+        constraints = prior_schema.get("constraints")
+    if bloom_cols is None:
+        bloom_cols = prior_schema.get("bloom_cols")
+    if bloom_bits is None:
+        # inherited even when bloom_cols is restated explicitly — a
+        # refresh repeating the columns must not silently shrink the
+        # table's sized bitmaps back to the default
+        bloom_bits = prior_schema.get("bloom_bits") or BLOOM_BITS
+    if bloom_bits % 8:
+        raise ValueError(f"bloom_bits must be a multiple of 8, got {bloom_bits}")
+    _check_retired(df.columns, prior_schema, op)
+    entries, stats, blooms = _write_table_data(
+        df, path, partition_col, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, bloom_bits=bloom_bits, constraints=constraints,
+    )
+    meta = _schema_meta(df, partition_col, stats_cols, bloom_cols, bloom_bits)
+    if constraints:
+        meta["constraints"] = list(constraints)
+    # Carry the rename/drop registry through the overwrite (NOT
+    # constraints — those are inherited-on-None above, and carrying
+    # them here would undo an explicit `constraints=[]` drop).
+    # Over-carrying after a full rewrite is harmless: the registry
+    # only ever gates name reuse and read-side rename resolution.
+    for k in ("renames", "dropped"):
+        if prior_schema.get(k):
+            meta[k] = prior_schema[k]
+    return prior_man, meta, entries, stats, blooms
+
+
 _STAGED_DIR = "staged"
 
 
@@ -2203,35 +2303,10 @@ def stage_commit(
         )
     _check_partition_type(df, partition_col, "stage")
     parent = current_version(path)
-    prior_man = read_manifest(path, parent) if parent else {}
-    prior_schema = prior_man.get("schema") or {}
-    if stats_cols is None:
-        stats_cols = prior_schema.get("stats_cols")
-    constraints = prior_schema.get("constraints")
-    if bloom_cols is None:
-        bloom_cols = prior_schema.get("bloom_cols")
-    bloom_bits = prior_schema.get("bloom_bits") or BLOOM_BITS
-    _check_retired(df.columns, prior_schema, "stage")
-    if bloom_cols or constraints:
-        df = df.localCheckpoint(eager=False)
-    if constraints:
-        _enforce_constraints(df, constraints)
-    blooms = (
-        _compute_blooms(df, partition_col, bloom_cols, bloom_bits)
-        if bloom_cols
-        else {}
+    prior_man, meta, entries, stats, blooms = _overwrite_data(
+        df, path, partition_col, parent, "stage",
+        stats_cols=stats_cols, bloom_cols=bloom_cols,
     )
-    entries, stats = _write_commit_data(df, path, partition_col, stats_cols)
-    if bloom_cols:
-        _add_file_blooms(
-            df.sparkSession, path, entries, blooms, bloom_cols, bloom_bits
-        )
-    meta = _schema_meta(df, partition_col, stats_cols, bloom_cols, bloom_bits)
-    if constraints:
-        meta["constraints"] = list(constraints)
-    for k in ("renames", "dropped"):
-        if prior_schema.get(k):
-            meta[k] = prior_schema[k]
     manifest = {
         # version is assigned at PUBLISH time; parent records what the
         # stage was built against for the optimistic publish check
@@ -2247,20 +2322,12 @@ def stage_commit(
         "blooms": blooms,
     }
     sp.parent.mkdir(parents=True, exist_ok=True)
-    tmp = sp.parent / f".tmp-{uuid.uuid4().hex[:12]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, sp)
+        _write_json(manifest, sp, exclusive=True)
     except FileExistsError:
         raise ValueError(
             f"staged commit {name!r} was created concurrently on {path}"
         )
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(sp.parent)
     return f"staged:{name}"
 
 
@@ -2286,22 +2353,15 @@ def publish_staged(path: str, name: str) -> int:
     version = parent + 1
     manifest["version"] = version
     manifest["committed_at"] = _now()
-    snap = _snap_dir(path)
-    tmp = snap / f".tmp-{uuid.uuid4().hex[:12]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, snap / _manifest_name(version))
+        _write_json(
+            manifest, _snap_dir(path) / _manifest_name(version), exclusive=True
+        )
     except FileExistsError as exc:
         raise ConcurrentCommitError(
             f"version {version} of {path} was committed by another writer "
             "while publishing; drop_staged and re-stage"
         ) from exc
-    finally:
-        os.unlink(tmp)
-    _fsync_dir(snap)
     os.unlink(sp)
     return version
 
@@ -2361,6 +2421,24 @@ def _mixed_spec(man: dict) -> bool:
     )
 
 
+def _split_stats_cols(stats_cols) -> "tuple[list, list, list, list]":
+    """Sort a ``stats_cols`` property by the entry each name requests:
+    ``(min/max columns, ::hll base columns, ::sum base columns,
+    [(base column, width, full key)] for ::hist:<width>)``."""
+    mm_cols, hll_cols, sum_cols, hist_specs = [], [], [], []
+    for c in stats_cols or []:
+        hm = _HIST_KEY_RE.match(c)
+        if hm is not None:
+            hist_specs.append((hm.group("col"), int(hm.group("width")), c))
+        elif c.endswith(HLL_SUFFIX):
+            hll_cols.append(c[: -len(HLL_SUFFIX)])
+        elif c.endswith(SUM_SUFFIX):
+            sum_cols.append(c[: -len(SUM_SUFFIX)])
+        else:
+            mm_cols.append(c)
+    return mm_cols, hll_cols, sum_cols, hist_specs
+
+
 def _write_commit_data(
     df: DataFrame,
     path: str,
@@ -2403,18 +2481,7 @@ def _write_commit_data(
     # Riding in stats_cols means zero new plumbing: property
     # inheritance, cold-partition carry, and _commit's filtering all
     # treat the sketch exactly like any other stats entry.
-    hist_specs = []  # [(base_col, width, full_key)]
-    mm_cols, hll_cols, sum_cols = [], [], []
-    for c in stats_cols or []:
-        hm = _HIST_KEY_RE.match(c)
-        if hm is not None:
-            hist_specs.append((hm.group("col"), int(hm.group("width")), c))
-        elif c.endswith(HLL_SUFFIX):
-            hll_cols.append(c[: -len(HLL_SUFFIX)])
-        elif c.endswith(SUM_SUFFIX):
-            sum_cols.append(c[: -len(SUM_SUFFIX)])
-        else:
-            mm_cols.append(c)
+    mm_cols, hll_cols, sum_cols, hist_specs = _split_stats_cols(stats_cols)
     entries = {}
     stats = {}
 
@@ -2440,25 +2507,30 @@ def _write_commit_data(
         # numRecords idiom.
         s[N_ROWS_KEY] = n_rows
         stats[pname] = s
-    if hll_cols and entries:
-        for pname, regs_by_col in _compute_hlls(
-            df.sparkSession, out, partition_col, hll_cols
-        ).items():
+    if entries:
+        sketches = _sketch_stats(
+            df.sparkSession, out, partition_col, hll_cols, sum_cols, hist_specs
+        )
+        for pname, e in sketches.items():
             if pname in stats:
-                stats[pname].update(regs_by_col)
-    if sum_cols and entries:
-        for pname, sums_by_col in _compute_sums(
-            df.sparkSession, out, partition_col, sum_cols
-        ).items():
-            if pname in stats:
-                stats[pname].update(sums_by_col)
-    if hist_specs and entries:
-        for pname, hists in _compute_hists(
-            df.sparkSession, out, partition_col, hist_specs
-        ).items():
-            if pname in stats:
-                stats[pname].update(hists)
+                stats[pname].update(e)
     return entries, stats
+
+
+def _sketch_stats(spark, src, partition_col, hll_cols, sum_cols, hist_specs):
+    """``{pname: {key: entry}}`` of the ``::hll``/``::sum``/``::hist``
+    sketches over ``src`` — a just-written commit dir, or the readback
+    frame of :func:`backfill_table_stats`."""
+    out: "dict[str, dict]" = {}
+    for fn, cols in (
+        (_compute_hlls, hll_cols),
+        (_compute_sums, sum_cols),
+        (_compute_hists, hist_specs),
+    ):
+        if cols:
+            for pname, e in fn(spark, src, partition_col, cols).items():
+                out.setdefault(pname, {}).update(e)
+    return out
 
 
 #: Reserved stats_cols suffix requesting a per-partition HLL register
@@ -2786,54 +2858,11 @@ def write_snapshot(
     df = _apply_distribution(df, partition_col, distribution, order_by)
     _check_partition_type(df, partition_col, "overwrite")
     parent = current_version(path) if expected_version is None else expected_version
-    prior_man = read_manifest(path, parent) if parent else {}
-    prior_schema = prior_man.get("schema") or {}
-    if stats_cols is None:
-        stats_cols = prior_schema.get("stats_cols")
-    if constraints is None:
-        constraints = prior_schema.get("constraints")
-    if bloom_cols is None:
-        bloom_cols = prior_schema.get("bloom_cols")
-    if bloom_bits is None:
-        # inherited even when bloom_cols is restated explicitly — a
-        # refresh repeating the columns must not silently shrink the
-        # table's sized bitmaps back to the default
-        bloom_bits = prior_schema.get("bloom_bits")
-    if bloom_bits is None:
-        bloom_bits = BLOOM_BITS
-    if bloom_bits % 8:
-        raise ValueError(f"bloom_bits must be a multiple of 8, got {bloom_bits}")
-    _check_retired(df.columns, prior_schema, "overwrite")
-    if bloom_cols or constraints:
-        # Pin the plan's output before evaluating it twice (bloom agg /
-        # constraint check + data write): a nondeterministic input
-        # would otherwise persist bitmaps (or pass checks) disagreeing
-        # with the written rows. Same reason merge/compact checkpoint
-        # before their bloom pass.
-        df = df.localCheckpoint(eager=False)
-    if constraints:
-        _enforce_constraints(df, constraints)
-    blooms = (
-        _compute_blooms(df, partition_col, bloom_cols, bloom_bits)
-        if bloom_cols
-        else {}
+    prior_man, meta, entries, stats, blooms = _overwrite_data(
+        df, path, partition_col, parent, "overwrite",
+        stats_cols=stats_cols, bloom_cols=bloom_cols,
+        bloom_bits=bloom_bits, constraints=constraints,
     )
-    entries, stats = _write_commit_data(df, path, partition_col, stats_cols)
-    if bloom_cols:
-        _add_file_blooms(
-            df.sparkSession, path, entries, blooms, bloom_cols, bloom_bits
-        )
-    meta = _schema_meta(df, partition_col, stats_cols, bloom_cols, bloom_bits)
-    if constraints:
-        meta["constraints"] = list(constraints)
-    # Carry the rename/drop registry through the overwrite (NOT
-    # constraints — those are inherited-on-None above, and carrying
-    # them here would undo an explicit `constraints=[]` drop).
-    # Over-carrying after a full rewrite is harmless: the registry
-    # only ever gates name reuse and read-side rename resolution.
-    for k in ("renames", "dropped"):
-        if prior_schema.get(k):
-            meta[k] = prior_schema[k]
     return _commit(
         path,
         parent,
@@ -2842,7 +2871,6 @@ def write_snapshot(
         meta,
         stats=stats,
         blooms=blooms,
-        parent_txns=prior_man.get("txn") or {},
         parent_manifest=prior_man,
     )
 
@@ -3040,7 +3068,7 @@ def _partition_scoped_commit(
             "directory speaks the current spec) — compact_snapshot to "
             "migrate, or append_snapshot for pure adds"
         )
-    if txn is not None and (man.get("txn") or {}).get(txn[0], -1) >= txn[1]:
+    if _txn_done(man, txn):
         # This transaction (e.g. a replayed streaming micro-batch) is
         # already in the table — idempotent no-op.
         return parent
@@ -3064,59 +3092,18 @@ def _partition_scoped_commit(
                 "schema evolution only adds columns"
             )
     _check_retired(source.columns, prev_meta, "source")
-    bootstrap = parent == 0 or not man["partitions"]
-    table_stats_cols = (man.get("schema") or {}).get("stats_cols") or (
+    # An empty parent is just a table with no existing partitions: the
+    # rewrite below then has nothing to combine or carry. The writer's
+    # stats/bloom columns only define the table while it is empty;
+    # afterwards the manifest's properties win.
+    bootstrap = not man["partitions"]
+    table_stats_cols = prev_meta.get("stats_cols") or (
         stats_cols if bootstrap else None
     )
-    table_bloom_cols = (man.get("schema") or {}).get("bloom_cols") or (
+    table_bloom_cols = prev_meta.get("bloom_cols") or (
         bloom_cols if bootstrap else None
     )
-    table_bloom_bits = (man.get("schema") or {}).get("bloom_bits") or BLOOM_BITS
-    table_constraints = prev_meta.get("constraints")
-    if bootstrap:
-        if table_constraints:
-            _enforce_constraints(source, table_constraints)
-        blooms = (
-            _compute_blooms(
-                source, partition_col, table_bloom_cols, table_bloom_bits
-            )
-            if table_bloom_cols
-            else {}
-        )
-        entries, stats = _write_commit_data(
-            source, target_path, partition_col, table_stats_cols
-        )
-        if table_bloom_cols:
-            _add_file_blooms(
-                source.sparkSession,
-                target_path,
-                entries,
-                blooms,
-                table_bloom_cols,
-                table_bloom_bits,
-            )
-        return _commit(
-            target_path,
-            parent,
-            entries,
-            operation,
-            _carry_evolution(
-                _schema_meta(
-                    source,
-                    partition_col,
-                    table_stats_cols,
-                    table_bloom_cols,
-                    table_bloom_bits,
-                ),
-                prev_meta,
-            ),
-            txn,
-            stats=stats,
-            blooms=blooms,
-            parent_txns=man.get("txn") or {},
-            parent_manifest=man,
-            branch=branch,
-        )
+    table_bloom_bits = prev_meta.get("bloom_bits") or BLOOM_BITS
 
     if strict_key is not None:
         cold = {p for p in man["partitions"] if p not in touched}
@@ -3157,51 +3144,24 @@ def _partition_scoped_commit(
         merged = combine(existing, source)
     else:
         merged = source
-    if table_bloom_cols or table_constraints:
-        # One extra aggregate pass over the REWRITTEN partitions only;
-        # the merged frame is re-derived from the checkpointed source
-        # plus the touched-partition scan.
-        merged = merged.localCheckpoint(eager=False)
-    if table_constraints:
-        _enforce_constraints(merged, table_constraints)
-    if table_bloom_cols:
-        new_blooms = _compute_blooms(
-            merged, partition_col, table_bloom_cols, table_bloom_bits
-        )
-    else:
-        new_blooms = {}
-    new_entries, new_stats = _write_commit_data(
-        merged, target_path, partition_col, table_stats_cols
+    new_entries, new_stats, new_blooms = _write_table_data(
+        merged,
+        target_path,
+        partition_col,
+        stats_cols=table_stats_cols,
+        bloom_cols=table_bloom_cols,
+        bloom_bits=table_bloom_bits,
+        constraints=prev_meta.get("constraints"),
+        pinned=merged is source,
     )
-    if table_bloom_cols:
-        _add_file_blooms(
-            merged.sparkSession,
-            target_path,
-            new_entries,
-            new_blooms,
-            table_bloom_cols,
-            table_bloom_bits,
-        )
-    drops = drop_partitions or set()
-    partitions = {
-        part: rel
-        for part, rel in man["partitions"].items()
-        if part not in touched and part not in drops  # carried by reference
-    }
+    # Cold partitions carry by reference, keeping their recorded
+    # stats/blooms alongside their data.
+    gone = touched | set(drop_partitions or ())
+    partitions = {p: r for p, r in man["partitions"].items() if p not in gone}
     partitions.update(new_entries)
-    # Cold partitions keep their recorded stats/blooms alongside
-    # their data.
-    stats = {
-        part: s
-        for part, s in (man.get("stats") or {}).items()
-        if part not in touched and part not in drops
-    }
+    stats = {p: v for p, v in (man.get("stats") or {}).items() if p not in gone}
     stats.update(new_stats)
-    blooms = {
-        part: b
-        for part, b in (man.get("blooms") or {}).items()
-        if part not in touched and part not in drops
-    }
+    blooms = {p: b for p, b in (man.get("blooms") or {}).items() if p not in gone}
     blooms.update(new_blooms)
     return _commit(
         target_path,
@@ -3221,7 +3181,6 @@ def _partition_scoped_commit(
         txn,
         stats=stats,
         blooms=blooms,
-        parent_txns=man.get("txn") or {},
         parent_manifest=man,
         branch=branch,
     )
@@ -3301,17 +3260,7 @@ def evolve_snapshot_schema(
         [old, new] for old, new in renames.items()
     ]
     meta["dropped"] = list(meta.get("dropped") or []) + drops
-    return _commit(
-        path,
-        parent,
-        dict(man["partitions"]),
-        "evolve",
-        meta,
-        stats=dict(man.get("stats") or {}),
-        blooms=dict(man.get("blooms") or {}),
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
-    )
+    return _meta_commit(path, parent, man, "evolve", meta)
 
 
 def evolve_partition_spec(path: str, new_partition_col) -> int:
@@ -3415,17 +3364,7 @@ def evolve_partition_spec(path: str, new_partition_col) -> int:
         if entry not in prior:
             prior.append(entry)
     meta["prior_specs"] = prior
-    return _commit(
-        path,
-        parent,
-        dict(man["partitions"]),
-        "evolve-spec",
-        meta,
-        stats=dict(man.get("stats") or {}),
-        blooms=dict(man.get("blooms") or {}),
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
-    )
+    return _meta_commit(path, parent, man, "evolve-spec", meta)
 
 
 def clone_snapshot(
@@ -3499,7 +3438,6 @@ def clone_snapshot(
         dict(man.get("schema") or {}),
         stats=dict(man.get("stats") or {}),
         blooms=dict(man.get("blooms") or {}),
-        parent_txns={},
         parent_manifest={},
         tombstones=tomb,
         updates=upd,
@@ -3562,32 +3500,28 @@ def deep_clone_snapshot(
         p: _plan_dir(rel, os.path.join(DATA_DIR, commit_id, p))
         for p, rel in sorted((man.get("partitions") or {}).items())
     }
-    tomb = man.get("tombstones")
-    if tomb:
-        new_parts = {}
-        for p, e in (tomb.get("parts") or {}).items():
-            rels = [
-                _plan_dir(
-                    r,
-                    os.path.join(DATA_DIR, commit_id, f"__tomb{i}", p),
-                )
-                for i, r in enumerate(e["rels"])
-            ]
-            new_parts[p] = {**e, "rels": rels}
-        tomb = {"key": tomb["key"], "parts": new_parts}
-    upd = man.get("updates")
-    if upd:
-        new_uparts = {}
-        for p, e in (upd.get("parts") or {}).items():
-            rels = [
-                _plan_dir(
-                    r,
-                    os.path.join(DATA_DIR, commit_id, f"__upd{i}", p),
-                )
-                for i, r in enumerate(e["rels"])
-            ]
-            new_uparts[p] = {**e, "rels": rels}
-        upd = {"parts": new_uparts}
+
+    def _plan_sidecars(side: str, tag: str) -> "dict | None":
+        """Copy plan for the tombstone or update-delta rels."""
+        car = man.get(side)
+        if not car:
+            return None
+        return {
+            **car,
+            "parts": {
+                p: {
+                    **e,
+                    "rels": [
+                        _plan_dir(r, os.path.join(DATA_DIR, commit_id, f"{tag}{i}", p))
+                        for i, r in enumerate(e["rels"])
+                    ],
+                }
+                for p, e in (car.get("parts") or {}).items()
+            },
+        }
+
+    tomb = _plan_sidecars("tombstones", "__tomb")
+    upd = _plan_sidecars("updates", "__upd")
 
     def _copy(pair: tuple[str, str]) -> None:
         shutil.copyfile(pair[0], pair[1])
@@ -3609,9 +3543,9 @@ def deep_clone_snapshot(
         dict(man.get("schema") or {}),
         stats=dict(man.get("stats") or {}),
         blooms=dict(man.get("blooms") or {}),
-        parent_txns={},
         parent_manifest={},
         tombstones=tomb,
+        updates=upd,
     )
 
 
@@ -3670,14 +3604,8 @@ def alter_table_properties(
     )
 
     def _base(c: str) -> str:
-        hm = _HIST_KEY_RE.match(c)
-        if hm is not None:
-            return hm.group("col")
-        if c.endswith(HLL_SUFFIX):
-            return c[: -len(HLL_SUFFIX)]
-        if c.endswith(SUM_SUFFIX):
-            return c[: -len(SUM_SUFFIX)]
-        return c
+        mm, hll, sums, hists = _split_stats_cols([c])
+        return (mm + hll + sums + [b for b, _w, _k in hists])[0]
 
     for prop, val in (("stats_cols", stats_cols), ("bloom_cols", bloom_cols)):
         if val is _KEEP or val is None:
@@ -3710,17 +3638,7 @@ def alter_table_properties(
             meta.pop(key_, None)
         else:
             meta[key_] = list(val) if key_ != "bloom_bits" else int(val)
-    return _commit(
-        path,
-        parent,
-        dict(man["partitions"]),
-        "alter",
-        meta,
-        stats=dict(man.get("stats") or {}),
-        blooms=dict(man.get("blooms") or {}),
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
-    )
+    return _meta_commit(path, parent, man, "alter", meta)
 
 
 def backfill_table_stats(spark: SparkSession, path: str) -> int:
@@ -3781,19 +3699,10 @@ def backfill_table_stats(spark: SparkSession, path: str) -> int:
     declared = list(meta.get("stats_cols") or [])
     bloom_cols = list(meta.get("bloom_cols") or [])
     bloom_bits = int(meta.get("bloom_bits") or BLOOM_BITS)
-    mm_cols, hll_cols, sum_cols, hist_specs = [], [], [], []
-    for c in declared:
-        hm = _HIST_KEY_RE.match(c)
-        if hm is not None:
-            hist_specs.append((hm.group("col"), int(hm.group("width")), c))
-        elif c.endswith(HLL_SUFFIX):
-            hll_cols.append(c[: -len(HLL_SUFFIX)])
-        elif c.endswith(SUM_SUFFIX):
-            sum_cols.append(c[: -len(SUM_SUFFIX)])
-        elif c not in spec_cols:
-            # a spec column never records footer stats (it is not a
-            # file column) — the directory name IS its value
-            mm_cols.append(c)
+    mm_cols, hll_cols, sum_cols, hist_specs = _split_stats_cols(declared)
+    # a spec column never records footer stats (it is not a file
+    # column) — the directory name IS its value
+    mm_cols = [c for c in mm_cols if c not in spec_cols]
     partitions = man.get("partitions") or {}
     stats = {p: dict(e) for p, e in (man.get("stats") or {}).items()}
     blooms = {p: dict(e) for p, e in (man.get("blooms") or {}).items()}
@@ -3873,18 +3782,9 @@ def backfill_table_stats(spark: SparkSession, path: str) -> int:
             if c in back.columns:
                 back = back.withColumn(c, F.col(c).cast(t))
         part_arg = spec_cols if len(spec_cols) > 1 else spec_cols[0]
-        computed: "dict[str, dict]" = {}
-        if sum_cols:
-            for p, e in _compute_sums(spark, back, part_arg, sum_cols).items():
-                computed.setdefault(p, {}).update(e)
-        if hll_cols:
-            for p, e in _compute_hlls(spark, back, part_arg, hll_cols).items():
-                computed.setdefault(p, {}).update(e)
-        if hist_specs:
-            for p, e in _compute_hists(
-                spark, back, part_arg, hist_specs
-            ).items():
-                computed.setdefault(p, {}).update(e)
+        computed = _sketch_stats(
+            spark, back, part_arg, hll_cols, sum_cols, hist_specs
+        )
         for pname in needy_scan:
             ent = stats.setdefault(pname, {})
             for k, v in (computed.get(pname) or {}).items():
@@ -3911,16 +3811,8 @@ def backfill_table_stats(spark: SparkSession, path: str) -> int:
                 tgt = blooms.setdefault(pname, {})
                 for c, bm in (fresh.get(pname) or {}).items():
                     tgt.setdefault(c, bm)
-    return _commit(
-        path,
-        parent,
-        dict(partitions),
-        "backfill",
-        meta,
-        stats=stats,
-        blooms=blooms,
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
+    return _meta_commit(
+        path, parent, man, "backfill", meta, stats=stats, blooms=blooms
     )
 
 
@@ -3979,6 +3871,132 @@ def append_snapshot(
     )
 
 
+def _assign(types: dict, sets: dict, *, hit=None, qual: "str | None" = None) -> list:
+    """The one assignment rule for SET and INSERT values — UPDATE in
+    both modes, MERGE's UPDATE/INSERT clauses and INSERT INTO: one
+    output column per entry of ``types`` (``{table column: recorded
+    DataType}``, in table order). An assigned column takes its value
+    (a SQL string or a Column; only where ``hit`` holds, when given)
+    CAST to the column's recorded type, so no statement silently
+    changes a column's type for every later reader (``amt * 1.5`` on a
+    BIGINT stays BIGINT; a cast that cannot be expressed fails at
+    analysis). Other columns pass through, read as ``qual.col`` when
+    the frame is a join."""
+    from pyspark.sql import Column, functions as F
+
+    out = []
+    for c, t in types.items():
+        old = F.col(f"{qual}.{c}" if qual else c)
+        if c not in sets:
+            out.append(old.alias(c))
+            continue
+        e = sets[c] if isinstance(sets[c], Column) else F.expr(sets[c])
+        if hit is not None:
+            e = F.when(hit, e).otherwise(old)
+        out.append(e.cast(t).alias(c))
+    return out
+
+
+def _live_table(path: str, verb: str) -> "tuple[int, dict, list[str]]":
+    """``(parent, parent manifest, spec columns)`` for a row-level
+    rewrite; refuses an empty table and a layout-mixed one (row
+    rewrites are partition-scoped and would miss old-spec
+    directories)."""
+    parent = current_version(path)
+    man = read_manifest(path, parent)
+    spec = [c for c, _t in _spec_meta(man.get("schema") or {})]
+    if not spec:
+        raise ValueError(f"{path} has no committed snapshot to {verb}")
+    if _mixed_spec(man):
+        raise ValueError(
+            f"{path} holds partitions under a retired partition spec — "
+            f"a row-level {verb} is partition-scoped and would miss "
+            "old-spec directories; compact_snapshot to migrate first"
+        )
+    return parent, man, spec
+
+
+def _check_sets(sets: dict, columns, spec_cols: list[str]) -> None:
+    """An UPDATE's SET map names table columns and leaves the
+    partition spec alone (a row's partition value is its placement)."""
+    unknown = sorted(set(sets) - set(columns))
+    if unknown:
+        raise ValueError(f"UPDATE SET of unknown columns: {unknown}")
+    reassigned = [c for c in spec_cols if c in sets]
+    if reassigned:
+        raise ValueError(
+            f"UPDATE SET may not reassign partition columns {reassigned!r}: "
+            "moving rows between partitions is a delete+insert (MERGE)"
+        )
+
+
+def _txn_done(man: dict, txn) -> bool:
+    """True when the ``txn`` watermark is already in the table (a
+    replayed statement): the caller commits nothing."""
+    return txn is not None and (man.get("txn") or {}).get(txn[0], -1) >= txn[1]
+
+
+def _cow_rewrite(
+    spark: SparkSession,
+    path: str,
+    where,
+    rows: Callable,
+    *,
+    verb: str,
+    alias: "str | None" = None,
+    txn: tuple[str, int] | None = None,
+) -> "tuple[int, int, set, int]":
+    """The one COPY-ON-WRITE row rewrite, behind
+    ``delete_where(mode="copy-on-write")`` and
+    ``sql_merge.execute_update(mode="copy-on-write")``:
+
+    1. one column-pruned hit scan (WHERE columns + spec columns only)
+       counts the rows where ``where`` is TRUE per partition;
+    2. ONLY the partitions holding hits are re-read (``alias`` names
+       the scan, as a statement's ``UPDATE t AS a`` does);
+    3. ``rows(scoped, hit)`` — the caller's row function — gives their
+       new content: the kept rows for a delete, ``when(hit, SET)`` for
+       an update;
+    4. one :func:`replace_partitions` commit against the parent,
+       dropping every affected partition the new content no longer
+       holds (a delete that empties it).
+
+    Returns ``(parent, version, affected partitions, hit rows)``;
+    ``version == parent`` means nothing was committed (no hit, or the
+    ``txn`` watermark absorbed a replay)."""
+    from pyspark.sql import functions as F
+
+    parent, man, spec = _live_table(path, verb)
+    if _txn_done(man, txn):
+        return parent, parent, set(), 0
+    hit = F.coalesce(where, F.lit(False))
+
+    def scan(**kw):
+        df = read_snapshot(spark, path, parent, **kw)
+        return df.alias(alias) if alias else df
+
+    hits = _collect_partition_groups(
+        scan()
+        .groupBy(*spec)
+        .agg(F.sum(F.when(hit, 1).otherwise(0)).alias("n"))
+        .filter(F.col("n") > 0),
+        spec[0],
+        what=verb,
+    )
+    if not hits:
+        return parent, parent, set(), 0
+    affected = {_hive_path_name(spec, tuple(r)[: len(spec)]) for r in hits}
+    version = replace_partitions(
+        path,
+        rows(scan(partition_filter=lambda p: p in affected), hit),
+        spec if len(spec) > 1 else spec[0],
+        expected_version=parent,
+        txn=txn,
+        drop_partitions=affected,
+    )
+    return parent, version, affected, sum(int(r["n"]) for r in hits)
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -3995,32 +4013,37 @@ def delete_where(
     ``condition`` is a Column or a SQL string.
 
     Two modes, the same trade Delta deletion vectors / Iceberg v2
-    delete files make:
+    delete files make, each one of the table's two row-level cores:
 
-    ``mode="copy-on-write"`` (default): one column-pruned scan finds
-    the partitions that actually contain matches; ONLY those
-    partitions are re-read and rewritten without the matching rows — a
-    delete touching 0.1% of partitions rewrites 0.1% of the table. A
-    partition emptied entirely is dropped from the manifest in the
-    same commit. Best when deletes are rare or large.
+    ``mode="copy-on-write"`` (default, :func:`_cow_rewrite`): one
+    column-pruned scan finds the partitions that actually contain
+    matches; ONLY those partitions are re-read and rewritten without
+    the matching rows — a delete touching 0.1% of partitions rewrites
+    0.1% of the table. A partition emptied entirely is dropped from
+    the manifest in the same commit. Best when deletes are rare or
+    large.
 
-    ``mode="merge-on-read"`` (requires ``key=``, a non-null row-key
-    column): NO data rewrite at all — the matching rows' keys are
-    written as per-partition TOMBSTONE files (one small parquet of
-    (key, partition) pairs under a fresh commit dir) and recorded in
-    the manifest; :func:`read_snapshot` applies them as an anti-join.
-    A one-row delete in a 100 TB partition costs O(matches), not a
-    partition rewrite — the point of the mode. Semantics are Iceberg
-    equality-deletes: EVERY row whose key matches a tombstoned key in
-    that partition is suppressed (identical to the condition when the
-    key is unique); rows whose key is NULL cannot be equality-deleted
-    and raise (use copy-on-write). Tombstones are folded away — rows
-    physically dropped, manifest entries cleared — by any rewrite of
-    their partition (:func:`compact_snapshot`, merge, CoW delete),
-    because rewriters derive content from the tombstone-applied read.
-    Manifest aggregates stay exact for COUNT (per-partition suppressed
-    counts are recorded); MIN/MAX over tombstoned partitions refuse
-    (the extreme may be a deleted row).
+    ``mode="merge-on-read"`` (:func:`_mor_write` with no SET map;
+    requires ``key=``, a non-null row-key column): NO data rewrite at
+    all — the matching rows' keys are written as per-partition
+    TOMBSTONE files and recorded in the manifest; :func:`read_snapshot`
+    applies them as an anti-join. A one-row delete in a 100 TB
+    partition costs O(matches), not a partition rewrite — the point of
+    the mode. Semantics are Iceberg equality-deletes: EVERY row whose
+    key matches a tombstoned key in that partition is suppressed
+    (identical to the condition when the key is unique); rows whose
+    key is NULL cannot be equality-deleted and raise (use
+    copy-on-write). Tombstones are folded away — rows physically
+    dropped, manifest entries cleared — by any rewrite of their
+    partition (:func:`compact_snapshot`, merge, CoW delete), because
+    rewriters derive content from the tombstone-applied read. Manifest
+    aggregates stay exact for COUNT (per-partition suppressed counts
+    are recorded); MIN/MAX over tombstoned partitions refuse (the
+    extreme may be a deleted row).
+
+    Rewritten partitions go through the one data-write step
+    (:func:`_write_table_data`), sidecars through
+    :func:`_write_commit_data`.
 
     Old versions still see the deleted rows until
     :func:`expire_snapshots` reclaims them — physical erasure requires
@@ -4038,136 +4061,102 @@ def delete_where(
     if mode == "merge-on-read":
         if key is None:
             raise ValueError("merge-on-read delete requires key=<row key column>")
-        return _delete_where_mor(spark, path, cond, key, txn)
+        return _mor_write(spark, path, cond, key, None, txn=txn)
     if mode != "copy-on-write":
         raise ValueError(f"unknown delete mode {mode!r}")
-    parent = current_version(path)
-    man = read_manifest(path, parent)
-    spec_t = _spec_meta(man.get("schema") or {})
-    if not spec_t:
-        raise ValueError(f"{path} has no committed snapshot to delete from")
-    spec = [c for c, _t in spec_t]
-    if _mixed_spec(man):
-        raise ValueError(
-            f"{path} holds partitions under a retired partition spec — "
-            "row deletes are partition-scoped and would miss old-spec "
-            "directories; compact_snapshot to migrate first"
-        )
-    k = len(spec)
-    cur = read_snapshot(spark, path, parent)
-    hits = _collect_partition_groups(
-        cur.groupBy(*spec)
-        .agg(F.sum(F.when(cond, 1).otherwise(0)).alias("n"))
-        .filter(F.col("n") > 0),
-        spec[0],
-        what="delete",
+    parent, version, affected, deleted = _cow_rewrite(
+        spark, path, cond, lambda scoped, hit: scoped.filter(~hit),
+        verb="delete", txn=txn,
     )
-    if not hits:
-        return {
-            "version": parent,
-            "deleted_rows": 0,
-            "rewritten_partitions": 0,
-            "dropped_partitions": 0,
-            "physical_erasure_requires_expiry": True,
-        }
-    affected = {
-        _hive_path_name(spec, [r[i] for i in range(k)]) for r in hits
-    }
-    deleted = sum(r["n"] for r in hits)
-    keep = (
-        read_snapshot(
-            spark, path, parent, partition_filter=lambda p: p in affected
-        )
-        .filter(~F.coalesce(cond, F.lit(False)))
-        .localCheckpoint(eager=False)
-    )
-    kept_parts = {
-        _hive_path_name(spec, [r[i] for i in range(k)])
-        for r in _collect_partition_groups(
-            keep.select(*spec).distinct(), spec[0], what="delete"
-        )
-    }
-    emptied = affected - kept_parts
-    version = replace_partitions(
-        path,
-        keep,
-        spec if k > 1 else spec[0],
-        expected_version=parent,
-        txn=txn,
-        drop_partitions=emptied,
-    )
-    if version == parent:
-        # txn watermark absorbed a replayed delete — nothing committed.
-        return {
-            "version": version,
-            "deleted_rows": 0,
-            "rewritten_partitions": 0,
-            "dropped_partitions": 0,
-            "physical_erasure_requires_expiry": True,
-        }
+    if version == parent:  # no hit, or the txn watermark absorbed a replay
+        affected, deleted = set(), 0
+    kept = affected & set(read_manifest(path, version)["partitions"])
     return {
         "version": version,
-        "deleted_rows": int(deleted),
-        "rewritten_partitions": len(kept_parts & affected),
-        "dropped_partitions": len(emptied),
+        "deleted_rows": deleted,
+        "rewritten_partitions": len(kept),
+        "dropped_partitions": len(affected - kept),
         "physical_erasure_requires_expiry": True,
     }
 
 
-def _delete_where_mor(
+def _mor_write(
     spark: SparkSession,
     path: str,
-    cond,
+    where,
     key: str,
-    txn: tuple[str, int] | None,
+    sets: "dict | None",
+    *,
+    alias: "str | None" = None,
+    txn: tuple[str, int] | None = None,
 ) -> dict:
-    """Merge-on-read half of :func:`delete_where`: write per-partition
-    key tombstones, rewrite nothing. See the public docstring for the
-    semantics; the mechanics that matter at scale:
+    """The one MERGE-ON-READ writer: :func:`delete_where` mode
+    ``"merge-on-read"`` (``sets=None``) and :func:`update_where` /
+    ``sql_merge.execute_update(mode="merge-on-read")`` (``sets`` =
+    ``{col: SQL expr or Column}``, evaluated over the scan aliased
+    ``alias``). One commit, no partition rewrite:
+
+    - equality TOMBSTONES for the matched keys — one small parquet of
+      (key, *spec) pairs per partition, written ``partitionBy(*spec)``
+      so each sidecar keys to its exact leaf directory, and sequenced
+      at this commit's version so update deltas appended LATER stay
+      live (a legacy rel with no seq backfills as ``_SEQ_INF``, the
+      historical applies-to-everything semantics);
+    - for an update, per-partition UPDATE DELTAS holding the
+      new-version rows (:func:`_assign`, CHECKed against the table's
+      constraints before any sidecar is written), sequenced the same;
+      value stats, sketches and blooms of those partitions are
+      cleared, their ``::n_rows`` kept.
+
+    Mechanics that matter at scale:
 
     - the matching keys are computed from the LIVE view
       (:func:`read_snapshot` applies existing tombstones), so a key
       can never be tombstoned twice and the per-partition suppressed
-      counts stay exact by simple addition;
-    - tombstone parquet goes through :func:`_write_commit_data` — the
+      counts stay exact by simple addition — the key probe joins on
+      (key, *spec) null-safely, so a key tombstoned under one spec
+      tuple never suppresses its namesake in a sibling partition;
+    - sidecar parquet goes through :func:`_write_commit_data` — the
       same fresh-commit-dir, fsync'd, partitioned write as data, so
       expiry GC and crash-safety need no new rules;
     - the manifest commit carries all partitions BY REFERENCE (no rel
       changes), composing with :func:`_commit`'s carry rule: later
-      rewrites of a partition drop its tombstones automatically.
+      rewrites of a partition drop its tombstones and deltas.
 
-    Multi-column partition specs are first-class (round 11): tombstone
-    files are written ``partitionBy(*spec)`` so each sidecar keys to
-    its exact leaf directory (``day=…/source=…``), suppressed counts
-    group by the full spec tuple, and the read-side anti-join matches
-    the key plus EVERY spec component null-safely.
-    """
+    Guards (all loud): one tombstone key per table; the key is a
+    non-partition table column, never NULL among matches; an update
+    may not SET the key or a spec column, and its key must uniquely
+    address the matched rows (a matched key shared with an UNMATCHED
+    live row would silently be suppressed too). Returns the public
+    result dict of :func:`delete_where` or :func:`update_where`."""
     from pyspark.sql import functions as F
 
-    parent = current_version(path)
-    man = read_manifest(path, parent)
-    meta = man.get("schema") or {}
-    spec_t = _spec_meta(meta)
-    if not spec_t:
-        raise ValueError(f"{path} has no committed snapshot to delete from")
-    spec_cols = [c for c, _t in spec_t]
-    pcol = spec_cols[0]
-    if _mixed_spec(man):
-        raise ValueError(
-            f"{path} holds partitions under a retired partition spec — "
-            "tombstone sidecars key to current-spec directories; "
-            "compact_snapshot to migrate first"
-        )
-    if txn is not None and (man.get("txn") or {}).get(txn[0], -1) >= txn[1]:
+    verb = "delete" if sets is None else "update"
+
+    def result(version, n_rows=0, n_keys=0, n_delta=0) -> dict:
+        if sets is None:
+            return {
+                "version": version,
+                "deleted_rows": n_rows,
+                "tombstoned_keys": n_keys,
+                "rewritten_partitions": 0,
+                "dropped_partitions": 0,
+                "mode": "merge-on-read",
+                "physical_erasure_requires_expiry": True,
+            }
         return {
-            "version": parent,
-            "deleted_rows": 0,
-            "tombstoned_keys": 0,
+            "version": version,
+            "updated_rows": n_rows,
+            "tombstoned_keys": n_keys,
+            "delta_partitions": n_delta,
             "rewritten_partitions": 0,
-            "dropped_partitions": 0,
             "mode": "merge-on-read",
-            "physical_erasure_requires_expiry": True,
         }
+
+    parent, man, spec_cols = _live_table(path, verb)
+    if _txn_done(man, txn):
+        return result(parent)
+    meta = man.get("schema") or {}
     prev_tomb = man.get("tombstones") or {}
     if prev_tomb and prev_tomb.get("key") != key:
         raise ValueError(
@@ -4177,29 +4166,45 @@ def _delete_where_mor(
         )
     if key in spec_cols:
         raise ValueError(
-            "tombstone key must not be a partition column — deleting "
-            "a whole partition value is drop_partitions territory "
-            "(copy-on-write delete handles it in one commit)"
+            f"{verb} key must not be a partition column — equality "
+            "tombstones address rows within their partition (a whole "
+            "partition value is a copy-on-write delete)"
         )
     cur = read_snapshot(spark, path, parent)
     if key not in cur.columns:
         raise ValueError(f"key column {key!r} is not a table column")
-    matches = cur.filter(F.coalesce(cond, F.lit(False)))
-    # one aggregate pass: per-partition matched keys + NULL-key guard
-    null_hits = matches.filter(F.col(key).isNull()).limit(1).count()
-    if null_hits:
+    if sets is not None:
+        if _SEQ_COL in cur.columns:
+            raise ValueError(
+                f"column name {_SEQ_COL!r} is reserved for merge-on-read "
+                "sequencing"
+            )
+        _check_sets(sets, cur.columns, spec_cols)
+        if key in sets:
+            raise ValueError(
+                f"UPDATE SET may not reassign the tombstone key {key!r} — "
+                "equality deletes address rows by it (rekeying a row is a "
+                "delete+insert)"
+            )
+    types = {f.name: f.dataType for f in cur.schema.fields}
+    if alias:
+        cur = cur.alias(alias)
+    matches = cur.filter(F.coalesce(where, F.lit(False))).localCheckpoint(
+        eager=False
+    )
+    if alias:  # the checkpoint's plan forgets the scan's alias
+        matches = matches.alias(alias)
+    if matches.filter(F.col(key).isNull()).limit(1).count():
         raise ValueError(
-            "merge-on-read delete matched rows with a NULL key — "
-            "equality deletes cannot address them; use "
+            f"merge-on-read {verb} matched rows with a NULL key — "
+            "equality tombstones cannot address them; use "
             "mode='copy-on-write'"
         )
     keys_df = matches.select(key, *spec_cols).distinct().localCheckpoint(
         eager=False
     )
     # exact suppressed-row counts: every live row whose key is newly
-    # tombstoned (== the anti-join the readers will run, counted once).
-    # The join key is (key, *spec): a key tombstoned under one spec
-    # tuple never suppresses its namesake in a sibling partition.
+    # tombstoned (== the anti-join the readers will run, counted once)
     probe = keys_df.select(
         F.col(key).alias("__dk"),
         *[F.col(c).alias(f"__dp{i}") for i, c in enumerate(spec_cols)],
@@ -4215,60 +4220,65 @@ def _delete_where_mor(
             cur.join(probe, match_cond, "semi")
             .groupBy(*spec_cols)
             .agg(F.count(F.lit(1))),
-            pcol,
-            what="merge-on-read delete",
+            spec_cols[0],
+            what=f"merge-on-read {verb}",
         )
     }
     if not suppressed:
-        return {
-            "version": parent,
-            "deleted_rows": 0,
-            "tombstoned_keys": 0,
-            "rewritten_partitions": 0,
-            "dropped_partitions": 0,
-            "mode": "merge-on-read",
-            "physical_erasure_requires_expiry": True,
-        }
+        return result(parent)
+    n_rows = sum(suppressed.values())
+    seq = parent + 1
+    stats = dict(man.get("stats") or {})
+    blooms = dict(man.get("blooms") or {})
+    updates = _CARRY
+    u_entries = {}
+    if sets is not None:
+        n_matched = matches.count()
+        if n_rows != n_matched:
+            raise ValueError(
+                f"update key {key!r} does not uniquely address the matched "
+                f"rows: tombstoning their keys would also suppress "
+                f"{n_rows - n_matched} live row(s) the WHERE did not match "
+                "(rows sharing a key) — use the copy-on-write path "
+                "(sql_merge.execute_update)"
+            )
+        new_rows = matches.select(*_assign(types, sets))
+        if meta.get("constraints"):
+            _enforce_constraints(new_rows, meta["constraints"])
+        u_entries, u_stats = _write_commit_data(new_rows, path, spec_cols, [])
+        upd_parts = dict((man.get("updates") or {}).get("parts") or {})
+        for pname, rel in u_entries.items():
+            e = upd_parts.get(pname) or {"rels": [], "seqs": [], "n_rows": 0}
+            upd_parts[pname] = {
+                "rels": list(e["rels"]) + [rel],
+                "seqs": list(e["seqs"]) + [seq],
+                "n_rows": int(e["n_rows"])
+                + int((u_stats.get(pname) or {}).get(N_ROWS_KEY) or 0),
+            }
+        updates = {"parts": upd_parts}
+        # Clear value metadata for updated partitions: the new versions
+        # may lie outside every recorded bound/bloom/sketch; exact
+        # COUNT(*) keeps flowing from ::n_rows − n_deleted + delta n_rows.
+        for p in set(u_entries) & set(stats):
+            n = stats[p].get(N_ROWS_KEY)
+            stats[p] = {} if n is None else {N_ROWS_KEY: n}
+        blooms = {p: b for p, b in blooms.items() if p not in u_entries}
     n_keys = keys_df.count()
-    entries, _tomb_stats = _write_commit_data(keys_df, path, spec_cols, [])
-    parts = dict((prev_tomb.get("parts") or {}))
-    for pname, rel in entries.items():
-        e = dict(parts.get(pname) or {"rels": [], "n_deleted": 0})
-        # seqs ride parallel to rels (missing entries of a legacy rel
-        # backfill as _SEQ_INF = the historical applies-to-everything
-        # semantics); the new rel's seq is the version this commit
-        # will publish, so update deltas appended LATER stay live.
-        prev_seqs = list(
-            e.get("seqs") or [_SEQ_INF] * len(e["rels"])
-        )
-        e = {
+    t_entries, _t_stats = _write_commit_data(keys_df, path, spec_cols, [])
+    tomb_parts = dict(prev_tomb.get("parts") or {})
+    for pname, rel in t_entries.items():
+        e = tomb_parts.get(pname) or {"rels": [], "n_deleted": 0}
+        tomb_parts[pname] = {
             "rels": list(e["rels"]) + [rel],
-            "seqs": prev_seqs + [parent + 1],
+            "seqs": list(e.get("seqs") or [_SEQ_INF] * len(e["rels"])) + [seq],
             "n_deleted": int(e["n_deleted"]) + suppressed.get(pname, 0),
         }
-        parts[pname] = e
-    version = _commit(
-        path,
-        parent,
-        dict(man["partitions"]),
-        "delete-mor",
-        meta,
-        txn=txn,
-        stats=dict(man.get("stats") or {}),
-        blooms=dict(man.get("blooms") or {}),
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
-        tombstones={"key": key, "parts": parts},
+    version = _meta_commit(
+        path, parent, man, f"{verb}-mor", meta, txn=txn, stats=stats,
+        blooms=blooms, tombstones={"key": key, "parts": tomb_parts},
+        updates=updates,
     )
-    return {
-        "version": version,
-        "deleted_rows": int(sum(suppressed.values())),
-        "tombstoned_keys": int(n_keys),
-        "rewritten_partitions": 0,
-        "dropped_partitions": 0,
-        "mode": "merge-on-read",
-        "physical_erasure_requires_expiry": True,
-    }
+    return result(version, n_rows, int(n_keys), len(u_entries))
 
 
 def update_where(
@@ -4283,8 +4293,11 @@ def update_where(
     """Merge-on-read UPDATE — the steady-state row-correction path a
     100 TB table needs: rows where ``condition`` is TRUE get the
     ``set_exprs`` assignments (``{col: sql_expr_or_Column}``, evaluated
-    against the pre-update row, standard UPDATE semantics) WITHOUT
-    rewriting any partition. One commit publishes two sidecar sets:
+    against the pre-update row, standard UPDATE semantics, each value
+    cast to its column's recorded type) WITHOUT rewriting any
+    partition. It is the table's one merge-on-read writer
+    (:func:`_mor_write`) with a SET map: one commit publishes two
+    sidecar sets:
 
     - equality TOMBSTONES for the matched keys (the same per-partition
       (key, partition) parquet :func:`delete_where` mode
@@ -4298,11 +4311,12 @@ def update_where(
     versions vanish and the new versions survive, atomically at the
     manifest swap. A trickle of corrections costs O(matches), not a
     partition rewrite per statement; copy-on-write
-    (:func:`sources.sql_merge.execute_update`) remains the
-    compaction/migration path, and ANY rewrite of a partition
-    (:func:`compact_snapshot`, :func:`compact_partitions`, merge, CoW
-    delete) folds its deltas and tombstones away because rewriters
-    derive content from the live read.
+    (:func:`sources.sql_merge.execute_update`, the other row-level
+    core :func:`_cow_rewrite`) remains the compaction/migration path,
+    and ANY rewrite of a partition (:func:`compact_snapshot`,
+    :func:`compact_partitions`, merge, CoW delete) folds its deltas and
+    tombstones away because rewriters derive content from the live
+    read.
 
     Metadata contract for updated partitions: exact COUNT(*) is
     preserved (the manifest records delta row counts beside the
@@ -4320,7 +4334,8 @@ def update_where(
     between partitions is delete+insert — MERGE territory); the key
     must uniquely address the matched rows (a matched key shared with
     an UNMATCHED live row would silently delete it — refused, use
-    copy-on-write); mixed partition specs refuse as everywhere else.
+    copy-on-write); mixed partition specs refuse as everywhere else;
+    the new-version rows must satisfy the table's CHECK constraints.
 
     Returns ``{"version", "updated_rows", "tombstoned_keys",
     "delta_partitions", "rewritten_partitions": 0, "mode":
@@ -4328,182 +4343,7 @@ def update_where(
     from pyspark.sql import Column, functions as F
 
     cond = condition if isinstance(condition, Column) else F.expr(condition)
-    parent = current_version(path)
-    man = read_manifest(path, parent)
-    meta = man.get("schema") or {}
-    spec_t = _spec_meta(meta)
-    if not spec_t:
-        raise ValueError(f"{path} has no committed snapshot to update")
-    spec_cols = [c for c, _t in spec_t]
-    pcol = spec_cols[0]
-    if _mixed_spec(man):
-        raise ValueError(
-            f"{path} holds partitions under a retired partition spec — "
-            "update sidecars key to current-spec directories; "
-            "compact_snapshot to migrate first"
-        )
-    no_op = {
-        "version": parent,
-        "updated_rows": 0,
-        "tombstoned_keys": 0,
-        "delta_partitions": 0,
-        "rewritten_partitions": 0,
-        "mode": "merge-on-read",
-    }
-    if txn is not None and (man.get("txn") or {}).get(txn[0], -1) >= txn[1]:
-        return no_op
-    prev_tomb = man.get("tombstones") or {}
-    if prev_tomb and prev_tomb.get("key") != key:
-        raise ValueError(
-            f"table already carries tombstones keyed by "
-            f"{prev_tomb.get('key')!r}; a single table uses one "
-            "tombstone key (compact to fold them away first)"
-        )
-    if key in spec_cols:
-        raise ValueError(
-            "update key must not be a partition column — equality "
-            "tombstones address rows within their partition"
-        )
-    cur = read_snapshot(spark, path, parent)
-    if key not in cur.columns:
-        raise ValueError(f"key column {key!r} is not a table column")
-    if _SEQ_COL in cur.columns:
-        raise ValueError(
-            f"column name {_SEQ_COL!r} is reserved for merge-on-read "
-            "sequencing"
-        )
-    set_map = {
-        c: (e if isinstance(e, Column) else F.expr(e))
-        for c, e in set_exprs.items()
-    }
-    unknown = sorted(set(set_map) - set(cur.columns))
-    if unknown:
-        raise ValueError(f"UPDATE SET of unknown columns: {unknown}")
-    reassigned = [c for c in spec_cols if c in set_map]
-    if reassigned:
-        raise ValueError(
-            f"UPDATE SET may not reassign partition columns "
-            f"{reassigned!r}: moving rows between partitions is a "
-            "delete+insert (MERGE)"
-        )
-    if key in set_map:
-        raise ValueError(
-            f"UPDATE SET may not reassign the tombstone key {key!r} — "
-            "equality deletes address rows by it (rekeying a row is a "
-            "delete+insert)"
-        )
-    matches = cur.filter(F.coalesce(cond, F.lit(False))).localCheckpoint(
-        eager=False
-    )
-    null_hits = matches.filter(F.col(key).isNull()).limit(1).count()
-    if null_hits:
-        raise ValueError(
-            "merge-on-read update matched rows with a NULL key — "
-            "equality tombstones cannot address them; use the "
-            "copy-on-write path (sql_merge.execute_update)"
-        )
-    keys_df = matches.select(key, *spec_cols).distinct().localCheckpoint(
-        eager=False
-    )
-    # exact suppressed-row counts — the anti-join the readers will run
-    # against OLDER-commit rows, counted once over the live view
-    probe = keys_df.select(
-        F.col(key).alias("__dk"),
-        *[F.col(c).alias(f"__dp{i}") for i, c in enumerate(spec_cols)],
-    )
-    match_cond = F.col(key) == F.col("__dk")
-    for i, c in enumerate(spec_cols):
-        match_cond = match_cond & F.col(c).eqNullSafe(F.col(f"__dp{i}"))
-    suppressed = {
-        _hive_path_name(spec_cols, tuple(r)[: len(spec_cols)]): int(
-            r[len(spec_cols)]
-        )
-        for r in _collect_partition_groups(
-            cur.join(probe, match_cond, "semi")
-            .groupBy(*spec_cols)
-            .agg(F.count(F.lit(1))),
-            pcol,
-            what="merge-on-read update",
-        )
-    }
-    if not suppressed:
-        return no_op
-    n_matched = matches.count()
-    if sum(suppressed.values()) != n_matched:
-        extra = sum(suppressed.values()) - n_matched
-        raise ValueError(
-            f"update key {key!r} does not uniquely address the matched "
-            f"rows: tombstoning their keys would also suppress {extra} "
-            "live row(s) the WHERE did not match (rows sharing a key) "
-            "— use the copy-on-write path (sql_merge.execute_update)"
-        )
-    new_rows = matches.select(
-        *[
-            set_map[c].alias(c) if c in set_map else F.col(c)
-            for c in cur.columns
-        ]
-    )
-    seq = parent + 1
-    n_keys = keys_df.count()
-    t_entries, _t_stats = _write_commit_data(keys_df, path, spec_cols, [])
-    u_entries, u_stats = _write_commit_data(new_rows, path, spec_cols, [])
-    tomb_parts = dict((prev_tomb.get("parts") or {}))
-    for pname, rel in t_entries.items():
-        e = dict(tomb_parts.get(pname) or {"rels": [], "n_deleted": 0})
-        prev_seqs = list(e.get("seqs") or [_SEQ_INF] * len(e["rels"]))
-        tomb_parts[pname] = {
-            "rels": list(e["rels"]) + [rel],
-            "seqs": prev_seqs + [seq],
-            "n_deleted": int(e["n_deleted"]) + suppressed.get(pname, 0),
-        }
-    prev_upd = man.get("updates") or {}
-    upd_parts = dict(prev_upd.get("parts") or {})
-    for pname, rel in u_entries.items():
-        e = dict(upd_parts.get(pname) or {"rels": [], "seqs": [], "n_rows": 0})
-        upd_parts[pname] = {
-            "rels": list(e["rels"]) + [rel],
-            "seqs": list(e["seqs"]) + [seq],
-            "n_rows": int(e["n_rows"])
-            + int((u_stats.get(pname) or {}).get(N_ROWS_KEY) or 0),
-        }
-    # Clear value metadata for updated partitions: the new versions may
-    # lie outside every recorded bound/bloom/sketch; exact COUNT(*)
-    # keeps flowing from ::n_rows − n_deleted + delta n_rows.
-    touched = set(u_entries)
-    stats = {}
-    for p, s in (man.get("stats") or {}).items():
-        if p in touched:
-            kept = {}
-            if s.get(N_ROWS_KEY) is not None:
-                kept[N_ROWS_KEY] = s[N_ROWS_KEY]
-            stats[p] = kept
-        else:
-            stats[p] = s
-    blooms = {
-        p: b for p, b in (man.get("blooms") or {}).items() if p not in touched
-    }
-    version = _commit(
-        path,
-        parent,
-        dict(man["partitions"]),
-        "update-mor",
-        meta,
-        txn=txn,
-        stats=stats,
-        blooms=blooms,
-        parent_txns=man.get("txn") or {},
-        parent_manifest=man,
-        tombstones={"key": key, "parts": tomb_parts},
-        updates={"parts": upd_parts},
-    )
-    return {
-        "version": version,
-        "updated_rows": int(n_matched),
-        "tombstoned_keys": int(n_keys),
-        "delta_partitions": len(u_entries),
-        "rewritten_partitions": 0,
-        "mode": "merge-on-read",
-    }
+    return _mor_write(spark, path, cond, key, dict(set_exprs), txn=txn)
 
 
 def expire_snapshots(
@@ -4683,26 +4523,16 @@ def compact_snapshot(
             .sortWithinPartitions(*spec, "__zkey")
             .drop("__zkey")
         )
-    bloom_cols = meta.get("bloom_cols")
-    if bloom_cols:
-        df = df.localCheckpoint(eager=False)
-        blooms = _compute_blooms(
-            df, partition_col, bloom_cols, meta.get("bloom_bits") or BLOOM_BITS
-        )
-    else:
-        blooms = {}
-    entries, stats = _write_commit_data(
-        df, path, partition_col, meta.get("stats_cols")
+    # Compaction changes no row, so the table's CHECK constraints (met
+    # when each row was written) are not re-run.
+    entries, stats, blooms = _write_table_data(
+        df,
+        path,
+        partition_col,
+        stats_cols=meta.get("stats_cols"),
+        bloom_cols=meta.get("bloom_cols"),
+        bloom_bits=meta.get("bloom_bits") or BLOOM_BITS,
     )
-    if bloom_cols:
-        _add_file_blooms(
-            df.sparkSession,
-            path,
-            entries,
-            blooms,
-            bloom_cols,
-            meta.get("bloom_bits") or BLOOM_BITS,
-        )
     op = "compact+zorder" if zorder_by else "compact"
     return _commit(
         path, parent, entries, op, meta, stats=stats, blooms=blooms,
@@ -5120,17 +4950,9 @@ def consume_changes(
         spark, path, since_version=cur, key=key, end_version=latest
     )
     apply_fn(feed, cur, latest)
-    tmp = f"{cursor_path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"version": latest}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, cursor_path)
-    # fsync the containing directory too — the rename itself is not
-    # durable until the dir entry is synced (same discipline as
-    # _commit/tag_snapshot; without it a power loss can resurrect the
-    # old cursor and redeliver an applied range)
-    _fsync_dir(Path(cursor_path).parent)
+    # durable re-point: without the directory fsync a power loss could
+    # resurrect the old cursor and redeliver an applied range
+    _write_json({"version": latest}, Path(cursor_path), exclusive=False)
     return {"from_version": cur, "to_version": latest, "applied": True}
 
 

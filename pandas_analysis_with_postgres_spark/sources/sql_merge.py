@@ -231,43 +231,30 @@ def parse_merge(sql: str) -> dict:
     return out
 
 
-def _filter_to_partitions(spark, df, spec_cols, changed_rows):
-    """Restrict ``df`` to rows whose partition-spec tuple is one of
-    ``changed_rows``, NULL-safely (``isin`` never matches NULL, which
-    would silently drop a changed ``__HIVE_DEFAULT_PARTITION__`` from
-    the content while it sits in the affected set — the subsequent
-    ``replace_partitions`` would then DROP the whole NULL partition,
-    untouched rows included).
+def _target(p: dict, tables: dict[str, str], verb: str) -> str:
+    """The snapshot path a parsed statement's target names."""
+    if p["target"] not in tables:
+        raise ValueError(
+            f"unknown {verb} target {p['target']!r}; known: {sorted(tables)}"
+        )
+    return tables[p["target"]]
 
-    Single-column specs keep the join-free isin/isNull predicate.
-    Multi-column specs use a broadcast SEMI-join on every component
-    null-safely: an OR-chain over up to MAX_COLLECTED_PARTITIONS
-    tuples would blow past codegen limits, while the probe side here
-    is by construction at most that many rows — always broadcastable.
-    """
-    from pyspark.sql.types import StructField, StructType
 
-    if len(spec_cols) == 1:
-        c = spec_cols[0]
-        vals = [r[0] for r in changed_rows]
-        non_null = [v for v in vals if v is not None]
-        member = F.col(c).isin(non_null) if non_null else F.lit(False)
-        if any(v is None for v in vals):
-            member = member | F.col(c).isNull()
-        return df.filter(member)
-    schema = StructType(
-        [
-            StructField(f.name, f.dataType, True)
-            for f in df.select(*spec_cols).schema.fields
-        ]
-    )
-    probe = spark.createDataFrame(
-        [tuple(r) for r in changed_rows], schema
-    ).select(*[F.col(c).alias(f"__part_{c}") for c in spec_cols])
-    cond = F.lit(True)
-    for c in spec_cols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__part_{c}"))
-    return df.join(F.broadcast(probe), cond, "semi")
+def _target_table(p: dict, tables: dict[str, str], verb: str):
+    """``(path, manifest, spec columns)`` of a statement target whose
+    recorded partition spec and schema the statement needs."""
+    from .snapshot import _spec_meta, read_manifest
+
+    path = _target(p, tables, verb)
+    man = read_manifest(path)
+    spec_cols = [c for c, _t in _spec_meta(man.get("schema") or {})]
+    if not spec_cols:
+        raise ValueError(
+            f"{verb} target {p['target']!r} has no committed snapshot yet — "
+            f"bootstrap it with write_snapshot ({verb} needs the table's "
+            "recorded partition spec and schema)"
+        )
+    return path, man, spec_cols
 
 
 def execute_merge(
@@ -286,34 +273,19 @@ def execute_merge(
     ``merge_snapshot``'s: optimistic commit, optional ``txn`` marker.
     """
     from .snapshot import (
+        _assign,
+        _collect_partition_groups,
+        _hive_path_name,
         merge_snapshot,
-        read_manifest,
         read_snapshot,
         replace_partitions,
     )
 
     p = parse_merge(sql)
-    if p["target"] not in tables:
-        raise ValueError(f"unknown MERGE target {p['target']!r}; known: {sorted(tables)}")
-    path = tables[p["target"]]
-    meta = read_manifest(path)
-    schema_meta = meta.get("schema") or {}
-    if not schema_meta:
-        raise ValueError(
-            f"MERGE target {p['target']!r} has no committed snapshot yet — "
-            f"bootstrap it with write_snapshot (MERGE needs the table's "
-            f"recorded partition column and schema)"
-        )
-    from .snapshot import _spec_meta
-
-    spec_cols = [c for c, _t in _spec_meta(schema_meta)]
-    if not spec_cols:
-        raise ValueError(
-            f"MERGE target {p['target']!r} records no partition spec"
-        )
+    path, meta, spec_cols = _target_table(p, tables, "MERGE")
     # merge_snapshot normalizes either form; pass the recorded shape
     part_arg = spec_cols if len(spec_cols) > 1 else spec_cols[0]
-    t_cols = list(schema_meta["columns"])
+    t_cols = list(meta["schema"]["columns"])
     t_alias, s_alias = p["t_alias"], p["s_alias"]
     t_key, s_key = _parse_on(p["on"], t_alias, s_alias)
 
@@ -347,6 +319,7 @@ def execute_merge(
             f"row per key — ANSI MERGE rejects multi-matches"
         )
     tt = read_snapshot(spark, path, meta["version"] or None).alias(t_alias)
+    types = {c: tt.schema[c].dataType for c in t_cols}
     ss = src.alias(s_alias)
     on = F.col(f"{t_alias}.{t_key}") == F.col(f"{s_alias}.{s_key}")
 
@@ -360,11 +333,6 @@ def execute_merge(
                 f"a partition column ({spec_cols!r}): a key's partition "
                 f"value is part of its identity (merge_snapshot contract)"
             )
-
-    def _apply_set(df: DataFrame, sets: dict) -> DataFrame:
-        return df.select(
-            *[F.expr(sets.get(c, f"{t_alias}.{c}")).alias(c) for c in t_cols]
-        )
 
     if p["update_set"] is not None:
         _check_set(p["update_set"], "UPDATE")
@@ -382,7 +350,7 @@ def execute_merge(
         if p["insert_guard"]:
             unmatched = unmatched.filter(F.expr(p["insert_guard"]))
         vals = dict(zip(p["insert_cols"], p["insert_vals"]))
-        return unmatched.select(*[F.expr(vals[c]).alias(c) for c in t_cols])
+        return unmatched.select(*_assign(types, vals))
 
     if p["by_source_action"] is None:
         # Fast path: partition-scoped upsert, cost O(source) +
@@ -392,7 +360,9 @@ def execute_merge(
             matched = tt.join(ss, on, "inner")
             if p["update_guard"]:
                 matched = matched.filter(F.expr(p["update_guard"]))
-            parts.append(_apply_set(matched, p["update_set"]))
+            parts.append(
+                matched.select(*_assign(types, p["update_set"], qual=t_alias))
+            )
         if p["insert_cols"] is not None:
             parts.append(_inserts())
         upsert = parts[0]
@@ -410,94 +380,77 @@ def execute_merge(
     # Full-sync path (a BY SOURCE clause): classify every target row,
     # rewrite only the partitions that actually change, drop partitions
     # the deletes emptied. The full-table classification scan is what
-    # BY SOURCE means; the rewrite stays change-scoped.
-    def _guard_split(df: DataFrame, guard: "str | None"):
-        """(rows where guard is TRUE, rows where it is FALSE or NULL) —
-        standard three-valued clause semantics."""
-        if not guard:
-            return df, df.limit(0)
-        g = F.expr(guard)
-        return df.filter(g), df.filter(~F.coalesce(g, F.lit(False)))
+    # BY SOURCE means; the rewrite re-reads only the changed partitions.
+    def _hit(guard: "str | None"):
+        """Where a clause applies: no guard, or the guard is TRUE
+        (FALSE or NULL leave the row as it is — three-valued logic)."""
+        return F.coalesce(F.expr(guard), F.lit(False)) if guard else F.lit(True)
 
-    t_only = [f"{t_alias}.{c}" for c in t_cols]
-    _spec_sel = [F.expr(f"{t_alias}.{c}").alias(c) for c in spec_cols]
-    matched = tt.join(ss, on, "inner")
-    if p["update_set"] is not None:
-        upd_pass, upd_fail = _guard_split(matched, p["update_guard"])
-        matched_new = _apply_set(upd_pass, p["update_set"]).unionByName(
-            upd_fail.select(*[F.col(c).alias(a) for c, a in zip(t_only, t_cols)])
+    upd, bs = _hit(p["update_guard"]), _hit(p["by_source_guard"])
+
+    def _classify(target: DataFrame) -> "tuple[DataFrame, DataFrame]":
+        """(new content of ``target``'s rows, the spec tuples of the
+        rows a clause changes). A row's class depends on the source
+        alone, so a partition-scoped ``target`` gives exactly those
+        partitions' share of the full classification."""
+        matched = target.join(ss, on, "inner")
+        anti_t = target.join(ss, on, "left_anti")  # no source match
+        new = matched.select(
+            *_assign(types, p["update_set"] or {}, hit=upd, qual=t_alias)
         )
-        changed_matched = upd_pass.select(*_spec_sel)
-    else:
-        matched_new = matched.select(
-            *[F.col(c).alias(a) for c, a in zip(t_only, t_cols)]
-        )
-        changed_matched = matched_new.select(*spec_cols).limit(0)
+        if p["by_source_action"] == "delete":
+            new = new.unionByName(anti_t.filter(~bs).select(*t_cols))
+        else:
+            new = new.unionByName(
+                anti_t.select(*_assign(types, p["by_source_set"], hit=bs, qual=t_alias))
+            )
+        changes = [anti_t.filter(bs)]
+        if p["update_set"] is not None:
+            changes.append(matched.filter(upd))
+        spec_sel = [F.col(f"{t_alias}.{c}").alias(c) for c in spec_cols]
+        changed = changes[0].select(*spec_sel)
+        for c in changes[1:]:
+            changed = changed.unionByName(c.select(*spec_sel))
+        return new, changed
 
-    anti_t = tt.join(ss, on, "left_anti")  # target rows with no match
-    bs_pass, bs_keep = _guard_split(anti_t, p["by_source_guard"])
-    if p["by_source_action"] == "delete":
-        bs_new = bs_keep.select(*t_cols)
-    else:
-        bs_new = _apply_set(bs_pass, p["by_source_set"]).unionByName(
-            bs_keep.select(*t_cols)
-        )
-    changed_bs = bs_pass.select(*[F.col(c) for c in spec_cols])
-
-    full_new = matched_new.unionByName(bs_new)
-    if p["insert_cols"] is not None:
-        inserts = _inserts()
-        full_new = full_new.unionByName(inserts)
-        changed_ins = inserts.select(*spec_cols)
-    else:
-        changed_ins = full_new.select(*spec_cols).limit(0)
-
-    full_new = full_new.localCheckpoint(eager=False)
-    from .snapshot import (
-        _collect_partition_groups,
-        _hive_path_name,
-    )
-
-    changed = _collect_partition_groups(
-        changed_matched.unionByName(changed_bs)
-        .unionByName(changed_ins)
-        .distinct(),
-        spec_cols[0],
-        what="MERGE",
-    )  # O(partitions) driver metadata, same budget as delete_where
-
-    affected = {_hive_path_name(spec_cols, tuple(r)) for r in changed}
-    if not affected:
-        return meta["version"]  # nothing changed: commit nothing
-    content = _filter_to_partitions(
-        spark, full_new, spec_cols, changed
-    ).localCheckpoint(eager=False)
-    present = {
+    _, changed = _classify(tt)
+    inserts = _inserts() if p["insert_cols"] is not None else None
+    if inserts is not None:
+        changed = changed.unionByName(inserts.select(*spec_cols))
+    # O(partitions) driver metadata, same budget as delete_where
+    affected = {
         _hive_path_name(spec_cols, tuple(r))
         for r in _collect_partition_groups(
-            content.select(*spec_cols).distinct(), spec_cols[0], what="MERGE"
+            changed.distinct(), spec_cols[0], what="MERGE"
         )
     }
+    if not affected:
+        return meta["version"]  # nothing changed: commit nothing
+    content, _ = _classify(
+        read_snapshot(
+            spark, path, meta["version"], partition_filter=lambda q: q in affected
+        ).alias(t_alias)
+    )
+    if inserts is not None:
+        content = content.unionByName(inserts)
+    # replace_partitions pins the content and derives the partitions it
+    # still holds; the affected ones it no longer holds are dropped.
     return replace_partitions(
         path,
         content,
         part_arg,
         expected_version=meta["version"],
         txn=txn,
-        drop_partitions=affected - present,
+        drop_partitions=affected,
     )
 
 
 # --------------------------------------------------------------- DML
-# The rest of the warehouse DML triad: UPDATE and DELETE statements,
-# routed through the same snapshot machinery (reference intent:
-# dmCustomerProc.py drives its maintenance through SQL statements).
-# UPDATE = partition-scoped replace of reclassified rows (only
-# partitions containing matches are rewritten — cost O(matches) +
-# O(touched partitions), like delete_where's copy-on-write shape);
-# DELETE = the statement form of sources.snapshot.delete_where, with
-# both physical modes (copy-on-write rewrite or merge-on-read key
-# tombstones) selectable by the caller.
+# UPDATE and DELETE statements (reference intent: dmCustomerProc.py
+# drives its maintenance through SQL statements), each the statement
+# form of the snapshot layer's two row-level cores: the copy-on-write
+# rewrite (snapshot._cow_rewrite) and the merge-on-read writer
+# (snapshot._mor_write), selectable by the caller.
 
 _UPDATE_RE = re.compile(
     r"^\s*UPDATE\s+(?P<target>[\w./-]+)"
@@ -602,126 +555,57 @@ def execute_update(
     """Execute one UPDATE statement against a snapshot table, physical
     strategy selectable like DELETE's:
 
-    ``mode="copy-on-write"`` (default): partition-scoped rewrite,
-    delete_where's cost shape — one column-pruned scan (WHERE columns
-    + partition column only — Catalyst prunes the rest) finds the
-    partitions holding matches; ONLY those are re-read, reclassified
-    row-by-row (matched rows get the SET expressions, the rest pass
-    through unchanged), and rewritten via ``replace_partitions`` —
-    cold partitions carry by reference. Returns the committed version.
+    ``mode="copy-on-write"`` (default, ``snapshot._cow_rewrite``): one
+    column-pruned scan finds the partitions holding matches; ONLY
+    those are re-read, matched rows get the SET values, the rest pass
+    through unchanged, and ``replace_partitions`` rewrites them — cold
+    partitions carry by reference. Returns the committed version.
 
     ``mode="merge-on-read"`` (requires ``key=``): the statement form
     of :func:`sources.snapshot.update_where` — equality tombstones for
     the matched keys plus appended new-version rows in ONE commit, no
-    partition rewrite at all; the steady-state trickle-correction
-    path. Returns update_where's result dict. The alias/SET/WHERE
-    grammar is identical; update_where enforces its extra contracts
-    (unique key among matches, no key/partition reassignment).
+    partition rewrite at all. Returns update_where's result dict and
+    enforces its extra contracts (unique key among matches, no key
+    reassignment).
 
-    Common semantics: WHERE three-valued logic is standard (FALSE or
-    NULL rows are untouched); SET may not reassign the partition
-    column (a row's partition value is its placement; moving rows
-    between partitions is a delete+insert — MERGE territory). A
+    Both modes evaluate SET and WHERE over the scan under the
+    statement's alias, cast each SET value to its column's recorded
+    type, and keep standard three-valued WHERE logic (FALSE or NULL
+    rows are untouched); SET may not reassign a partition column. A
     no-match update commits nothing and returns the parent version.
     """
     from .snapshot import (
-        _collect_partition_groups,
-        _hive_path_name,
-        _spec_meta,
-        read_manifest,
-        read_snapshot,
-        replace_partitions,
-        update_where,
+        _assign,
+        _check_sets,
+        _cow_rewrite,
+        _live_table,
+        _mor_write,
     )
 
     p = parse_update(sql)
-    if p["target"] not in tables:
-        raise ValueError(
-            f"unknown UPDATE target {p['target']!r}; known: {sorted(tables)}"
-        )
-    path = tables[p["target"]]
+    path = _target(p, tables, "UPDATE")
+    cond = F.expr(p["where"]) if p["where"] else F.lit(True)
     if mode == "merge-on-read":
         if key is None:
             raise ValueError(
                 "merge-on-read update requires key=<row key column>"
             )
-        cond = p["where"] if p["where"] else "true"
-        if p["alias"]:
-            # update_where evaluates SET/WHERE against the bare scan;
-            # strip the statement alias from column references
-            cond = re.sub(rf"\b{p['alias']}\.", "", cond)
-            sets = {
-                c: re.sub(rf"\b{p['alias']}\.", "", e)
-                for c, e in p["sets"].items()
-            }
-        else:
-            sets = p["sets"]
-        return update_where(spark, path, cond, sets, key=key, txn=txn)
+        return _mor_write(
+            spark, path, cond, key, p["sets"], alias=p["alias"], txn=txn
+        )
     if mode != "copy-on-write":
         raise ValueError(f"unknown update mode {mode!r}")
-    man = read_manifest(path)
-    schema_meta = man.get("schema") or {}
-    if not schema_meta:
-        raise ValueError(
-            f"UPDATE target {p['target']!r} has no committed snapshot yet"
-        )
-    spec_cols = [c for c, _t in _spec_meta(schema_meta)]
-    if not spec_cols:
-        raise ValueError(
-            f"UPDATE target {p['target']!r} records no partition spec"
-        )
-    part_arg = spec_cols if len(spec_cols) > 1 else spec_cols[0]
-    t_cols = list(schema_meta["columns"])
-    bad = set(p["sets"]) - set(t_cols)
-    if bad:
-        raise ValueError(f"UPDATE SET of unknown columns: {sorted(bad)}")
-    reassigned = [c for c in spec_cols if c in p["sets"]]
-    if reassigned:
-        raise ValueError(
-            f"UPDATE SET may not reassign partition columns {reassigned!r}: "
-            "moving rows between partitions is a delete+insert (MERGE)"
-        )
-    if txn is not None and (man.get("txn") or {}).get(txn[0], -1) >= txn[1]:
-        return man["version"]
-    cur = read_snapshot(spark, path, man["version"])
-    if p["alias"]:
-        cur = cur.alias(p["alias"])
-    cond = F.expr(p["where"]) if p["where"] else F.lit(True)
-    hit = F.coalesce(cond, F.lit(False))
-    hits = _collect_partition_groups(
-        cur.groupBy(*spec_cols)
-        .agg(F.sum(F.when(hit, 1).otherwise(0)).alias("n"))
-        .filter(F.col("n") > 0),
-        spec_cols[0],
-        what="UPDATE",
-    )
-    if not hits:
-        return man["version"]
-    affected = {
-        _hive_path_name(spec_cols, tuple(r)[: len(spec_cols)]) for r in hits
-    }
-    scoped = read_snapshot(
-        spark, path, man["version"], partition_filter=lambda q: q in affected
-    )
-    if p["alias"]:
-        scoped = scoped.alias(p["alias"])
-    content = scoped.select(
-        *[
-            (
-                F.when(hit, F.expr(p["sets"][c])).otherwise(F.col(c)).alias(c)
-                if c in p["sets"]
-                else F.col(c)
-            )
-            for c in t_cols
-        ]
-    )
-    return replace_partitions(
-        path,
-        content,
-        part_arg,
-        expected_version=man["version"],
-        txn=txn,
-    )
+    _, man, spec_cols = _live_table(path, "update")
+    t_cols = list(man["schema"]["columns"])
+    _check_sets(p["sets"], t_cols, spec_cols)
+
+    def rows(scoped: DataFrame, hit) -> DataFrame:
+        types = {c: scoped.schema[c].dataType for c in t_cols}
+        return scoped.select(*_assign(types, p["sets"], hit=hit))
+
+    return _cow_rewrite(
+        spark, path, cond, rows, verb="update", alias=p["alias"], txn=txn
+    )[1]
 
 
 def execute_delete(
@@ -743,13 +627,9 @@ def execute_delete(
     from .snapshot import delete_where
 
     p = parse_delete(sql)
-    if p["target"] not in tables:
-        raise ValueError(
-            f"unknown DELETE target {p['target']!r}; known: {sorted(tables)}"
-        )
     cond = p["where"] if p["where"] else "true"
     return delete_where(
-        spark, tables[p["target"]], cond, txn=txn, mode=mode, key=key
+        spark, _target(p, tables, "DELETE"), cond, txn=txn, mode=mode, key=key
     )
 
 
@@ -799,25 +679,12 @@ def execute_insert(
     analysis, never silently. Appends commit through
     ``append_snapshot``: optimistic, txn-idempotent, partition-
     revisiting appends rewrite that partition as the union."""
-    from .snapshot import _spec_meta, append_snapshot, read_manifest, read_snapshot
+    from .snapshot import _assign, append_snapshot, read_snapshot
 
     p = parse_insert(sql)
-    if p["target"] not in tables:
-        raise ValueError(
-            f"unknown INSERT target {p['target']!r}; known: {sorted(tables)}"
-        )
-    path = tables[p["target"]]
-    man = read_manifest(path)
-    schema_meta = man.get("schema") or {}
-    if not schema_meta:
-        raise ValueError(
-            f"INSERT target {p['target']!r} has no committed snapshot yet — "
-            "bootstrap it with write_snapshot (INSERT needs the table's "
-            "recorded partition spec and schema)"
-        )
-    spec_cols = [c for c, _t in _spec_meta(schema_meta)]
+    path, man, spec_cols = _target_table(p, tables, "INSERT")
     part_arg = spec_cols if len(spec_cols) > 1 else spec_cols[0]
-    t_cols = list(schema_meta["columns"])
+    t_cols = list(man["schema"]["columns"])
     cols = p["cols"] if p["cols"] is not None else list(t_cols)
     bad = set(cols) - set(t_cols)
     if bad:
@@ -842,19 +709,12 @@ def execute_insert(
                 f"the target list names {len(cols)}"
             )
         src = src.toDF(*cols)
-    types = {
-        f.name: f.dataType
-        for f in read_snapshot(spark, path, man["version"]).schema.fields
-    }
+    table = read_snapshot(spark, path, man["version"])
+    types = {c: table.schema[c].dataType for c in t_cols}
     content = src.select(
-        *[
-            (
-                F.col(c).cast(types[c]).alias(c)
-                if c in cols
-                else F.lit(None).cast(types[c]).alias(c)
-            )
-            for c in t_cols
-        ]
+        *_assign(
+            types, {c: F.col(c) if c in cols else F.lit(None) for c in t_cols}
+        )
     )
     return append_snapshot(
         path,

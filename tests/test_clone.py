@@ -234,3 +234,28 @@ def test_deep_clone_carries_tombstones_independently(spark, tmp_path):
     got = read_snapshot(spark, dst)
     assert got.count() == 30
     assert got.where(F.col("k") < 10).count() == 0
+
+
+def test_deep_clone_carries_update_deltas(spark, tmp_path):
+    # A merge-on-read UPDATE leaves tombstones AND delta rows; a deep
+    # clone carrying only the tombstones would lose the updated rows.
+    import shutil
+
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        deep_clone_snapshot,
+        read_snapshot,
+        update_where,
+        write_snapshot,
+    )
+
+    src = str(tmp_path / "src")
+    df = spark.createDataFrame(
+        [(i, i * 10, i % 2) for i in range(6)], "k bigint, v bigint, bu bigint"
+    )
+    write_snapshot(df, src, "bu")
+    update_where(spark, src, "k < 2", {"v": "v + 1"}, key="k")
+    dst = str(tmp_path / "bak")
+    deep_clone_snapshot(src, dst)
+    shutil.rmtree(src)
+    got = sorted(map(tuple, read_snapshot(spark, dst).select("k", "v").collect()))
+    assert got == [(0, 1), (1, 11), (2, 20), (3, 30), (4, 40), (5, 50)]

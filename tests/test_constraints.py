@@ -96,3 +96,31 @@ def test_restating_bloom_cols_keeps_sized_bits(spark, tmp_path):
     )
     write_snapshot(_df(spark, [(2, 2, 0)]), path, "p", bloom_cols=["k"])
     assert read_manifest(path)["schema"]["bloom_bits"] == 65536
+
+
+def test_update_is_checked_in_both_modes(spark, tmp_path):
+    # A merge-on-read UPDATE writes no partition, only sidecars: its
+    # new-version rows must meet the CHECK like a copy-on-write one.
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        current_version,
+        update_where,
+    )
+    from pandas_analysis_with_postgres_spark.sources.sql_merge import (
+        execute_dml,
+    )
+
+    path = str(tmp_path / "t")
+    write_snapshot(
+        _df(spark, [(1, 10, 0), (2, 20, 0), (3, 30, 1)]),
+        path,
+        "p",
+        constraints=["amt >= 0"],
+    )
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        update_where(spark, path, "k = 1", {"amt": "-5"}, key="k")
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        execute_dml(spark, "UPDATE t SET amt = -5 WHERE k = 1", tables={"t": path})
+    assert current_version(path) == 1
+    assert (1, 10, 0) in {tuple(r) for r in read_snapshot(spark, path).collect()}
+    # a valid merge-on-read update still commits
+    assert update_where(spark, path, "k = 1", {"amt": "5"}, key="k")["version"] == 2

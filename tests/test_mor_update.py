@@ -312,3 +312,55 @@ class TestSqlUpdateMor:
                 tables={"t": tbl},
                 mode="sideways",
             )
+
+
+@pytest.fixture(scope="module")
+def two_col_template(spark, tmp_path_factory):
+    """A (d, s)-partitioned table with NULL ``s`` partitions, written
+    once; each mode runs on its own byte copy."""
+    df = spark.createDataFrame(
+        [
+            (1, 10, "a", "x"),
+            (2, 20, "a", "x"),
+            (3, 30, "a", None),
+            (4, 40, "a", None),
+            (5, 50, "b", "y"),
+            (6, 60, "b", "y"),
+            (7, 70, "b", None),
+        ],
+        "k long, v long, d string, s string",
+    )
+    path = str(tmp_path_factory.mktemp("modes") / "template")
+    write_snapshot(df, path, ["d", "s"])
+    return path
+
+
+def test_copy_on_write_and_merge_on_read_agree(spark, two_col_template, tmp_path):
+    # The two row-level cores must give the same live table and the
+    # same counts for one DELETE (it empties b/y and b/NULL) followed
+    # by one UPDATE that touches a NULL partition.
+    import shutil
+
+    delete = "DELETE FROM t WHERE v >= 50 OR k = 3"
+    update = "UPDATE t SET v = v * 1.5 WHERE s IS NULL OR k = 1"
+    live, counts = {}, {}
+    for mode in ("copy-on-write", "merge-on-read"):
+        path = str(tmp_path / mode)
+        shutil.copytree(two_col_template, path)
+        tables = {"t": path}
+        kw = dict(delete_mode=mode, delete_key="k", update_mode=mode, update_key="k")
+        deleted = execute_dml(spark, delete, tables=tables, **kw)["deleted_rows"]
+        before = read_snapshot(spark, path)
+        res = execute_dml(spark, update, tables=tables, **kw)
+        after = read_snapshot(spark, path)
+        updated = (
+            res["updated_rows"]
+            if isinstance(res, dict)
+            else after.exceptAll(before).count()
+        )
+        live[mode] = sorted(map(tuple, after.select("k", "v", "d", "s").collect()))
+        counts[mode] = (deleted, updated)
+    assert live["copy-on-write"] == live["merge-on-read"] == [
+        (1, 15, "a", "x"), (2, 20, "a", "x"), (4, 60, "a", None)
+    ]
+    assert counts["copy-on-write"] == counts["merge-on-read"] == (4, 2)

@@ -533,3 +533,82 @@ def test_insert_multicol_spec_via_dml_router(spark, tmp_path):
     assert got == {(1, "d1", "web", 10), (2, "d1", "api", 20),
                    (3, "d2", "web", 30)}
     assert "day=d2/source=web" in read_manifest(path)["partitions"]
+
+
+def test_set_keeps_the_recorded_column_types(spark, tmp_path):
+    # SET values cast to the column's recorded type in every mode (the
+    # rule INSERT INTO already applied): a decimal or double result
+    # never retypes a BIGINT column for every later reader.
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        update_where,
+    )
+    from pandas_analysis_with_postgres_spark.sources.sql_merge import (
+        execute_dml,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 10, 0), (2, 20, 0), (3, 30, 1)], "k long, amt long, p long"
+    )
+    v1_schema = df.schema.simpleString()
+    spark.createDataFrame([(1, 0.5)], "k long, d double").createOrReplaceTempView(
+        "set_types_src"
+    )
+    statements = {  # name: (statement, new amt of k = 1)
+        "cow": (
+            lambda path: execute_dml(
+                spark, "UPDATE t SET amt = amt * 1.5 WHERE k = 1", tables={"t": path}
+            ),
+            15,
+        ),
+        "mor": (
+            lambda path: update_where(
+                spark, path, "k = 1", {"amt": "amt * 1.5"}, key="k"
+            ),
+            15,
+        ),
+        "merge": (  # 10 + 0.5 truncates back into BIGINT
+            lambda path: execute_merge(
+                spark,
+                "MERGE INTO t AS t USING set_types_src AS s ON t.k = s.k "
+                "WHEN MATCHED THEN UPDATE SET amt = t.amt + s.d",
+                tables={"t": path},
+            ),
+            10,
+        ),
+    }
+    for name, (run, amt) in statements.items():
+        path = str(tmp_path / name)
+        write_snapshot(df, path, "p")
+        run(path)
+        cur = read_snapshot(spark, path)
+        assert cur.schema.simpleString() == v1_schema, name
+        assert read_snapshot(spark, path, 1).schema.simpleString() == v1_schema
+        assert {tuple(r) for r in cur.collect()} == {
+            (1, amt, 0), (2, 20, 0), (3, 30, 1)
+        }, name
+
+
+def test_update_alias_keeps_string_literals(spark, tmp_path):
+    # SET/WHERE are evaluated over the aliased scan in both modes, so a
+    # literal that spells the alias ('t.b.d.') is stored as written.
+    from pandas_analysis_with_postgres_spark.sources.sql_merge import (
+        execute_update,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "x", 0), (2, "y", 0)], "k long, note string, p long"
+    )
+    for mode in ("copy-on-write", "merge-on-read"):
+        path = str(tmp_path / mode)
+        write_snapshot(df, path, "p")
+        execute_update(
+            spark,
+            "UPDATE t AS t SET note = 't.b.d.' WHERE t.k = 1",
+            tables={"t": path},
+            mode=mode,
+            key="k",
+        )
+        assert {tuple(r) for r in read_snapshot(spark, path).collect()} == {
+            (1, "t.b.d.", 0),
+            (2, "y", 0),
+        }, mode
