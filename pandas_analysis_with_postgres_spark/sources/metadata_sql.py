@@ -61,7 +61,6 @@ fall back to a real scan and must pin the view themselves (the CLI).
 from __future__ import annotations
 
 import datetime
-import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .snapshot import (
     FILES_KEY,
     _fold_items,
-    _logical_name,
+    _logical_fields,
     _manifest_fold,
     _restrict_parts,
     _spec_meta,
@@ -652,16 +651,7 @@ def _resolve_table(parsed: dict, tables: dict, version):
     if version is None:
         version = int(man.get("version") or 0)
     meta = man.get("schema") or {}
-    renames = meta.get("renames") or []
-    live = meta.get("columns")
-    sj = meta.get("spark_schema")
-    from pyspark.sql.types import StructType
-
-    field_types = {}
-    for f in StructType.fromJson(json.loads(sj)).fields if sj else []:
-        name = _logical_name(renames, f.name)
-        if live is None or name in live:
-            field_types[name] = f.dataType
+    field_types = {f.name: f.dataType for f in _logical_fields(meta)}
     return path, version, man, field_types, dict(_spec_meta(meta))
 
 

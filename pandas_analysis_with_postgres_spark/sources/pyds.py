@@ -262,31 +262,20 @@ class SnapshotStreamDataSource(DataSource):
         return "snapshotstream"
 
     def schema(self):
-        import json as _json
-
         from pyspark.sql.types import StructType
 
-        from .snapshot import read_manifest
+        from .snapshot import _logical_fields, read_manifest
 
         path = self.options.get("path")
         if not path:
             raise ValueError("snapshotstream requires a path: .load(table)")
-        meta = read_manifest(path, None).get("schema") or {}
-        sj = meta.get("spark_schema")
-        if not sj:
+        fields = _logical_fields(read_manifest(path, None).get("schema") or {})
+        if not fields:
             raise ValueError(
                 f"{path} has no recorded spark_schema; snapshotstream "
                 "needs a schema-recording commit (any current writer)"
             )
-        st = StructType.fromJson(_json.loads(sj))
-        for old, new in meta.get("renames") or []:
-            for f in st.fields:
-                if f.name == old:
-                    f.name = new
-        dropped = set(meta.get("dropped") or [])
-        if dropped:
-            st = StructType([f for f in st.fields if f.name not in dropped])
-        return st
+        return StructType(fields)
 
     def streamReader(self, schema) -> "_SnapshotStreamReader":
         return _SnapshotStreamReader(self.options, schema)

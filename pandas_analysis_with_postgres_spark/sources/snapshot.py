@@ -48,6 +48,17 @@ caller's row function → :func:`replace_partitions`) and
 given a SET map). SET and INSERT values follow one rule,
 :func:`_assign`.
 
+**One read path.** Every scan of table files goes through one
+raw-directory scan, :func:`_scan_raw` (``basePath`` per commit root
+from :func:`_commit_root`, hive type inference off): snapshot reads,
+update deltas, tombstones, the file-bloom readback, the sketch
+readback and stats backfill. :func:`read_snapshot` decides which files
+to open in one pruner, :func:`_prune` (spec-directory match, then one
+stats/bloom keep test at partition and file grain; every point probe
+is a :class:`_SetProbe`), and presents one logical projection from the
+manifest, :func:`_logical_fields` — also the schema of a committed
+empty table, of the metadata SQL answerers and of ``snapshotstream``.
+
 At 100 TB: manifests are O(partitions) JSON, not O(files) — each entry
 is a directory written by exactly one commit, so no file-listing storm;
 ``merge_snapshot`` rewrites ONLY the partitions the source touches and
@@ -73,11 +84,11 @@ from pyspark.sql import DataFrame, SparkSession
 SNAPSHOT_DIR = "_snapshots"
 DATA_DIR = "data"
 
-#: Serializes the partition-inference conf toggle in read_snapshot:
-#: the conf is session-global, and interleaved toggles from two
-#: threads (e.g. a foreachBatch micro-batch merge racing a driver-side
-#: read) could otherwise restore the wrong value and leave inference
-#: disabled session-wide.
+#: Serializes the partition-inference conf toggle in :func:`_scan_raw`,
+#: the one raw-directory scan: the conf is session-global, and
+#: interleaved toggles from two threads (e.g. a foreachBatch
+#: micro-batch merge racing a driver-side read) could otherwise restore
+#: the wrong value and leave inference disabled session-wide.
 _INFER_LOCK = threading.RLock()
 
 
@@ -604,6 +615,9 @@ def _compute_blooms(
 
 
 def _bloom_may_contain(hex_bits: str, value) -> bool:
+    """One value's bloom probe, written plainly: the reference that
+    :meth:`_SetProbe.any_in_bloom` (what readers run) is tested
+    against."""
     if isinstance(value, str):
         # string keys probe through the same crc32 the writer used
         value = zlib.crc32(value.encode("utf-8"))
@@ -617,12 +631,13 @@ def _bloom_may_contain(hex_bits: str, value) -> bool:
 
 
 class _SetProbe:
-    """A MULTI-KEY point probe (``point_lookups={col: [v1, v2, …]}``):
-    union semantics — a partition/file is kept iff it may hold ANY of
-    the values. This is the manifest half of dynamic partition
-    pruning: the values are a filtered dimension's join keys, and the
-    fact scan keeps only the partitions AND files whose stats/blooms
-    can hold at least one of them (see :func:`prune_for_join`).
+    """A point probe (``point_lookups={col: [v1, v2, …]}``; a scalar
+    ``{col: v}`` is the one-value set): union semantics — a
+    partition/file is kept iff it may hold ANY of the values. This is
+    the manifest half of dynamic partition pruning: the values are a
+    filtered dimension's join keys, and the fact scan keeps only the
+    partitions AND files whose stats/blooms can hold at least one of
+    them (see :func:`prune_for_join`).
 
     Probes are vectorized (numpy): each value's k bit positions are
     computed ONCE per bitmap width and tested as array lookups, so a
@@ -693,11 +708,11 @@ class _SetProbe:
 
 
 def _set_probe_keeps(probes: dict, stats: dict, pb: dict) -> bool:
-    """Partition-grain check for every multi-key probe column: drop
-    only when the stats range OR the bloom PROVES no value can be
-    present (missing stats/bloom keep — skipping is an optimization,
-    never a filter; a probe carrying unsupported value types proves
-    nothing and keeps everything)."""
+    """The probes' keep test at either grain (a partition's or a
+    file's stats and blooms): drop only when the stats range OR the
+    bloom PROVES no value can be present (missing stats/bloom keep —
+    skipping is an optimization, never a filter; a probe carrying
+    unsupported value types proves nothing and keeps everything)."""
     for c, sp in probes.items():
         if sp.unsupported:
             continue
@@ -801,24 +816,14 @@ def _add_file_blooms(
     from pyspark.sql import functions as F
 
     words = bits // 64
-    by_commit: dict[str, list[str]] = {}
-    dir_part: dict[str, str] = {}
-    for pname, rel in entries.items():
-        d = rel if os.path.isabs(rel) else os.path.join(path, rel)
-        by_commit.setdefault(os.path.dirname(d), []).append(d)
-        dir_part[os.path.realpath(d)] = pname
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    by_commit = _commit_dirs(path, entries.items())
+    dir_part = {
+        os.path.realpath(os.path.join(path, rel)): pname
+        for pname, rel in entries.items()
+    }
     rows: list = []
-    for commit, ds in sorted(by_commit.items()):
-        with _INFER_LOCK:
-            infer_old = spark.conf.get(infer_key, "true")
-            spark.conf.set(infer_key, "false")
-            try:
-                back = spark.read.option("basePath", commit).parquet(
-                    *sorted(ds)
-                )
-            finally:
-                spark.conf.set(infer_key, infer_old)
+    for commit, back in _scan_raw(spark, by_commit).items():
+        ds = by_commit[commit]
         # a column recovered from the DIRECTORY (a partition-spec
         # component) has no physical column in the files: a file bloom
         # for it would hash the readback's STRING rendering and
@@ -1051,6 +1056,171 @@ def _ranges_overlap(stats: dict, column_ranges: dict) -> bool:
     return True
 
 
+def _commit_root(path: str, rel: str, pname: str) -> str:
+    """The one commit-root rule: the directory a scan of ``rel`` (a
+    manifest rel of partition ``pname`` — data, update delta or
+    tombstone) uses as ``basePath``, i.e. ``rel`` with ``pname``'s
+    directory level(s) stripped, under ``path``. NOT
+    ``os.path.dirname`` — that lands INSIDE the partition tree for
+    multi-level specs (``data/c/day=1/source=x`` → ``data/c/day=1``),
+    silently dropping the outer partition column from hive discovery.
+    Works for absolute rels too (shallow clones), since every rel ends
+    with its partition name."""
+    n = pname.count("/") + 1
+    return os.path.join(path, "/".join(rel.split("/")[:-n]))
+
+
+def _commit_dirs(path: str, entries, files: "dict | None" = None) -> dict:
+    """Group manifest ``(pname, rel)`` entries by commit root:
+    ``{root: [directories]}``, or the named files of a directory when
+    ``files`` selects some (``{pname: [file names]}``)."""
+    out: dict[str, list[str]] = {}
+    for pname, rel in entries:
+        d = os.path.join(path, rel)
+        sel = (files or {}).get(pname)
+        out.setdefault(_commit_root(path, rel, pname), []).extend(
+            [d] if sel is None else [os.path.join(d, f) for f in sel]
+        )
+    return out
+
+
+def _scan_raw(spark: SparkSession, groups: dict) -> "dict[str, DataFrame]":
+    """The one RAW-DIRECTORY scan: ``{base: [dirs or files]}`` becomes
+    one parquet read per base (``basePath`` = the base, so hive
+    discovery recovers every partition column), returned as
+    ``{base: frame}`` in base order. Partition values come back as the
+    RAW directory string for the caller to cast per the manifest-pinned
+    type: letting Spark's hive inference guess first corrupts
+    string-typed values that look numeric ('0123' → int 123 → cast
+    back as '123'). Inference runs eagerly when the reader resolves
+    the file index, so toggling the session conf around the reads is
+    sufficient and leak-free."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    with _INFER_LOCK:
+        old = spark.conf.get(key, "true")
+        spark.conf.set(key, "false")
+        try:
+            return {
+                base: spark.read.option("basePath", base).parquet(
+                    *sorted(dirs)
+                )
+                for base, dirs in sorted(groups.items())
+            }
+        finally:
+            spark.conf.set(key, old)
+
+
+def _logical_fields(meta: dict) -> list:
+    """The table's LOGICAL columns as ``StructField``s, in the one
+    order every read presents: the recorded ``spark_schema`` (the
+    physical schema of the last data-writing commit) through the
+    rename chain with dropped columns gone — data columns in recorded
+    order, then the partition-spec components in spec order (where a
+    hive scan puts its directory columns). Empty for a manifest that
+    predates the recorded schema."""
+    from pyspark.sql.types import StructField, StructType
+
+    sj = meta.get("spark_schema")
+    if not sj:
+        return []
+    renames = meta.get("renames") or []
+    dropped = set(meta.get("dropped") or [])
+    spec = [c for c, _t in _spec_meta(meta)]
+    fields = [
+        StructField(name, f.dataType, f.nullable, f.metadata)
+        for f in StructType.fromJson(json.loads(sj)).fields
+        if (name := _logical_name(renames, f.name)) not in dropped
+    ]
+    return [f for f in fields if f.name not in spec] + sorted(
+        (f for f in fields if f.name in spec), key=lambda f: spec.index(f.name)
+    )
+
+
+def _renamed(df: DataFrame, renames) -> DataFrame:
+    """Apply the cumulative rename chain to one commit's scan: a commit
+    written before a rename carries the old physical name (mapped), one
+    written after already has the new name (no-op); old names are never
+    reused (enforced at evolve time), so the full chain is safe on
+    every scan."""
+    for old, new in renames:
+        if old in df.columns:
+            df = df.withColumnRenamed(old, new)
+    return df
+
+
+def _prune(
+    man: dict, parts: dict, column_ranges: dict, point_lookups: dict
+) -> "tuple[dict, dict]":
+    """The one manifest pruner behind :func:`read_snapshot`: returns
+    ``(kept partitions, {partition: selected file names})`` — an empty
+    ``kept`` PROVES the scan holds no rows. Every probe value becomes a
+    :class:`_SetProbe` (a scalar is a one-value set). A probe on a
+    current-spec component is matched EXACTLY at the directory name
+    with its raw values (a scalar ``None`` selects the NULL partition)
+    and is kept away from the sketches: file blooms hash the readback,
+    where a typed component is its directory STRING, so consulting them
+    would false-negative. Then one keep test — ``column_ranges`` overlap
+    the recorded [min, max] and every probe may hit the stats range and
+    the bloom — runs per partition and, inside each kept partition, per
+    file over the union of per-file stats and blooms (the footer
+    harvest lists every file; a file the maps do not describe is
+    kept)."""
+    spec_t = (
+        _spec_meta(man.get("schema") or {})
+        if point_lookups and not _mixed_spec(man)
+        else []
+    )
+    spec_i = {c: i for i, (c, _t) in enumerate(spec_t)}
+    probes: dict = {}
+    dir_match: dict[int, set] = {}
+    for c, v in point_lookups.items():
+        raw = list(v) if isinstance(v, (list, tuple, set, frozenset)) else [v]
+        sp = _SetProbe(raw)
+        if sp.empty:
+            return {}, {}  # no key can match: the result is empty
+        if c not in spec_i:
+            probes[c] = sp
+        elif all(
+            x is None
+            or (isinstance(x, (int, str)) and not isinstance(x, bool))
+            for x in raw
+        ):
+            dir_match[spec_i[c]] = {_hive_part_name(c, x) for x in raw}
+
+    def keeps(stats: dict, blooms: dict) -> bool:
+        return _ranges_overlap(stats, column_ranges) and _set_probe_keeps(
+            probes, stats, blooms
+        )
+
+    all_stats = man.get("stats") or {}
+    all_blooms = man.get("blooms") or {}
+    kept: dict = {}
+    file_sel: dict[str, list[str]] = {}
+    for p, rel in parts.items():
+        comps = p.split("/")
+        if any(comps[i] not in tgts for i, tgts in dir_match.items()):
+            continue
+        st = all_stats.get(p) or {}
+        pb = all_blooms.get(p) or {}
+        if not keeps(st, pb):
+            continue
+        fstats = st.get(FILES_KEY) or {}
+        fblooms = pb.get(FILES_KEY) or {}
+        names = sorted(set(fstats) | set(fblooms))
+        if names and (column_ranges or probes):
+            sel = [
+                f
+                for f in names
+                if keeps(fstats.get(f) or {}, fblooms.get(f) or {})
+            ]
+            if not sel:
+                continue  # every file provably misses: no rows here
+            if len(sel) < len(names):
+                file_sel[p] = sel
+        kept[p] = rel
+    return kept, file_sel
+
+
 def read_snapshot(
     spark: SparkSession,
     path: str,
@@ -1084,440 +1254,147 @@ def read_snapshot(
     surviving partition the per-FILE statistics (``FILES_KEY``,
     recorded by the same footer harvest) prune at file grain too: a
     multi-file partition reads only the files whose [min, max] can
-    overlap the window. It is an I/O
-    optimization with a conservative contract: partitions lacking
-    stats (or with bounds of an incomparable type) are kept, files
-    lacking per-file stats are kept, the
-    caller must still apply the real filter to the returned frame,
-    and a window that excludes EVERY partition returns an empty frame
-    with the table's schema — never an error — exactly like the
-    unpruned read + filter it replaces.
+    overlap the window.
 
-    ``point_lookups`` = ``{col: int_or_str_value}`` prunes with the
-    manifest's per-partition BLOOM filters (see ``bloom_cols`` on the
-    writers): a partition whose bloom proves ``col = value`` absent is
-    skipped. This is the probe shape min/max stats cannot help with —
-    a key scattered uniformly across partitions. Same conservative
-    contract: no bloom → keep; false positives scan and are removed
-    by the caller's real filter; all-pruned → empty frame. A point
-    lookup is ALSO the degenerate range ``[v, v]``, so recorded
-    min/max statistics prune it too — including at file grain, where
-    blooms (per-partition) cannot reach: on a table clustered by the
-    probed column, a key lookup opens one file.
+    ``point_lookups`` = ``{col: value}`` or ``{col: [v1, v2, …]}``
+    prunes to the partitions and files that may hold ANY of the values
+    (union semantics — the manifest half of dynamic partition pruning,
+    see :func:`prune_for_join`): a probe on a partition-spec component
+    matches the directory names exactly; on other columns the recorded
+    [min, max] statistics and the per-partition and per-file BLOOM
+    filters (``bloom_cols`` on the writers) each prove a value absent.
+    This is the probe shape min/max stats cannot help with — a key
+    scattered uniformly across partitions — and on a table clustered
+    by the probed column a key lookup opens one file.
+
+    Pruning order: ``partition_filter`` → an empty key set proves the
+    result empty → the spec-directory match → one keep test per
+    partition (ranges, then probes against stats and blooms) → the
+    same test per file inside each kept partition. The contract is
+    conservative throughout: missing stats or blooms, and bounds of an
+    incomparable type, keep the grain; the caller must still apply the
+    real filter to the returned frame; and a read that prunes EVERY
+    partition returns an empty frame with the table's schema — never
+    an error — exactly like the unpruned read + filter it replaces.
+
+    The result always presents the table's LOGICAL schema
+    (:func:`_logical_fields`): renamed columns under their new names,
+    dropped ones hidden, evolution-added ones NULL-filled for commits
+    written before them, spec components cast to their recorded types,
+    and one column order whatever the pruning kept.
     """
+    from pyspark.sql import functions as F
+
     man = read_manifest(path, version)
+    meta = man.get("schema") or {}
+    fields = _logical_fields(meta)
     parts = man["partitions"]
-    if not parts and man.get("version", 0) > 0:
+    if not parts and man.get("version", 0) > 0 and fields:
         # A committed but EMPTY table (e.g. delete_where removed every
         # row, dropping every partition): a zero-row frame with the
-        # recorded schema, mirroring what scanning zero files of a
-        # known schema would produce. Tables from before the schema
-        # was recorded fall through to the historical error below.
-        sj = (man.get("schema") or {}).get("spark_schema")
-        if sj:
-            from pyspark.sql.types import StructType
+        # logical schema, what scanning zero files of it would give.
+        # Tables from before the schema was recorded fall through to
+        # the historical error below.
+        from pyspark.sql.types import StructType
 
-            empty = spark.createDataFrame(
-                [], StructType.fromJson(json.loads(sj))
-            )
-            # the recorded spark_schema is the PHYSICAL schema of the
-            # last data-writing commit; apply the evolution chain so an
-            # evolved-then-emptied table presents its logical columns
-            meta0 = man.get("schema") or {}
-            for old, new in meta0.get("renames") or []:
-                if old in empty.columns:
-                    empty = empty.withColumnRenamed(old, new)
-            drops0 = [c for c in meta0.get("dropped") or [] if c in empty.columns]
-            if drops0:
-                empty = empty.drop(*drops0)
-            return empty
+        return spark.createDataFrame([], StructType(fields))
     if partition_filter is not None:
         parts = {p: rel for p, rel in parts.items() if partition_filter(p)}
-    empty_result = False
-    if point_lookups:
-        # a collection value is a MULTI-KEY probe (union semantics —
-        # the manifest half of dynamic partition pruning, see
-        # prune_for_join); normalize it once into the vectorized form
-        point_lookups = {
-            c: (
-                _SetProbe(v)
-                if isinstance(v, (list, tuple, set, frozenset))
-                else v
-            )
-            for c, v in point_lookups.items()
-        }
-        if parts and any(
-            isinstance(v, _SetProbe) and v.empty
-            for v in point_lookups.values()
-        ):
-            # an empty key set proves the result empty (the join's
-            # build side matched nothing): schema-only read
-            first = sorted(parts)[0]
-            parts = {first: parts[first]}
-            empty_result = True
-    if point_lookups and parts and not empty_result:
-        # a probe on a CURRENT-spec component is EXACT at the
-        # directory (one value per level) — match the hive name and
-        # exclude the column from every sketch-based pruner below.
-        # File-grain blooms in particular must never be consulted for
-        # spec components: they are hashed from the readback, where a
-        # typed component materializes as its directory STRING, so a
-        # typed probe would false-negative (measured: a bigint-spec
-        # probe silently returned zero rows).
-        spec_t = _spec_meta(man.get("schema") or {})
-        if not _mixed_spec(man):
-            for i, (c, _t) in enumerate(spec_t):
-                if c not in point_lookups:
-                    continue
-                v = point_lookups[c]
-                if isinstance(v, _SetProbe):
-                    if v.unsupported:
-                        continue  # unprobeable domain: stay a no-op
-                    vals = list(v.ints) + list(v.strs)
-                elif v is None or (
-                    isinstance(v, (int, str)) and not isinstance(v, bool)
-                ):
-                    vals = [v]
-                else:
-                    continue
-                point_lookups.pop(c)
-                tgts = {_hive_part_name(c, x) for x in vals}
-                nxt = {
-                    p: rel
-                    for p, rel in parts.items()
-                    if p.split("/")[i] in tgts
-                }
-                if not nxt:
-                    first = sorted(parts)[0]
-                    nxt = {first: parts[first]}
-                    empty_result = True
-                parts = nxt
-    if point_lookups and parts and not empty_result:
-        all_blooms = man.get("blooms") or {}
-        kept = {}
-        for p, rel in parts.items():
-            pb = all_blooms.get(p) or {}
-            if all(
-                not isinstance(v, (int, str))
-                or c not in pb
-                or _bloom_may_contain(pb[c], v)
-                for c, v in point_lookups.items()
-            ):
-                kept[p] = rel
-        if not kept:
-            first = sorted(parts)[0]
-            kept = {first: parts[first]}
-            empty_result = True
-        parts = kept
-    file_sel: dict[str, list[str]] = {}
-    # a point lookup is the degenerate range [v, v]: the same recorded
-    # [min, max] statistics that serve windows serve key probes too —
-    # at partition grain alongside the blooms, and at FILE grain where
-    # blooms (per-partition) cannot reach
-    prune_ranges = dict(column_ranges or {})
-    for c, v in (point_lookups or {}).items():
-        if (
-            isinstance(v, (int, str))
-            and not isinstance(v, bool)
-            and c not in prune_ranges
-        ):
-            prune_ranges[c] = (v, v)
-    if prune_ranges and parts and not empty_result:
-        column_ranges = prune_ranges
-        all_stats = man.get("stats") or {}
-        kept = {
-            p: rel
-            for p, rel in parts.items()
-            if _ranges_overlap(all_stats.get(p) or {}, column_ranges)
-        }
-        # FILE grain: inside each surviving partition keep only the
-        # files whose recorded per-file [min, max] can overlap the
-        # window (FILES_KEY — same conservative contract: files
-        # lacking stats are kept, the caller still applies the real
-        # filter). This is the intra-partition half of Iceberg/Delta
-        # data skipping: a boundary partition with many files reads
-        # only the overlapping ones.
-        for p in list(kept):
-            fstats = (all_stats.get(p) or {}).get(FILES_KEY)
-            if not fstats:
-                continue
-            sel = [
-                f
-                for f, fs in sorted(fstats.items())
-                if _ranges_overlap(fs, column_ranges)
-            ]
-            if not sel:
-                # every file provably outside: the partition
-                # contributes no rows — drop it entirely
-                del kept[p]
-            elif len(sel) < len(fstats):
-                file_sel[p] = sel
-        if not kept:
-            # Stats prove the window holds no rows. An unpruned read +
-            # filter would return an EMPTY frame, and skipping must be
-            # behavior-preserving — so scan one directory for its
-            # schema and emit zero rows (a footer-only read).
-            first = sorted(parts)[0]
-            kept = {first: parts[first]}
-            file_sel.pop(first, None)
-            empty_result = True
-        parts = kept
-    if point_lookups and parts and not empty_result:
-        # FILE-grain blooms (blooms[p][FILES_KEY], _add_file_blooms):
-        # min/max per-file stats only prune key probes on a CLUSTERED
-        # layout; the per-file bloom prunes them on any layout. Same
-        # conservative contract: files the map does not list are kept
-        # (a zero-row file missing from the read-back contributes no
-        # rows either way), no map → no file pruning. Intersects with
-        # the stats-based selection above when both apply.
-        all_blooms = man.get("blooms") or {}
-        kept = dict(parts)
-        for p in list(kept):
-            fb = (all_blooms.get(p) or {}).get(FILES_KEY)
-            if not fb:
-                continue
-            cand = file_sel.get(p)
-            names = cand if cand is not None else sorted(fb)
-            sel = []
-            for f in names:
-                fbl = fb.get(f)
-                if fbl is None or all(
-                    not isinstance(v, (int, str))
-                    or c not in fbl
-                    or _bloom_may_contain(fbl[c], v)
-                    for c, v in point_lookups.items()
-                ):
-                    sel.append(f)
-            if not sel:
-                # every file provably lacks the key: the partition
-                # contributes no rows — drop it entirely
-                del kept[p]
-                file_sel.pop(p, None)
-            elif len(sel) < len(names if cand is not None else fb):
-                file_sel[p] = sel
-        if not kept:
-            first = sorted(parts)[0]
-            kept = {first: parts[first]}
-            file_sel.pop(first, None)
-            empty_result = True
-        parts = kept
-    set_probes = {
-        c: v
-        for c, v in (point_lookups or {}).items()
-        if isinstance(v, _SetProbe)
-    }
-    if set_probes and parts and not empty_result:
-        # MULTI-KEY probes (prune_for_join / point_lookups with a
-        # collection value): union semantics at both grains — keep a
-        # partition/file iff it may hold ANY of the keys. Stats and
-        # blooms both prove absence; either proof suffices to drop.
-        all_stats = man.get("stats") or {}
-        all_blooms = man.get("blooms") or {}
-        kept = dict(parts)
-        for p in list(kept):
-            st = all_stats.get(p) or {}
-            pb = all_blooms.get(p) or {}
-            if not _set_probe_keeps(set_probes, st, pb):
-                del kept[p]
-                file_sel.pop(p, None)
-                continue
-            fstats = st.get(FILES_KEY) or {}
-            fblooms = pb.get(FILES_KEY) or {}
-            cand = file_sel.get(p)
-            # the footer harvest enumerates every on-disk file, so the
-            # union is the complete list; bloom read-back alone may
-            # miss zero-row files (which hold no key anyway)
-            names = (
-                cand
-                if cand is not None
-                else (sorted(set(fstats) | set(fblooms)) or None)
-            )
-            if names is None:
-                continue  # no file grain recorded: whole directory
-            sel = [
-                f
-                for f in names
-                if _set_probe_keeps(
-                    set_probes, fstats.get(f) or {}, fblooms.get(f) or {}
-                )
-            ]
-            if not sel:
-                del kept[p]
-                file_sel.pop(p, None)
-            elif len(sel) < len(names):
-                file_sel[p] = sel
-        if not kept:
-            first = sorted(parts)[0]
-            kept = {first: parts[first]}
-            file_sel.pop(first, None)
-            empty_result = True
-        parts = kept
     if not parts:
         raise FileNotFoundError(f"no snapshot at {path}")
-    # Merge-on-read UPDATE deltas (update_where): the selected
-    # partitions' appended new-version row files, scanned alongside the
-    # base directories with their commit SEQUENCE attached so the
-    # tombstone anti-join below can order them (a tombstone only
-    # suppresses rows of strictly older commits). Partitions the
-    # pruners dropped take their deltas with them — a delta belongs to
-    # its partition; and updated partitions are never stats/bloom
-    # pruned (update_where clears those entries), so a delta row can
-    # never be skipped by metadata describing only the base files.
-    upd_parts = (
-        {
-            p: e
-            for p, e in (
-                (man.get("updates") or {}).get("parts") or {}
-            ).items()
-            if p in parts
-        }
-        if not empty_result
-        else {}
+    kept, file_sel = _prune(
+        man, parts, column_ranges or {}, point_lookups or {}
     )
-    seq_aware = bool(upd_parts)
-    by_commit: dict[str, list[str]] = {}
-    for pname, rel in parts.items():
-        commit = _commit_root(rel, pname)  # data/<commit-id>
-        if pname in file_sel:
-            by_commit.setdefault(commit, []).extend(
-                os.path.join(path, rel, f) for f in file_sel[pname]
-            )
-        else:
-            by_commit.setdefault(commit, []).append(os.path.join(path, rel))
-    # {delta commit root: (seq, [dirs])} — one update commit writes one
-    # commit dir, so the seq is uniform per root
-    upd_by_commit: dict[str, tuple[int, list[str]]] = {}
-    for pname, e in upd_parts.items():
-        for rel, seq in zip(e["rels"], e["seqs"]):
-            parts_rel = rel.replace(os.sep, "/").split("/")
-            commit = "/".join(parts_rel[:2])
-            ent = upd_by_commit.setdefault(commit, (int(seq), []))
-            ent[1].append(os.path.join(path, rel))
-    # Partition values must come back as the RAW directory string and be
-    # cast per the manifest-pinned type. Letting Spark's hive inference
-    # guess first corrupts string-typed values that look numeric
-    # ('0123' → int 123 → cast back as '123'); inference runs eagerly
-    # when the reader resolves the file index, so toggling the session
-    # conf around these reads is sufficient and leak-free.
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    with _INFER_LOCK:
-        infer_old = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
-            scans = [
-                spark.read.option(
-                    "basePath", os.path.join(path, commit)
-                ).parquet(*sorted(dirs))
-                for commit, dirs in sorted(by_commit.items())
-            ]
-            if seq_aware:
-                from pyspark.sql import functions as F
-
-                scans = [
-                    s.withColumn(_SEQ_COL, F.lit(0).cast("long"))
-                    for s in scans
-                ]
-                scans += [
-                    spark.read.option(
-                        "basePath", os.path.join(path, commit)
-                    )
-                    .parquet(*sorted(dirs))
-                    .withColumn(_SEQ_COL, F.lit(seq).cast("long"))
-                    for commit, (seq, dirs) in sorted(upd_by_commit.items())
-                ]
-        finally:
-            spark.conf.set(infer_key, infer_old)
-    meta0 = man.get("schema") or {}
-    renames = meta0.get("renames") or []
-    dropped = meta0.get("dropped") or []
-    if renames or dropped:
-        # Metadata-only schema evolution (evolve_snapshot_schema):
-        # apply the cumulative rename chain to EACH commit scan before
-        # the union — a commit written before a rename carries the old
-        # physical name (mapped), one written after already has the new
-        # name (no-op); old names are never reused (enforced at evolve
-        # time), so applying the full chain to every scan is safe.
-        # Dropped columns are hidden after the union.
-        def _logical(s):
-            for old, new in renames:
-                if old in s.columns:
-                    s = s.withColumnRenamed(old, new)
-            return s
-
-        scans = [_logical(s) for s in scans]
-    specs = _spec_meta(meta0) + [
-        (s["col"], s["type"]) for s in meta0.get("prior_specs") or []
+    empty_result = not kept
+    if empty_result:
+        # Metadata proves no row matches. Skipping must be behavior-
+        # preserving, so scan one directory for its schema and emit
+        # zero rows (a footer-only read).
+        first = min(parts)
+        kept = {first: parts[first]}
+    renames = meta.get("renames") or []
+    scans = list(
+        _scan_raw(spark, _commit_dirs(path, kept.items(), file_sel)).values()
+    )
+    # Merge-on-read UPDATE deltas (update_where): the kept partitions'
+    # appended new-version row files, scanned alongside the base
+    # directories with their commit SEQUENCE attached so the tombstone
+    # anti-join below can order them (a tombstone only suppresses rows
+    # of strictly older commits). Partitions the pruner dropped take
+    # their deltas with them — a delta belongs to its partition; and
+    # updated partitions are never stats/bloom pruned (update_where
+    # clears those entries), so a delta row can never be skipped by
+    # metadata describing only the base files.
+    deltas = [
+        (p, rel, int(seq))
+        for p, e in ((man.get("updates") or {}).get("parts") or {}).items()
+        if p in kept and not empty_result
+        for rel, seq in zip(e["rels"], e["seqs"])
     ]
-    if len(specs) > 1:
-        # Mixed partition specs (evolve_partition_spec): each spec
-        # column is a DIRECTORY value (string) in commits written
-        # under that spec and a parquet data column elsewhere — cast
-        # every spec column to its recorded type per scan BEFORE the
-        # union, or unionByName faces string-vs-typed conflicts.
-        from pyspark.sql import functions as F
-
-        def _spec_cast(s):
+    seq_aware = bool(deltas)
+    if seq_aware:
+        # one update commit writes one commit dir: the seq is uniform
+        # per commit root
+        seq_of = {_commit_root(path, rel, p): seq for p, rel, seq in deltas}
+        scans = [s.withColumn(_SEQ_COL, F.lit(0).cast("long")) for s in scans]
+        scans += [
+            s.withColumn(_SEQ_COL, F.lit(seq_of[root]).cast("long"))
+            for root, s in _scan_raw(
+                spark, _commit_dirs(path, [(p, rel) for p, rel, _s in deltas])
+            ).items()
+        ]
+    # Before the union, only what unionByName needs per commit: the
+    # rename chain and, under mixed partition specs
+    # (evolve_partition_spec), each spec column cast to its recorded
+    # type — a DIRECTORY string in commits written under that spec, a
+    # typed parquet column elsewhere.
+    specs = _spec_meta(meta) + [
+        (s["col"], s["type"]) for s in meta.get("prior_specs") or []
+    ]
+    for i, s in enumerate(scans):
+        s = _renamed(s, renames)
+        if len(specs) > 1:
             for col, typ in specs:
                 if col in s.columns:
                     s = s.withColumn(col, F.col(col).cast(typ))
-            return s
-
-        scans = [_spec_cast(s) for s in scans]
+        scans[i] = s
     out = scans[0]
     for s in scans[1:]:
         # allowMissingColumns: commits written before a schema-evolving
         # merge lack the newer columns — their rows read back as NULL.
         out = out.unionByName(s, allowMissingColumns=True)
-    if dropped:
-        out = out.drop(*[c for c in dropped if c in out.columns])
-    meta = man.get("schema") or {}
-    if meta:
-        from pyspark.sql import functions as F
-
-        for pc, pt in _spec_meta(meta):
-            out = out.withColumn(pc, F.col(pc).cast(pt))
-        # Conform to the table's LOGICAL schema: pruning (partition_filter
-        # / stats / bloom) may have kept only commits written BEFORE a
-        # schema-evolving merge, so evolution-added columns would be
-        # missing from the union — the caller's mandatory real filter on
-        # that column would then raise instead of matching the unpruned
-        # read + filter this scan must be equivalent to (the column is
-        # NULL-filled there). The recorded spark_schema is the physical
-        # schema of the last data-writing commit; its fields, run through
-        # the rename chain minus drops, are the logical column set.
-        sj = meta.get("spark_schema")
-        if sj:
-            from pyspark.sql.types import StructType
-
-            for f in StructType.fromJson(json.loads(sj)).fields:
-                logical_name = _logical_name(renames, f.name)
-                if logical_name in dropped:
-                    continue
-                if logical_name not in out.columns:
-                    out = out.withColumn(
-                        logical_name, F.lit(None).cast(f.dataType)
-                    )
     tomb = man.get("tombstones")
-    if tomb and not empty_result:
-        t_parts = {
-            p: e for p, e in (tomb.get("parts") or {}).items() if p in parts
-        }
-        if t_parts:
-            out = _apply_tombstones(
-                spark,
-                path,
-                out,
-                t_parts,
-                tomb["key"],
-                renames,
-                meta,
-                seq_aware=seq_aware,
-            )
-    if seq_aware:
-        out = out.drop(_SEQ_COL)
-    if empty_result:
-        out = out.limit(0)
-    return out
+    t_parts = {
+        p: e
+        for p, e in ((tomb or {}).get("parts") or {}).items()
+        if p in kept and not empty_result
+    }
+    if t_parts:
+        out = _apply_tombstones(
+            spark, path, out, t_parts, tomb["key"], meta, seq_aware=seq_aware
+        )
+    # One projection presents the LOGICAL table: pruning may have kept
+    # only commits written BEFORE a schema-evolving merge, so the
+    # evolution-added columns are NULL-filled (the caller's mandatory
+    # real filter on such a column must match the unpruned read + filter
+    # this scan is equivalent to); dropped columns are hidden; spec
+    # columns take their recorded types; the column order is the
+    # manifest's, not the union's commit order.
+    types = {f.name: f.dataType for f in fields}
+    spec_types = dict(_spec_meta(meta))
+    dropped = set(meta.get("dropped") or []) | {_SEQ_COL}
+    names = list(types) + [
+        c for c in out.columns if c not in types and c not in dropped
+    ]
+
+    def present(c: str):
+        if c not in out.columns:
+            return F.lit(None).cast(types[c]).alias(c)
+        col = F.col("`" + c.replace("`", "``") + "`")
+        return col.cast(spec_types[c]).alias(c) if c in spec_types else col
+
+    out = out.select(*[present(c) for c in names])
+    return out.limit(0) if empty_result else out
 
 
 def _apply_tombstones(
@@ -1526,7 +1403,6 @@ def _apply_tombstones(
     out: DataFrame,
     t_parts: dict,
     key: str,
-    renames: list,
     meta: dict,
     *,
     seq_aware: bool = False,
@@ -1552,50 +1428,31 @@ def _apply_tombstones(
     exactly their historical semantics."""
     from pyspark.sql import functions as F
 
-    # {commit root: (seq, [dirs])} — one delete/update commit writes
-    # one tombstone commit dir, so the seq is uniform per root
-    by_commit: dict[str, tuple[int, list[str]]] = {}
-    for e in t_parts.values():
-        seqs = e.get("seqs") or [_SEQ_INF] * len(e["rels"])
-        for rel, seq in zip(e["rels"], seqs):
-            # rel is data/<commit>/<pname> where <pname> may be a
-            # NESTED multi-column directory (day=…/source=…); the
-            # basePath must be the commit root so Spark recovers EVERY
-            # spec component as a partition column, not just the leaf.
-            parts_rel = rel.replace(os.sep, "/").split("/")
-            commit = "/".join(parts_rel[:2])
-            ent = by_commit.setdefault(commit, (int(seq), []))
-            ent[1].append(os.path.join(path, rel))
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    with _INFER_LOCK:
-        infer_old = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
-            tscans = [
-                spark.read.option(
-                    "basePath", os.path.join(path, commit)
-                ).parquet(*sorted(dirs))
-                for commit, (_seq, dirs) in sorted(by_commit.items())
-            ]
-        finally:
-            spark.conf.set(infer_key, infer_old)
-    if seq_aware:
-        tscans = [
-            s.withColumn("__tomb_seq", F.lit(seq).cast("long"))
-            for s, (_c, (seq, _d)) in zip(tscans, sorted(by_commit.items()))
-        ]
+    # one delete/update commit writes one tombstone commit dir, so the
+    # seq is uniform per commit root
+    rels = [
+        (p, rel, int(seq))
+        for p, e in t_parts.items()
+        for rel, seq in zip(
+            e["rels"], e.get("seqs") or [_SEQ_INF] * len(e["rels"])
+        )
+    ]
+    seq_of = {_commit_root(path, rel, p): seq for p, rel, seq in rels}
+    renames = meta.get("renames") or []
+    tscans = [
+        # tombstone files carry the physical column names of their
+        # delete commit — the same rename chain as the data applies
+        _renamed(s, renames).withColumn(
+            "__tomb_seq", F.lit(seq_of[root]).cast("long")
+        )
+        for root, s in _scan_raw(
+            spark, _commit_dirs(path, [(p, rel) for p, rel, _s in rels])
+        ).items()
+    ]
     t = tscans[0]
     for s in tscans[1:]:
         t = t.unionByName(s, allowMissingColumns=True)
-    # tombstone files carry the physical column names of their delete
-    # commit — the same rename chain as the data applies
-    for old, new in renames or []:
-        if old in t.columns:
-            t = t.withColumnRenamed(old, new)
-    logical_key = key
-    for old, new in renames or []:
-        if logical_key == old:
-            logical_key = new
+    logical_key = _logical_name(renames, key)
     # the join key is (key, *spec): every component of a multi-column
     # spec participates, so a key tombstoned under one (day, source)
     # never suppresses its namesake in a sibling partition
@@ -1606,7 +1463,7 @@ def _apply_tombstones(
             F.col(c).cast(tp).alias(f"__tomb_p{i}")
             for i, (c, tp) in enumerate(spec)
         ],
-        *([F.col("__tomb_seq")] if seq_aware else []),
+        "__tomb_seq",
     )
     total = sum(int(e.get("n_deleted") or 0) for e in t_parts.values())
     if total <= 2_000_000:
@@ -1614,8 +1471,8 @@ def _apply_tombstones(
     # keys are never NULL (enforced at delete time); partition values
     # may be (the NULL/default partition) — null-safe on that side
     cond = F.col(logical_key) == F.col("__tomb_k")
-    for i, (c, _tp) in enumerate(spec):
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__tomb_p{i}"))
+    for i, (c, tp) in enumerate(spec):
+        cond = cond & F.col(c).cast(tp).eqNullSafe(F.col(f"__tomb_p{i}"))
     if seq_aware:
         cond = cond & (F.col("__tomb_seq") > F.col(_SEQ_COL))
     return out.join(t, cond, "left_anti")
@@ -2011,18 +1868,6 @@ def _default_group_col(meta: dict, group_col: "str | None", what: str) -> str:
         f"{[c for c, _t in spec]!r} — name the component to group by "
         "(group_col=...)"
     )
-
-
-def _commit_root(rel: str, pname: str) -> str:
-    """The commit root a scan should use as ``basePath``: ``rel`` with
-    ``pname``'s directory level(s) stripped. NOT ``os.path.dirname`` —
-    that lands INSIDE the partition tree for multi-level specs
-    (``data/c/day=1/source=x`` → ``data/c/day=1``), silently dropping
-    the outer partition column from hive discovery. Works for absolute
-    rels too (shallow clones), since every manifest rel ends with its
-    partition name."""
-    n = pname.count("/") + 1
-    return "/".join(rel.split("/")[:-n])
 
 
 def _fsync_dir(path) -> None:
@@ -2559,16 +2404,8 @@ def _backscan(spark: SparkSession, commit_dir) -> DataFrame:
     spanning several commit dirs (:func:`backfill_table_stats`)."""
     if isinstance(commit_dir, DataFrame):
         return commit_dir
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    with _INFER_LOCK:
-        infer_old = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
-            return spark.read.option("basePath", str(commit_dir)).parquet(
-                str(commit_dir)
-            )
-        finally:
-            spark.conf.set(infer_key, infer_old)
+    d = str(commit_dir)
+    return _scan_raw(spark, {d: [d]})[d]
 
 
 def _compute_sums(
@@ -3725,13 +3562,11 @@ def backfill_table_stats(spark: SparkSession, path: str) -> int:
     if not needy_mm and not needy_scan:
         return parent  # nothing missing: no commit
 
-    def _full_dir(pname: str) -> str:
-        rel = partitions[pname]
-        return rel if os.path.isabs(rel) else os.path.join(path, rel)
-
     # footer harvest: zero data pages, driver-side metadata reads only
     for pname, missing in needy_mm.items():
-        new, _n = _footer_stats(Path(_full_dir(pname)), set(missing))
+        new, _n = _footer_stats(
+            Path(path, partitions[pname]), set(missing)
+        )
         ent = stats.setdefault(pname, {})
         for k, v in new.items():
             if k == FILES_KEY:
@@ -3746,27 +3581,15 @@ def backfill_table_stats(spark: SparkSession, path: str) -> int:
 
     if needy_scan and (sketch_keys or bloom_cols):
         # one readback frame spanning the needy partitions' commit
-        # dirs (same scan recipe as the write path: basePath per
-        # commit root, partition-value inference off); schema-evolved
-        # commits NULL-fill added columns, matching write-time reads
-        by_base: dict[str, list[str]] = {}
-        for pname in needy_scan:
-            full = _full_dir(pname)
-            base = full
-            for _ in range(max(1, len(spec_cols))):
-                base = os.path.dirname(base)
-            by_base.setdefault(base, []).append(full)
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        with _INFER_LOCK:
-            infer_old = spark.conf.get(infer_key, "true")
-            spark.conf.set(infer_key, "false")
-            try:
-                scans = [
-                    spark.read.option("basePath", b).parquet(*sorted(dirs))
-                    for b, dirs in sorted(by_base.items())
-                ]
-            finally:
-                spark.conf.set(infer_key, infer_old)
+        # dirs (the read path's raw scan: basePath per commit root,
+        # partition-value inference off); schema-evolved commits
+        # NULL-fill added columns, matching write-time reads
+        scans = list(
+            _scan_raw(
+                spark,
+                _commit_dirs(path, [(p, partitions[p]) for p in needy_scan]),
+            ).values()
+        )
         back = scans[0]
         for s in scans[1:]:
             back = back.unionByName(s, allowMissingColumns=True)
@@ -4055,18 +3878,25 @@ def delete_where(
     ``"tombstoned_keys"`` and ``"mode"`` for merge-on-read);
     a no-match delete commits nothing and returns the parent version.
     """
+    return _delete(spark, path, condition, txn=txn, mode=mode, key=key)
+
+
+def _delete(spark, path, condition, *, txn, mode, key, alias=None) -> dict:
+    """:func:`delete_where` with ``alias`` naming the scan the
+    condition is evaluated over — ``DELETE FROM t AS a WHERE a.k = 1``
+    (``sql_merge.execute_delete``), as both row-level cores allow."""
     from pyspark.sql import Column, functions as F
 
     cond = condition if isinstance(condition, Column) else F.expr(condition)
     if mode == "merge-on-read":
         if key is None:
             raise ValueError("merge-on-read delete requires key=<row key column>")
-        return _mor_write(spark, path, cond, key, None, txn=txn)
+        return _mor_write(spark, path, cond, key, None, alias=alias, txn=txn)
     if mode != "copy-on-write":
         raise ValueError(f"unknown delete mode {mode!r}")
     parent, version, affected, deleted = _cow_rewrite(
         spark, path, cond, lambda scoped, hit: scoped.filter(~hit),
-        verb="delete", txn=txn,
+        verb="delete", alias=alias, txn=txn,
     )
     if version == parent:  # no hit, or the txn watermark absorbed a replay
         affected, deleted = set(), 0
@@ -4682,7 +4512,7 @@ def table_info(path: str, version: int | None = None) -> dict:
     """
     man = read_manifest(path, version)
     commits = {
-        _commit_root(rel, p) for p, rel in man["partitions"].items()
+        _commit_root(path, rel, p) for p, rel in man["partitions"].items()
     }
     n_files = 0
     n_bytes = 0
@@ -4754,7 +4584,7 @@ def maintain_snapshot(
     # files) stat walk; 'cheap when healthy' means one JSON read.
     man = read_manifest(path)
     n_commits = len(
-        {_commit_root(rel, p) for p, rel in man["partitions"].items()}
+        {_commit_root(path, rel, p) for p, rel in man["partitions"].items()}
     )
     # merge-on-read tombstones are deferred work: every tombstoned
     # partition pays an anti-join per read and blocks manifest

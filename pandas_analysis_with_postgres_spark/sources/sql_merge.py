@@ -624,12 +624,12 @@ def execute_delete(
     tombstones and rewrites nothing. Returns delete_where's result
     dict. ``DELETE FROM t`` with no WHERE empties the table (every
     partition dropped in one commit), matching SQL."""
-    from .snapshot import delete_where
+    from .snapshot import _delete
 
     p = parse_delete(sql)
-    cond = p["where"] if p["where"] else "true"
-    return delete_where(
-        spark, _target(p, tables, "DELETE"), cond, txn=txn, mode=mode, key=key
+    return _delete(
+        spark, _target(p, tables, "DELETE"), p["where"] or "true", txn=txn,
+        mode=mode, key=key, alias=p["alias"],
     )
 
 

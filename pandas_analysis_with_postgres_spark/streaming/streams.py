@@ -451,6 +451,25 @@ def _await_or_stop(q, timeout_sec: float) -> None:
         )
 
 
+def _retry_commit(fn: Callable, *args, **kwargs):
+    """Call ``fn(*args, **kwargs)``, retrying IN-RUN when it loses an
+    optimistic commit race (``ConcurrentCommitError``): each attempt
+    re-reads the fresh snapshot, so a retry is result-identical, and a
+    txn-watermarked commit that did land turns the retry into a no-op.
+    Five attempts; the last loss re-raises (under
+    ``trigger(availableNow)`` that terminates the query, and restarting
+    from the checkpoint is the fallback)."""
+    from ..sources.snapshot import ConcurrentCommitError
+
+    attempts = 5
+    for i in range(attempts):
+        try:
+            return fn(*args, **kwargs)
+        except ConcurrentCommitError:
+            if i == attempts - 1:
+                raise
+
+
 def stream_merge_sink(
     df: DataFrame,
     table_path: str,
@@ -486,24 +505,18 @@ def stream_merge_sink(
     fallback (the txn watermark makes the restart a no-op for any batch
     that did land).
     """
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    table_path,
-                    batch_df,
-                    key,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                    branch=branch,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            merge_snapshot,
+            table_path,
+            batch_df,
+            key,
+            partition_col,
+            txn=(app_id, batch_id),
+            branch=branch,
+        )
 
     foreach_batch_sink(
         df, _merge, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -531,23 +544,17 @@ def stream_append_sink(
     ``branch`` makes it the streaming write-audit-publish path, and —
     because append claims nothing about existing content — this sink
     also stays legal mid-migration after evolve_partition_spec."""
-    from ..sources.snapshot import ConcurrentCommitError, append_snapshot
+    from ..sources.snapshot import append_snapshot
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                append_snapshot(
-                    table_path,
-                    batch_df,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                    branch=branch,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            append_snapshot,
+            table_path,
+            batch_df,
+            partition_col,
+            txn=(app_id, batch_id),
+            branch=branch,
+        )
 
     foreach_batch_sink(
         df, _append, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -594,7 +601,7 @@ def stream_optout_sink(
     :func:`stream_merge_sink`."""
     from pyspark.sql import functions as F
 
-    from ..sources.snapshot import ConcurrentCommitError, delete_where
+    from ..sources.snapshot import delete_where
 
     def _delete(batch_df: DataFrame, batch_id: int) -> None:
         cap = MAX_OPTOUT_BATCH_KEYS
@@ -616,22 +623,15 @@ def stream_optout_sink(
         ids = [r[0] for r in rows]
         if not ids:
             return
-        spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                delete_where(
-                    spark,
-                    table_path,
-                    F.col(key).isin(ids),
-                    txn=(app_id, batch_id),
-                    mode=mode,
-                    key=key if mode == "merge-on-read" else None,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            delete_where,
+            batch_df.sparkSession,
+            table_path,
+            F.col(key).isin(ids),
+            txn=(app_id, batch_id),
+            mode=mode,
+            key=key if mode == "merge-on-read" else None,
+        )
 
     foreach_batch_sink(
         df, _delete, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -669,32 +669,28 @@ def stream_dedup_ingest(
     in-run like :func:`stream_merge_sink`.
     """
     from ..operators.dedup import incremental_minhash_dedup
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
+
+    def _attempt(batch_df: DataFrame, batch_id: int) -> None:
+        res, _ = incremental_minhash_dedup(
+            batch_df,
+            store_path,
+            batch_id=batch_id,
+            threshold=threshold,
+            text_col=text_col,
+            id_col=id_col,
+            app_id=app_id,
+        )
+        merge_snapshot(
+            results_path,
+            res.withColumn("__batch", F.lit(batch_id)),
+            "doc_id",
+            "__batch",
+            txn=(f"{app_id}-results", batch_id),
+        )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                res, _ = incremental_minhash_dedup(
-                    batch_df,
-                    store_path,
-                    batch_id=batch_id,
-                    threshold=threshold,
-                    text_col=text_col,
-                    id_col=id_col,
-                    app_id=app_id,
-                )
-                merge_snapshot(
-                    results_path,
-                    res.withColumn("__batch", F.lit(batch_id)),
-                    "doc_id",
-                    "__batch",
-                    txn=(f"{app_id}-results", batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(_attempt, batch_df, batch_id)
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -738,39 +734,30 @@ def stream_semantic_dedup_ingest(
     optimistic races retry in-run.
     """
     from ..operators.similarity import incremental_semantic_dedup
-    from ..sources.snapshot import (
-        ConcurrentCommitError,
-        merge_snapshot,
-        read_snapshot,
-    )
+    from ..sources.snapshot import merge_snapshot, read_snapshot
+
+    def _attempt(batch_df: DataFrame, batch_id: int) -> None:
+        cents = read_snapshot(batch_df.sparkSession, centroids_path)
+        res, _ = incremental_semantic_dedup(
+            batch_df,
+            store_path,
+            cents,
+            batch_id=batch_id,
+            threshold=threshold,
+            id_col=id_col,
+            vec_col=vec_col,
+            app_id=app_id,
+        )
+        merge_snapshot(
+            results_path,
+            res.withColumn("__batch", F.lit(batch_id)),
+            id_col,
+            "__batch",
+            txn=(f"{app_id}-results", batch_id),
+        )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                cents = read_snapshot(spark, centroids_path)
-                res, _ = incremental_semantic_dedup(
-                    batch_df,
-                    store_path,
-                    cents,
-                    batch_id=batch_id,
-                    threshold=threshold,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    app_id=app_id,
-                )
-                merge_snapshot(
-                    results_path,
-                    res.withColumn("__batch", F.lit(batch_id)),
-                    id_col,
-                    "__batch",
-                    txn=(f"{app_id}-results", batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(_attempt, batch_df, batch_id)
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -807,24 +794,17 @@ def stream_ivfpq_ingest(
     carry-by-reference matters.
     """
     from ..operators.similarity import append_ivfpq_index
-    from ..sources.snapshot import ConcurrentCommitError
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                append_ivfpq_index(
-                    batch_df,
-                    index_path,
-                    batch_id=batch_id,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    app_id=app_id,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            append_ivfpq_index,
+            batch_df,
+            index_path,
+            batch_id=batch_id,
+            id_col=id_col,
+            vec_col=vec_col,
+            app_id=app_id,
+        )
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -865,7 +845,7 @@ def stream_quality_gate(
     the usual missing-table ``FileNotFoundError``, not an empty frame.
     """
     from ..operators.classifier import score_docs
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         scored = score_docs(
@@ -887,20 +867,14 @@ def stream_quality_gate(
             # Skipping is replay-safe — the model is fixed for the
             # run, so a crash-replayed batch re-gates to empty again.
             return
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    out_path,
-                    kept,
-                    id_col,
-                    "__batch",
-                    txn=(app_id, batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            merge_snapshot,
+            out_path,
+            kept,
+            id_col,
+            "__batch",
+            txn=(app_id, batch_id),
+        )
 
     foreach_batch_sink(
         df, _gate, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -937,43 +911,31 @@ def stream_sum_view(
     idempotent.
     """
     from ..sources.matview import maintain_sum_view
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _ingest_and_maintain(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    source_path,
-                    batch_df,
-                    key,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                )
-                break
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            merge_snapshot,
+            source_path,
+            batch_df,
+            key,
+            partition_col,
+            txn=(app_id, batch_id),
+        )
         # the view merge can lose an optimistic race against a manual
         # maintenance cycle (CLI `matview`) — retry in-run like every
         # other sink here; each attempt re-reads the fresh watermark,
         # so a racing cycle that already applied the range turns the
         # retry into a caught-up no-op.
-        for i in range(attempts):
-            try:
-                maintain_sum_view(
-                    spark,
-                    source_path,
-                    view_path,
-                    key=key,
-                    group_col=group_col,
-                    sum_col=sum_col,
-                )
-                break
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            maintain_sum_view,
+            batch_df.sparkSession,
+            source_path,
+            view_path,
+            key=key,
+            group_col=group_col,
+            sum_col=sum_col,
+        )
 
     foreach_batch_sink(
         df,

@@ -10,6 +10,8 @@ import os
 from pathlib import Path
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pandas_analysis_with_postgres_spark.sources.snapshot import (
@@ -244,3 +246,88 @@ def test_append_commits_carry_file_stats_and_prune_across_batches(
     )
     opened = {os.path.basename(p) for p in df.inputFiles()}
     assert len(opened) <= 2 and df.count() == 500
+
+
+# ------------------------------------------- read-path property
+
+_PVALS = [0, 1, 2, None]  # None is the NULL (default) partition
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(st.integers(0, 99), min_size=8, max_size=24, unique=True),
+    st.tuples(st.integers(-10, 110), st.integers(-10, 110)).map(sorted),
+    st.integers(-5, 105),
+    st.lists(st.integers(-5, 105), min_size=2, max_size=4),
+)
+def test_read_pruning_is_behavior_preserving(spark, keys, window, probe, multi):
+    """Every pruner of read_snapshot — partition and file stats,
+    partition and file blooms, the spec-directory match and
+    partition_filter — against a Python model of the table: each read
+    followed by the caller's real filter returns exactly the model's
+    rows. Two exact slices of ``spark.range`` put every partition value
+    (the NULL partition included) in both, so each partition holds two
+    files and the file grain is exercised."""
+    import shutil
+    import tempfile
+    from functools import reduce
+
+    keys = keys[: len(keys) // 2 * 2]
+    half = len(keys) // 2
+    rows = [(k, _PVALS[i % half % 4]) for i, k in enumerate(keys)]
+    root = tempfile.mkdtemp(prefix="readprop_")
+    try:
+        path = root + "/t"
+
+        def pick(vals):
+            arr = F.array(*[F.lit(v).cast("long") for v in vals])
+            return F.element_at(arr, (F.col("id") + 1).cast("int"))
+
+        df = spark.range(0, len(rows), 1, 2).select(
+            pick([k for k, _ in rows]).alias("k"),
+            pick([p for _, p in rows]).alias("p"),
+        )
+        write_snapshot(df, path, "p", stats_cols=["k"], bloom_cols=["k"])
+        man = read_manifest(path, None)
+        assert len(man["partitions"]) == 4
+        assert all(len(s[FILES_KEY]) == 2 for s in man["stats"].values())
+
+        lo, hi = window
+        in_window = f"k BETWEEN {lo} AND {hi}"
+        in_multi = f"k IN ({', '.join(map(str, multi))})"
+        cases = [  # (read_snapshot kwargs, real filter, model)
+            ({"column_ranges": {"k": (lo, hi)}}, in_window,
+             lambda k, p: lo <= k <= hi),
+            ({"point_lookups": {"k": probe}}, f"k = {probe}",
+             lambda k, p: k == probe),
+            ({"point_lookups": {"k": [probe]}}, f"k = {probe}",
+             lambda k, p: k == probe),
+            ({"point_lookups": {"k": multi}}, in_multi,
+             lambda k, p: k in multi),
+            ({"column_ranges": {"k": (lo, hi)}, "point_lookups": {"k": multi}},
+             f"{in_window} AND {in_multi}",
+             lambda k, p: lo <= k <= hi and k in multi),
+            ({"partition_filter": lambda n: n != "p=1"}, "NOT (p <=> 1)",
+             lambda k, p: p != 1),
+            ({"point_lookups": {"p": None}}, "p IS NULL",
+             lambda k, p: p is None),
+        ]
+        reads = [read_snapshot(spark, path, **kw) for kw, _f, _m in cases]
+        assert reads[1].inputFiles() == reads[2].inputFiles()
+        got = reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                r.filter(f).select(F.lit(i).alias("case"), "k", "p")
+                for i, (r, (_kw, f, _m)) in enumerate(zip(reads, cases))
+            ],
+        ).collect()
+        for i, (_kw, _f, model) in enumerate(cases):
+            assert {(r.k, r.p) for r in got if r.case == i} == {
+                (k, p) for k, p in rows if model(k, p)
+            }, cases[i][0]
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

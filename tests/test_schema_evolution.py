@@ -208,3 +208,33 @@ def test_pruned_scan_conforms_to_logical_schema(spark, tmp_path):
     empty = read_snapshot(spark, path, column_ranges={"v": (1000, 2000)})
     assert set(empty.columns) == {"k", "v", "x", "p"}
     assert empty.count() == 0
+
+
+def test_column_order_does_not_depend_on_commit_ids_or_pruning(spark, tmp_path):
+    # The union of commit scans used to take the order of the (random)
+    # commit ids, so the evolution-added column landed before or after
+    # the partition column depending on which commits the pruning kept.
+    # Three fresh tables draw three sets of commit ids.
+    for i in range(3):
+        path = str(tmp_path / f"t{i}")
+        write_snapshot(
+            spark.createDataFrame(
+                [(1, 10, 0), (2, 20, 1)], "k long, v long, p long"
+            ),
+            path,
+            "p",
+            stats_cols=["k"],
+        )
+        merge_snapshot(
+            path,
+            spark.createDataFrame([(3, 30, 99, 2)], "k long, v long, x long, p long"),
+            "k",
+            "p",
+        )
+        full = read_snapshot(spark, path)
+        new_only = read_snapshot(spark, path, point_lookups={"k": 3})
+        old_only = read_snapshot(spark, path, point_lookups={"k": 1})
+        none = read_snapshot(spark, path, point_lookups={"k": 999})
+        assert len(new_only.inputFiles()) == len(old_only.inputFiles()) == 1
+        for df in (full, new_only, old_only, none):
+            assert df.columns == ["k", "v", "x", "p"]

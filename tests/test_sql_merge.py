@@ -612,3 +612,28 @@ def test_update_alias_keeps_string_literals(spark, tmp_path):
             (1, "t.b.d.", 0),
             (2, "y", 0),
         }, mode
+
+
+def test_delete_alias_qualifies_columns(spark, tmp_path):
+    # the WHERE is evaluated over the scan aliased as the statement
+    # names it, in both modes; a literal that spells the alias
+    # ('x.k = 1') is compared as written
+    df = spark.createDataFrame(
+        [(1, "a", 0), (2, "x.k = 1", 0), (3, "c", 1)],
+        "k long, note string, p long",
+    )
+    for mode in ("copy-on-write", "merge-on-read"):
+        path = str(tmp_path / mode)
+        write_snapshot(df, path, "p")
+        res = execute_delete(
+            spark,
+            "DELETE FROM t AS x WHERE x.k = 1 OR x.note = 'x.k = 2'",
+            tables={"t": path},
+            mode=mode,
+            key="k",
+        )
+        assert res["deleted_rows"] == 1, mode
+        assert {tuple(r) for r in read_snapshot(spark, path).collect()} == {
+            (2, "x.k = 1", 0),
+            (3, "c", 1),
+        }, mode

@@ -539,3 +539,31 @@ def test_timed_out_drains_stop_and_raise(spark, tmp_path):
             timeout_sec=0.2,
         )
     assert spark.streams.active == []
+
+
+def test_sink_commit_retry_rule():
+    """The sinks' one retry rule, pure Python: a commit that loses four
+    optimistic races lands on the fifth attempt; five losses re-raise
+    the last error."""
+    import pytest
+
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        ConcurrentCommitError,
+    )
+    from pandas_analysis_with_postgres_spark.streaming.streams import (
+        _retry_commit,
+    )
+
+    def flaky(losses, calls, *, value):
+        calls.append(value)
+        if len(calls) <= losses:
+            raise ConcurrentCommitError(f"lost race {len(calls)}")
+        return value
+
+    calls: list = []
+    assert _retry_commit(flaky, 4, calls, value="v5") == "v5"
+    assert len(calls) == 5
+    calls = []
+    with pytest.raises(ConcurrentCommitError, match="lost race 5"):
+        _retry_commit(flaky, 5, calls, value="never")
+    assert len(calls) == 5
