@@ -1,8 +1,8 @@
 """Property tests for the round-4 late operators, each checked
 against an independent driver-side Python reimplementation:
-boilerplate-line removal, two-level global rank (≡ sorted position)
-and seeded shuffle rank (total permutation). Manifest stats and bloom
-skipping is checked in ``test_file_stats.py``."""
+boilerplate-line removal, two-level global rank (≡ sorted position),
+seeded shuffle rank (total permutation), and manifest-stats skipping
+(behavior-preserving by construction)."""
 
 from __future__ import annotations
 
@@ -143,3 +143,89 @@ def test_shuffled_rank_is_total_permutation(keys, seed):
         for i, k in enumerate(sorted(keys, key=lambda k: (perm(k), k)))
     }
     assert got == expect
+
+
+# ----------------------------------------------------- stats skipping
+
+_tbl_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=99),  # k (unique-ified below)
+        st.integers(min_value=0, max_value=4),  # partition
+    ),
+    min_size=1,
+    max_size=20,
+    unique_by=lambda t: t[0],
+)
+_window = st.tuples(
+    st.integers(min_value=-10, max_value=110),
+    st.integers(min_value=-10, max_value=110),
+).map(lambda t: (min(t), max(t)))
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_tbl_rows, _window)
+def test_stats_skipping_is_behavior_preserving(tmp_rows, window):
+    import tempfile
+
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        read_snapshot,
+        write_snapshot,
+    )
+
+    import shutil
+
+    lo, hi = window
+    root = tempfile.mkdtemp(prefix="statsprop_")
+    try:
+        path = root + "/t"
+        df = _spark.createDataFrame(tmp_rows, "k long, p long")
+        write_snapshot(df, path, "p", stats_cols=["k"])
+        pruned = {
+            r.k
+            for r in read_snapshot(
+                _spark, path, column_ranges={"k": (lo, hi)}
+            )
+            .filter(f"k BETWEEN {lo} AND {hi}")
+            .collect()
+        }
+        expect = {k for k, _ in tmp_rows if lo <= k <= hi}
+        assert pruned == expect
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_tbl_rows, st.integers(min_value=-5, max_value=105))
+def test_bloom_point_lookup_is_behavior_preserving(tmp_rows, probe):
+    import tempfile
+
+    from pandas_analysis_with_postgres_spark.sources.snapshot import (
+        read_snapshot,
+        write_snapshot,
+    )
+
+    import shutil
+
+    root = tempfile.mkdtemp(prefix="bloomprop_")
+    try:
+        path = root + "/t"
+        df = _spark.createDataFrame(tmp_rows, "k long, p long")
+        write_snapshot(df, path, "p", bloom_cols=["k"])
+        pruned = {
+            r.k
+            for r in read_snapshot(_spark, path, point_lookups={"k": probe})
+            .filter(f"k = {probe}")
+            .collect()
+        }
+        expect = {k for k, _ in tmp_rows if k == probe}
+        assert pruned == expect
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -224,6 +224,10 @@ def test_e2e_restart_drains_backlog_bounded(spark, tbl, tmp_path):
     q2 = _run(name + "_r")
     try:
         _wait_count(10)
+        # the sink shows a batch's rows before the engine records that
+        # batch's progress; returning from processAllAvailable takes a
+        # later idle trigger, so every data batch is in recentProgress
+        q2.processAllAvailable()
         batches = [
             int(p["numInputRows"])
             for p in q2.recentProgress
@@ -272,6 +276,7 @@ def test_live_appends_arrive_in_bounded_batches(spark, tbl):
             "batch",
         )
         _wait_count(10)
+        q.processAllAvailable()  # every data batch's progress recorded
         batches = [
             int(p["numInputRows"])
             for p in q.recentProgress
