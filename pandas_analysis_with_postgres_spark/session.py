@@ -11,6 +11,19 @@ Scale notes (100 TB design intent):
   with a large initialPartitionNum) rather than edit operator code.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- Stream checkpoints (state-store deltas, offsets/commits logs,
+  file-source logs, memory-sink and ``foreachBatch`` checkpoints) are
+  written through Hadoop's ``FileSystem`` API, not the default
+  ``FileContext`` one. Without the native ``libhadoop`` the FileContext
+  manager forks ``chmod``/``ls`` for every create, mkdir and permission
+  read: 24.2 ms per checkpoint file against 7.0 ms (py4j
+  microbenchmark, 4 vCPUs), which made the state-store commit the
+  largest layer of a stateful micro-batch. Every checkpoint here is on
+  local disk, where both managers do an exists-check then
+  ``rename(2)`` and neither fsyncs, so atomicity and durability are the
+  same; Spark's checkpoint checksums and state-store commit validation
+  stay on. FileContext only buys atomic overwrite-rename on HDFS — a
+  cluster that keeps checkpoints on HDFS drops that one setting.
 """
 
 from __future__ import annotations
@@ -100,6 +113,14 @@ def get_spark(app_name: str = "pandas_analysis_with_postgres_spark") -> SparkSes
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Local-disk checkpoints: FileSystem renames are as atomic as
+        # FileContext's without a forked chmod/ls per file. HDFS
+        # checkpoints keep the FileContext default (drop this line).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

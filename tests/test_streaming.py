@@ -200,6 +200,72 @@ def test_foreach_batch_checkpoint_resume_exactly_once(spark, tmp_path):
     assert sum(delivered) + sum(late) == total
 
 
+def test_checkpoint_integrity_checks_survive_filesystem_manager(spark, tmp_path):
+    """The session writes stream checkpoints through Hadoop's FileSystem
+    API (no forked chmod/ls per file) without giving up an integrity
+    check: checkpoint checksums and state-store commit validation stay
+    on, every state-store delta has its Spark checksum file, and a
+    stateful drain restarted from its checkpoint delivers only the rows
+    of a newly landed file."""
+    import glob as globmod
+    import shutil
+
+    from pandas_analysis_with_postgres_spark.streaming.streams import (
+        events_raw_schema_for,
+        split_events_by_time,
+    )
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    for key in (
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+        "spark.sql.streaming.stateStore.commitValidation.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+
+    files = sorted(globmod.glob(split_events_by_time(spark, SF_ORACLE, 3)))
+    schema = events_raw_schema_for(files[0])
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    shutil.copy(files[0], landing / "events_000.parquet")
+    ck = tmp_path / "ck"
+
+    def drain() -> list[int]:
+        seen: list[int] = []
+        foreach_batch_sink(
+            spark.readStream.schema(schema)
+            .parquet(str(landing))
+            .dropDuplicates(["event_id"]),
+            lambda bdf, bid: seen.extend(
+                r.event_id for r in bdf.select("event_id").collect()
+            ),
+            checkpoint_dir=str(ck),
+        )
+        return seen
+
+    def ids(path) -> list[int]:
+        return sorted(
+            r.event_id
+            for r in spark.read.schema(schema).parquet(path).select("event_id").collect()
+        )
+
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        assert sorted(drain()) == ids(files[0])
+        deltas = sorted(ck.glob("state/0/*/1.delta"))
+        assert [d.parent.name for d in deltas] == ["0", "1"]
+        for d in deltas:
+            assert d.with_name("1.delta.crc").is_file(), d
+
+        shutil.copy(files[1], landing / "events_001.parquet")
+        assert sorted(drain()) == ids(files[1])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
 def test_stream_dedup_ingest_end_to_end(spark, tmp_path):
     """Streaming steady-state dedup: micro-batches dedupe against the
     persisted signature store; verdicts land in a results snapshot;
